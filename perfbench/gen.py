@@ -1,10 +1,16 @@
 """Seeded input generators for the benchmark.
 
-Everything the program under test reads is produced here from the
-``--seed`` argument: the fixture tables of the ``fleet`` workload, the
-bike-trip JSON-lines files of ``ingest_train``, the request mix of
-``serve`` and the per-pass query orders of ``fleet``. The same seed gives
-byte-identical inputs.
+Everything the program under test reads is produced here, inside the
+checkout the benchmark runs in (it reads no data outside it):
+
+- the ten fixture tables of ``fleet``, in the repo's fixture schema
+  (FIXTURES.md). ``fleet`` always passes the same fixture seed, so every
+  run's queries do the same work;
+- from the ``--seed`` argument: the per-pass query orders of ``fleet``,
+  the bike-trip JSON-lines files (with a share of malformed lines) and the
+  request mix of ``pipeline``.
+
+The same seed gives byte-identical inputs.
 """
 
 from __future__ import annotations

@@ -12,8 +12,9 @@
    one closed-loop client sends a seeded request mix through the app's
    Flask test client, each request waiting for the previous reply.
 
-Steps 1-3 together are one pass; the requests are the operations. Outputs are checked afterwards, outside
-the timed regions.
+One pass is steps 1-3 plus the warm-up block and ``requests_measured``
+requests of step 4, a fixed amount of work; the requests are the
+operations. Outputs are checked afterwards, outside the timed regions.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ import os
 import random
 import time
 from collections import Counter
+
+import pyarrow.parquet as pq
 
 import gen
 from spans import median, tree_cpu_s
@@ -78,7 +81,7 @@ def run(ctx) -> dict:
 
     tracer.enabled = ctx.trace
     c0 = tree_cpu_s()
-    t0 = time.perf_counter()
+    start = time.perf_counter()
     with tracer.span("pipeline.ingest"):
         raw = spark.readStream.option("maxFilesPerTrigger", 1).text(os.path.join(ctx.work, "in"))
         b = batcher.run_count_batched_stream(
@@ -98,14 +101,16 @@ def run(ctx) -> dict:
         loaded = {str(v): model for v, model in models.items()}
         client = api.create_app(spark, loaded).test_client()
     t3 = time.perf_counter()
-    rec.update(ingest=t1 - t0, train=t2 - t1, offline=t3 - t0, offline_cpu=tree_cpu_s() - c0)
+    rec.update(ingest=t1 - start, train=t2 - t1)
 
     # serve: closed loop; the first block of the mix warms the request
-    # path, then requests run for the measured seconds. In a traced run
-    # every second request is traced.
+    # path, then requests run for the measured seconds and until at least
+    # requests_measured ran. In a traced run every second request is traced.
+    # One pass is the fixed work from stream start until the reply to the
+    # last of the first n_min requests.
     n_warm = sum(spec["requests_per_block"].values())
-    n_min = n_warm + spec["requests_measured"] * (2 if ctx.trace else 1)
-    done = []  # (kind, seconds, traced, status, json, cpu seconds)
+    n_min = n_warm + spec["requests_measured"]
+    done = []  # (kind, seconds, traced, status, json)
     t_end = None
     while t_end is None or time.perf_counter() < t_end or len(done) < n_min:
         if len(done) == n_warm:
@@ -114,28 +119,23 @@ def run(ctx) -> dict:
         traced = ctx.trace and len(done) % 2 == 1
         tracer.enabled, tracer.key = traced, f"r{len(done)}"
         ctx.attempted += 1
-        c0 = tree_cpu_s()
-        t0 = time.perf_counter()
+        r0 = time.perf_counter()
         with tracer.span("api.request"):
             resp = client.post(ROUTES[kind].format(v=version), json=body)
-        t1 = time.perf_counter()
-        done.append((kind, t1 - t0, traced, resp.status_code, resp.get_json(silent=True), tree_cpu_s() - c0))
+        r1 = time.perf_counter()
+        done.append((kind, r1 - r0, traced, resp.status_code, resp.get_json(silent=True)))
+        if len(done) == n_min:
+            rec.update(pass_s=r1 - start, pass_cpu_s=tree_cpu_s() - c0)
     tracer.enabled, tracer.key = False, None
 
-    if ctx.listener:
-        rec["progress"] = ctx.listener.wait_settled(0, spec["files"])
+    rec["progress"] = ctx.listener.wait_settled(0, spec["files"])
     _check(ctx, bs, lines, valid, n_malformed, b, models, loaded, requests, done, rec)
 
-    # CPU time per request is the mean over a fixed number of whole blocks
-    # of the mix, so every run reports the same work however many requests
-    # the time allowed.
     plain = [d for d in done[n_warm:] if not d[2]]
-    fixed = plain[: spec["requests_measured"]]
     metrics = {
-        "pass_cpu_s": rec["offline_cpu"],
-        "op_cpu_ms": 1000.0 * sum(d[5] for d in fixed) / len(fixed),
-        "wall.pass_s": rec["offline"],
-        "wall.op_p50_ms": median(1000.0 * d[1] for d in plain),
+        "pass_cpu_s": rec["pass_cpu_s"],
+        "wall.pass_s": rec["pass_s"],
+        "wall.op_ms": median(1000.0 * d[1] for d in plain),
         "wall.ops_per_s": len(plain) / sum(d[1] for d in plain),
     }
     if ctx.trace:
@@ -180,7 +180,7 @@ def _check(ctx, bs, lines, valid_recs, n_malformed, b, models, loaded, requests,
             ctx.fail(f"pipeline: model v{v} has {n_imp} importances")
 
     checked = 0
-    for j, (_, _, _, status, out, _) in enumerate(done):
+    for j, (_, _, _, status, out) in enumerate(done):
         kind, version, body = requests[j % len(requests)]
         problem = None
         if status != 200 or not isinstance(out, dict):
@@ -201,17 +201,14 @@ def _check(ctx, bs, lines, valid_recs, n_malformed, b, models, loaded, requests,
         if problem:
             ctx.fail(f"pipeline {kind}: {problem}")
 
-    if "progress" in rec:
-        import pyarrow.parquet as pq
-
-        read = sum(p["rows"] for p in rec["progress"])
-        pending = sum(pq.ParquetFile(f).metadata.num_rows for f in glob.glob(os.path.join(b.pending_dir, "*.parquet")))
-        rec["decode_dropped"] = read - bs * spec["max_batches"] - pending
-        if read != len(lines) or rec["decode_dropped"] != n_malformed:
-            ctx.fail(
-                f"pipeline: stream read {read} lines and dropped {rec['decode_dropped']}; "
-                f"want {len(lines)} and the {n_malformed} malformed"
-            )
+    read = sum(p["rows"] for p in rec["progress"])
+    pending = sum(pq.ParquetFile(f).metadata.num_rows for f in glob.glob(os.path.join(b.pending_dir, "*.parquet")))
+    rec["decode_dropped"] = read - bs * spec["max_batches"] - pending
+    if read != len(lines) or rec["decode_dropped"] != n_malformed:
+        ctx.fail(
+            f"pipeline: stream read {read} lines and dropped {rec['decode_dropped']}; "
+            f"want {len(lines)} and the {n_malformed} malformed"
+        )
 
 
 def _layer_metrics(ctx, bs, rec, done, n_warm) -> dict:
@@ -245,7 +242,7 @@ def _layer_metrics(ctx, bs, rec, done, n_warm) -> dict:
     by_key: dict[str, list[dict]] = {}
     for s in tracer.closed():
         by_key.setdefault(s["key"], []).append(s)
-    for j, (kind, seconds, traced, _, _, _) in enumerate(done):
+    for j, (kind, seconds, traced, _, _) in enumerate(done):
         if not traced or j < n_warm:
             continue
         req = by_key.get(f"r{j}", [])
@@ -264,6 +261,13 @@ def _layer_metrics(ctx, bs, rec, done, n_warm) -> dict:
     seq = [1000.0 * d[1] for d in done[n_warm:]]
     q = max(1, len(seq) // 4)
     m["serve.drift_ratio"] = median(seq[-q:]) / median(seq[:q])
+    # Traced and untraced requests alternate, so the two halves hold
+    # different kinds: compare them kind by kind.
     measured = done[n_warm:]
-    m["trace.overhead_s"] = median(d[1] for d in measured if d[2]) - median(d[1] for d in measured if not d[2])
+    m["trace.overhead_s"] = median(
+        median(d[1] for d in measured if d[0] == kind and d[2])
+        - median(d[1] for d in measured if d[0] == kind and not d[2])
+        for kind in ROUTES
+        if {d[2] for d in measured if d[0] == kind} == {True, False}
+    )
     return m

@@ -3,10 +3,10 @@
     python3 perfbench/run.py --workload fleet|pipeline --seed N --seconds S --trace 0|1
 
 Run from the root of a source checkout. The benchmark generates its
-inputs from ``--seed`` under ``.perfbench_work/`` in the checkout, sets up
-the program's Spark session several times and reports the median set-up
-time, warms up, measures for ``--seconds`` seconds, checks the outputs,
-and prints one JSON object as the last line of standard output:
+inputs from ``--seed`` under ``.perfbench_work/`` in the checkout, starts
+the program cold (import, Spark session, first job: the set-up time),
+warms up, measures for ``--seconds`` seconds, checks the outputs, and
+prints one JSON object as the last line of standard output:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -24,13 +24,15 @@ import argparse
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUP_REPS = 3
+# The engine configuration is fixed here, so the command alone determines
+# it: local[CORES] and the driver heap, whatever the shell exports.
+CORES = 4
+DRIVER_MEM = "3g"
 
 
 def _load(path: str) -> dict:
@@ -43,8 +45,9 @@ class Context:
         from spans import Tracer
 
         self.seed, self.seconds, self.trace, self.smoke = args.seed, args.seconds, bool(args.trace), args.smoke
-        # a traced run alternates untraced and traced passes
-        self.min_passes = 4 if self.trace else 2
+        # fleet passes per run. A traced run alternates untraced and traced
+        # passes, so that traced pass 3 lies between untraced passes 2 and 4.
+        self.min_passes = 5 if self.trace else 3
         self.spec = spec
         self.work = work
         self.event_log_dir = os.path.join(work, "eventlog")
@@ -90,23 +93,25 @@ def _session_conf(ctx: Context) -> dict[str, str]:
 
 
 def _setup(ctx: Context) -> dict[str, float]:
-    """Build the program's session SETUP_REPS times (stopping the previous
-    one), each time through ``session.get_spark`` and a first job."""
+    """The program's cold start: import it, build its session through
+    ``session.get_spark`` (which launches the JVM) and run a first job.
+
+    It happens once per run. A JVM can be launched only once per Python
+    process, so a second cold start would need a fresh process, and one
+    costs 10-17 s on a 4-vCPU VM; a restart on the running JVM measures
+    none of the JVM launch, class loading and JIT that make up the cold
+    start."""
+    t0 = time.perf_counter()
+    import __spark_entry__  # noqa: F401 - importing the program is part of its start
+
     from kafka_pyspark_bigdata_spark import session
 
-    conf = _session_conf(ctx)
-    total, get_spark = [], []
-    for _ in range(SETUP_REPS):
-        if ctx.spark is not None:
-            ctx.spark.stop()
-        t0 = time.perf_counter()
-        ctx.spark = session.get_spark("perfbench", extra_conf=conf)
-        t1 = time.perf_counter()
-        ctx.spark.sparkContext.setLogLevel("ERROR")
-        ctx.spark.range(1000).selectExpr("sum(id)").collect()
-        total.append(time.perf_counter() - t0)
-        get_spark.append(t1 - t0)
-    return {"setup_s": statistics.median(total), "session.get_spark_s": statistics.median(get_spark)}
+    t1 = time.perf_counter()
+    ctx.spark = session.get_spark("perfbench", extra_conf=_session_conf(ctx))
+    t2 = time.perf_counter()
+    ctx.spark.sparkContext.setLogLevel("ERROR")
+    ctx.spark.range(1000).selectExpr("sum(id)").collect()
+    return {"setup_s": time.perf_counter() - t0, "session.get_spark_s": t2 - t1}
 
 
 def _install_tracing(ctx: Context) -> None:
@@ -115,8 +120,6 @@ def _install_tracing(ctx: Context) -> None:
     from kafka_pyspark_bigdata_spark.ml import serving, trainer
     from kafka_pyspark_bigdata_spark.streaming import batcher
 
-    from spans import make_progress_listener
-
     t = ctx.tracer
     t.wrap(batcher.CountBatcher, "process_batch", "batcher.process_batch")
     t.wrap(batcher.CountBatcher, "flush", "batcher.flush")
@@ -124,8 +127,6 @@ def _install_tracing(ctx: Context) -> None:
     for fn in ("predict_one", "sensitivity_sweep", "optimal_time", "result_json"):
         t.wrap(serving, fn, f"serving.{fn}")
     t.wrap(DataFrame, "collect", "spark.action")
-    ctx.listener = make_progress_listener()
-    ctx.spark.streams.addListener(ctx.listener)
 
 
 def _stop_spark(ctx: Context) -> None:
@@ -168,10 +169,10 @@ def main() -> int:
     sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
     try:
         bench = _load(os.path.join(ROOT, "BENCHMARK.json"))
-        import __spark_entry__  # noqa: F401
-        import check_oracle  # noqa: F401
-        import kafka_pyspark_bigdata_spark  # noqa: F401
-    except (ImportError, OSError) as exc:
+        for f in ("__spark_entry__.py", "kafka_pyspark_bigdata_spark", "tools/check_oracle.py"):
+            if not os.path.exists(os.path.join(ROOT, f)):
+                raise OSError(f"{f} is missing")
+    except OSError as exc:
         print(f"[perfbench] program not found under {ROOT}: {exc}", file=sys.stderr)
         return 2
 
@@ -182,8 +183,10 @@ def main() -> int:
     # Everything the program and the engine write goes under the work dir.
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "local")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "2")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "3g")
+    for k in [k for k in os.environ if k.startswith("SPARK_GRAFT_")]:
+        del os.environ[k]
+    os.environ["SPARK_GRAFT_CPUS"] = str(CORES)
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     import tempfile
 
     tempfile.tempdir = None
@@ -192,8 +195,13 @@ def main() -> int:
     try:
         import fleet
         import pipeline
+        from spans import make_progress_listener
 
         setup = _setup(ctx)
+        # Streaming progress feeds the ingest output check, so the listener
+        # is on in every run, traced or not.
+        ctx.listener = make_progress_listener()
+        ctx.spark.streams.addListener(ctx.listener)
         if ctx.trace:
             _install_tracing(ctx)
         metrics = {"fleet": fleet, "pipeline": pipeline}[args.workload].run(ctx)
