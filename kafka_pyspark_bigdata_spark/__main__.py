@@ -16,11 +16,12 @@ oracle so the semantics are inspectable without reading source.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
 def _entry():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     return entrymod

@@ -3379,17 +3379,16 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
+    # count_if, not sum: an empty candidate set counts 0 (the oracle's
+    # COUNT(*)), where a sum over zero rows is NULL
     stats = flagged.agg(
         *[
             agg
             for i, (bands, rows) in enumerate(LSH_TUNE_CONFIGS)
             for agg in (
-                F.sum(collides(bands, rows).cast("bigint")).alias(f"nc{i}"),
-                F.sum(
-                    (
-                        collides(bands, rows)
-                        & (jac >= MINHASH_VERIFY_THRESHOLD)
-                    ).cast("bigint")
+                F.count_if(collides(bands, rows)).alias(f"nc{i}"),
+                F.count_if(
+                    collides(bands, rows) & (jac >= MINHASH_VERIFY_THRESHOLD)
                 ).alias(f"nv{i}"),
             )
         ]
@@ -3413,7 +3412,9 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "r.rows_per_band",
             "r.n_candidates",
             "r.n_verified",
-            F.expr("r.n_verified * 1000000 DIV r.n_candidates").alias(
+            # NULL precision with no candidates (the oracle's 0 // 0), which
+            # ANSI DIV by zero would raise on instead
+            F.expr("r.n_verified * 1000000 DIV nullif(r.n_candidates, 0)").alias(
                 "precision_ppm"
             ),
             "r.theory_capture_ppm",

@@ -16,22 +16,20 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "kafka_pyspark_bigdata_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for local runs; on a
-    real cluster, leave ``master`` unset in spark-submit and this factory
-    only contributes conf. Shuffle partitions default to 32 locally — on a
-    1000-executor cluster you would size this ~2-3x total cores (or simply
-    rely on AQE coalescing from a higher initial value).
+    The master is ``$SPARK_GRAFT_MASTER`` (a deployment address), else
+    ``local[$SPARK_GRAFT_CPUS]`` (default 32). Shuffle partitions default
+    to 32 locally — on a 1000-executor cluster you would size this ~2-3x
+    total cores (or simply rely on AQE coalescing from a higher initial
+    value).
     """
-    master = master or os.environ.get(
+    master = os.environ.get(
         "SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     )
-    parts = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -40,7 +38,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(parts))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Deterministic wall-clock semantics for timestamp fixtures.
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow-batched transfer for pandas UDFs / toPandas (10-100x row-at-a-time).
@@ -70,10 +68,7 @@ def get_spark(
         # cluster running a query fleet (compilation happens once per
         # app either way — this is not a local-only tune). ~20-50 KB of
         # metaspace per cached class keeps 2000 entries under ~100 MB.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # Long-lived sessions (the 400-test suite, a multi-hour job server)
         # accumulate orphaned localCheckpoint/cache blocks until the
         # ContextCleaner's periodic GC fires — the 30min default is longer

@@ -14,10 +14,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 
 def _pid_alive(pid: int) -> bool:
@@ -85,14 +86,35 @@ _SCAN_CACHE: dict[tuple[str, str, str, float], DataFrame] = {}
 _PSCAN_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
 
 
+def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """Run ``read`` (a batch or streaming scan of the ``events`` fixture)
+    and return it with ``ts`` as a microsecond TIMESTAMP.
+
+    The fixture may store TIMESTAMP(NANOS), which Spark's vectorized
+    parquet reader rejects: ``read`` runs with nanos read as long (session
+    conf), and the plan converts them to microsecond timestamps — the same
+    truncation DuckDB applies when casting TIMESTAMP_NS to its microsecond
+    TIMESTAMP.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read()
+    for field in df.schema.fields:
+        if field.name == "ts" and isinstance(field.dataType, LongType):
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif field.name == "ts" and isinstance(field.dataType, TimestampNTZType):
+            # Fixture may land as TIMESTAMP_NTZ; event-time functions
+            # (unix_micros, withWatermark, window) demand TIMESTAMP. The
+            # session timezone is pinned to UTC (session.py), so the cast is
+            # value-identical — and it matches the DuckDB oracles, which
+            # normalize via CAST(ts AS TIMESTAMP).
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Column pruning + filter pushdown reach the
     parquet reader automatically because this stays declarative.
-
-    The ``events`` fixture stores TIMESTAMP(NANOS), which Spark's vectorized
-    parquet reader rejects; we read nanos as long (session conf) and convert
-    to microsecond timestamps in the plan — same truncation DuckDB applies
-    when casting TIMESTAMP_NS to its microsecond TIMESTAMP.
+    ``events`` goes through ``read_events`` for its timestamp column.
     """
     # The table dir's mtime in the key (the _DUP_PAIRS_CACHE convention)
     # invalidates the memoized scan if a fixture is rewritten in place
@@ -117,22 +139,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _PSCAN_CACHE.clear()
 
     path = table_path(sf_dir, name)
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for field in df.schema.fields:
-        if field.name == "ts" and isinstance(field.dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif field.name == "ts" and isinstance(field.dataType, TimestampNTZType):
-            # Fixture may land as TIMESTAMP_NTZ; event-time functions
-            # (unix_micros, withWatermark) demand TIMESTAMP. The session
-            # timezone is pinned to UTC (session.py), so the cast is
-            # value-identical — and it matches the DuckDB oracles, which
-            # normalize via CAST(ts AS TIMESTAMP).
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = read_events(spark, lambda: spark.read.parquet(path))
+    else:
+        df = spark.read.parquet(path)
     _SCAN_CACHE[key] = df
     return df
 

@@ -29,6 +29,7 @@ the pending parquet dir, not in driver memory (unlike consumer.py:37,54).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -73,9 +74,6 @@ class CountBatcher:
             f.write(str(batch_id))
         os.replace(tmp, self._marker_path)
 
-    def _spark(self, df: DataFrame):
-        return df.sparkSession
-
     def _read_pending(self, spark, schema) -> DataFrame | None:
         if os.path.isdir(self.pending_dir) and any(
             f.endswith(".parquet") for f in os.listdir(self.pending_dir)
@@ -84,10 +82,12 @@ class CountBatcher:
         return None
 
     # -- core --------------------------------------------------------------
-    def _global_index(self, df: DataFrame) -> DataFrame:
+    def _global_index(self, df: DataFrame) -> tuple[DataFrame, int]:
         """Global 0-based row index, distributed: monotonically_increasing_id
         is consecutive within a partition, so per-partition (count, min id)
         — one tiny row per partition — turn it into a dense global index.
+        Returns the indexed frame and its row count (the sum of the
+        per-partition counts, so no separate count job is needed).
 
         The input is materialized with ``localCheckpoint`` BEFORE the stats
         job so the stats and the downstream writes read the SAME evaluation:
@@ -107,14 +107,15 @@ class CountBatcher:
             .collect()
         )
         if not stats:
-            return tagged.withColumn("_idx", F.lit(0)).limit(0)
+            return tagged.withColumn("_idx", F.lit(0)).limit(0), 0
         base_entries, acc = [], 0
         for pid, cnt, min_mid in stats:
             # _idx = (global offset of this partition) + (_mid - min _mid)
             base_entries += [pid, acc - min_mid]
             acc += cnt
         base_map = F.create_map(*[F.lit(x) for x in base_entries])
-        return tagged.withColumn("_idx", base_map[F.col("_pid")] + F.col("_mid"))
+        indexed = tagged.withColumn("_idx", base_map[F.col("_pid")] + F.col("_mid"))
+        return indexed, acc
 
     def process_batch(self, df: DataFrame, batch_id: int) -> None:
         """foreachBatch callback.
@@ -131,49 +132,42 @@ class CountBatcher:
         log)."""
         if batch_id <= self._last_stream_batch():
             return  # duplicate delivery of an already-processed batch
-        spark = self._spark(df)
         written = self.batches_written()
         if written >= self.max_batches:
             return  # consumer.py:80-82 — stop landing once the cap is hit
-        pending = self._read_pending(spark, df.schema)
+        pending = self._read_pending(df.sparkSession, df.schema)
         data = pending.unionByName(df) if pending is not None else df
-        indexed = self._global_index(data).persist()
-        try:
-            total = indexed.count()
-            n_complete = min(
-                total // self.batch_size, self.max_batches - written
+        # _global_index pins its input with an eager localCheckpoint, so the
+        # writes below read that one materialization without another cache.
+        indexed, total = self._global_index(data)
+        n_complete = min(total // self.batch_size, self.max_batches - written)
+        if n_complete > 0:
+            complete = indexed.filter(
+                F.col("_idx") < n_complete * self.batch_size
+            ).withColumn(
+                "batch_id",
+                (F.col("_idx") / self.batch_size).cast("int") + F.lit(written),
             )
-            if n_complete > 0:
-                complete = indexed.filter(
-                    F.col("_idx") < n_complete * self.batch_size
-                ).withColumn(
-                    "batch_id",
-                    (F.col("_idx") / self.batch_size).cast("int") + F.lit(written),
-                )
-                (
-                    complete.drop("_mid", "_pid", "_idx")
-                    .repartition("batch_id")
-                    .write.mode("append")
-                    .partitionBy("batch_id")
-                    .format(self.fmt)
-                    .option("header", True)
-                    .save(self.data_dir)
-                )
-            remainder = indexed.filter(
-                F.col("_idx") >= n_complete * self.batch_size
-            ).drop("_mid", "_pid", "_idx")
-            # write remainder to a staging dir then swap (can't overwrite a
-            # dir we are reading from)
-            tmp = self.pending_dir + ".tmp"
-            remainder.write.mode("overwrite").parquet(tmp)
-            import shutil
-
-            if os.path.isdir(self.pending_dir):
-                shutil.rmtree(self.pending_dir)
-            os.rename(tmp, self.pending_dir)
-            self._record_stream_batch(batch_id)
-        finally:
-            indexed.unpersist()
+            (
+                complete.drop("_mid", "_pid", "_idx")
+                .repartition("batch_id")
+                .write.mode("append")
+                .partitionBy("batch_id")
+                .format(self.fmt)
+                .option("header", True)
+                .save(self.data_dir)
+            )
+        remainder = indexed.filter(
+            F.col("_idx") >= n_complete * self.batch_size
+        ).drop("_mid", "_pid", "_idx")
+        # write remainder to a staging dir then swap (can't overwrite a
+        # dir we are reading from)
+        tmp = self.pending_dir + ".tmp"
+        remainder.write.mode("overwrite").parquet(tmp)
+        if os.path.isdir(self.pending_dir):
+            shutil.rmtree(self.pending_dir)
+        os.rename(tmp, self.pending_dir)
+        self._record_stream_batch(batch_id)
 
     def flush(self, spark, schema) -> None:
         """Stream-end partial flush (consumer.py:85-94): land the pending
@@ -193,8 +187,6 @@ class CountBatcher:
             .option("header", True)
             .save(self.data_dir)
         )
-        import shutil
-
         shutil.rmtree(self.pending_dir, ignore_errors=True)
 
     def result(self, spark) -> DataFrame:

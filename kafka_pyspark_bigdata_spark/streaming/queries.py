@@ -14,10 +14,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
 
 from ..functions.numeric import dsum, dsum_sql
-from ..sources.batch import load_table, scratch_dir
+from ..sources.batch import load_table, read_events, scratch_dir, table_path
 from .batcher import run_count_batched_stream
 from .windows import session_agg, sliding_agg, tumbling_agg
 
@@ -45,23 +44,16 @@ def _run_to_memory(agg, name_prefix: str, output_mode: str = "complete"):
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source streaming replay of the events fixture (the broker-free
     stand-in for the Kafka source; see streaming.kafka for the real one)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    for field in stream.schema.fields:
-        if field.name == "ts" and isinstance(field.dataType, LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif field.name == "ts" and isinstance(field.dataType, TimestampNTZType):
-            # NTZ fixture → TIMESTAMP, value-identical under the UTC session
-            # zone; withWatermark/window demand TIMESTAMP (see sources.batch).
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+
+    def read() -> DataFrame:
+        raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+        return (
+            spark.readStream.schema(raw_schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+
+    return read_events(spark, read)
 
 
 def streaming_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:

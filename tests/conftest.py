@@ -1,17 +1,18 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_pyspark_bigdata_spark.session import get_spark  # noqa: E402
+from tools.check_oracle import TABLES, compare  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 @pytest.fixture(scope="session")
@@ -32,9 +33,6 @@ def duck():
 
 def assert_oracle_match(spark, duck, fn, sql, sf_dir=SF_SMOKE):
     """Spark-vs-DuckDB compare (same normalization as tools/check_oracle)."""
-    sys.path.insert(0, "/root/repo/tools")
-    from check_oracle import compare
-
     sdf = fn(spark, sf_dir).toPandas()
     odf = duck.execute(sql).df()
     problems = compare("q", sdf, odf)

@@ -13,6 +13,8 @@ import os
 import subprocess
 import sys
 
+import bench
+
 
 def test_bench_runs_clean_and_prints_one_json_line(tmp_path):
     detail = str(tmp_path / "BENCH_DETAIL.json")
@@ -25,7 +27,7 @@ def test_bench_runs_clean_and_prints_one_json_line(tmp_path):
         SPARK_GRAFT_DETAIL=detail,
     )
     proc = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, bench.__file__],
         capture_output=True,
         text=True,
         env=env,
@@ -71,7 +73,7 @@ def test_bench_runs_clean_and_prints_one_json_line(tmp_path):
     # contract: the LAST line must fit the driver's ~2000-char tail
     # window in one complete parseable piece.
     assert short["sentinel_queries"] == sent["queries"]
-    assert len(proc.stdout.splitlines()[-1]) < 1800
+    assert len(proc.stdout.splitlines()[-1]) < 1500
     # the redirected detail artifact exists, parses, and carries both passes
     with open(detail) as fh:
         dd = json.load(fh)
@@ -84,11 +86,10 @@ def test_registry_has_no_cross_module_name_collisions():
     each other in __spark_entry__ (dict.update last-wins) — the oracle
     could then verify a DIFFERENT plan than the one a module claims.
     Guard: every QUERIES/ORACLES key is globally unique, every oracle
-    has a query, and every _PRIORITY name resolves (except env-gated
-    entries that declare themselves optional)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    has a query, every _PRIORITY name resolves (except env-gated
+    entries that declare themselves optional), and every bench SENTINEL
+    and HEADLINE name resolves (the bench skips unregistered names, so a
+    stale one would silently shrink the timed set)."""
     import __spark_entry__ as em
     from collections import Counter
 
@@ -102,6 +103,7 @@ def test_registry_has_no_cross_module_name_collisions():
     assert set(os_) <= set(qs)
     env_gated = {"streaming_tws_sessions"}
     assert set(em._PRIORITY) - set(qs) <= env_gated
+    assert not set(bench.SENTINEL + bench.HEADLINE) - set(qs)
 
 
 def test_rows_only_list_matches_oracle_gap_exactly():
@@ -109,10 +111,61 @@ def test_rows_only_list_matches_oracle_gap_exactly():
     it must equal queries() minus oracle_sql() EXACTLY — a new oracle-less
     query must be consciously added here (or given an oracle), never
     silently recorded as `no_oracle`."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as em
 
     gap = set(em.queries()) - set(em.oracle_sql())
     assert gap == set(em.ROWS_ONLY), gap ^ set(em.ROWS_ONLY)
+
+
+def test_time_queries_never_times_an_errored_name():
+    """time_queries' policy, on stand-in frames (no JVM): a warm-up error
+    skips the timed passes, and a name that raises in a later pass is
+    dropped from the timings even though an earlier pass succeeded."""
+
+    class Frame:
+        def __init__(self, fail):
+            self.fail = fail
+
+        @property
+        def write(self):
+            return self
+
+        def format(self, fmt):
+            assert fmt == "noop"
+            return self
+
+        def mode(self, _):
+            return self
+
+        def save(self):
+            if self.fail:
+                raise RuntimeError("boom")
+
+    class Spark:
+        def range(self, _):
+            return self
+
+        def selectExpr(self, _):
+            return self
+
+        def collect(self):
+            return []
+
+    builds = []
+
+    def flaky(spark, sf):
+        builds.append(sf)
+        return Frame(len(builds) == 3)  # warm-up and pass 1 pass, pass 2 fails
+
+    qs = {
+        "ok": lambda spark, sf: Frame(False),
+        "flaky": flaky,
+        "bad_warmup": lambda spark, sf: Frame(sf.endswith("sf0.001")),
+    }
+    res = bench.time_queries(Spark(), qs, list(qs), "/root/testdata/sf0.01", 2)
+    assert list(res["queries"]) == ["ok"]
+    assert res["errors"] == {
+        "flaky": "run: RuntimeError: boom",
+        "bad_warmup": "warmup: RuntimeError: boom",
+    }
+    assert [sorted(p) for p in res["passes"]] == [["flaky", "ok"], ["ok"]]

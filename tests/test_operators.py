@@ -913,6 +913,40 @@ def test_lsh_tuning_curve_monotone_in_bands(spark):
     assert theory == sorted(theory)
 
 
+def test_lsh_tuning_curve_empty_candidate_set_matches_oracle(spark, tmp_path):
+    """A corpus with no near-duplicate pairs: every config reports 0
+    candidates, 0 verified and a NULL precision, as the oracle's COUNT(*)
+    and 0 // 0 do (a sum over zero candidate rows would be NULL)."""
+    import duckdb
+
+    d = str(tmp_path / "no_dups")
+    texts = [
+        "alpha beta gamma delta epsilon",
+        "red green blue cyan magenta",
+        "oak pine elm ash birch",
+        "north south east west center",
+    ]
+    spark.createDataFrame(
+        [(i, t, "en", "s0", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.mode("overwrite").parquet(d + "/documents.parquet")
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{d}/documents.parquet/*.parquet')"
+    )
+    sdf = assert_oracle_match(
+        spark,
+        duck,
+        dedup.dedup_lsh_tuning_curve,
+        dedup.ORACLES["dedup_lsh_tuning_curve"],
+        sf_dir=d,
+    )
+    assert sdf.n_candidates.tolist() == [0, 0, 0]
+    assert sdf.n_verified.tolist() == [0, 0, 0]
+    assert sdf.precision_ppm.isna().all()
+
+
 def test_boilerplate_spans_reach_recompute(spark):
     """Boilerplate spans: reach counts match a Python recompute of
     distinct-doc frequency over 3-gram shingles."""

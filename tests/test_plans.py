@@ -377,17 +377,12 @@ def test_no_unpartitioned_windows_over_unreduced_input(spark):
     Aggregate/Limit/Deduplicate — that shape funnels fact-sized data
     through ONE task. q_encoding_stats (the flagged oracle baseline, not
     a headline) is the only allowed exception in the full registry."""
-    import os
-    import re
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as em
+    import bench
     from tools.explain_audit import _global_windows, _unbounded_nl_joins
 
     qs = em.queries()
-    src = open("/root/repo/bench.py").read()
-    names = [n for n in re.findall(r'"([a-z0-9_]+)"', src) if n in qs]
+    names = [n for n in bench.SENTINEL + bench.HEADLINE if n in qs]
     # plan-only audit: building the DataFrame is enough, nothing executes —
     # but skip the genuinely execution-bound entries (streaming drains,
     # model fits) whose builders RUN work before returning a frame.

@@ -117,9 +117,10 @@ def test_global_index_dense_on_shuffled_multipartition_input(spark):
         .select("event_id", "user_id")
     )
     b = CountBatcher(out_dir="/tmp/unused_gidx")
-    indexed = b._global_index(df)
+    indexed, total = b._global_index(df)
+    assert total == 1000
     idx = sorted(r["_idx"] for r in indexed.select("_idx").collect())
-    assert idx == list(range(1000))
+    assert idx == list(range(total))
     # batch bucketing derived from the index is exact-size
     sizes = (
         indexed.withColumn("b", (F.col("_idx") / 250).cast("int"))

@@ -2,12 +2,13 @@
 
 Usage: python tools/ab_bench.py <query> [query ...]
 
-Fresh-JVM run: warm-up every named query at sf0.001 (JIT + codegen cache),
-then min-of-2 whole-list noop-sink passes at $SPARK_GRAFT_SF_DIR
-(default sf0.1). Prints one JSON line {name: sec, ..., "_total": sec}.
+Fresh-JVM run of ``bench.time_queries`` over the named queries: warm-up at
+sf0.001 (JIT + codegen cache), then min-of-2 whole-list noop-sink passes at
+$SPARK_GRAFT_SF_DIR (default sf0.1). Prints one JSON line
+{name: sec, ..., "_total": sec}. If any query raised, the line also carries
+"_errors": {name: message} and the exit code is 1.
 Run back-to-back on the pre-edit (git stash) and post-edit tree to get a
 paired comparison that controls for the full bench's session-state tax.
-SPARK_GRAFT_AB_PASSES overrides the pass count.
 """
 
 from __future__ import annotations
@@ -15,44 +16,26 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 
-def main() -> None:
+
+def main() -> int:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n_passes = int(os.environ.get("SPARK_GRAFT_AB_PASSES", "2"))
-    from kafka_pyspark_bigdata_spark.session import get_spark
-
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("ab-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    spark, qs = bench.bench_session("ab-bench")
     unknown = [n for n in names if n not in qs]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if os.path.isdir(warm_dir):
-        for name in names:
-            qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-    passes: list[dict[str, float]] = []
-    for _ in range(n_passes):
-        pass_t: dict[str, float] = {}
-        for name in names:
-            spark.sparkContext.setJobDescription(f"ab:{name}")
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            pass_t[name] = round(time.time() - t0, 3)
-            spark.sparkContext.setJobDescription(None)
-        passes.append(pass_t)
-    timings = {n: min(p[n] for p in passes) for n in names}
-    timings["_total"] = round(sum(timings.values()), 3)
-    print(json.dumps(timings))
+    res = bench.time_queries(spark, qs, names, sf_dir, 2)
+    out = dict(res["queries"], _total=round(sum(res["queries"].values()), 3))
+    if res["errors"]:
+        out["_errors"] = res["errors"]
+    print(json.dumps(out))
+    return 1 if res["errors"] else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -5,17 +5,21 @@ Usage: python tools/capture_plans.py <before|after> <query> [query ...]
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt (round dir from
 the env var so each optimization round's evidence lands in its own
 directory instead of overwriting a past round's). Plans are built at sf0.1
-(the bench SF) with the same get_spark session the bench uses, so Exchange
-counts / join strategies match what the timed runs execute (AQE initial
-plan).
+(the bench SF) in ``bench.bench_session``, the session the bench times in,
+so Exchange counts / join strategies match what the timed runs execute
+(AQE initial plan).
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT_DIR = os.path.join(
@@ -29,16 +33,7 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     os.makedirs(OUT_DIR, exist_ok=True)
-    from kafka_pyspark_bigdata_spark.session import get_spark
-
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("capture-plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-    import contextlib
-    import io
-
+    spark, qs = bench.bench_session("capture-plans")
     for name in names:
         df = qs[name](spark, SF_DIR)
         buf = io.StringIO()

@@ -15,7 +15,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AUDIT_SF = "/root/testdata/sf0.01"
 
@@ -192,26 +192,18 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else AUDIT_SF
     names = [a for a in sys.argv[1:] if not os.path.isdir(a)]
 
-    from kafka_pyspark_bigdata_spark.session import get_spark
-
-    import __spark_entry__ as entrymod
     import bench
 
-    spark = get_spark("explain-audit")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, qs = bench.bench_session("explain-audit")
     # Audit the STATIC plan: with AQE on, explain shows an unexecuted
     # AdaptiveSparkPlan wrapper without codegen annotations. The engine
     # runs with AQE enabled (session.py); this switch affects only this
     # audit's view of the plan.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    qs = entrymod.queries()
     full_registry = not names
     if not names:
-        # the bench headline list, in bench order
-        src = open(os.path.join(os.path.dirname(__file__), "..", "bench.py")).read()
-        names = [n for n in re.findall(r'"([a-z0-9_]+)"', src) if n in qs]
-        seen = set()
-        names = [n for n in names if not (n in seen or seen.add(n))]
+        # the bench sentinel + headline lists, in bench order
+        names = [n for n in dict.fromkeys(bench.SENTINEL + bench.HEADLINE) if n in qs]
 
     lines = [
         "# Physical-plan audit (generated by tools/explain_audit.py)",

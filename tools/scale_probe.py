@@ -1,12 +1,14 @@
 """Empirical scaling probe: time representative operators across the three
 fixture scale factors and report the growth exponent.
 
-For each probed query, wall time is measured at sf0.001 / sf0.01 / sf0.1
-(noop sink, one warm-up at the smallest sf) and the growth exponent
-alpha = log10(t_sf0.1 / t_sf0.01) — the slope of log(t) vs log(rows) over
+Each SF (sf0.001, sf0.01, sf0.1 in turn) gets one ``bench.time_queries``
+call with one pass: a whole-list warm-up at sf0.001, then one whole-list
+noop-sink pass at that SF. The growth exponent
+alpha = log10(t_sf0.1 / t_sf0.01) is the slope of log(t) vs log(rows) over
 the last 10x data step. alpha ~ 1 means linear scaling (shuffle- or
 scan-bound as designed); alpha >> 1 flags a shape that would not survive
-100 TB. Writes SCALING.md.
+100 TB. A run over the default probe list rewrites SCALING.md; a run over
+named queries only prints its table.
 
 Fixed overhead (JVM, planning, stream startup) dominates small SFs, so the
 exponent uses the sf0.01 -> sf0.1 step only; the smaller SFs are reported
@@ -18,10 +20,13 @@ Usage: python tools/scale_probe.py [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import bench  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -126,39 +131,9 @@ PROBES = [
 
 
 def main() -> None:
-    names = sys.argv[1:] or PROBES
-
-    from kafka_pyspark_bigdata_spark.session import get_spark
-
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-    names = [n for n in names if n in qs]
-
-    rows = []
-    for name in names:
-        try:
-            qs[name](spark, SFS[0]).write.format("noop").mode("overwrite").save()
-        except Exception as exc:  # noqa: BLE001
-            rows.append((name, None, None, None, f"warmup: {exc}"[:120]))
-            continue
-        times = []
-        ok = True
-        for sf in SFS:
-            t0 = time.time()
-            try:
-                qs[name](spark, sf).write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # noqa: BLE001
-                rows.append((name, None, None, None, f"{sf}: {exc}"[:120]))
-                ok = False
-                break
-            times.append(time.time() - t0)
-        if not ok:
-            continue
-        alpha = math.log10(max(times[2], 1e-3) / max(times[1], 1e-3))
-        rows.append((name, times[0], times[1], times[2], f"{alpha:.2f}"))
+    spark, qs = bench.bench_session("scale-probe")
+    names = [n for n in sys.argv[1:] or PROBES if n in qs]
+    runs = [bench.time_queries(spark, qs, names, sf, 1) for sf in SFS]
 
     lines = [
         "# SCALING — measured growth exponents (generated by tools/scale_probe.py)",
@@ -174,14 +149,22 @@ def main() -> None:
         "| query | sf0.001 s | sf0.01 s | sf0.1 s | alpha |",
         "|---|---|---|---|---|",
     ]
-    for name, t0, t1, t2, a in rows:
-        if t0 is None:
-            lines.append(f"| {name} | — | — | — | ERROR: {a} |")
-        else:
-            lines.append(f"| {name} | {t0:.2f} | {t1:.2f} | {t2:.2f} | {a} |")
+    for name in names:
+        errs = [
+            f"{os.path.basename(sf)} {run['errors'][name]}"
+            for sf, run in zip(SFS, runs)
+            if name in run["errors"]
+        ]
+        if errs:
+            lines.append(f"| {name} | — | — | — | ERROR: {errs[0][:120]} |")
+            continue
+        t0, t1, t2 = (run["queries"][name] for run in runs)
+        alpha = math.log10(max(t2, 1e-3) / max(t1, 1e-3))
+        lines.append(f"| {name} | {t0:.2f} | {t1:.2f} | {t2:.2f} | {alpha:.2f} |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/SCALING.md", "w") as fh:
-        fh.write(out)
+    if len(sys.argv) == 1:
+        with open(os.path.join(ROOT, "SCALING.md"), "w") as fh:
+            fh.write(out)
     print(out)
 
 
