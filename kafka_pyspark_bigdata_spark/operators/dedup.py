@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.batch import load_table, parallelize_scan
+from ..sources.batch import load_table, parallelize_scan, table_path, table_stamp
 from .text import NORMALIZED_SQL, TOKENS_SQL, normalized_text_expr, with_tokens
 
 # MinHash/LSH parameters: 16 hashes in 4 bands of 4 rows → catches
@@ -678,27 +678,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # materialized artifact. Keyed by applicationId so a restarted session
 # (dead checkpoint RDDs) falls through to a rebuild, per the round-8
 # catalog-cache lesson.
-_DUP_PAIRS_CACHE: dict[tuple[str, str, float], DataFrame] = {}
+_DUP_PAIRS_CACHE: dict[tuple[str, str, tuple[int, int, int]], DataFrame] = {}
 
 
 def dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b) verified near-dup pairs, eagerly checkpointed and
-    cached per (applicationId, normalized sf_dir, documents mtime). The
-    mtime in the key invalidates the cache if documents.parquet is
-    rewritten in place within one application (the staleness class the
-    bucketed-layout cache validates against the live catalog); entries
-    from other applications are evicted so dead-session DataFrames are
-    not pinned for the process lifetime."""
-    import os as _os
-
+    cached per (applicationId, normalized sf_dir, documents file stamp).
+    The stamp (``table_stamp``, shared with ``load_table``) invalidates
+    the cache if documents.parquet is rewritten within one application
+    (the staleness class the bucketed-layout cache validates against the
+    live catalog); entries from other applications are evicted so
+    dead-session DataFrames are not pinned for the process lifetime."""
     app = spark.sparkContext.applicationId
     norm = sf_dir.rstrip("/")
-    doc_path = _os.path.join(norm, "documents.parquet")
-    try:
-        mtime = _os.path.getmtime(doc_path)
-    except OSError:
-        mtime = -1.0
-    key = (app, norm, mtime)
+    key = (app, norm, table_stamp(table_path(norm, "documents")))
     cached = _DUP_PAIRS_CACHE.get(key)
     if cached is not None:
         return cached

@@ -29,6 +29,21 @@ Two paths:
 
 All are value-exact against the oracle: cosine is computed in double and
 rounded to 6 decimals (reduction error over 64 terms ~1e-14).
+
+Shared building blocks (Spark side only; the oracle SQL spells each query
+out in full): ``_query_corpus`` projects the query set (``vec_id <
+N_QUERIES`` → query_id, qv, qn) and the corpus (neighbor_id, cv, cn);
+``_pairs`` broadcasts the queries against the corpus without self pairs;
+``_score`` adds the hoisted-norm cosine; ``_top_k`` keeps ranks 1..k per
+group. ``_top_k`` owns the tie-break contract every ranking here shares
+with its oracle: ``row_number`` over (score DESC, neighbor_id ASC), so
+equal scores always resolve toward the smaller id. ``_ivf_sims``,
+``_ivf_lists`` and ``_ivf_probes`` are the IVF coarse quantizer
+(centroid similarities, argmax list assignment with ties toward the
+smaller centroid id, per-query probe ranking). ``_recall_per_query`` and
+``_recall_curve`` are the recall@k tails: a left join of one ranking
+against the other on (query_id, neighbor_id) and an exact ``·10⁶ DIV``
+ratio.
 """
 
 from __future__ import annotations
@@ -96,36 +111,110 @@ def _bucket_sql(vec_col: str) -> str:
     return "CAST(" + " + ".join(terms) + " AS INTEGER)"
 
 
-def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-5 neighbors for each of the first 10 vectors."""
-    emb = load_table(spark, sf_dir, "embeddings")
+# ---------------------------------------------------------------------------
+# Shared search building blocks (see the module docstring)
+# ---------------------------------------------------------------------------
+
+
+def _query_corpus(emb: DataFrame, *extra) -> tuple[DataFrame, DataFrame]:
+    """(queries, corpus): ``vec_id < N_QUERIES`` as (query_id, qv, qn) and
+    every vector as (neighbor_id, cv, cn). Norms are computed once per
+    vector, below the pair join. ``extra`` columns ride along on both
+    sides (e.g. the bucket an equi-join keys on)."""
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
         norm_expr("embedding").alias("qn"),
+        *extra,
     )
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("cv"),
         norm_expr("embedding").alias("cn"),
+        *extra,
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cn")
-            ).alias("cosine"),
-        )
+    return q, c
+
+
+def _pairs(q: DataFrame, c: DataFrame, *on: str) -> DataFrame:
+    """Broadcast the |Q|-bounded query side against the corpus, equi-joined
+    on ``on`` (a bucket or list id) or, without keys, all pairs. Self pairs
+    are dropped. The corpus is never shuffled."""
+    ne = F.col("query_id") != F.col("neighbor_id")
+    if on:
+        return F.broadcast(q).join(c, list(on)).filter(ne)
+    return F.broadcast(q).join(c, ne)
+
+
+def _cosine() -> Column:
+    """6-decimal cosine of a (qv, qn) × (cv, cn) pair from hoisted norms."""
+    return cosine_from_parts(dot_expr("qv", "cv"), F.col("qn"), F.col("cn"))
+
+
+def _score(pairs: DataFrame, *keep) -> DataFrame:
+    """(query_id, neighbor_id, *keep, cosine) of each pair."""
+    return pairs.select("query_id", "neighbor_id", *keep, _cosine().alias("cosine"))
+
+
+def _top_k(
+    scored: DataFrame,
+    *by: str,
+    k: int = TOP_K,
+    order: tuple[Column, ...] | None = None,
+    rank: str = "rank",
+) -> DataFrame:
+    """Rows ranked 1..k within each ``by`` group (default: per query).
+    ``order`` defaults to (cosine DESC, neighbor_id ASC): the id tie-break
+    makes equal scores resolve the same way in Spark and in the oracle's
+    ``ORDER BY score DESC, id``, so the kept set is engine-deterministic."""
+    w = Window.partitionBy(*(by or ("query_id",))).orderBy(
+        *(order or (F.desc("cosine"), F.asc("neighbor_id")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
+def _recall_per_query(truth: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per query: k = |truth|, n_found = |truth ∩ approx| and recall_fp =
+    n_found·10⁶ DIV k (fixed-point, engine-exact). A left join of the
+    truth ranking against the approximate one on (query_id, neighbor_id):
+    |Q|·k rows, nothing collected."""
+    hits = approx.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
+        truth.select("query_id", "neighbor_id")
+        .join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("k"),
+            F.sum(F.coalesce("hit", F.lit(0))).alias("n_found"),
+        )
+        .withColumn("recall_fp", F.expr("n_found * 1000000 DIV k"))
     )
+
+
+def _recall_curve(approx: DataFrame, truth: DataFrame, by: str) -> DataFrame:
+    """One row per ``by`` setting of an approximate search: n_sel rows
+    returned, n_hits of them in ``truth``, n_truth = |truth| and
+    recall_ppm = n_hits·10⁶ DIV n_truth."""
+    hits = truth.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    total = hits.agg(F.count(F.lit(1)).alias("n_truth"))
+    return (
+        approx.join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy(by)
+        .agg(
+            F.count(F.lit(1)).alias("n_sel"),
+            F.sum(F.coalesce("hit", F.lit(0))).alias("n_hits"),
+        )
+        .crossJoin(F.broadcast(total))
+        .withColumn("recall_ppm", F.expr("n_hits * 1000000 DIV n_truth"))
+    )
+
+
+def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-5 neighbors for each of the first 10 vectors."""
+    q, c = _query_corpus(load_table(spark, sf_dir, "embeddings"))
+    return _top_k(_score(_pairs(q, c))).orderBy("query_id", "rank")
 
 
 ANN_TOPK_SQL = f"""
@@ -151,39 +240,14 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5: each query only scores corpus vectors in its own
     random-hyperplane bucket. Join key is the bucket id — a plain shuffle
     (or broadcast) equi-join; candidates per query shrink by ~2^bits."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    with_bucket = emb.select(
+    q, c = _query_corpus(_with_bucket(spark, sf_dir), "bucket")
+    return _top_k(_score(_pairs(q, c, "bucket"))).orderBy("query_id", "rank")
+
+
+def _with_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding, bucket): each vector's SRP-LSH bucket id."""
+    return load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", bucket_expr("embedding").alias("bucket")
-    )
-    q = with_bucket.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm_expr("embedding").alias("qn"),
-        "bucket",
-    )
-    c = with_bucket.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        norm_expr("embedding").alias("cn"),
-        "bucket",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cn")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
     )
 
 
@@ -234,53 +298,18 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-bounded candidate set only. Exact ppm arithmetic end to end
     — hash-checked against the oracle's identical bucket + band + rank
     pipeline."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    wb = emb.select(
-        "vec_id",
-        "embedding",
-        bucket_expr("embedding").alias("bucket"),
-        norm_expr("embedding").alias("nm"),
-    )
-    q = wb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nm").alias("qn"),
-        "bucket",
-    )
-    c = wb.select(
-        F.col("vec_id").alias("neg_id"),
-        F.col("embedding").alias("cv"),
-        F.col("nm").alias("cn"),
-        "bucket",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neg_id"))
-        .select(
-            "query_id",
-            "neg_id",
-            F.round(
-                cosine_from_parts(
-                    dot_expr("qv", "cv"), F.col("qn"), F.col("cn")
-                )
-                * 1_000_000
-            )
-            .cast("bigint")
-            .alias("cos_ppm"),
-        )
+    q, c = _query_corpus(_with_bucket(spark, sf_dir), "bucket")
+    scored = _pairs(q, c, "bucket").select(
+        "query_id",
+        F.col("neighbor_id").alias("neg_id"),
+        F.round(_cosine() * 1_000_000).cast("bigint").alias("cos_ppm"),
     )
     banded = scored.filter(
         (F.col("cos_ppm") >= HN_LO_PPM) & (F.col("cos_ppm") < HN_HI_PPM)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_ppm"), F.asc("neg_id")
-    )
-    return (
-        banded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= HN_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(
+        banded, k=HN_K, order=(F.desc("cos_ppm"), F.asc("neg_id"))
+    ).orderBy("query_id", "rank")
 
 
 def _hard_negatives_sql() -> str:
@@ -510,42 +539,19 @@ def ann_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheduling overhead. Ties break on candidate id, so the greedy
     trajectory is engine-deterministic and the DuckDB oracle replays it
     move for move (unrolled CTEs)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm_expr("embedding").alias("qn"),
+    q, c = _query_corpus(load_table(spark, sf_dir, "embeddings"))
+    scored = _pairs(q, c).select(
+        "query_id",
+        "neighbor_id",
+        "cv",
+        F.round(_cosine() * 1_000_000).cast("bigint").alias("rel_ppm"),
     )
-    c = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("cv"),
-        norm_expr("embedding").alias("cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            "cv",
-            F.round(
-                cosine_from_parts(
-                    dot_expr("qv", "cv"), F.col("qn"), F.col("cn")
-                )
-                * 1_000_000
-            )
-            .cast("bigint")
-            .alias("rel_ppm"),
-        )
-    )
-    wrel = Window.partitionBy("query_id").orderBy(
-        F.desc("rel_ppm"), F.asc("cand_id")
-    )
-    cand = (
-        scored.withColumn("rn", F.row_number().over(wrel))
-        .filter(F.col("rn") <= MMR_POOL)
-        .drop("rn")
-    )
+    cand = _top_k(
+        scored,
+        k=MMR_POOL,
+        order=(F.desc("rel_ppm"), F.asc("neighbor_id")),
+        rank="rn",
+    ).drop("rn")
 
     def mmr_group(pdf):
         V = np.array(pdf["cv"].tolist(), dtype=np.float64)
@@ -561,7 +567,7 @@ def ann_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc / (norms[:, None] * norms[None, :]) * 1_000_000
         ).astype(np.int64)
         rel = pdf["rel_ppm"].to_numpy(np.int64)
-        ids = pdf["cand_id"].to_numpy(np.int64)
+        ids = pdf["neighbor_id"].to_numpy(np.int64)
         qid = int(pdf["query_id"].iloc[0])
         avail = np.ones(n, dtype=bool)
         sel_idx: list[int] = []
@@ -818,15 +824,35 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     its generated code is reused across datasets (warm-up compiles it
     once).
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", norm_expr("embedding").alias("en")
-    )
-    cents = emb.filter(F.col("vec_id") < IVF_NLIST).select(
+    sims = _ivf_sims(load_table(spark, sf_dir, "embeddings"))
+    pairs = _pairs(_ivf_probes(sims, IVF_NPROBE), _ivf_lists(sims), "list_id")
+    return _top_k(_score(pairs)).orderBy("query_id", "rank")
+
+
+def _ivf_cents(emb: DataFrame) -> DataFrame:
+    """The IVF_NLIST coarse centroids (cid, centv, cn): the first IVF_NLIST
+    vectors of ``emb`` (vec_id, embedding, en)."""
+    return emb.filter(F.col("vec_id") < IVF_NLIST).select(
         F.col("vec_id").cast("int").alias("cid"),
         F.col("embedding").alias("centv"),
         F.col("en").alias("cn"),
     )
-    sims = emb.crossJoin(F.broadcast(cents)).select(
+
+
+def _ivf_sims(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding, en, cid, sim): every vector of the embeddings
+    table ``emb`` against every coarse centroid — a broadcast cross join,
+    map-side, no corpus shuffle."""
+    emb = emb.select("vec_id", "embedding", norm_expr("embedding").alias("en"))
+    # PRECONDITION (nonzero norms): a zero-norm vector or centroid makes
+    # sim = 0/0 = NaN. The descending rankings of sim (the probe window,
+    # the max(struct) argmax) put NaN first, but ann_ivf_spill's ascending
+    # in-row sort on -sim puts it last. They agree only because the
+    # embedding fixture generator never emits a zero-norm vector
+    # (quantized integer grids, all lanes nonzero with probability 1 by
+    # construction; norm_expr > 0 for every fixture row). A deployment
+    # over arbitrary embeddings must pre-filter en > 0 / cn > 0 first.
+    return emb.crossJoin(F.broadcast(_ivf_cents(emb))).select(
         "vec_id",
         "embedding",
         "en",
@@ -835,6 +861,11 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot_expr("embedding", "centv"), F.col("en"), F.col("cn")
         ).alias("sim"),
     )
+
+
+def _ivf_lists(sims: DataFrame) -> DataFrame:
+    """(neighbor_id, cv, cn, list_id): each vector assigned to its nearest
+    centroid's inverted list."""
     # argmax centroid per corpus vector: max struct orders by (sim, -cid),
     # i.e. highest similarity with ties toward the smallest centroid id —
     # the same ORDER BY sim DESC, cid contract as the SQL oracle.
@@ -846,22 +877,28 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on the interpreted path, and the codegen'd crossJoin+partial-agg
     # was 1.17 vs 1.60 s at sf0.1. ann_ivf_spill keeps its in-row form
     # because there it replaces a full rank window, not a partial agg.)
-    corpus = (
+    return (
         sims.groupBy("vec_id")
         .agg(
             F.max(F.struct(F.col("sim"), (-F.col("cid")).alias("ncid"))).alias("m"),
             F.first("embedding").alias("cv"),
-            F.first("en").alias("cvn"),
+            F.first("en").alias("cn"),
         )
         .select(
             F.col("vec_id").alias("neighbor_id"),
             "cv",
-            "cvn",
+            "cn",
             (-F.col("m.ncid")).cast("int").alias("list_id"),
         )
     )
+
+
+def _ivf_probes(sims: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qv, qn, list_id, pr): each query's ``nprobe`` nearest
+    lists, pr = probe rank 1..nprobe (sim DESC, cid ASC — the oracle's
+    order)."""
     wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cid"))
-    probes = (
+    return (
         sims.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
@@ -870,27 +907,9 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cid",
             "sim",
         )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "qv", "qn", F.col("cid").alias("list_id"))
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(corpus, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cvn")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
+        .withColumn("pr", F.row_number().over(wq))
+        .filter(F.col("pr") <= nprobe)
+        .select("query_id", "qv", "qn", F.col("cid").alias("list_id"), "pr")
     )
 
 
@@ -1424,27 +1443,9 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both paths reuse the operators above; the comparison is a left join
     of the exact top-k against the approximate result on (query,
     neighbor) — |Q|·k rows, driver-free."""
-    bf = ann_topk_bruteforce(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    lsh = ann_lsh_bucketed(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        bf.join(lsh, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.coalesce("hit", F.lit(0))).alias("n_found"),
-        )
-        .select(
-            "query_id",
-            "k",
-            F.col("n_found").cast("long").alias("n_found"),
-            F.expr("n_found * 1000000 DIV k").alias("recall_fp"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_per_query(
+        ann_topk_bruteforce(spark, sf_dir), ann_lsh_bucketed(spark, sf_dir)
+    ).orderBy("query_id")
 
 
 def _ann_recall_sql() -> str:
@@ -1490,53 +1491,20 @@ def ann_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector lives in exactly ONE bucket and the probe masks are distinct,
     so a (query, neighbor) pair appears at most once — no dedup needed
     before the final top-k window (the only all-to-all exchange)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    wb = emb.select(
-        "vec_id",
-        "embedding",
-        norm_expr("embedding").alias("nn"),
-        bucket_expr("embedding").alias("bucket"),
-    )
-    probes = (
-        wb.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.col("nn").alias("qn"),
-            "bucket",
-            F.explode(F.array(*[F.lit(m) for m in MP_MASKS])).alias("m"),
-        )
-        .select(
-            "query_id",
-            "qv",
-            "qn",
-            F.col("bucket").bitwiseXOR(F.col("m")).alias("bucket"),
-        )
-    )
-    c = wb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        F.col("nn").alias("cn"),
+    q, c = _query_corpus(_with_bucket(spark, sf_dir), "bucket")
+    probes = q.select(
+        "query_id",
+        "qv",
+        "qn",
         "bucket",
+        F.explode(F.array(*[F.lit(m) for m in MP_MASKS])).alias("m"),
+    ).select(
+        "query_id",
+        "qv",
+        "qn",
+        F.col("bucket").bitwiseXOR(F.col("m")).alias("bucket"),
     )
-    scored = (
-        F.broadcast(probes)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cn")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(_score(_pairs(probes, c, "bucket"))).orderBy("query_id", "rank")
 
 
 def _ann_multiprobe_sql() -> str:
@@ -1590,66 +1558,9 @@ def ann_ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     no re-scan per level, no extra corpus pass). Ground truth is the
     brute-force scan, also once. Everything downstream of the two scans
     is |Q|·k-sized."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", norm_expr("embedding").alias("en")
-    )
-    cents = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").cast("int").alias("cid"),
-        F.col("embedding").alias("centv"),
-        F.col("en").alias("cn"),
-    )
-    sims = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "embedding",
-        "en",
-        "cid",
-        cosine_from_parts(
-            dot_expr("embedding", "centv"), F.col("en"), F.col("cn")
-        ).alias("sim"),
-    )
-    # codegen'd crossJoin + partial-agg argmax (the ann_ivf shape; the
-    # r12 in-row variant was measured slower — see ann_ivf)
-    corpus = (
-        sims.groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("sim"), (-F.col("cid")).alias("ncid"))).alias("m"),
-            F.first("embedding").alias("cv"),
-            F.first("en").alias("cvn"),
-        )
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "cv",
-            "cvn",
-            (-F.col("m.ncid")).cast("int").alias("list_id"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cid"))
-    probes = (
-        sims.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.col("en").alias("qn"),
-            "cid",
-            "sim",
-        )
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= max(NPROBE_LEVELS))
-        .select("query_id", "qv", "qn", F.col("cid").alias("list_id"), "pr")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(corpus, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "pr",
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cvn")
-            ).alias("cosine"),
-        )
-    )
+    sims = _ivf_sims(load_table(spark, sf_dir, "embeddings"))
+    probes = _ivf_probes(sims, max(NPROBE_LEVELS))
+    cand = _score(_pairs(probes, _ivf_lists(sims), "list_id"), "pr")
     # fan each candidate out to every level that would have probed its
     # list: an in-row array filter, not a join — the level table never
     # touches the shuffle.
@@ -1662,32 +1573,12 @@ def ann_ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.filter(levels_arr, lambda l: l >= F.col("pr"))
         ).alias("nprobe"),
     )
-    wl = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
+    approx = _top_k(per_level, "nprobe", "query_id").select(
+        "nprobe", "query_id", "neighbor_id"
     )
-    approx = (
-        per_level.withColumn("rank", F.row_number().over(wl))
-        .filter(F.col("rank") <= TOP_K)
-        .select("nprobe", "query_id", "neighbor_id")
-    )
-    bf = ann_topk_bruteforce(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    total = bf.agg(F.count(F.lit(1)).alias("bf_total"))
     return (
-        approx.join(bf, ["query_id", "neighbor_id"], "left")
-        .groupBy("nprobe")
-        .agg(
-            F.count(F.lit(1)).alias("n_sel"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .crossJoin(F.broadcast(total))
-        .select(
-            "nprobe",
-            "n_sel",
-            "n_hits",
-            F.expr("n_hits * 1000000 DIV bf_total").alias("recall_ppm"),
-        )
+        _recall_curve(approx, ann_topk_bruteforce(spark, sf_dir), "nprobe")
+        .select("nprobe", "n_sel", "n_hits", "recall_ppm")
         .orderBy("nprobe")
     )
 
@@ -1782,23 +1673,8 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins. At 100 TB the only growth vs ann_ivf is the ≤3×
     posting-list storage — exactly the knob SPANN trades.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", norm_expr("embedding").alias("en")
-    )
-    cents = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").cast("int").alias("cid"),
-        F.col("embedding").alias("centv"),
-        F.col("en").alias("cn"),
-    )
-    sims = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "embedding",
-        "en",
-        "cid",
-        cosine_from_parts(
-            dot_expr("embedding", "centv"), F.col("en"), F.col("cn")
-        ).alias("sim"),
-    )
+    raw = load_table(spark, sf_dir, "embeddings")
+    emb = raw.select("vec_id", "embedding", norm_expr("embedding").alias("en"))
     # closure assignment IN-ROW (r12): the centroid ranking per vector
     # is an array_sort of struct(-sim, cid) — ascending = (sim DESC,
     # cid ASC), exactly the previous window's ORDER BY — and the
@@ -1806,16 +1682,11 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Previously this was a row_number + max window over the
     # 16×-exploded sims frame, i.e. a full-corpus shuffle carrying the
     # embedding payload; now the corpus never shuffles. Same doubles,
-    # same comparisons, bit-identical postings.
-    # PRECONDITION (nonzero norms): a zero-norm vector or centroid would
-    # make sim = 0/0 = NaN, which the old descending window ranked FIRST
-    # but the ascending sort on ns = -sim ranks LAST — the equivalence
-    # holds only because the embedding fixture generator never emits a
-    # zero-norm vector (quantized integer grids, all lanes nonzero with
-    # probability 1 by construction; norm_expr > 0 for every fixture
-    # row). A deployment over arbitrary embeddings must pre-filter
-    # en > 0 / cn > 0 before this ranking (r12 advice item).
-    cents1 = cents.agg(F.collect_list(F.struct("cid", "centv", "cn")).alias("cs"))
+    # same comparisons, bit-identical postings — given nonzero norms
+    # (the precondition in _ivf_sims).
+    cents1 = _ivf_cents(emb).agg(
+        F.collect_list(F.struct("cid", "centv", "cn")).alias("cs")
+    )
     sorted_expr = (
         "array_sort(transform(cs, s -> struct("
         "-round(aggregate(zip_with(embedding, s.centv,"
@@ -1842,81 +1713,38 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("cv"),
-            F.col("en").alias("cvn"),
+            F.col("en").alias("cn"),
             F.explode(F.expr(posts_expr)).alias("p"),
         )
         .select(
             "neighbor_id",
             "cv",
-            "cvn",
+            "cn",
             F.col("p.cid").alias("list_id"),
             (F.col("p.rn") == 1).alias("is_primary"),
         )
         .localCheckpoint(eager=False)
     )
-
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cid"))
-    probes = (
-        sims.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.col("en").alias("qn"),
-            "cid",
-            "sim",
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "qv", "qn", F.col("cid").alias("list_id"))
-    )
     cfgs = F.array(F.lit("baseline"), F.lit("spill"))
-    cand = (
-        F.broadcast(probes)
-        .join(postings, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cvn")
-            ).alias("cosine"),
-            F.explode(
-                F.filter(
-                    cfgs,
-                    lambda c: (c == F.lit("spill")) | F.col("is_primary"),
-                )
-            ).alias("config"),
-        )
+    in_cfg = F.explode(
+        F.filter(cfgs, lambda c: (c == F.lit("spill")) | F.col("is_primary"))
+    ).alias("config")
+    probes = _ivf_probes(_ivf_sims(raw), 1)
+    cand = _score(_pairs(probes, postings, "list_id"), in_cfg)
+    approx = _top_k(cand, "config", "query_id").select(
+        "config", "query_id", "neighbor_id"
     )
-    wl = Window.partitionBy("config", "query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
+    store = (
+        postings.select(in_cfg)
+        .groupBy("config")
+        .agg(F.count(F.lit(1)).alias("n_postings"))
     )
-    approx = (
-        cand.withColumn("rank", F.row_number().over(wl))
-        .filter(F.col("rank") <= TOP_K)
-        .select("config", "query_id", "neighbor_id")
-    )
-    bf = ann_topk_bruteforce(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    total = bf.agg(F.count(F.lit(1)).alias("bf_total"))
-    store = postings.select(
-        F.explode(
-            F.filter(cfgs, lambda c: (c == F.lit("spill")) | F.col("is_primary"))
-        ).alias("config")
-    ).groupBy("config").agg(F.count(F.lit(1)).alias("n_postings"))
     n_vecs = postings.filter("is_primary").agg(
         F.count(F.lit(1)).alias("n_vecs")
     )
     return (
-        approx.join(bf, ["query_id", "neighbor_id"], "left")
-        .groupBy("config")
-        .agg(
-            F.count(F.lit(1)).alias("n_sel"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
+        _recall_curve(approx, ann_topk_bruteforce(spark, sf_dir), "config")
         .join(store, "config")
-        .crossJoin(F.broadcast(total))
         .crossJoin(F.broadcast(n_vecs))
         .select(
             "config",
@@ -1924,7 +1752,7 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("n_postings * 1000000 DIV n_vecs").alias("repl_ppm"),
             "n_sel",
             "n_hits",
-            F.expr("n_hits * 1000000 DIV bf_total").alias("recall_ppm"),
+            "recall_ppm",
         )
         .orderBy("config")
     )
@@ -2031,19 +1859,8 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     same map-side pass ann_topk_bruteforce makes — the filter adds no
     exchange.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm_expr("embedding").alias("qn"),
-        F.col("label").alias("q_label"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        norm_expr("embedding").alias("cn"),
-        F.col("label").alias("n_label"),
-    )
+    q, c = _query_corpus(load_table(spark, sf_dir, "embeddings"), "label")
+    q = q.withColumnRenamed("label", "q_label")
     wq = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )
@@ -2051,24 +1868,12 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("cosine"), F.asc("neighbor_id")
     )
     scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("q_label") == F.col("n_label")).alias("match"),
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cn")
-            ).alias("cosine"),
-        )
+        _score(_pairs(q, c), (F.col("q_label") == F.col("label")).alias("match"))
         .withColumn("rg", F.row_number().over(wq))
         .withColumn("rm", F.row_number().over(wm))
         .localCheckpoint(eager=False)
     )
-    truth = scored.filter(F.col("match") & (F.col("rm") <= TOP_K)).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    total = truth.agg(F.count(F.lit(1)).alias("n_truth"))
+    truth = scored.filter(F.col("match") & (F.col("rm") <= TOP_K))
     kp_arr = F.array(*[F.lit(k) for k in FILTER_KPRIMES])
     shortlisted = (
         scored.filter(F.col("match") & (F.col("rg") <= max(FILTER_KPRIMES)))
@@ -2081,31 +1886,10 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("kprime"),
         )
     )
-    wk = Window.partitionBy("kprime", "query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
+    approx = _top_k(shortlisted, "kprime", "query_id").select(
+        "kprime", "query_id", "neighbor_id"
     )
-    approx = (
-        shortlisted.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= TOP_K)
-        .select("kprime", "query_id", "neighbor_id")
-    )
-    return (
-        approx.join(truth, ["query_id", "neighbor_id"], "left")
-        .groupBy("kprime")
-        .agg(
-            F.count(F.lit(1)).alias("n_sel"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .crossJoin(F.broadcast(total))
-        .select(
-            "kprime",
-            "n_sel",
-            "n_hits",
-            "n_truth",
-            F.expr("n_hits * 1000000 DIV n_truth").alias("recall_ppm"),
-        )
-        .orderBy("kprime")
-    )
+    return _recall_curve(approx, truth, "kprime").orderBy("kprime")
 
 
 ANN_FILTERED_SQL = f"""
@@ -2182,57 +1966,19 @@ def emb_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: two broadcast-query scans of the corpus (one per dim
     width — same map-side top-k shape as ann_topk_bruteforce) joined on
     (query, neighbor); |Q|·k rows reach the final aggregate."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm_expr("embedding").alias("qn"),
+    q, c = _query_corpus(load_table(spark, sf_dir, "embeddings"))
+    pairs = _pairs(q, c)
+    # full-width scoring reuses the hoisted norms; truncated-dim scoring
+    # (MRL) norms its own slices inside cosine_expr
+    trunc = pairs.select(
+        "query_id",
+        "neighbor_id",
+        cosine_expr(
+            F.slice("qv", 1, MRL_DIM), F.slice("cv", 1, MRL_DIM)
+        ).alias("cosine"),
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        norm_expr("embedding").alias("cn"),
-    )
-
-    def topk(qcol, ccol):
-        # full-width columns reuse the hoisted norms; truncated-dim scoring
-        # (MRL) norms its own slices inside cosine_expr as before
-        if isinstance(qcol, str) and isinstance(ccol, str) and (qcol, ccol) == ("qv", "cv"):
-            cos = cosine_from_parts(dot_expr("qv", "cv"), F.col("qn"), F.col("cn"))
-        else:
-            cos = cosine_expr(qcol, ccol)
-        scored = (
-            F.broadcast(q)
-            .join(c, F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", cos.alias("cosine"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
-
-    full = topk("qv", "cv")
-    qt = F.slice("qv", 1, MRL_DIM)
-    ct = F.slice("cv", 1, MRL_DIM)
-    trunc = topk(qt, ct).withColumn("hit", F.lit(1))
-    return (
-        full.join(trunc, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_found"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_found",
-            F.expr("n_found * 1000000 DIV k").alias("recall_fp"),
-        )
-        .orderBy("query_id")
+    return _recall_per_query(_top_k(_score(pairs)), _top_k(trunc)).orderBy(
+        "query_id"
     )
 
 
@@ -2480,14 +2226,9 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("adc_dist_fp"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist_fp"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(
+        scored, order=(F.asc("adc_dist_fp"), F.asc("neighbor_id"))
+    ).orderBy("query_id", "rank")
 
 
 def _pq_sql() -> str:
@@ -2552,25 +2293,9 @@ def ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query, how much of the true top-5 the code-based ranking
     recovers. Same join-of-two-rankings shape as ann_recall_eval; both
     inputs reuse their operators' plans verbatim."""
-    bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    pq = ann_pq_adc(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        bf.join(pq, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_found"),
-        )
-        .select(
-            "query_id",
-            "k",
-            "n_found",
-            F.expr("n_found * 1000000 DIV k").alias("recall_fp"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_per_query(
+        ann_topk_bruteforce(spark, sf_dir), ann_pq_adc(spark, sf_dir)
+    ).orderBy("query_id")
 
 
 def _pq_recall_sql() -> str:
@@ -3359,77 +3084,18 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.batch import scratch_dir
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", norm_expr("embedding").alias("en")
-    )
-    cents = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").cast("int").alias("cid"),
-        F.col("embedding").alias("centv"),
-        F.col("en").alias("cn"),
-    )
-    sims = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "embedding",
-        "en",
-        "cid",
-        cosine_from_parts(
-            dot_expr("embedding", "centv"), F.col("en"), F.col("cn")
-        ).alias("sim"),
-    )
-    corpus = (
-        sims.groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("sim"), (-F.col("cid")).alias("ncid"))).alias("m"),
-            F.first("embedding").alias("cv"),
-            F.first("en").alias("cvn"),
-        )
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "cv",
-            "cvn",
-            (-F.col("m.ncid")).cast("int").alias("list_id"),
-        )
-    )
+    sims = _ivf_sims(load_table(spark, sf_dir, "embeddings"))
     idx_path = os.path.join(scratch_dir("ivf_index", sf_dir), "index")
     # the persisted index stores each vector's norm alongside it — what a
     # real IVF index ships so query-time scoring never recomputes it
-    corpus.write.mode("overwrite").partitionBy("list_id").parquet(idx_path)
-
+    _ivf_lists(sims).write.mode("overwrite").partitionBy("list_id").parquet(
+        idx_path
+    )
     # query time: rank centroid sims for the query set only, then read
     # ONLY the probed lists from the persisted index
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cid"))
-    probes = (
-        sims.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.col("en").alias("qn"),
-            "cid",
-            "sim",
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "qv", "qn", F.col("cid").alias("list_id"))
-    )
     idx = spark.read.parquet(idx_path)
-    scored = (
-        F.broadcast(probes)
-        .join(idx, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cvn")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    pairs = _pairs(_ivf_probes(sims, IVF_NPROBE), idx, "list_id")
+    return _top_k(_score(pairs)).orderBy("query_id", "rank")
 
 
 def ann_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3440,26 +3106,7 @@ def ann_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. One row per list with its share and max/mean ppm ratio; the
     assignment argmax is the same broadcast-relation pass as
     ``ann_ivf``, so the audit costs one aggregation over it."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", norm_expr("embedding").alias("en")
-    )
-    cents = emb.filter(F.col("vec_id") < IVF_NLIST).select(
-        F.col("vec_id").cast("int").alias("cid"),
-        F.col("embedding").alias("centv"),
-        F.col("en").alias("cn"),
-    )
-    sims = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        cosine_from_parts(
-            dot_expr("embedding", "centv"), F.col("en"), F.col("cn")
-        ).alias("sim"),
-    )
-    assign = (
-        sims.groupBy("vec_id")
-        .agg(F.max(F.struct(F.col("sim"), (-F.col("cid")).alias("ncid"))).alias("m"))
-        .select((-F.col("m.ncid")).cast("int").alias("list_id"))
-    )
+    assign = _ivf_lists(_ivf_sims(load_table(spark, sf_dir, "embeddings")))
     sizes = assign.groupBy("list_id").agg(F.count(F.lit(1)).alias("n_vecs"))
     tot = sizes.agg(
         F.sum("n_vecs").alias("n_total"), F.max("n_vecs").alias("n_max")
@@ -3638,41 +3285,11 @@ def emb_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the bruteforce), two rank windows sharing the per-query
     partition, one partial-agg fold.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm_expr("embedding").alias("qn"),
+    q, c = _query_corpus(load_table(spark, sf_dir, "embeddings"))
+    scored = _score(_pairs(q, c), F.round(dot_expr("qv", "cv"), 6).alias("dot"))
+    wc = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        norm_expr("embedding").alias("cn"),
-    )
-
-    def dot6(a: str, b: str) -> Column:
-        return F.round(
-            F.aggregate(
-                F.zip_with(a, b, lambda u, v: u.cast("double") * v.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        )
-
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_parts(dot_expr("qv", "cv"), F.col("qn"), F.col("cn")).alias(
-                "cos"
-            ),
-            dot6("qv", "cv").alias("dot"),
-        )
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     wd = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
     ranked = scored.select(
         "query_id",
@@ -4020,15 +3637,9 @@ def ann_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     local = emb.select("vec_id", "embedding").mapInPandas(
         gen, "query_id long, neighbor_id long, score_ppm long"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_ppm"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "score_ppm", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(
+        local, order=(F.desc("score_ppm"), F.asc("neighbor_id"))
+    ).orderBy("query_id", "rank")
 
 
 ANN_GEMM_SQL = f"""
@@ -4082,37 +3693,36 @@ def emb_bitpack_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     an 8-byte payload. At 100 TB the same codes become the bucket key
     for multi-index Hamming probing (split words = exact-match bands,
     the ``dedup_simhash`` shape) — this entry is the scoring kernel."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
+    return _top_k(
+        _hamming_pairs(load_table(spark, sf_dir, "embeddings")),
+        order=(F.asc("hamming"), F.asc("neighbor_id")),
+    ).orderBy("query_id", "rank")
+
+
+def _hamming_pairs(emb: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, hamming) over each vector's two 32-bit
+    sign-code words: XOR + popcount, queries broadcast as in ``_pairs``."""
+    codes = emb.select(
         "vec_id",
         F.expr(_bitpack_expr(0)).alias("lo"),
         F.expr(_bitpack_expr(32)).alias("hi"),
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    q = codes.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("lo").alias("q_lo"),
         F.col("hi").alias("q_hi"),
     )
-    c = emb.select(
+    c = codes.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("lo").alias("c_lo"),
         F.col("hi").alias("c_hi"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(
-                "CAST(bit_count(q_lo ^ c_lo) + bit_count(q_hi ^ c_hi) AS INT)"
-            ).alias("hamming"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
+    return _pairs(q, c).select(
+        "query_id",
+        "neighbor_id",
+        F.expr(
+            "CAST(bit_count(q_lo ^ c_lo) + bit_count(q_hi ^ c_hi) AS INT)"
+        ).alias("hamming"),
     )
 
 
@@ -4170,69 +3780,16 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hash-verifies the full two-stage result, including the
     ham_rank → rank reordering the re-rank performs."""
     emb = load_table(spark, sf_dir, "embeddings")
-    codes = emb.select(
-        "vec_id",
-        F.expr(_bitpack_expr(0)).alias("lo"),
-        F.expr(_bitpack_expr(32)).alias("hi"),
+    shortlist = _top_k(
+        _hamming_pairs(emb),
+        k=RERANK_SHORTLIST,
+        order=(F.asc("hamming"), F.asc("neighbor_id")),
+        rank="ham_rank",
     )
-    q = codes.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("lo").alias("q_lo"),
-        F.col("hi").alias("q_hi"),
-    )
-    c = codes.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("lo").alias("c_lo"),
-        F.col("hi").alias("c_hi"),
-    )
-    wham = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(
-                "CAST(bit_count(q_lo ^ c_lo) + bit_count(q_hi ^ c_hi) AS INT)"
-            ).alias("hamming"),
-        )
-        .withColumn("ham_rank", F.row_number().over(wham))
-        .filter(F.col("ham_rank") <= RERANK_SHORTLIST)
-    )
-    vecs = emb.select(
-        "vec_id", "embedding", norm_expr("embedding").alias("vn")
-    )
-    qv = vecs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("vn").alias("qn"),
-    )
-    cv = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        F.col("vn").alias("cn"),
-    )
-    wcos = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            "ham_rank",
-            cosine_from_parts(
-                dot_expr("qv", "cv"), F.col("qn"), F.col("cn")
-            ).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(wcos))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "hamming", "ham_rank", "cosine", "rank")
-        .orderBy("query_id", "rank")
+    q, c = _query_corpus(emb)
+    pairs = shortlist.join(F.broadcast(q), "query_id").join(c, "neighbor_id")
+    return _top_k(_score(pairs, "hamming", "ham_rank")).orderBy(
+        "query_id", "rank"
     )
 
 
@@ -4285,30 +3842,12 @@ def emb_bitpack_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovers order but not candidates it never saw). Same eval shape as
     ``ann_recall_eval``/``ann_pq_recall_eval``: two bounded top-K sides,
     one K-row-per-query left join, an exact ppm fold."""
-    truth = ann_topk_bruteforce(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    ham = emb_bitpack_hamming_topk(spark, sf_dir).select(
-        F.col("query_id").alias("h_qid"), F.col("neighbor_id").alias("h_nid")
-    )
-    joined = truth.join(
-        ham,
-        (F.col("query_id") == F.col("h_qid"))
-        & (F.col("neighbor_id") == F.col("h_nid")),
-        "left",
-    )
     return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.col("h_nid").isNotNull().cast("long")).alias("n_hit"),
+        _recall_per_query(
+            ann_topk_bruteforce(spark, sf_dir),
+            emb_bitpack_hamming_topk(spark, sf_dir),
         )
-        .select(
-            "query_id",
-            "k",
-            "n_hit",
-            F.expr("n_hit * 1000000 DIV k").alias("recall_ppm"),
-        )
+        .toDF("query_id", "k", "n_hit", "recall_ppm")
         .orderBy("query_id")
     )
 
@@ -5262,6 +4801,75 @@ EMB_ABTT_SQL = _abtt_sql()
 MRL_DIMS = (8, 16, 32, 64)  # prefix lengths; the last is the full dimension
 
 
+def _sum_sq_sql(col: str) -> str:
+    """Σx² of an array column as a left-to-right double fold (SQL text)."""
+    return (
+        f"aggregate({col}, CAST(0 AS DOUBLE),"
+        f" (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+    )
+
+
+def _guarded_cos(qe: str, ce: str, qss: str, css: str) -> Column:
+    """6-decimal cosine of array expressions ``qe``/``ce`` given their
+    precomputed sums of squares ``qss``/``css``."""
+    # Zero-norm guard: a vector that is all zeros (a zero prefix, or a
+    # dequantized form collapsed to zero) would give 0/0 → NaN, and NaN
+    # ordering differs across engines — map such degenerate pairs to -2.0
+    # (below any cosine) so the rank tie-break stays deterministic (the
+    # emb_abtt_postprocess precedent).
+    dot = (
+        f"aggregate(zip_with({qe}, {ce},"
+        f" (u, v) -> CAST(u AS DOUBLE) * CAST(v AS DOUBLE)),"
+        f" CAST(0 AS DOUBLE), (a, x) -> a + x)"
+    )
+    return F.expr(
+        f"CASE WHEN {qss} = 0.0 OR {css} = 0.0"
+        f" THEN CAST(-2.0 AS DOUBLE)"
+        f" ELSE round({dot} / (sqrt({qss}) * sqrt({css})), 6) END"
+    )
+
+
+def _variant_recall(
+    pairs: DataFrame, key: str, variants: list[tuple[int, Column]], truth: int
+) -> DataFrame:
+    """(key, n_hits, recall_ppm): recall@TOP_K of each scoring variant of
+    the same (query, neighbor) pairs against the ``truth`` variant's
+    ranking. Every pair is scored once with all variants in one
+    projection, exploded to (pair, key) and ranked by ONE window per
+    (query, key) group."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(v).alias(key), e.alias("cosine"))
+                    for v, e in variants
+                ]
+            )
+        ).alias("vc"),
+    ).select("query_id", "neighbor_id", f"vc.{key}", "vc.cosine")
+    top = (
+        _top_k(scored, "query_id", key)
+        .select("query_id", "neighbor_id", key)
+        .localCheckpoint(eager=False)
+    )
+    truth_top = top.filter(F.col(key) == truth).select("query_id", "neighbor_id")
+    return (
+        top.join(truth_top, ["query_id", "neighbor_id"])
+        .groupBy(key)
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+        .select(
+            key,
+            "n_hits",
+            F.expr(f"n_hits * 1000000 div {N_QUERIES * TOP_K}").alias(
+                "recall_ppm"
+            ),
+        )
+        .orderBy(key)
+    )
+
+
 def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka retrieval audit (Kusupati et al. 2022, public): how
     much top-{TOP_K} retrieval quality survives truncating embeddings to
@@ -5296,86 +4904,29 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upward across the join boundary), and the pair evaluates only the
     # dot. The fold expression is IDENTICAL (same left-to-right double
     # reduction over the same prefix), so every cosine is bit-unchanged.
-    def pref_ss(col: str, d: int) -> str:
-        return (
-            f"aggregate(slice({col}, 1, {d}), CAST(0 AS DOUBLE),"
-            f" (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-        )
+    def pref_ss(d: int) -> Column:
+        return F.expr(_sum_sq_sql(f"slice(embedding, 1, {d})"))
 
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
-        *[F.expr(pref_ss("embedding", d)).alias(f"qss{d}") for d in MRL_DIMS],
+        *[pref_ss(d).alias(f"qss{d}") for d in MRL_DIMS],
     )
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("cv"),
-        *[F.expr(pref_ss("embedding", d)).alias(f"css{d}") for d in MRL_DIMS],
+        *[pref_ss(d).alias(f"css{d}") for d in MRL_DIMS],
     )
-
-    def pref_cos(d: int) -> Column:
-        # Zero-norm guard: a vector whose PREFIX is all zeros would give
-        # 0/0 → NaN, and NaN ordering differs across engines — map such
-        # degenerate pairs to -2.0 (below any cosine) so the rank
-        # tie-break stays deterministic (the emb_abtt_postprocess
-        # precedent).
-        qd, cd = f"slice(qv, 1, {d})", f"slice(cv, 1, {d})"
-        qss, css = f"qss{d}", f"css{d}"
-        dot = (
-            f"aggregate(zip_with({qd}, {cd},"
-            f" (u, v) -> CAST(u AS DOUBLE) * CAST(v AS DOUBLE)),"
-            f" CAST(0 AS DOUBLE), (a, x) -> a + x)"
+    variants = [
+        (
+            d,
+            _guarded_cos(
+                f"slice(qv, 1, {d})", f"slice(cv, 1, {d})", f"qss{d}", f"css{d}"
+            ),
         )
-        return F.expr(
-            f"CASE WHEN {qss} = 0.0 OR {css} = 0.0"
-            f" THEN CAST(-2.0 AS DOUBLE)"
-            f" ELSE round({dot} / (sqrt({qss}) * sqrt({css})), 6) END"
-        )
-
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(d).alias("dims"), pref_cos(d).alias("cos")
-                        )
-                        for d in MRL_DIMS
-                    ]
-                )
-            ).alias("dc"),
-        )
-        .select("query_id", "neighbor_id", "dc.dims", "dc.cos")
-    )
-    w = Window.partitionBy("query_id", "dims").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    top = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "dims")
-        .localCheckpoint(eager=False)
-    )
-    truth = top.filter(F.col("dims") == EMB_DIM).select(
-        "query_id", "neighbor_id"
-    )
-    hits = top.join(truth, ["query_id", "neighbor_id"]).groupBy("dims").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    return (
-        hits.select(
-            "dims",
-            "n_hits",
-            F.expr(
-                f"n_hits * 1000000 div {N_QUERIES * TOP_K}"
-            ).alias("recall_ppm"),
-        )
-        .orderBy("dims")
-    )
+        for d in MRL_DIMS
+    ]
+    return _variant_recall(_pairs(q, c), "dims", variants, EMB_DIM)
 
 
 def _matryoshka_sql() -> str:
@@ -5489,12 +5040,6 @@ def emb_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-inline the decode under the pair explode (the HOF re-inlining
     # trap). The norm fold expression is identical (same left-to-right
     # double reduction), so every cosine is bit-unchanged.
-    def ss_expr(col: str) -> str:
-        return (
-            f"aggregate({col}, CAST(0 AS DOUBLE),"
-            f" (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-        )
-
     enc = (
         base.crossJoin(F.broadcast(rng))
         .select(
@@ -5508,9 +5053,9 @@ def emb_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "xq",
-            F.expr(ss_expr("xq")).alias("ssfp"),
+            F.expr(_sum_sq_sql("xq")).alias("ssfp"),
             *[F.col(f"d{b}") for b in SQ_BITS],
-            *[F.expr(ss_expr(f"d{b}")).alias(f"ss{b}") for b in SQ_BITS],
+            *[F.expr(_sum_sq_sql(f"d{b}")).alias(f"ss{b}") for b in SQ_BITS],
         )
         .localCheckpoint(eager=False)
     )
@@ -5529,65 +5074,14 @@ def emb_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col(f"ss{b}").alias(f"css{b}") for b in SQ_BITS],
     )
 
-    def cos(qe: str, ce: str, qss: str, css: str) -> Column:
-        # Same zero-norm guard as emb_matryoshka_eval: a vector whose
-        # dequantized form collapses to all-zero would be 0/0 → NaN with
-        # engine-divergent ordering; -2.0 ranks it deterministically last.
-        dot = (
-            f"aggregate(zip_with({qe}, {ce},"
-            f" (u, v) -> CAST(u AS DOUBLE) * CAST(v AS DOUBLE)),"
-            f" CAST(0 AS DOUBLE), (a, x) -> a + x)"
-        )
-        return F.expr(
-            f"CASE WHEN {qss} = 0.0 OR {css} = 0.0"
-            f" THEN CAST(-2.0 AS DOUBLE)"
-            f" ELSE round({dot} / (sqrt({qss}) * sqrt({css})), 6) END"
-        )
-
     variants = [
-        *[(b, cos(f"qd{b}", f"cd{b}", f"qss{b}", f"css{b}")) for b in SQ_BITS],
-        (32, cos("qv", "cv", "qssfp", "cssfp")),
+        *[
+            (b, _guarded_cos(f"qd{b}", f"cd{b}", f"qss{b}", f"css{b}"))
+            for b in SQ_BITS
+        ],
+        (32, _guarded_cos("qv", "cv", "qssfp", "cssfp")),
     ]
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("bits"), e.alias("cos"))
-                        for b, e in variants
-                    ]
-                )
-            ).alias("bc"),
-        )
-        .select("query_id", "neighbor_id", "bc.bits", "bc.cos")
-    )
-    w = Window.partitionBy("query_id", "bits").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    top = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "bits")
-        .localCheckpoint(eager=False)
-    )
-    truth = top.filter(F.col("bits") == 32).select("query_id", "neighbor_id")
-    return (
-        top.join(truth, ["query_id", "neighbor_id"])
-        .groupBy("bits")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-        .select(
-            "bits",
-            "n_hits",
-            F.expr(f"n_hits * 1000000 div {N_QUERIES * TOP_K}").alias(
-                "recall_ppm"
-            ),
-        )
-        .orderBy("bits")
-    )
+    return _variant_recall(_pairs(q, c), "bits", variants, 32)
 
 
 def _sq_recall_sql() -> str:

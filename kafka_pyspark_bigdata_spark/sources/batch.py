@@ -71,6 +71,32 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def table_stamp(path: str) -> tuple[int, int, int]:
+    """(file count, newest st_mtime_ns, total st_size) of the files of a
+    table — one file or a directory tree; (-1, -1, -1) if unreadable.
+
+    Keys the in-process table memos: any file added, removed or
+    rewritten in place changes the stamp. A directory's own mtime does
+    not, since rewriting a file inside it leaves the entry list as is.
+    """
+    try:
+        if os.path.isdir(path):
+            stats = [
+                os.stat(os.path.join(root, f))
+                for root, _, files in os.walk(path)
+                for f in files
+            ]
+        else:
+            stats = [os.stat(path)]
+    except OSError:
+        return (-1, -1, -1)
+    return (
+        len(stats),
+        max((st.st_mtime_ns for st in stats), default=-1),
+        sum(st.st_size for st in stats),
+    )
+
+
 # Scan-PLAN memo (r12): building a parquet scan costs ~78 ms on the
 # driver per call (footer/schema read + py4j round-trips), and the query
 # builders call load_table thousands of times across a bench run — tens
@@ -82,7 +108,7 @@ def table_path(sf_dir: str, name: str) -> str:
 # ml/queries.py). _PSCAN memoizes parallelize_scan's repartition
 # decision for exactly those cached frames (identity-checked so a
 # recycled id() can never alias a different frame).
-_SCAN_CACHE: dict[tuple[str, str, str, float], DataFrame] = {}
+_SCAN_CACHE: dict[tuple[str, str, str, tuple[int, int, int]], DataFrame] = {}
 _PSCAN_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
 
 
@@ -116,19 +142,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     parquet reader automatically because this stays declarative.
     ``events`` goes through ``read_events`` for its timestamp column.
     """
-    # The table dir's mtime in the key (the _DUP_PAIRS_CACHE convention)
-    # invalidates the memoized scan if a fixture is rewritten in place
-    # within one application — a cached DataFrame's file listing would
-    # otherwise go stale (r12 advice item).
-    try:
-        mtime = os.path.getmtime(table_path(sf_dir, name))
-    except OSError:
-        mtime = -1.0
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name, mtime)
+    # The table's file stamp in the key invalidates the memoized scan if a
+    # fixture is rewritten within one application: a cached DataFrame's
+    # file index keeps the old file lengths, so its splits would drop or
+    # misread every row group past them.
+    path = table_path(sf_dir, name)
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir.rstrip("/"),
+        name,
+        table_stamp(path),
+    )
     hit = _SCAN_CACHE.get(key)
     if hit is not None:
         return hit
-    # evict other-application entries and superseded-mtime entries for
+    # evict other-application entries and superseded-stamp entries for
     # this same table (the rewritten fixture's old listing)
     stale = [
         k for k in _SCAN_CACHE if k[0] != key[0] or k[:3] == key[:3]
@@ -138,7 +166,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             del _SCAN_CACHE[k]
         _PSCAN_CACHE.clear()
 
-    path = table_path(sf_dir, name)
     if name == "events":
         df = read_events(spark, lambda: spark.read.parquet(path))
     else:

@@ -169,3 +169,24 @@ def test_time_queries_never_times_an_errored_name():
         "bad_warmup": "warmup: RuntimeError: boom",
     }
     assert [sorted(p) for p in res["passes"]] == [["flaky", "ok"], ["ok"]]
+
+
+def test_capture_plans_normalize_strips_run_ids():
+    """Two captures of the same plan differ only in expression ids, plan
+    ids and lambda-variable suffixes; normalize must erase all three."""
+    from tools.capture_plans import normalize
+
+    run_a = (
+        "Project [vec_id#0L AS query_id#73L, aggregate(v#4, 0, lambdafunction("
+        "(lambda acc_3#9 + lambda x_281#10L), lambda acc_3#9, lambda x_281#10L"
+        ", false))], plan_id=17"
+    )
+    run_b = (
+        "Project [vec_id#212L AS query_id#285L, aggregate(v#216, 0, lambdafunction("
+        "(lambda acc_40#221 + lambda x_9#222L), lambda acc_40#221, lambda x_9#222L"
+        ", false))], plan_id=301"
+    )
+    assert normalize(run_a) == normalize(run_b) == (
+        "Project [vec_id AS query_id, aggregate(v, 0, lambdafunction("
+        "(lambda acc + lambda x), lambda acc, lambda x, false))], plan_id="
+    )

@@ -13,7 +13,7 @@ from kafka_pyspark_bigdata_spark.operators import (
     timeseries,
 )
 
-from conftest import assert_oracle_match
+from conftest import SF_SMOKE, assert_oracle_match
 
 MODULES = [text, dedup, similarity, multimodal, geo, timeseries]
 CASES = [(m, name) for m in MODULES for name in sorted(m.QUERIES)]
@@ -442,6 +442,34 @@ def test_ivf_persisted_equals_inplan(spark):
     assert [(r.query_id, r.rank, r.neighbor_id) for r in a] == [
         (r.query_id, r.rank, r.neighbor_id) for r in b
     ]
+
+
+def test_ivf_queries_agree_with_each_other(spark):
+    """ann_ivf, the nprobe recall curve and the spill baseline share one
+    coarse quantizer, so their numbers must tie out: the curve's
+    nprobe=IVF_NPROBE row counts exactly ann_ivf's hits against brute
+    force, the spill baseline (one list per vector, one probe) is the
+    curve's nprobe=1 row, and recall never drops as nprobe grows."""
+    sf = SF_SMOKE
+    truth = {
+        (r.query_id, r.neighbor_id)
+        for r in similarity.ann_topk_bruteforce(spark, sf).collect()
+    }
+    ivf = {
+        (r.query_id, r.neighbor_id) for r in similarity.ann_ivf(spark, sf).collect()
+    }
+    curve = {
+        r.nprobe: r for r in similarity.ann_ivf_nprobe_recall(spark, sf).collect()
+    }
+    spill = {r.config: r for r in similarity.ann_ivf_spill(spark, sf).collect()}
+
+    assert curve[similarity.IVF_NPROBE].n_hits == len(ivf & truth)
+    assert (spill["baseline"].n_sel, spill["baseline"].n_hits) == (
+        curve[1].n_sel,
+        curve[1].n_hits,
+    )
+    recalls = [curve[n].recall_ppm for n in sorted(curve)]
+    assert recalls == sorted(recalls)
 
 
 def test_ts_similarity_ranks_by_integer_distance(spark):

@@ -75,3 +75,29 @@ def test_python_datasource_writer_manifest_hides_stray_files(spark):
         .count()
     )
     assert back == first.n_rows  # stray file invisible via the manifest
+
+
+def test_load_table_sees_in_place_file_rewrite(spark, tmp_path):
+    """Overwriting a file inside a table directory leaves the directory's
+    mtime unchanged; the memoized scan must still pick up the new file
+    (a stale file index would keep the old length and drop row groups)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_pyspark_bigdata_spark.sources.batch import load_table
+
+    table_dir = tmp_path / "region.parquet"
+    table_dir.mkdir()
+    part = table_dir / "part-0.parquet"
+    pq.write_table(pa.table({"k": list(range(3))}), part)
+    assert load_table(spark, str(tmp_path), "region").count() == 3
+
+    dir_st = os.stat(table_dir)
+    pq.write_table(pa.table({"k": list(range(5000))}), part, row_group_size=100)
+    os.utime(table_dir, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    assert os.stat(table_dir).st_mtime_ns == dir_st.st_mtime_ns
+
+    assert spark.read.parquet(str(table_dir)).count() == 5000
+    assert load_table(spark, str(tmp_path), "region").count() == 5000

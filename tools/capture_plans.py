@@ -1,13 +1,18 @@
-"""Capture `.explain("formatted")` for named queries into plans/<round>/.
+"""Capture the optimized logical plan and `.explain("formatted")` for
+named queries into plans/<round>/.
 
 Usage: python tools/capture_plans.py <before|after> <query> [query ...]
 
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt (round dir from
 the env var so each optimization round's evidence lands in its own
-directory instead of overwriting a past round's). Plans are built at sf0.1
-(the bench SF) in ``bench.bench_session``, the session the bench times in,
-so Exchange counts / join strategies match what the timed runs execute
-(AQE initial plan).
+directory instead of overwriting a past round's; an absolute path is used
+as is). Plans are built at sf0.1 (the bench SF) in ``bench.bench_session``,
+the session the bench times in, so Exchange counts / join strategies match
+what the timed runs execute (AQE initial plan).
+
+Run-specific ids are stripped before writing (``normalize``), so a
+before/after pair captured in two processes diffs only where the plan
+does.
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -28,6 +34,21 @@ OUT_DIR = os.path.join(
     os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r13"),
 )
 
+# Expression ids (vec_id#12L), plan ids and lambda-variable suffixes
+# (lambda x_281 → lambda x) differ from run to run for the same plan.
+_RUN_IDS = (
+    (re.compile(r"#\d+L?\b"), ""),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1"),
+)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with run-specific ids removed."""
+    for pattern, repl in _RUN_IDS:
+        plan = pattern.sub(repl, plan)
+    return plan
+
 
 def main() -> None:
     suffix = sys.argv[1]
@@ -39,7 +60,10 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        plan = buf.getvalue()
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        plan = normalize(
+            f"== Optimized Logical Plan ==\n{optimized}\n\n{buf.getvalue()}"
+        )
         path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
