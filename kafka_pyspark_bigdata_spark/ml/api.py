@@ -1,10 +1,10 @@
 """Thin Flask shell over the serving dataflows (reference api.py:77-313).
 
 The three endpoints are glue only: route → model resolve (404) → payload
-checks (400) → the pure DataFrame functions in ``ml.serving`` → reference
+checks (400) → the model's driver-local ``serving.Scorer`` → reference
 response shapes. All query semantics live in serving.py — this module adds
 no dataflow of its own (SURVEY.md §7 M3: "Flask shell last, thinnest
-possible").
+possible"). A request runs no Spark job.
 
 Parity notes (cited to the reference):
 - model dict is keyed by version string; absent/None → 404
@@ -19,6 +19,8 @@ Parity notes (cited to the reference):
   and must be 0-59 (api.py:241-255); invalid hours are skipped
   (api.py:261-264); empty grid → 200 with a message (api.py:281-282);
   suggestions sorted by predicted duration ascending (api.py:298)
+- a body, ``base_features`` or ``base_conditions`` that is not a JSON
+  object → 400
 
 Flask is optional at import (the engine itself never needs it): building
 the app without Flask installed raises at ``create_app`` time.
@@ -26,10 +28,11 @@ the app without Flask installed raises at ``create_app`` time.
 
 from __future__ import annotations
 
-import numpy as np
+import math
+
 from pyspark.sql import SparkSession
 
-from . import serving, trainer
+from . import serving
 
 try:  # pragma: no cover - exercised implicitly by import
     from flask import Flask, jsonify, request
@@ -37,37 +40,45 @@ except ImportError:  # pragma: no cover
     Flask = None
 
 
-def create_app(
-    spark: SparkSession,
-    models: dict,
-    feature_cols: list[str] | None = None,
-) -> "Flask":
+def create_app(spark: SparkSession, models: dict) -> "Flask":
     """Build the Flask app over a model dict (version-string → PipelineModel
-    or None, as produced by ``trainer.load_models`` — api.py:23-37)."""
+    or None, as produced by ``trainer.load_models`` — api.py:23-37). Each
+    loaded model's Scorer is built here, so requests run no Spark job.
+    ``spark`` stays in the signature for existing callers; scoring needs
+    no session."""
     if Flask is None:
         raise RuntimeError("flask is not installed; the engine works without it")
-    feature_cols = feature_cols or trainer.BIKE_FEATURES
+    for model in models.values():
+        if model is not None:
+            serving.scorer(model)
     app = Flask("kafka_pyspark_bigdata_spark")
 
-    def _resolve(version: str):
+    def _resolve(version: str, what: str):
+        """(scorer, JSON body, None) or (None, None, error response): 404
+        for an absent model, 400 for an empty or non-object body."""
         model = models.get(version)
         if model is None:
-            return None, (
+            return None, None, (
                 jsonify({"error": f"Model 'model_{version}' not loaded or not found."}),
                 404,
             )
-        return model, None
+        data = request.get_json(silent=True)
+        if not data:
+            return None, None, (jsonify({"error": f"No input {what} provided"}), 400)
+        if not isinstance(data, dict):
+            return None, None, _not_object(f"input {what}")
+        return serving.scorer(model), data, None
+
+    def _not_object(name: str):
+        return jsonify({"error": f"The {name} must be a JSON object."}), 400
 
     @app.route("/predict/duration/<version>", methods=["POST"])
     def predict_duration(version: str):
-        model, err = _resolve(version)
+        scorer, data, err = _resolve(version, "data")
         if err:
             return err
-        data = request.get_json(silent=True)
-        if not data:
-            return jsonify({"error": "No input data provided"}), 400
         try:
-            predicted, missing = serving.predict_one(spark, model, data, feature_cols)
+            predicted, missing = scorer.predict(data)
         except ValueError as ve:
             return jsonify({"error": str(ve)}), 400
         return jsonify(
@@ -81,12 +92,9 @@ def create_app(
 
     @app.route("/analyze/sensitivity/<version>", methods=["POST"])
     def analyze_sensitivity(version: str):
-        model, err = _resolve(version)
+        scorer, payload, err = _resolve(version, "payload")
         if err:
             return err
-        payload = request.get_json(silent=True)
-        if not payload:
-            return jsonify({"error": "No input payload provided"}), 400
         base = payload.get("base_features")
         feat = payload.get("variable_feature_name")
         values = payload.get("variation_values")
@@ -100,7 +108,9 @@ def create_app(
                 ),
                 400,
             )
-        if feat not in feature_cols:
+        if not isinstance(base, dict):
+            return _not_object("'base_features'")
+        if feat not in scorer.features:
             return (
                 jsonify(
                     {"error": f"Invalid 'variable_feature_name': {feat}. Not a model feature."}
@@ -110,59 +120,32 @@ def create_app(
         if not isinstance(values, list):
             return jsonify({"error": "'variation_values' must be a list."}), 400
 
-        # Per-variation validation: failures become error rows, survivors go
-        # through ONE exploded sweep plan (the order-based re-association of
-        # api.py:166-210 is deleted — the varied value rides as a column).
-        # The sweep stores features as float32, so re-association keys must
-        # be the float32-ROUNDED value (float(0.1) would miss the rounded
-        # 0.10000000149... coming back from Spark).
-        def _f32(v) -> float:
-            return float(np.float32(float(v)))
-
-        valid, row_err = [], {}
+        # Per-variation validation: failures become error rows, survivors
+        # are scored in order (api.py:185-210).
+        results, valid = [], []
         for v in values:
+            row = {"varied_feature": feat, "value": v}
+            snapshot = {**base, feat: v}
             try:
-                serving.coerce_features({**base, feat: v}, feature_cols)
+                serving.coerce_features(snapshot, scorer.features)
                 valid.append(float(v))
+                row["base_features_snapshot"] = snapshot
             except (TypeError, ValueError) as ve:
-                row_err[repr(v)] = str(ve)
-        predicted = {}
-        if valid:
-            swept = serving.sensitivity_sweep(spark, model, base, feature_cols, feat, valid)
-            for r in swept.collect():
-                predicted[r["varied_value"]] = float(r["predicted"])
-        results = []
-        for v in values:
-            if repr(v) in row_err:
-                results.append(
-                    {
-                        "varied_feature": feat,
-                        "value": v,
-                        "error": row_err[repr(v)],
-                        "predicted_duration": None,
-                    }
-                )
-            else:
-                results.append(
-                    {
-                        "varied_feature": feat,
-                        "value": v,
-                        "predicted_duration": predicted[_f32(v)],
-                        "base_features_snapshot": {**base, feat: v},
-                    }
-                )
+                row.update(error=str(ve), predicted_duration=None)
+            results.append(row)
+        scored = iter(scorer.sensitivity(base, feat, valid) if valid else [])
+        for row in results:
+            if "error" not in row:
+                row["predicted_duration"] = next(scored)["predicted"]
         return jsonify(
             {"model_version_used": f"model_{version}", "analysis_results": results}
         )
 
     @app.route("/suggest/optimal-time/<version>", methods=["POST"])
     def suggest_optimal_time(version: str):
-        model, err = _resolve(version)
+        scorer, payload, err = _resolve(version, "payload")
         if err:
             return err
-        payload = request.get_json(silent=True)
-        if not payload:
-            return jsonify({"error": "No input payload provided"}), 400
         base = payload.get("base_conditions")
         t_max = payload.get("target_duration_max")
         t_min = payload.get("target_duration_min", 0)
@@ -178,6 +161,8 @@ def create_app(
                 ),
                 400,
             )
+        if not isinstance(base, dict):
+            return _not_object("'base_conditions'")
         if not isinstance(hours, list):
             return (
                 jsonify({"error": "'hours_to_evaluate' must be a list of integers (0-23)."}),
@@ -185,6 +170,8 @@ def create_app(
             )
         try:
             t_max, t_min, minute = float(t_max), float(t_min), int(minute)
+            if math.isnan(t_min) or math.isnan(t_max):
+                raise ValueError("target durations must be numbers, not NaN.")
             if not (0 <= minute <= 59):
                 raise ValueError("minute_of_hour must be between 0 and 59.")
         except (TypeError, ValueError) as ve:
@@ -192,10 +179,7 @@ def create_app(
                 jsonify({"error": f"Invalid type for target durations or minute: {ve}"}),
                 400,
             )
-        valid_hours = [
-            h for h in hours if isinstance(h, int) and not isinstance(h, bool) and 0 <= h <= 23
-        ]
-        if not valid_hours:
+        if not serving.valid_hours(hours):
             return (
                 jsonify(
                     {"message": "No valid hours to evaluate after validation.", "suggestions": []}
@@ -203,10 +187,7 @@ def create_app(
                 200,
             )
         try:
-            df = serving.optimal_time(
-                spark, model, base, feature_cols, valid_hours, minute, t_min, t_max
-            )
-            rows = serving.result_json(df)
+            rows = scorer.optimal_time(base, hours, minute, t_min, t_max)
         except ValueError as ve:
             return jsonify({"error": str(ve)}), 400
         return jsonify(

@@ -10,12 +10,14 @@ Pipeline semantics reproduced from the reference (cited file:line):
 - assemble with handleInvalid="skip" (spark_trainer.py:72-73)
 - RandomForestRegressor seed=42, default-ish params (spark_trainer.py:75-79)
 - incremental versions v1..vK train on cumulative unions of the micro-batch
-  files (spark_trainer.py:43-46,107-109) — a multi-path scan, not K scans
+  files (spark_trainer.py:43-46,107-109) — each version reads its prefix
+  as one multi-path scan, not one scan per file
 - model persistence + feature-importance table (spark_trainer.py:82-99)
 
-Scale: training data flows through one scan; Imputer is a partial-agg pass;
-RF training is Spark ML's distributed histogram algorithm. Nothing here
-collects to the driver except the (tiny) importance vector.
+Scale: each version's training data flows through one scan; Imputer is a
+partial-agg pass; RF training is Spark ML's distributed histogram
+algorithm. Nothing here collects to the driver except the (tiny)
+importance vector.
 """
 
 from __future__ import annotations

@@ -9,20 +9,24 @@ import pytest
 
 pytest.importorskip("flask")
 
-from kafka_pyspark_bigdata_spark.ml import trainer
+from kafka_pyspark_bigdata_spark.ml import serving, trainer
 from kafka_pyspark_bigdata_spark.ml.api import create_app
 
 
 @pytest.fixture(scope="module")
-def client(spark):
+def model(spark):
     rs = np.random.RandomState(7)
     n = 120
     data = {c: rs.uniform(0, 10, n) for c in trainer.BIKE_FEATURES}
     data["Duration"] = 4.0 * data["Distance"] + rs.normal(0, 1, n)
     df = spark.createDataFrame(pd.DataFrame(data))
-    model = trainer.train(
+    return trainer.train(
         df, trainer.BIKE_FEATURES, trainer.BIKE_LABEL, num_trees=3, max_depth=3
     )
+
+
+@pytest.fixture(scope="module")
+def client(spark, model):
     app = create_app(spark, {"1": model, "2": None})
     app.config["TESTING"] = True
     with app.test_client() as c:
@@ -173,3 +177,125 @@ def test_optimal_time_rejects_non_scalar_targets_with_400(client):
         },
     )
     assert r.status_code == 400
+
+
+def test_endpoints_run_no_spark_job(spark):
+    """Scoring is driver-local: one request to each endpoint starts no job
+    (the DataFrame path ran 2, 1 and 3 jobs per request)."""
+    rs = np.random.RandomState(3)
+    data = {c: rs.uniform(0, 10, 60) for c in trainer.BIKE_FEATURES}
+    data["Duration"] = 2.0 * data["Distance"]
+    fitted = trainer.train(
+        spark.createDataFrame(pd.DataFrame(data)),
+        trainer.BIKE_FEATURES,
+        trainer.BIKE_LABEL,
+        num_trees=2,
+        max_depth=2,
+    )
+    app = create_app(spark, {"1": fitted})  # builds the scorer: jobs allowed
+    sc = spark.sparkContext
+    sc.setJobGroup("api-no-jobs", "requests must not start Spark jobs")
+    try:
+        with app.test_client() as c:
+            bodies = {
+                "/predict/duration/1": FULL,
+                "/analyze/sensitivity/1": {
+                    "base_features": FULL,
+                    "variable_feature_name": "Temp",
+                    "variation_values": [1.0, 2.0],
+                },
+                "/suggest/optimal-time/1": {
+                    "base_conditions": FULL,
+                    "target_duration_max": 1e9,
+                    "hours_to_evaluate": [7, 8, 9],
+                },
+            }
+            for url, body in bodies.items():
+                assert c.post(url, json=body).status_code == 200, url
+        assert list(sc.statusTracker().getJobIdsForGroup("api-no-jobs")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_sensitivity_nan_variation_value_is_imputed_not_500(client, model):
+    """Regression: a NaN variation value (raw JSON ``NaN``) used to miss the
+    float32 re-association dict and 500. NaN is a missing value: the row
+    scores at the imputed surrogate."""
+    r = client.post(
+        "/analyze/sensitivity/1",
+        data='{"base_features": {"Distance": 1.0}, "variable_feature_name": "Temp",'
+        ' "variation_values": [NaN, 2.0]}',
+        content_type="application/json",
+    )
+    assert r.status_code == 200
+    rows = r.get_json()["analysis_results"]
+    assert [row["predicted_duration"] is not None for row in rows] == [True, True]
+    surrogate = model.stages[0].surrogateDF.first()["Temp"]
+    scored = serving.scorer(model)
+    assert rows[0]["predicted_duration"] == scored.predict({"Distance": 1.0, "Temp": surrogate})[0]
+    assert rows[1]["predicted_duration"] == scored.predict({"Distance": 1.0, "Temp": 2.0})[0]
+
+
+@pytest.mark.parametrize(
+    "url", ["/predict/duration/1", "/analyze/sensitivity/1", "/suggest/optimal-time/1"]
+)
+def test_non_object_body_is_400(client, url):
+    """Regression: a JSON list body 500'd on every endpoint."""
+    r = client.post(url, json=[1, 2, 3])
+    assert r.status_code == 400
+    assert "JSON object" in r.get_json()["error"]
+
+
+def test_non_object_base_is_400(client):
+    """Regression: a non-object base_conditions 500'd on optimal-time."""
+    r = client.post(
+        "/suggest/optimal-time/1",
+        json={"base_conditions": [1.0], "target_duration_max": 100, "hours_to_evaluate": [8]},
+    )
+    assert r.status_code == 400
+    assert "'base_conditions'" in r.get_json()["error"]
+    r = client.post(
+        "/analyze/sensitivity/1",
+        json={
+            "base_features": "Distance=1",
+            "variable_feature_name": "Distance",
+            "variation_values": [1.0],
+        },
+    )
+    assert r.status_code == 400
+    assert "'base_features'" in r.get_json()["error"]
+
+
+@pytest.mark.parametrize("field", ["target_duration_min", "target_duration_max"])
+def test_optimal_time_nan_target_is_400(client, field):
+    """A raw-JSON ``NaN`` target has no meaning as a band edge (Spark's
+    BETWEEN sorts NaN above every value, a Python compare is never true):
+    reject it instead of picking one of the two answers."""
+    r = client.post(
+        "/suggest/optimal-time/1",
+        data='{"base_conditions": {"Distance": 1.0}, "target_duration_min": 0,'
+        ' "target_duration_max": 100, "hours_to_evaluate": [8, 9], "%s": NaN}' % field,
+        content_type="application/json",
+    )
+    assert r.status_code == 400
+    assert "NaN" in r.get_json()["error"]
+
+
+def test_sensitivity_non_numeric_base_for_varied_feature(client, model):
+    """Regression: a non-numeric base value for the varied feature is
+    overwritten by every variation value, so it must not 500."""
+    r = client.post(
+        "/analyze/sensitivity/1",
+        json={
+            "base_features": {"Temp": "hot", "Distance": 1},
+            "variable_feature_name": "Temp",
+            "variation_values": [1.0, 2.0],
+        },
+    )
+    assert r.status_code == 200
+    rows = r.get_json()["analysis_results"]
+    scored = serving.scorer(model)
+    assert [row["predicted_duration"] for row in rows] == [
+        scored.predict({"Distance": 1, "Temp": v})[0] for v in (1.0, 2.0)
+    ]

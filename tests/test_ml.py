@@ -81,6 +81,16 @@ def test_optimal_time_screens_and_sorts(spark, model):
     assert preds == sorted(preds)
 
 
+def test_optimal_time_empty_grid_gives_no_rows(spark, model):
+    """No valid hour → no rows, not a void-typed hour column that the
+    assembler rejects."""
+    for hours in ([25, -3], ["noon", True]):
+        out = serving.optimal_time(
+            spark, model, {"Distance": 3.0}, trainer.BIKE_FEATURES, hours, 30, 0.0, 1e9
+        ).collect()
+        assert out == []
+
+
 def test_train_incremental_cumulative_union(spark, tmp_path):
     rs = np.random.RandomState(7)
     paths = []
@@ -466,3 +476,110 @@ def test_keep_best_quality_argmax_and_ledger(spark):
         assert r.kept_doc_id == best and r.kept_chars == chars[best]
         assert r.total_chars == sum(chars[d] for d in docs)
         assert r.dropped_chars == r.total_chars - r.kept_chars
+
+
+def _parity_payloads(n: int = 200) -> list[dict]:
+    """Seeded request bodies: present floats, ints and numeric strings,
+    missing features, NaN, a value float32 cannot hold (0.1) and one it
+    overflows on (1e39 → inf)."""
+    rs = np.random.RandomState(11)
+    specials = [float("nan"), 0.1, 1e39, -1e39, "nan", "2.5", 7]
+    payloads = []
+    for _ in range(n):
+        body = {}
+        for c in trainer.BIKE_FEATURES:
+            r = rs.rand()
+            if r < 0.15:
+                continue
+            if r < 0.35:
+                body[c] = specials[rs.randint(len(specials))]
+            elif r < 0.45:
+                body[c] = repr(rs.uniform(-5, 15))
+            else:
+                body[c] = rs.uniform(-5, 15)
+        payloads.append(body)
+    return payloads
+
+
+@pytest.fixture(scope="module", params=["memory", "save_load"])
+def served_model(request, model, tmp_path_factory):
+    if request.param == "memory":
+        return model
+    base = str(tmp_path_factory.mktemp("served"))
+    trainer.save_model(model, base, 1)
+    return trainer.load_model(base, 1)
+
+
+def test_scorer_matches_transform_bit_for_bit(spark, served_model):
+    """The driver-local Scorer reproduces ``transform``: the assembled
+    vector element by element (this is what catches an unrounded double
+    surrogate) and the prediction bit for bit, on the in-memory model and
+    on a save/load round trip."""
+    from pyspark.sql.types import IntegerType, StructField
+
+    scorer = serving.Scorer(served_model)
+    assert scorer.features == trainer.BIKE_FEATURES
+    payloads = _parity_payloads()
+    rows = [
+        (i, *serving.coerce_features(p, trainer.BIKE_FEATURES)[0])
+        for i, p in enumerate(payloads)
+    ]
+    schema = serving.serving_schema(trainer.BIKE_FEATURES)
+    schema.fields.insert(0, StructField("pid", IntegerType(), False))
+    out = (
+        served_model.transform(spark.createDataFrame(rows, schema))
+        .orderBy("pid")
+        .select("features", "prediction")
+        .collect()
+    )
+    assert len(out) == len(payloads)
+    assert sum(np.isinf(r.features.toArray()).any() for r in out) > 0
+    for payload, row in zip(payloads, out):
+        values, _ = serving.coerce_features(payload, trainer.BIKE_FEATURES)
+        assert list(scorer.vector(values)) == list(row.features), payload
+        pred, _ = scorer.predict(payload)
+        assert pred.hex() == float(row.prediction).hex(), payload
+
+
+def test_scorer_sweeps_match_dataframe_functions(spark, served_model):
+    scorer = serving.Scorer(served_model)
+    base = {"Distance": 3.0, "Haversine": "2.5", "Temp": float("nan")}
+    values = [1.0, 0.1, 5.0, 1e39, -3.0, 10.0, 5.0]
+    want = serving.sensitivity_sweep(
+        spark, served_model, base, trainer.BIKE_FEATURES, "Distance", values
+    ).collect()
+    assert scorer.sensitivity(base, "Distance", values) == [r.asDict() for r in want]
+
+    hours = [0, 6, 12, 18, 25, -3, 7, True, "noon", 23, 6]
+    wide = scorer.optimal_time(base, hours, 30, 0.0, 1e9)
+    assert [r["hour"] for r in wide] and {r["hour"] for r in wide} <= {0, 6, 7, 12, 18, 23}
+    preds = sorted(r["predicted"] for r in wide)
+    for t_min, t_max in [(0.0, 1e9), (preds[1], preds[-2]), (1e9, 2e9)]:
+        want = serving.optimal_time(
+            spark, served_model, base, trainer.BIKE_FEATURES, hours, 30, t_min, t_max
+        ).collect()
+        got = scorer.optimal_time(base, hours, 30, t_min, t_max)
+        assert got == [r.asDict() for r in want]
+
+
+def test_scorer_rejects_other_stage_layouts(model):
+    from pyspark.ml import PipelineModel
+
+    imputer, assembler, rf = model.stages
+    for bad in [rf, PipelineModel([assembler, imputer, rf]), PipelineModel([imputer, rf])]:
+        with pytest.raises(TypeError, match="Scorer needs"):
+            serving.Scorer(bad)
+
+
+def test_scorer_is_memoized_per_model_and_freed_with_it(model):
+    import gc
+
+    from pyspark.ml import PipelineModel
+
+    assert serving.scorer(model) is serving.scorer(model)
+    other = PipelineModel(list(model.stages))
+    assert serving.scorer(other) is not serving.scorer(model)
+    n = len(serving._SCORERS)
+    del other
+    gc.collect()
+    assert len(serving._SCORERS) == n - 1
