@@ -174,7 +174,7 @@ def create_app(spark: SparkSession, models: dict) -> "Flask":
                 raise ValueError("target durations must be numbers, not NaN.")
             if not (0 <= minute <= 59):
                 raise ValueError("minute_of_hour must be between 0 and 59.")
-        except (TypeError, ValueError) as ve:
+        except (TypeError, ValueError, OverflowError) as ve:
             return (
                 jsonify({"error": f"Invalid type for target durations or minute: {ve}"}),
                 400,

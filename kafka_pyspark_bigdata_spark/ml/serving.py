@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import math
 import weakref
-from numbers import Number
 
 import numpy as np
 from pyspark.ml import PipelineModel
@@ -62,7 +61,8 @@ def coerce_features(
     """missing→0.0 (collected in a warning list), non-numeric→ValueError
     (api.py:49-73). Numeric strings like "12.5" are accepted — the
     reference coerces with ``float(val)`` (api.py:61-65), which parses
-    strings; only values float() rejects are collected as bad. NOTE this
+    strings; only values float() rejects are collected as bad, including
+    a JSON integer too large for a double (``OverflowError``). NOTE this
     deliberately also admits booleans as 1.0/0.0 (float(True) succeeds),
     matching the reference's float(val) behavior for JSON true/false."""
     values, missing, bad = [], [], []
@@ -71,13 +71,11 @@ def coerce_features(
         if v is None:
             values.append(0.0)
             missing.append(c)
-        elif isinstance(v, Number) and not isinstance(v, bool):
+            continue
+        try:
             values.append(float(v))
-        else:
-            try:
-                values.append(float(v))
-            except (TypeError, ValueError):
-                bad.append(c)
+        except (TypeError, ValueError, OverflowError):
+            bad.append(c)
     if bad:
         raise ValueError(f"non-numeric features: {bad}")
     return values, missing

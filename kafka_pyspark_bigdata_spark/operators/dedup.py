@@ -1,5 +1,8 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup.
+embedding-cosine near-dup — plus the two graph families built on them:
+the near-dup pair graph (clusters, CC, triangles, PageRank, HITS, LPA,
+k-hop, HyperBall, modularity, curation readouts) and the lineitem
+co-purchase graph (k-core, k-truss, link prediction).
 
 Scale design (the whole point of these ops at 100 TB):
 
@@ -20,12 +23,35 @@ Scale design (the whole point of these ops at 100 TB):
 - **embedding cosine**: exact pairwise at small n (oracle-checkable);
   the LSH-bucketed variant for scale lives in operators/similarity.
 
+Shared building blocks — each contract has one home, and every query
+calls it rather than re-spelling it:
+
+- ``_shingles`` loads (doc_id, shingles); ``minhash_sigs`` /
+  ``minhash_bands`` make signatures and band keys.
+- **Candidate rule** — ``_lsh_candidates``: a pair sharing any band key,
+  once, as doc_a < doc_b.
+- **Verify rule** — ``_shingle_pairs`` joins both shingle sets onto a
+  pair, ``_jaccard`` / ``_n_common`` score it, and ``_verify_jaccard``
+  keeps Jaccard >= ``MINHASH_VERIFY_THRESHOLD``; ``_sig_pairs`` /
+  ``_n_sig_match`` are the signature-side counterpart for the
+  estimator audits.
+- **Edge orientation** — ``_undirected`` turns a canonical edge list
+  into both directions (``_symmetrize`` canonicalizes first);
+  ``_triangles`` is the a<b<c self-join over a canonical list.
+- Co-purchase: ``_copurchase_pairs`` / ``_supported_pairs`` build the
+  edges, ``_adjacency`` / ``_open_wedges`` the link-prediction wedges.
+
+Helpers return unpinned frames: each query decides where its
+``localCheckpoint`` goes and whether it is eager.
+
 Everything is expressed with built-in functions (md5, array ops, explode,
 groupBy) — no Python in the hot path — and every operator has a value-exact
 DuckDB oracle built from the same md5/tokenization contract.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -89,6 +115,36 @@ def with_shingles(df: DataFrame) -> DataFrame:
             ),
         )
     )
+
+
+def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shingles) of the documents table, unpinned: the input of
+    every shingle-set query here, which pins it as its own plan needs."""
+    return with_shingles(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", "shingles"
+    )
+
+
+def _shingle_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """``pairs`` (doc_a, doc_b) with each side's shingle set joined on as
+    sh_a / sh_b — the verify join: candidates are generated elsewhere,
+    and only they ever touch a shingle set."""
+    def side(doc: str, col: str) -> DataFrame:
+        return sh.select(F.col("doc_id").alias(doc), F.col("shingles").alias(col))
+
+    return pairs.join(side("doc_a", "sh_a"), "doc_a").join(side("doc_b", "sh_b"), "doc_b")
+
+
+def _n_common() -> Column:
+    """|sh_a ∩ sh_b| on a ``_shingle_pairs`` row."""
+    return F.size(F.array_intersect("sh_a", "sh_b"))
+
+
+def _jaccard() -> Column:
+    """Exact shingle Jaccard of a ``_shingle_pairs`` row, in double:
+    n_common / (|sh_a| + |sh_b| - n_common)."""
+    n_common = _n_common()
+    return n_common.cast("double") / (F.size("sh_a") + F.size("sh_b") - n_common)
 
 
 SHINGLES_CTE = f"""
@@ -178,8 +234,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes it cannot change any result — this checkpoint is for
     # reuse, not partition pinning.
     sh = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles", F.size("shingles").alias("n_sh"))
+        _shingles(spark, sf_dir)
+        .withColumn("n_sh", F.size("shingles"))
         .localCheckpoint(eager=False)
     )
     inv = sh.select("doc_id", "n_sh", F.explode("shingles").alias("s"))
@@ -236,15 +292,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .dropDuplicates()
     )
-    x = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    y = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    verified = cand.join(x, "doc_a").join(y, "doc_b")
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = n_common.cast("double") / (F.size("sh_a") + F.size("sh_b") - n_common)
     return (
-        verified.select(
-            "doc_a", "doc_b", n_common.alias("n_common"), jac.alias("jaccard")
-        )
+        _shingle_pairs(cand, sh)
+        .select("doc_a", "doc_b", _n_common().alias("n_common"), _jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
     )
@@ -294,6 +344,38 @@ ORDER BY doc_a, doc_b
 DUP_SPAN_W = 5
 
 
+def _window_hashes() -> Column:
+    """(pos, h) per ``DUP_SPAN_W``-token window of ``toks``: the md5 of the
+    window's text, posexploded (a doc needs >= W tokens)."""
+    return F.posexplode(
+        F.expr(
+            f"transform(sequence(0, size(toks) - {DUP_SPAN_W}),"
+            f" i -> md5(concat_ws(' ', slice(toks, i + 1, {DUP_SPAN_W}))))"
+        )
+    ).alias("pos", "h")
+
+
+def _spans(wins: DataFrame) -> DataFrame:
+    """Maximal spans of (doc_id, pos) windows: windows at most W apart
+    merge (gaps-and-islands, LAG break + running SUM over one
+    doc_id-keyed window). (doc_id, isl_id, s, e, nw): first and last
+    token of the span and the windows in it."""
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    isl = wins.withColumn(
+        "brk",
+        F.when(F.col("pos") - F.lag("pos").over(w_doc) <= DUP_SPAN_W, F.lit(0))
+        .otherwise(F.lit(1)),
+    ).withColumn(
+        "isl_id",
+        F.sum("brk").over(w_doc.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    return isl.groupBy("doc_id", "isl_id").agg(
+        F.min("pos").alias("s"),
+        (F.max("pos") + F.lit(DUP_SPAN_W - 1)).alias("e"),
+        F.count(F.lit(1)).alias("nw"),
+    )
+
+
 def dedup_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicated-SPAN coverage — the windowed form of Lee
     et al. 2022's ExactSubstr deduplication: every ``DUP_SPAN_W``-token
@@ -326,34 +408,11 @@ def dedup_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("toks") >= DUP_SPAN_W)
         .select("doc_id", "toks", F.size("toks").alias("n_tokens"))
     )
-    wins = toks.select(
-        "doc_id",
-        "n_tokens",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, size(toks) - {DUP_SPAN_W}),"
-                f" i -> md5(concat_ws(' ', slice(toks, i + 1, {DUP_SPAN_W}))))"
-            )
-        ).alias("pos", "h"),
-    )
+    wins = toks.select("doc_id", "n_tokens", _window_hashes())
     dup = wins.withColumn(
         "dfh", F.count("*").over(Window.partitionBy("h"))
     ).filter(F.col("dfh") > 1)
-    w_doc = Window.partitionBy("doc_id").orderBy("pos")
-    isl = dup.withColumn(
-        "brk",
-        F.when(F.col("pos") - F.lag("pos").over(w_doc) <= DUP_SPAN_W, F.lit(0))
-        .otherwise(F.lit(1)),
-    ).withColumn(
-        "isl_id",
-        F.sum("brk").over(w_doc.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    spans = isl.groupBy("doc_id", "isl_id").agg(
-        F.min("pos").alias("s"),
-        (F.max("pos") + F.lit(DUP_SPAN_W - 1)).alias("e"),
-        F.count(F.lit(1)).alias("nw"),
-    )
-    perdoc = spans.groupBy("doc_id").agg(
+    perdoc = _spans(dup).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum("nw").alias("n_dup_windows"),
         F.sum(F.col("e") - F.col("s") + 1).alias("covered_tokens"),
@@ -458,13 +517,7 @@ def dedup_dup_spans_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "toks", F.size("toks").alias("n_tokens"))
     )
     wins = toks_all.filter(F.col("n_tokens") >= DUP_SPAN_W).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, size(toks) - {DUP_SPAN_W}),"
-                f" i -> md5(concat_ws(' ', slice(toks, i + 1, {DUP_SPAN_W}))))"
-            )
-        ).alias("pos", "h"),
+        "doc_id", _window_hashes()
     )
     w_h = Window.partitionBy("h")
     occ = F.struct(F.col("doc_id"), F.col("pos"))
@@ -473,20 +526,7 @@ def dedup_dup_spans_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("first_occ", F.min(occ).over(w_h))
         .filter((F.col("dfh") > 1) & (occ != F.col("first_occ")))
     )
-    w_doc = Window.partitionBy("doc_id").orderBy("pos")
-    isl = removal.withColumn(
-        "brk",
-        F.when(F.col("pos") - F.lag("pos").over(w_doc) <= DUP_SPAN_W, F.lit(0))
-        .otherwise(F.lit(1)),
-    ).withColumn(
-        "isl_id",
-        F.sum("brk").over(w_doc.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    spans = isl.groupBy("doc_id", "isl_id").agg(
-        F.min("pos").alias("s"),
-        (F.max("pos") + F.lit(DUP_SPAN_W - 1)).alias("e"),
-    )
-    perdoc = spans.groupBy("doc_id").agg(
+    perdoc = _spans(removal).groupBy("doc_id").agg(
         F.sort_array(F.collect_list(F.struct("s", "e"))).alias("spans"),
         F.count(F.lit(1)).alias("n_cut_spans"),
         F.sum(F.col("e") - F.col("s") + 1).alias("removed_tokens"),
@@ -600,41 +640,70 @@ def minhash_sigs(sh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_bands(sigs: DataFrame) -> DataFrame:
+def minhash_bands(
+    sigs: DataFrame, bands: int = NUM_BANDS, rows: int = ROWS_PER_BAND
+) -> DataFrame:
     """(doc_id, band_idx, bk) long-form band keys: signatures collapse to
-    one md5 key per band so candidate generation is ONE self-equi-join
-    on (band_idx, bk) instead of b separate joins."""
+    one md5 key per band of ``rows`` consecutive signatures, so candidate
+    generation is ONE self-equi-join on (band_idx, bk) instead of b
+    separate joins."""
     band_keys = [
         F.md5(
             F.encode(
-                F.concat_ws(
-                    "|",
-                    *[f"sig{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)],
-                ),
+                F.concat_ws("|", *[f"sig{b * rows + r}" for r in range(rows)]),
                 "UTF-8",
             )
         ).alias(f"band{b}")
-        for b in range(NUM_BANDS)
+        for b in range(bands)
     ]
     return sigs.select("doc_id", *band_keys).select(
         "doc_id",
-        F.posexplode(F.array(*[f"band{b}" for b in range(NUM_BANDS)])).alias(
+        F.posexplode(F.array(*[f"band{b}" for b in range(bands)])).alias(
             "band_idx", "bk"
         ),
     )
 
 
-def _verify_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact-Jaccard verify of (doc_a, doc_b) candidates against the
-    shingle sets; emits (doc_a, doc_b, jaccard) >= threshold."""
-    x = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    y = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    verified = cand.join(x, "doc_a").join(y, "doc_b")
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = n_common.cast("double") / (F.size("sh_a") + F.size("sh_b") - n_common)
+def _lsh_candidates(bands_long: DataFrame) -> DataFrame:
+    """The LSH candidate rule: two docs are a candidate pair when they
+    share any band key; each unordered pair appears once, as (doc_a,
+    doc_b) with doc_a < doc_b, however many bands it shares."""
+    def side(doc: str) -> DataFrame:
+        return bands_long.select(F.col("doc_id").alias(doc), "band_idx", "bk")
+
     return (
-        verified.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        side("doc_a")
+        .join(side("doc_b"), ["band_idx", "bk"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .dropDuplicates()
+    )
+
+
+def _sig_pairs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
+    """``pairs`` (doc_a, doc_b) with each side's signatures (the
+    ``minhash_sigs`` frame) joined on as a0..a15 / b0..b15. Plain
+    equi-joins: the join strategy is left to the planner, as the
+    signature table grows with the corpus."""
+    def side(doc: str, prefix: str) -> DataFrame:
+        return sigs.toDF(doc, *[f"{prefix}{i}" for i in range(NUM_HASHES)])
+
+    return pairs.join(side("doc_a", "a"), "doc_a").join(side("doc_b", "b"), "doc_b")
+
+
+def _n_sig_match() -> Column:
+    """How many of the 16 signature slots agree on a ``_sig_pairs`` row."""
+    return F.expr(" + ".join(f"CAST(a{i} = b{i} AS INT)" for i in range(NUM_HASHES)))
+
+
+def _verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """The MinHash verify rule: a candidate pair is a near-duplicate when
+    its exact shingle Jaccard is >= ``MINHASH_VERIFY_THRESHOLD``; emits
+    (doc_a, doc_b, jaccard)."""
+    return (
+        _shingle_pairs(cand, sh)
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= MINHASH_VERIFY_THRESHOLD)
     )
 
 
@@ -645,27 +714,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     above; the exact verify touches only the deduplicated candidates.
     Shuffle volume is O(n·b) 16-byte keys — never O(n²).
     """
-    sh = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint(eager=False)
-    )
-    bands_long = minhash_bands(minhash_sigs(sh))
-    lhs = bands_long.select(
-        F.col("doc_id").alias("doc_a"), "band_idx", "bk"
-    )
-    rhs = bands_long.select(
-        F.col("doc_id").alias("doc_b"), "band_idx", "bk"
-    )
-    cand = (
-        lhs.join(rhs, ["band_idx", "bk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates()
-    )
-    return _verify_jaccard(cand, sh, MINHASH_VERIFY_THRESHOLD).orderBy(
-        "doc_a", "doc_b"
-    )
+    sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)
+    cand = _lsh_candidates(minhash_bands(minhash_sigs(sh)))
+    return _verify_jaccard(cand, sh).orderBy("doc_a", "doc_b")
 
 
 # Near-dup pair table, materialized once per (session, sf): the graph
@@ -710,13 +761,25 @@ def dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+_SIG_EXPRS = ",\n         ".join(
+    f"MIN(({a} * h + {b}) % {_MH_P}) AS sig{i}" for i, (a, b) in enumerate(_MH_PARAMS)
+)
+# shingles, then one-hash MinHash signatures (doc_id, sig0..sig15)
+_SIGS_CTES = f"""{SHINGLES_CTE},
+sigs AS (
+  SELECT doc_id,
+         {_SIG_EXPRS}
+  FROM (
+    SELECT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
+    FROM (SELECT doc_id, UNNEST(shingles) AS s FROM sh)
+  )
+  GROUP BY doc_id
+)"""
+
+
 def _minhash_ctes() -> str:
     """The shared CTE chain ending in ``verified`` (doc_a, doc_b, jaccard)
     — used by the pair query and by the connected-components oracle."""
-    sig_exprs = ",\n         ".join(
-        f"MIN(({a} * h + {b}) % {_MH_P}) AS sig{i}"
-        for i, (a, b) in enumerate(_MH_PARAMS)
-    )
     band_exprs = ",\n         ".join(
         "md5("
         + " || '|' || ".join(
@@ -732,16 +795,7 @@ def _minhash_ctes() -> str:
         f" AND a.doc_id < b.doc_id"
         for b in range(NUM_BANDS)
     )
-    return f"""{SHINGLES_CTE},
-sigs AS (
-  SELECT doc_id,
-         {sig_exprs}
-  FROM (
-    SELECT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
-    FROM (SELECT doc_id, UNNEST(shingles) AS s FROM sh)
-  )
-  GROUP BY doc_id
-),
+    return f"""{_SIGS_CTES},
 bands AS (
   SELECT doc_id,
          {band_exprs}
@@ -763,6 +817,33 @@ verified AS (
 )"""
 
 
+# The verified near-dup pairs and their both-direction edge list, as the
+# graph oracles spell them.
+_PAIRS_CTE = f"""pairs AS (
+  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
+)"""
+_EDGES_CTE = """edges AS (
+  SELECT doc_a, doc_b FROM pairs
+  UNION ALL
+  SELECT doc_b, doc_a FROM pairs
+)"""
+# every node reaches its own id and, transitively, its neighbours' — the
+# connected-components closure (MIN(r) per doc is its component label)
+_REACH_CTES = """nodes AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
+reach(doc_id, r) AS (
+  SELECT doc_id, doc_id FROM nodes
+  UNION
+  SELECT e.doc_a, reach.r FROM edges e JOIN reach ON e.doc_b = reach.doc_id
+)"""
+
+
+def _match_sum_sql(x: str, y: str) -> str:
+    """The 16-term signature-agreement count between sigs aliases x and y."""
+    return " + ".join(
+        f"CASE WHEN {x}.sig{i} = {y}.sig{i} THEN 1 ELSE 0 END" for i in range(NUM_HASHES)
+    )
+
+
 def _minhash_sql() -> str:
     return f"""
 WITH {_minhash_ctes()}
@@ -779,31 +860,33 @@ ORDER BY doc_a, doc_b
 SIMHASH_BITS = 16
 
 
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash fingerprint per document: each distinct token votes
-    ±1 on every bit of its md5-derived hash; fingerprint bit = sign of the
-    vote sum. Explode + partial-agg — fully distributed, one shuffle on
-    doc_id."""
+def _simhash(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
+    """(doc_id, simhash): a ``bits``-bit SimHash per document (bits/4 hex
+    digits of each distinct token's md5). Each token votes ±1 on every
+    bit; the fingerprint bit is the sign of the vote sum. Branch-free
+    form: ones_b = Σ((h>>b)&1), and the bit is set iff 2·ones_b > n —
+    identical to the ±1 vote, ties included, and ~2× cheaper in codegen
+    than one CASE branch per bit on the exploded token stream. Explode +
+    partial-agg — fully distributed, one shuffle on doc_id."""
     docs = with_tokens(load_table(spark, sf_dir, "documents"))
     tok = docs.select("doc_id", F.explode(F.array_distinct("toks")).alias("tok"))
-    h = F.conv(F.substring(F.md5(F.encode("tok", "UTF-8")), 1, 4), 16, 10).cast(
-        "bigint"
-    )
+    h = F.conv(
+        F.substring(F.md5(F.encode("tok", "UTF-8")), 1, bits // 4), 16, 10
+    ).cast("bigint")
     votes = tok.select("doc_id", h.alias("h")).groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(h >> {b}) & 1") == 1, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(SIMHASH_BITS)
-        ]
+        F.count(F.lit(1)).alias("n_tok"),
+        *[F.sum(F.expr(f"(h >> {b}) & 1")).alias(f"o{b}") for b in range(bits)],
     )
-    fp = None
-    for b in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"v{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
-        fp = bit if fp is None else fp + bit
-    return votes.select("doc_id", fp.cast("bigint").alias("simhash")).orderBy(
-        "doc_id"
+    fp = sum(
+        F.when(2 * F.col(f"o{b}") > F.col("n_tok"), F.lit(2**b)).otherwise(F.lit(0))
+        for b in range(bits)
     )
+    return votes.select("doc_id", fp.cast("bigint").alias("simhash"))
+
+
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """16-bit SimHash fingerprint per document (``_simhash``)."""
+    return _simhash(spark, sf_dir, SIMHASH_BITS).orderBy("doc_id")
 
 
 def _simhash_sql() -> str:
@@ -841,28 +924,7 @@ def _wide_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join would go quadratic. 15-bit bands over 60 bits give
     2^15 buckets per band — candidates stay ~linear at corpus scale,
     which is why Manku et al. run 64-bit fingerprints in production."""
-    docs = with_tokens(load_table(spark, sf_dir, "documents"))
-    tok = docs.select("doc_id", F.explode(F.array_distinct("toks")).alias("tok"))
-    h = F.conv(F.substring(F.md5(F.encode("tok", "UTF-8")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
-    # Branch-free votes: ones_b = Σ((h>>b)&1); majority bit ⟺ 2·ones_b > n
-    # (identical to the ±1-vote formulation, ties included, ~2× cheaper
-    # in codegen than 60 CASE branches on the exploded token stream).
-    votes = tok.select("doc_id", h.alias("h")).groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tok"),
-        *[
-            F.sum(F.expr(f"(h >> {b}) & 1")).alias(f"o{b}")
-            for b in range(SIMHASH_WIDE_BITS)
-        ],
-    )
-    fp = None
-    for b in range(SIMHASH_WIDE_BITS):
-        bit = F.when(
-            2 * F.col(f"o{b}") > F.col("n_tok"), F.lit(2**b)
-        ).otherwise(F.lit(0))
-        fp = bit if fp is None else fp + bit
-    return votes.select("doc_id", fp.cast("bigint").alias("simhash"))
+    return _simhash(spark, sf_dir, SIMHASH_WIDE_BITS)
 
 
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1066,6 +1128,33 @@ ORDER BY id_a, id_b
 CC_MAX_ITERS = 20
 
 
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The orientation rule of every graph query that walks edges both
+    ways: each row (a, b) of the two-column ``edges`` plus its reverse
+    (b, a), under the same column names. No dedup — ``edges`` is a
+    canonical list, one row per unordered pair (``dup_pairs`` has doc_a <
+    doc_b, the co-purchase pairs pa < pb)."""
+    a, b = edges.columns
+    return edges.unionByName(edges.select(F.col(b).alias(a), F.col(a).alias(b)))
+
+
+def _triangles(edges: DataFrame) -> DataFrame:
+    """(a, b, c) per triangle a < b < c of a canonical two-column edge list
+    (first column < second): the ordered 3-way self-join, each triangle
+    produced once, every join keyed on node ids."""
+    x, y = edges.columns
+
+    def side(u: str, v: str) -> DataFrame:
+        return edges.select(F.col(x).alias(u), F.col(y).alias(v))
+
+    return (
+        side("a", "b")
+        .join(side("b2", "c"), F.col("b") == F.col("b2"))
+        .join(side("a3", "c3"), (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
+        .select("a", "b", "c")
+    )
+
+
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS from the MinHash+LSH pairs: connected components
     with the minimum doc_id as each cluster's canonical id — the step that
@@ -1080,15 +1169,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains. The only driver-side work per round is a count of changed
     labels; labels/edges stay executor-side throughout (localCheckpoint
     per round truncates the growing lineage)."""
-    pairs = dup_pairs(spark, sf_dir)
-    edges = (
-        pairs.unionByName(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .localCheckpoint()
-    )
+    edges = _undirected(dup_pairs(spark, sf_dir)).localCheckpoint()
     labels = (
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
@@ -1135,20 +1216,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a, doc_b FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-nodes AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
-reach(doc_id, r) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT e.doc_a, reach.r FROM edges e JOIN reach ON e.doc_b = reach.doc_id
-)
+{_PAIRS_CTE},
+{_EDGES_CTE},
+{_REACH_CTES}
 SELECT doc_id, MIN(r) AS cluster_id
 FROM reach GROUP BY doc_id ORDER BY doc_id
 """
@@ -1181,20 +1251,9 @@ def corpus_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _survivorship_sql() -> str:
     return f"""
 WITH RECURSIVE {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a, doc_b FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-nodes AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
-reach(doc_id, r) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT e.doc_a, reach.r FROM edges e JOIN reach ON e.doc_b = reach.doc_id
-),
+{_PAIRS_CTE},
+{_EDGES_CTE},
+{_REACH_CTES},
 clusters AS (
   SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id
 )
@@ -1255,20 +1314,9 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _keep_best_sql() -> str:
     return f"""
 WITH RECURSIVE {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a, doc_b FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-nodes AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
-reach(doc_id, r) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT e.doc_a, reach.r FROM edges e JOIN reach ON e.doc_b = reach.doc_id
-),
+{_PAIRS_CTE},
+{_EDGES_CTE},
+{_REACH_CTES},
 clusters AS (
   SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id
 ),
@@ -1295,16 +1343,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from drift, triangles from true copies). Canonical a<b<c ordered
     3-way self-join, so each triangle is produced exactly once; both join
     keys are node ids, shuffling only the (small) edge list."""
-    pairs = dup_pairs(spark, sf_dir)
-    e1 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    e2 = pairs.select(F.col("doc_a").alias("b2"), F.col("doc_b").alias("c"))
-    e3 = pairs.select(F.col("doc_a").alias("a3"), F.col("doc_b").alias("c3"))
-    tri = (
-        e1.join(e2, F.col("b") == F.col("b2"))
-        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-        .select("a", "b", "c")
-    )
-    return tri.agg(
+    return _triangles(dup_pairs(spark, sf_dir)).agg(
         F.count("*").alias("n_triangles"),
         F.coalesce(F.countDistinct("a"), F.lit(0)).alias("n_apex_docs"),
     )
@@ -1312,9 +1351,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 GRAPH_TRIANGLES_SQL = f"""
 WITH {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-)
+{_PAIRS_CTE}
 SELECT COUNT(*) AS n_triangles,
        COALESCE(COUNT(DISTINCT e1.doc_a), 0) AS n_apex_docs
 FROM pairs e1
@@ -1343,10 +1380,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference. Scale shape per round: one shuffle of the (small) edge
     list on doc_b + one partial-agg shuffle on doc_a; ranks never leave
     the executors."""
-    pairs = dup_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
+    edges = _undirected(dup_pairs(spark, sf_dir)).localCheckpoint()
     nodes = edges.groupBy(F.col("doc_a").alias("doc_id")).agg(
         F.count("*").alias("deg")
     )
@@ -1394,14 +1428,8 @@ pr{k} AS (
         prev = f"pr{k}"
     return f"""
 WITH {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a, doc_b FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
+{_PAIRS_CTE},
+{_EDGES_CTE},
 deg AS (SELECT doc_a AS doc_id, COUNT(*) AS deg FROM edges GROUP BY 1),
 nn AS (SELECT COUNT(*) AS n FROM deg),
 pr0 AS (
@@ -1513,9 +1541,7 @@ def _hits_sql() -> str:
         last_a = f"a{k}"
     return f"""
 WITH {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
+{_PAIRS_CTE},
 nodes AS (
   SELECT DISTINCT doc_id FROM (
     SELECT doc_a AS doc_id FROM pairs
@@ -1555,10 +1581,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     community census (size, id range), stable under (n_members DESC,
     community) ordering. Oracle: the identical unroll as MATERIALIZED
     CTEs with a ROW_NUMBER argmax."""
-    pairs = dup_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=False)
+    edges = _undirected(dup_pairs(spark, sf_dir)).localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("doc_a").alias("node"))
         .distinct()
@@ -1615,9 +1638,7 @@ l{k} AS MATERIALIZED (
         prev = f"l{k}"
     return f"""
 WITH {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
+{_PAIRS_CTE},
 edges AS MATERIALIZED (
   SELECT doc_a, doc_b FROM pairs
   UNION ALL
@@ -1647,10 +1668,9 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     and frontier shuffle on node ids only. K fixed at plan time keeps
     the plan static (the iterative-until-convergence variant is
     ``dedup_clusters``)."""
-    pairs = dup_pairs(spark, sf_dir)
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    edges = _undirected(dup_pairs(spark, sf_dir)).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
     reach = edges.select(F.col("src").alias("origin"), F.col("dst").alias("node"))
     for _ in range(KHOP_HOPS - 1):
         nxt = (
@@ -1683,14 +1703,8 @@ r{i} AS (
         prev = f"r{i}"
     return f"""
 WITH {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a, doc_b FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
+{_PAIRS_CTE},
+{_EDGES_CTE},
 r1 AS (SELECT doc_a AS origin, doc_b AS node FROM edges),{",".join(hops)}
 SELECT origin AS doc_id, COUNT(DISTINCT node) AS n_reachable
 FROM {prev} WHERE origin <> node
@@ -1788,47 +1802,14 @@ def sketch_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-codegen projection) and the error arithmetic. n/16 and the exact
     Jaccard are both IEEE-exact doubles, so the oracle hash-matches
     bit-for-bit."""
-    sh = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint()
-    )
+    sh = _shingles(spark, sf_dir).localCheckpoint()
     sigs = minhash_sigs(sh).localCheckpoint()
-    bands_long = minhash_bands(sigs)
-    cand = (
-        bands_long.select(F.col("doc_id").alias("doc_a"), "band_idx", "bk")
-        .join(
-            bands_long.select(F.col("doc_id").alias("doc_b"), "band_idx", "bk"),
-            ["band_idx", "bk"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates()
+    est = _sig_pairs(_lsh_candidates(minhash_bands(sigs)), sigs).select(
+        "doc_a", "doc_b", _n_sig_match().alias("n_sig_match")
     )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"sig{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"sig{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    )
-    est = cand.join(sa, "doc_a").join(sb, "doc_b").select(
-        "doc_a", "doc_b", matches.alias("n_sig_match")
-    )
-    x = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    y = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    exact = n_common.cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - n_common
-    )
+    exact = _jaccard()
     return (
-        est.join(x, "doc_a")
-        .join(y, "doc_b")
+        _shingle_pairs(est, sh)
         .select(
             "doc_a",
             "doc_b",
@@ -1844,14 +1825,10 @@ def sketch_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_error_sql() -> str:
-    match_sum = " + ".join(
-        f"CASE WHEN x.sig{i} = y.sig{i} THEN 1 ELSE 0 END"
-        for i in range(NUM_HASHES)
-    )
     return f"""
 WITH {_minhash_ctes()},
 est AS (
-  SELECT c.doc_a, c.doc_b, {match_sum} AS n_sig_match
+  SELECT c.doc_a, c.doc_b, {_match_sum_sql("x", "y")} AS n_sig_match
   FROM cand c JOIN sigs x ON x.doc_id = c.doc_a
               JOIN sigs y ON y.doc_id = c.doc_b
 )
@@ -1889,11 +1866,7 @@ def dedup_shingle_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy pin (r13: the r12 eager→lazy sweep missed this one — the
     # eager form pays a synchronous materialization job at plan-build);
     # still pinned: shingling feeds two branches
-    docs = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint(eager=False)
-    )
+    docs = _shingles(spark, sf_dir).localCheckpoint(eager=False)
     inv = docs.select("doc_id", F.explode("shingles").alias("s"))
     # per-doc shingle count is the array's SIZE — in-row, no
     # explode+shuffle aggregation needed (r13; count(*) over the
@@ -1954,11 +1927,7 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc key) + one small join; fractions integer-fixed-point."""
     # lazy pin (r13: the r12 eager→lazy sweep missed this one); still
     # pinned: shingling feeds two branches
-    docs = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint(eager=False)
-    )
+    docs = _shingles(spark, sf_dir).localCheckpoint(eager=False)
     inv = docs.select("doc_id", F.explode("shingles").alias("s"))
     # per-doc shingle count is the array's SIZE — in-row, no
     # explode+shuffle aggregation needed (r13)
@@ -2016,9 +1985,7 @@ def text_boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the exchange carries the span VOCABULARY, not the token
     stream), one tiny doc-count broadcast, TakeOrdered top-20. Reach
     ties break lexicographically — deterministic in both engines."""
-    sh = with_shingles(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", "shingles"
-    )
+    sh = _shingles(spark, sf_dir)
     inv = sh.select("doc_id", F.explode("shingles").alias("span"))
     per_span = inv.groupBy("span").agg(
         F.countDistinct("doc_id").alias("n_docs_with")
@@ -2075,11 +2042,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and nothing else changes state: old-old pairs were handled at
     their own ingest, new-new pairs by the intra-batch run of
     dedup_minhash_lsh)."""
-    sh = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint()
-    )
+    sh = _shingles(spark, sf_dir).localCheckpoint()
     is_new = F.col("doc_id") % INCR_NEW_MOD == INCR_NEW_MOD - 1
     bands_long = minhash_bands(minhash_sigs(sh))
     idx = bands_long.filter(~is_new).select(
@@ -2094,7 +2057,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates()
     )
     return (
-        _verify_jaccard(cand, sh, MINHASH_VERIFY_THRESHOLD)
+        _verify_jaccard(cand, sh)
         .select(
             F.col("doc_b").alias("new_doc"),
             F.col("doc_a").alias("dup_of_old"),
@@ -2146,11 +2109,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the df-banding guard text_cooccurrence_pairs also uses); the exact
     verify then touches only deduplicated candidates. Emitted per
     DIRECTION (A-in-B and B-in-A are different claims)."""
-    sh = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint()
-    )
+    sh = _shingles(spark, sf_dir).localCheckpoint()
     inv = sh.select("doc_id", F.explode("shingles").alias("s"))
     rare = (
         inv.groupBy("s")
@@ -2165,17 +2124,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .dropDuplicates()
     )
-    x = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    y = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    containment = n_common.cast("double") / F.size("sh_a")
+    containment = _n_common().cast("double") / F.size("sh_a")
     return (
-        cand.join(x, "doc_a")
-        .join(y, "doc_b")
+        _shingle_pairs(cand, sh)
         .select(
             "doc_a",
             "doc_b",
-            n_common.alias("n_common"),
+            _n_common().alias("n_common"),
             F.size("sh_a").alias("n_sh_a"),
             containment.alias("containment"),
         )
@@ -2271,40 +2226,11 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the histogram is 17 rows regardless of corpus size; the
     cumulative window runs on those 17 rows, not on data.
     """
-    n_sigs = NUM_BANDS * ROWS_PER_BAND
-    sh = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint(eager=False)
-    )
+    sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)
     sigs = minhash_sigs(sh)
-    bands_long = minhash_bands(sigs)
-    cand = (
-        bands_long.select(F.col("doc_id").alias("doc_a"), "band_idx", "bk")
-        .join(
-            bands_long.select(F.col("doc_id").alias("doc_b"), "band_idx", "bk"),
-            ["band_idx", "bk"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"sig{i}").alias(f"a{i}") for i in range(n_sigs)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"sig{i}").alias(f"b{i}") for i in range(n_sigs)],
-    )
-    n_match = None
-    for i in range(n_sigs):
-        term = (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
-        n_match = term if n_match is None else n_match + term
     hist = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(n_match.alias("n_match"))
+        _sig_pairs(_lsh_candidates(minhash_bands(sigs)), sigs)
+        .select(_n_sig_match().alias("n_match"))
         .groupBy("n_match")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
@@ -2313,7 +2239,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         hist.withColumn(
-            "est_jaccard_pct", F.expr(f"(n_match * 100) div {n_sigs}")
+            "est_jaccard_pct", F.expr(f"(n_match * 100) div {NUM_HASHES}")
         )
         .withColumn("n_pairs_at_least", F.sum("n_pairs").over(w))
         .select(
@@ -2325,14 +2251,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _threshold_sweep_sql() -> str:
     n_sigs = NUM_BANDS * ROWS_PER_BAND
-    match_sum = " + ".join(
-        f"CASE WHEN sa.sig{i} = sb.sig{i} THEN 1 ELSE 0 END"
-        for i in range(n_sigs)
-    )
     return f"""
 WITH {_minhash_ctes()},
 hist AS (
-  SELECT ({match_sum}) AS n_match, COUNT(*) AS n_pairs
+  SELECT ({_match_sum_sql("sa", "sb")}) AS n_match, COUNT(*) AS n_pairs
   FROM cand c
   JOIN sigs sa ON sa.doc_id = c.doc_a
   JOIN sigs sb ON sb.doc_id = c.doc_b
@@ -2350,12 +2272,12 @@ FROM hist ORDER BY n_match DESC
 
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:
-    """Canonical undirected edge set → both-direction (u, v) adjacency."""
-    canon = pairs.select(
-        F.least("doc_a", "doc_b").alias("a"), F.greatest("doc_a", "doc_b").alias("b")
-    ).distinct()
-    return canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    """(doc_a, doc_b) pairs in any orientation, possibly repeated →
+    canonical (u < v) edge set → both-direction (u, v) adjacency."""
+    return _undirected(
+        pairs.select(
+            F.least("doc_a", "doc_b").alias("u"), F.greatest("doc_a", "doc_b").alias("v")
+        ).distinct()
     )
 
 
@@ -2455,18 +2377,11 @@ def dedup_savings_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _savings_sql() -> str:
     return f"""
 WITH RECURSIVE {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
+{_PAIRS_CTE},
 edges AS (
   SELECT doc_a, doc_b FROM pairs UNION ALL SELECT doc_b, doc_a FROM pairs
 ),
-nodes AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
-reach(doc_id, r) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT e.doc_a, reach.r FROM edges e JOIN reach ON e.doc_b = reach.doc_id
-),
+{_REACH_CTES},
 labels AS (SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
 sizes AS (SELECT cluster_id, COUNT(*) AS sz FROM labels GROUP BY cluster_id),
 hist AS (SELECT sz, COUNT(*) AS n_clusters FROM sizes GROUP BY sz),
@@ -2530,9 +2445,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 GRAPH_MODULARITY_SQL = f"""
 WITH RECURSIVE {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
+{_PAIRS_CTE},
 edges AS (
   SELECT doc_a AS u, doc_b AS v FROM pairs
   UNION ALL
@@ -2723,6 +2636,71 @@ GROUP BY 1, 2 ORDER BY decision, is_true_pair
 
 
 
+# ---------------------------------------------------------------------------
+# Co-purchase graph (nodes = parts, edges = parts bought in one order)
+# ---------------------------------------------------------------------------
+
+# every (x, y), x < y, pair of a sorted distinct array column, as struct(pa, pb)
+_PAIRS_OF = (
+    "flatten(transform({0}, (x, i) -> transform("
+    "slice({0}, i + 2, size({0})), y -> struct(x AS pa, y AS pb))))"
+)
+
+
+def _copurchase_pairs(lineitem: DataFrame) -> DataFrame:
+    """(pa, pb), pa < pb, per two distinct parts of one order — one row per
+    order the pair shares. ONE shuffle (the per-order groupBy) instead of
+    distinct + a keyed self-join: collect_set dedups parts within the
+    order, and the pairs explode MAP-SIDE from the sorted part array
+    (basket size is bounded, so the per-row explosion is O(1); the
+    oracles' DISTINCT self-join is the same pair multiset)."""
+    per_order = (
+        lineitem.select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+        .filter(F.size("ps") >= 2)
+    )
+    return per_order.select(F.explode(F.expr(_PAIRS_OF.format("ps"))).alias("p")).select(
+        F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb")
+    )
+
+
+def _supported_pairs(lineitem: DataFrame, support: int) -> DataFrame:
+    """The co-purchase graph's canonical edge list (pa < pb): the part
+    pairs bought together in >= ``support`` orders."""
+    return (
+        _copurchase_pairs(lineitem)
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+        .filter(F.col("n_ab") >= support)
+        .select("pa", "pb")
+    )
+
+
+def _adjacency(pairs: DataFrame) -> DataFrame:
+    """(w, nb): each node's sorted neighbour list over the undirected
+    edges; degree is size(nb). collect_set == the neighbour set exactly:
+    undirected rows are unique by construction."""
+    return _undirected(pairs).groupBy(F.col("pa").alias("w")).agg(
+        F.array_sort(F.collect_set("pb")).alias("nb")
+    )
+
+
+def _open_wedges(adj: DataFrame, pairs: DataFrame, *aggs: Column) -> DataFrame:
+    """(u, v, *aggs) per NON-edge u < v with a common neighbour, ``aggs``
+    folding its wedges u–w–v (deg_w = the centre's degree). Each wedge is
+    exploded map-side exactly once from its centre's adjacency, and the
+    existing-edge anti-join runs after the aggregation — the plan
+    ``graph_link_prediction`` documents."""
+    return (
+        adj.filter(F.size("nb") >= 2)
+        .select(F.explode(F.expr(_PAIRS_OF.format("nb"))).alias("p"), F.size("nb").alias("deg_w"))
+        .groupBy(F.col("p.pa").alias("u"), F.col("p.pb").alias("v"))
+        .agg(*aggs)
+        .join(pairs, (F.col("u") == F.col("pa")) & (F.col("v") == F.col("pb")), "left_anti")
+    )
+
+
 KCORE_K = 3
 KCORE_ROUNDS = 4
 KCORE_SUPPORT = 2
@@ -2759,43 +2737,16 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATERIALIZED CTEs (without materialization the CTE tree re-executes
     exponentially — mirrored lesson in the plan here).
     """
-    # Edge build: ONE shuffle (groupBy order) instead of distinct + a
-    # keyed self-join — collect_set dedups parts within the order, and
-    # the unordered pairs explode MAP-SIDE from the sorted part array
-    # (order basket size is bounded, so the per-row explosion is O(1);
-    # the oracle's DISTINCT-self-join is the same pair multiset).
-    per_order = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") >= 2)
-    )
-    pairs = (
-        per_order.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> transform("
-                    "slice(ps, i + 2, size(ps)), y -> struct(x AS pa, y AS pb))))"
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= KCORE_SUPPORT)
-        .select("pa", "pb")
-        .localCheckpoint(eager=False)
-    )
+    edges = _supported_pairs(
+        load_table(spark, sf_dir, "lineitem"), KCORE_SUPPORT
+    ).localCheckpoint(eager=False)
     out = []
-    edges = pairs
     for it in range(KCORE_ROUNDS + 1):
-        und = edges.unionByName(
-            edges.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-        )
         # one shuffle per round; deg is reused for readout, filter, AND
         # the next round's edge prune, so pin it
         deg = (
-            und.groupBy("pa")
+            _undirected(edges)
+            .groupBy("pa")
             .agg(F.count(F.lit(1)).alias("deg"))
             .localCheckpoint(eager=False)
         )
@@ -2828,10 +2779,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(keep.withColumnRenamed("node", "pb")), "pb")
             .select("pa", "pb")
         )
-    res = out[0]
-    for r in out[1:]:
-        res = res.unionByName(r)
-    return res.orderBy("iter")
+    return reduce(lambda x, y: x.unionByName(y), out).orderBy("iter")
 
 
 def _kcore_sql() -> str:
@@ -2890,39 +2838,15 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs no extra pass. The recent-window filter is partition pruning
     at 100 TB (ship-date is the natural table partition key); the
     oracle mirrors the unroll as MATERIALIZED CTEs."""
-    per_order = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_shipdate") >= F.lit(KTRUSS_SINCE).cast("timestamp"))
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") >= 2)
+    lineitem = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") >= F.lit(KTRUSS_SINCE).cast("timestamp")
     )
-    edges = (
-        per_order.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> transform("
-                    "slice(ps, i + 2, size(ps)), y -> struct(x AS pa, y AS pb))))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges = _copurchase_pairs(lineitem).distinct().localCheckpoint(eager=False)
     out = []
     for it in range(KTRUSS_ROUNDS + 1):
-        e1 = edges.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
-        e2 = edges.select(F.col("pa").alias("b2"), F.col("pb").alias("c"))
-        e3 = edges.select(F.col("pa").alias("a3"), F.col("pb").alias("c3"))
-        tri = (
-            e1.join(e2, F.col("b") == F.col("b2"))
-            .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-            .select("a", "b", "c")
-        )
         support = (
-            tri.select(
+            _triangles(edges)
+            .select(
                 F.explode(
                     F.array(
                         F.struct(F.col("a").alias("pa"), F.col("b").alias("pb")),
@@ -2955,10 +2879,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("pa", "pb")
             .localCheckpoint(eager=False)
         )
-    res = out[0]
-    for r in out[1:]:
-        res = res.unionByName(r)
-    return res.orderBy("iter")
+    return reduce(lambda x, y: x.unionByName(y), out).orderBy("iter")
 
 
 def _ktruss_sql() -> str:
@@ -3045,51 +2966,19 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples hub adjacency before the explode (standard for CN scoring;
     a 10⁶-degree hub is 10¹² wedges under EITHER enumeration).
     """
-    per_order = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") >= 2)
-    )
-    pair_expr = (
-        "flatten(transform({0}, (x, i) -> transform("
-        "slice({0}, i + 2, size({0})), y -> struct(x AS pa, y AS pb))))"
-    )
-    pairs = (
-        per_order.select(F.explode(F.expr(pair_expr.format("ps"))).alias("p"))
-        .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= LINKPRED_SUPPORT)
-        .select("pa", "pb")
-        .localCheckpoint(eager=False)
-    )
-    und = pairs.unionByName(
-        pairs.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-    )
+    pairs = _supported_pairs(
+        load_table(spark, sf_dir, "lineitem"), LINKPRED_SUPPORT
+    ).localCheckpoint(eager=False)
     # One shuffle builds BOTH the per-node adjacency (wedge source) and
-    # the degree table (size of the same array). collect_set == the
-    # neighbor set exactly: und rows are unique by construction.
+    # the degree table (size of the same array).
     # NOT pinned (r12, measured): adj feeds the wedge explode and two
     # deg broadcast builds, but all three branches sit in ONE query and
     # AQE reuses the identical und-groupBy shuffle stage at runtime — a
     # localCheckpoint here only added materialization I/O (2.47 → 2.92 s
     # at sf0.1 in the A/B harness) and was reverted.
-    adj = und.groupBy(F.col("pa").alias("w")).agg(
-        F.array_sort(F.collect_set("pb")).alias("nb")
-    )
+    adj = _adjacency(pairs)
     deg = adj.select(F.col("w").alias("node"), F.size("nb").alias("deg"))
-    cand = (
-        adj.filter(F.size("nb") >= 2)
-        .select(F.explode(F.expr(pair_expr.format("nb"))).alias("p"))
-        .groupBy(F.col("p.pa").alias("u"), F.col("p.pb").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cn"))
-    )
-    cn = cand.join(
-        pairs,
-        (F.col("u") == F.col("pa")) & (F.col("v") == F.col("pb")),
-        "left_anti",
-    )
+    cn = _open_wedges(adj, pairs, F.count(F.lit(1)).alias("cn"))
     return (
         cn.join(F.broadcast(deg.withColumnRenamed("node", "u")), "u")
         .withColumnRenamed("deg", "deg_u")
@@ -3108,9 +2997,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _linkpred_sql() -> str:
-    return f"""
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+# the supported co-purchase pairs, their degrees and every wedge u-w-v
+_WEDGE_CTES = f"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 pairs AS (
   SELECT a.l_partkey AS pa, b.l_partkey AS pb
   FROM li a JOIN li b
@@ -3127,7 +3015,12 @@ wedges AS (
   SELECT e1.pa AS u, e2.pb AS v, e1.pb AS w
   FROM und e1 JOIN und e2
     ON e1.pb = e2.pa AND e1.pa < e2.pb
-),
+)"""
+
+
+def _linkpred_sql() -> str:
+    return f"""
+{_WEDGE_CTES},
 non_edges AS (
   SELECT u, v, w FROM wedges
   WHERE NOT EXISTS (
@@ -3170,45 +3063,15 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregating SUM — → existing-edge anti-join AFTER the
     aggregation → top-{LINKPRED_TOP}. Per-center fan-out is C(deg, 2);
     hub capping applies at 100 TB as documented on the CN variant."""
-    per_order = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") >= 2)
-    )
-    pair_expr = (
-        "flatten(transform({0}, (x, i) -> transform("
-        "slice({0}, i + 2, size({0})), y -> struct(x AS pa, y AS pb))))"
-    )
-    pairs = (
-        per_order.select(F.explode(F.expr(pair_expr.format("ps"))).alias("p"))
-        .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= LINKPRED_SUPPORT)
-        .select("pa", "pb")
-        .localCheckpoint(eager=False)
-    )
-    und = pairs.unionByName(
-        pairs.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-    )
-    adj = und.groupBy(F.col("pa").alias("w")).agg(
-        F.array_sort(F.collect_set("pb")).alias("nb")
-    )
-    cand = (
-        adj.filter(F.size("nb") >= 2)
-        .select(
-            F.explode(F.expr(pair_expr.format("nb"))).alias("p"),
-            F.expr("CAST(1000000 div size(nb) AS BIGINT)").alias("r"),
-        )
-        .groupBy(F.col("p.pa").alias("u"), F.col("p.pb").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cn"), F.sum("r").alias("ra_ppm"))
-    )
+    pairs = _supported_pairs(
+        load_table(spark, sf_dir, "lineitem"), LINKPRED_SUPPORT
+    ).localCheckpoint(eager=False)
     return (
-        cand.join(
+        _open_wedges(
+            _adjacency(pairs),
             pairs,
-            (F.col("u") == F.col("pa")) & (F.col("v") == F.col("pb")),
-            "left_anti",
+            F.count(F.lit(1)).alias("cn"),
+            F.sum(F.expr("CAST(1000000 div deg_w AS BIGINT)")).alias("ra_ppm"),
         )
         .select("u", "v", "cn", "ra_ppm")
         .orderBy(F.desc("ra_ppm"), "u", "v")
@@ -3218,24 +3081,7 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _resource_allocation_sql() -> str:
     return f"""
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pairs AS (
-  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {LINKPRED_SUPPORT}
-),
-und AS (
-  SELECT pa, pb FROM pairs
-  UNION ALL SELECT pb AS pa, pa AS pb FROM pairs
-),
-deg AS (SELECT pa AS node, COUNT(*) AS deg FROM und GROUP BY pa),
-wedges AS (
-  SELECT e1.pa AS u, e2.pb AS v, e1.pb AS w
-  FROM und e1 JOIN und e2
-    ON e1.pb = e2.pa AND e1.pa < e2.pb
-),
+{_WEDGE_CTES},
 scored AS (
   SELECT wedges.u, wedges.v, COUNT(*) AS cn,
          CAST(SUM(1000000 // deg.deg) AS BIGINT) AS ra_ppm
@@ -3294,82 +3140,27 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins, and four count aggregations removed). Membership via exact
     sig equality is the md5 band-key equality up to md5 collisions —
     the same vanishing-probability caveat the band keys themselves
-    already carry. Counts are integers; theory values are config
-    constants — hash-exact."""
-    sh = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint(eager=False)
-    )
+    already carry. Both signature sides join through ``_sig_pairs``
+    with no broadcast hint: the signature table grows with the corpus,
+    so the planner (AQE at runtime) picks the join strategy. Counts are
+    integers; theory values are config constants — hash-exact."""
+    sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)
     sigs = minhash_sigs(sh).localCheckpoint(eager=False)
-    wide_bands, wide_rows = LSH_TUNE_CONFIGS[0]
-    band_keys = [
-        F.md5(
-            F.encode(
-                F.concat_ws(
-                    "|", *[f"sig{b * wide_rows + r}" for r in range(wide_rows)]
-                ),
-                "UTF-8",
-            )
-        ).alias(f"band{b}")
-        for b in range(wide_bands)
-    ]
-    long = sigs.select("doc_id", *band_keys).select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[f"band{b}" for b in range(wide_bands)])
-        ).alias("band_idx", "bk"),
+    cand = _lsh_candidates(minhash_bands(sigs, *LSH_TUNE_CONFIGS[0]))
+    # per pair: which signature slots agree, and the exact Jaccard
+    agree = ", ".join(f"a{i} = b{i}" for i in range(NUM_HASHES))
+    flagged = _shingle_pairs(_sig_pairs(cand, sigs), sh).select(
+        F.expr(f"array({agree})").alias("eq"), _jaccard().alias("jac")
     )
-    cand = (
-        long.select(F.col("doc_id").alias("doc_a"), "band_idx", "bk")
-        .join(
-            long.select(F.col("doc_id").alias("doc_b"), "band_idx", "bk"),
-            ["band_idx", "bk"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates()
-    )
-    n_sigs = len(_MH_PARAMS)
-    sig_arr = F.array(*[f"sig{i}" for i in range(n_sigs)])
-    flagged = (
-        cand.join(
-            F.broadcast(
-                sigs.select(F.col("doc_id").alias("doc_a"), sig_arr.alias("sa"))
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                sigs.select(F.col("doc_id").alias("doc_b"), sig_arr.alias("sb"))
-            ),
-            "doc_b",
-        )
-        .join(
-            sh.select(
-                F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            sh.select(
-                F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-            ),
-            "doc_b",
-        )
-    )
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = n_common.cast("double") / (F.size("sh_a") + F.size("sh_b") - n_common)
+    jac = F.col("jac")
 
     def collides(bands: int, rows: int) -> Column:
         # does this candidate pair collide under (bands × rows)? some
         # band's `rows` consecutive signatures all equal — the exact
         # condition the md5 band key encodes
         return F.expr(
-            "exists(sequence(0, {b}), bi -> forall(sequence(1, {r}),"
-            " ri -> sa[bi * {r} + ri - 1] = sb[bi * {r} + ri - 1]))".format(
-                b=bands - 1, r=rows
-            )
+            f"exists(sequence(0, {bands - 1}),"
+            f" b -> forall(slice(eq, b * {rows} + 1, {rows}), x -> x))"
         )
 
     # count_if, not sum: an empty candidate set counts 0 (the oracle's
@@ -3417,10 +3208,6 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_tuning_sql() -> str:
-    sig_exprs = ",\n         ".join(
-        f"MIN(({a} * h + {b}) % {_MH_P}) AS sig{i}"
-        for i, (a, b) in enumerate(_MH_PARAMS)
-    )
     per_config = []
     for bands, rows in LSH_TUNE_CONFIGS:
         band_exprs = ", ".join(
@@ -3470,16 +3257,7 @@ row_{bands}x{rows} AS (
         for bands, rows in LSH_TUNE_CONFIGS
     )
     return f"""
-WITH {SHINGLES_CTE},
-sigs AS (
-  SELECT doc_id,
-         {sig_exprs}
-  FROM (
-    SELECT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
-    FROM (SELECT doc_id, UNNEST(shingles) AS s FROM sh)
-  )
-  GROUP BY doc_id
-),
+WITH {_SIGS_CTES},
 {",".join(per_config)}
 SELECT CAST(n_bands AS INTEGER) AS n_bands,
        CAST(rows_per_band AS INTEGER) AS rows_per_band,
@@ -3522,10 +3300,7 @@ def graph_hyperball_nf(spark: SparkSession, sf_dir: str) -> DataFrame:
     saturated-register count so a reader can see which regime each
     round is in.
     """
-    pairs = dup_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=False)
+    edges = _undirected(dup_pairs(spark, sf_dir)).localCheckpoint(eager=False)
     h = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
@@ -3571,10 +3346,7 @@ def graph_hyperball_nf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         outs.append(readout(reg, t))
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res.orderBy("t")
+    return reduce(lambda x, y: x.unionByName(y), outs).orderBy("t")
 
 
 def _hyperball_sql() -> str:
@@ -3605,14 +3377,8 @@ reg{t} AS (
     )
     return f"""
 WITH {_minhash_ctes()},
-pairs AS (
-  SELECT doc_a, doc_b FROM verified WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a, doc_b FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
+{_PAIRS_CTE},
+{_EDGES_CTE},
 reg0 AS (
   SELECT doc_a AS doc_id,
          [('0x' || substr(md5(CAST(doc_a AS VARCHAR)), 1, 8))::BIGINT] AS reg
@@ -3652,54 +3418,22 @@ def dedup_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — at 100 TB only the b-bit columns (4 bytes/doc packed) would
     ship, which is the operator's entire point.
     """
-    sh = (
-        with_shingles(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "shingles")
-        .localCheckpoint(eager=False)
-    )
+    sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)
     sigs = minhash_sigs(sh)
-    bands_long = minhash_bands(sigs)
-    cand = (
-        bands_long.select(F.col("doc_id").alias("doc_a"), "band_idx", "bk")
-        .join(
-            bands_long.select(F.col("doc_id").alias("doc_b"), "band_idx", "bk"),
-            ["band_idx", "bk"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates()
-    )
     mod = 1 << BBIT_B
-    a_sigs = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"sig{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    b_sigs = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"sig{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
     m_bbit = sum(
         (F.col(f"a{i}") % mod == F.col(f"b{i}") % mod).cast("int")
         for i in range(NUM_HASHES)
     )
-    m_full = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(NUM_HASHES)
-    )
-    x = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    y = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
-        cand.join(a_sigs, "doc_a")
-        .join(b_sigs, "doc_b")
-        .join(x, "doc_a")
-        .join(y, "doc_b")
+        _shingle_pairs(_sig_pairs(_lsh_candidates(minhash_bands(sigs)), sigs), sh)
         .select(
             "doc_a",
             "doc_b",
             m_bbit.alias("m_bbit"),
-            inter.alias("n_common"),
-            (F.size("sh_a") + F.size("sh_b") - inter).alias("n_union"),
-            m_full.alias("m_full"),
+            _n_common().alias("n_common"),
+            (F.size("sh_a") + F.size("sh_b") - _n_common()).alias("n_union"),
+            _n_sig_match().alias("m_full"),
         )
         .select(
             "doc_a",
@@ -3722,16 +3456,12 @@ def _bbit_sql() -> str:
         f"CASE WHEN sa.sig{i} % {mod} = sb.sig{i} % {mod} THEN 1 ELSE 0 END"
         for i in range(NUM_HASHES)
     )
-    m_full = " + ".join(
-        f"CASE WHEN sa.sig{i} = sb.sig{i} THEN 1 ELSE 0 END"
-        for i in range(NUM_HASHES)
-    )
     return f"""
 WITH {_minhash_ctes()},
 audit AS (
   SELECT c.doc_a, c.doc_b,
          ({m_bbit}) AS m_bbit,
-         ({m_full}) AS m_full,
+         ({_match_sum_sql("sa", "sb")}) AS m_full,
          len(list_intersect(x.shingles, y.shingles)) AS n_common,
          len(x.shingles) + len(y.shingles)
            - len(list_intersect(x.shingles, y.shingles)) AS n_union

@@ -3,6 +3,8 @@ semantics, response shapes — all through the test client, no server."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -57,9 +59,23 @@ def test_predict_404_on_absent_or_unloaded_model(client):
 
 def test_predict_400_on_empty_or_non_numeric(client):
     assert client.post("/predict/duration/1", json={}).status_code == 400
-    r = client.post("/predict/duration/1", json={"Distance": "far"})
-    assert r.status_code == 400
-    assert "non-numeric" in r.get_json()["error"]
+    # "far" is not a number; 10**400 is an integer no double can hold
+    for bad in ("far", 10**400):
+        r = client.post("/predict/duration/1", json={"Distance": bad})
+        assert r.status_code == 400
+        assert "non-numeric" in r.get_json()["error"]
+    r = client.post(
+        "/analyze/sensitivity/1",
+        json={
+            "base_features": dict(FULL),
+            "variable_feature_name": "Distance",
+            "variation_values": [1.0, 10**400],
+        },
+    )
+    assert r.status_code == 200
+    rows = r.get_json()["analysis_results"]
+    assert rows[0]["predicted_duration"] is not None
+    assert rows[1]["predicted_duration"] is None and "error" in rows[1]
 
 
 def test_sensitivity_rows_keep_input_order_and_errors(client):
@@ -167,7 +183,9 @@ def test_sensitivity_handles_non_float32_representable_values(client):
 
 
 def test_optimal_time_rejects_non_scalar_targets_with_400(client):
-    """Regression: TypeError from float([100]) must surface as 400, not 500."""
+    """Regression: TypeError from float([100]) must surface as 400, not 500;
+    so must the OverflowError of float(10**400) and int(1e400), and a base
+    value too large for a double."""
     r = client.post(
         "/suggest/optimal-time/1",
         json={
@@ -177,6 +195,19 @@ def test_optimal_time_rejects_non_scalar_targets_with_400(client):
         },
     )
     assert r.status_code == 400
+    base = json.dumps(dict(FULL))
+    for body in (
+        f'{{"base_conditions": {base}, "target_duration_max": {10**400},'
+        ' "hours_to_evaluate": [8]}',
+        f'{{"base_conditions": {base}, "target_duration_max": 100,'
+        ' "minute_of_hour": 1e400, "hours_to_evaluate": [8]}',
+        f'{{"base_conditions": {{"Distance": {10**400}}}, "target_duration_max": 100,'
+        ' "hours_to_evaluate": [8]}',
+    ):
+        r = client.post(
+            "/suggest/optimal-time/1", data=body, content_type="application/json"
+        )
+        assert r.status_code == 400, body[:120]
 
 
 def test_endpoints_run_no_spark_job(spark):

@@ -190,3 +190,24 @@ def test_capture_plans_normalize_strips_run_ids():
         "Project [vec_id AS query_id, aggregate(v, 0, lambdafunction("
         "(lambda acc + lambda x), lambda acc, lambda x, false))], plan_id="
     )
+
+
+def test_capture_plans_unpinned_shows_the_subtree_under_each_pin(spark):
+    """Inside ``unpinned`` a pin is the identity, so the plan holds the
+    aggregate a pin would hide, and the dup_pairs memo starts empty so
+    no pinned pair table leaks in; on exit pins work again and the memo
+    is emptied once more."""
+    from pyspark.sql import functions as F
+
+    from kafka_pyspark_bigdata_spark.operators import dedup
+    from tools.capture_plans import plan_text, unpinned
+
+    df = spark.range(10).groupBy((F.col("id") % 2).alias("k")).count()
+    dedup._DUP_PAIRS_CACHE[("stand-in", "", (0, 0, 0))] = df
+    with unpinned():
+        assert not dedup._DUP_PAIRS_CACHE
+        assert df.localCheckpoint(eager=False) is df
+        assert "HashAggregate" in plan_text(df.localCheckpoint(eager=False))
+        dedup._DUP_PAIRS_CACHE[("stand-in", "", (0, 0, 0))] = df
+    assert not dedup._DUP_PAIRS_CACHE
+    assert "HashAggregate" not in plan_text(df.localCheckpoint(eager=False))

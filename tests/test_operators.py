@@ -941,10 +941,43 @@ def test_lsh_tuning_curve_monotone_in_bands(spark):
     assert theory == sorted(theory)
 
 
-def test_lsh_tuning_curve_empty_candidate_set_matches_oracle(spark, tmp_path):
-    """A corpus with no near-duplicate pairs: every config reports 0
-    candidates, 0 verified and a NULL precision, as the oracle's COUNT(*)
-    and 0 // 0 do (a sum over zero candidate rows would be NULL)."""
+# Every dedup.py query that reads only `documents` through the shared
+# shingle / LSH / verify / edge helpers: the LSH family, the other pair
+# finders, and every consumer of the dup_pairs graph.
+EMPTY_CANDIDATE_QUERIES = [
+    "dedup_lsh_tuning_curve",
+    "dedup_minhash_lsh",
+    "sketch_minhash_error",
+    "dedup_threshold_sweep",
+    "dedup_bbit_minhash",
+    "dedup_incremental_minhash",
+    "dedup_containment",
+    "dedup_ngram_jaccard",
+    "dedup_simhash_pairs",
+    "dedup_clusters",
+    "graph_cc_two_phase",
+    "graph_triangle_count",
+    "graph_pagerank",
+    "graph_hits",
+    "graph_label_propagation",
+    "graph_khop_reach",
+    "graph_hyperball_nf",
+    "graph_modularity",
+    "dedup_savings_summary",
+    "corpus_survivorship",
+    "dedup_keep_best_quality",
+    "corpus_dup_source_matrix",
+]
+
+
+@pytest.mark.parametrize("name", EMPTY_CANDIDATE_QUERIES)
+def test_empty_candidate_set_matches_oracle(spark, tmp_path, name):
+    """A corpus with no near-duplicate pairs — four documents that share
+    no token — so every candidate set and the dup-pair graph are empty.
+    Each query still agrees with its oracle. The tuning curve reports 0
+    candidates, 0 verified and a NULL precision for every config, as the
+    oracle's COUNT(*) and 0 // 0 do (a sum over zero candidate rows would
+    be NULL)."""
     import duckdb
 
     d = str(tmp_path / "no_dups")
@@ -964,15 +997,63 @@ def test_lsh_tuning_curve_empty_candidate_set_matches_oracle(spark, tmp_path):
         f"read_parquet('{d}/documents.parquet/*.parquet')"
     )
     sdf = assert_oracle_match(
-        spark,
-        duck,
-        dedup.dedup_lsh_tuning_curve,
-        dedup.ORACLES["dedup_lsh_tuning_curve"],
-        sf_dir=d,
+        spark, duck, dedup.QUERIES[name], dedup.ORACLES[name], sf_dir=d
     )
-    assert sdf.n_candidates.tolist() == [0, 0, 0]
-    assert sdf.n_verified.tolist() == [0, 0, 0]
-    assert sdf.precision_ppm.isna().all()
+    if name == "dedup_lsh_tuning_curve":
+        assert sdf.n_candidates.tolist() == [0, 0, 0]
+        assert sdf.n_verified.tolist() == [0, 0, 0]
+        assert sdf.precision_ppm.isna().all()
+
+
+def test_lsh_candidate_family_agrees_with_itself(spark):
+    """The LSH queries share one candidate rule and one verify rule. C =
+    the doc pairs that agree on every signature of at least one band,
+    recomputed here in Python from the signatures. The sweep histogram,
+    the estimator audits and the (4x4) tuning row each cover exactly C;
+    the tuning row's survivors are dedup_minhash_lsh's pairs, and the
+    incremental probe finds exactly those of them with one new doc."""
+    from kafka_pyspark_bigdata_spark.sources.batch import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    sh = dedup.with_shingles(docs).select("doc_id", "shingles")
+    sigs = dedup.minhash_sigs(sh).collect()
+    rows = dedup.ROWS_PER_BAND
+    buckets = {}
+    for r in sigs:
+        for b in range(dedup.NUM_BANDS):
+            key = (b, tuple(r[f"sig{b * rows + i}"] for i in range(rows)))
+            buckets.setdefault(key, []).append(r.doc_id)
+    cand = {
+        (x, y) for ids in buckets.values() for x in ids for y in ids if x < y
+    }
+    assert cand, "the planted-dup fixture has LSH candidates"
+
+    sweep = dedup.dedup_threshold_sweep(spark, SF_SMOKE).collect()
+    assert sum(r.n_pairs for r in sweep) == len(cand)
+    for q in (dedup.sketch_minhash_error, dedup.dedup_bbit_minhash):
+        pairs = [(r.doc_a, r.doc_b) for r in q(spark, SF_SMOKE).collect()]
+        assert len(pairs) == len(cand) and set(pairs) == cand, q.__name__
+    lsh = {
+        (r.doc_a, r.doc_b)
+        for r in dedup.dedup_minhash_lsh(spark, SF_SMOKE).collect()
+    }
+    assert lsh <= cand
+    (row,) = [
+        r for r in dedup.dedup_lsh_tuning_curve(spark, SF_SMOKE).collect()
+        if (r.n_bands, r.rows_per_band) == (dedup.NUM_BANDS, dedup.ROWS_PER_BAND)
+    ]
+    assert row.n_candidates == len(cand)
+    assert row.n_verified == len(lsh)
+
+    def new(doc):
+        return doc % dedup.INCR_NEW_MOD == dedup.INCR_NEW_MOD - 1
+
+    incr = [
+        (min(r.new_doc, r.dup_of_old), max(r.new_doc, r.dup_of_old))
+        for r in dedup.dedup_incremental_minhash(spark, SF_SMOKE).collect()
+    ]
+    assert len(incr) == len(set(incr))
+    assert set(incr) == {(a, b) for a, b in lsh if new(a) != new(b)}
 
 
 def test_boilerplate_spans_reach_recompute(spark):

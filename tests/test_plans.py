@@ -322,6 +322,22 @@ def test_threshold_sweep_joins_on_band_keys_not_allpairs(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def test_lsh_tuning_curve_forces_no_broadcast(spark):
+    from kafka_pyspark_bigdata_spark.operators.dedup import dedup_lsh_tuning_curve
+
+    with _conf(
+        spark,
+        **{
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
+        plan = _plan(dedup_lsh_tuning_curve(spark, SF))
+    # the signature frame is O(n_docs): with auto-broadcast off, only a
+    # forced F.broadcast hint could still plan a broadcast here
+    assert "BroadcastExchange" not in plan, plan
+
+
 def test_partial_agg_merge_reuses_shard_partitioning(spark):
     from kafka_pyspark_bigdata_spark.plans.lakehouse import q_partial_agg_merge
 

@@ -6,7 +6,12 @@ Usage: python tools/capture_plans.py <before|after> <query> [query ...]
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt (round dir from
 the env var so each optimization round's evidence lands in its own
 directory instead of overwriting a past round's; an absolute path is used
-as is). Plans are built at sf0.1 (the bench SF) in ``bench.bench_session``,
+as is), and next to it <query>_<suffix>_unpinned.txt: the same query built
+with ``localCheckpoint`` returning its input, so the subtree every pin
+hides (an iterative operator's rounds, a shared pair table) is part of the
+evidence too. A builder that runs a job per round (the connected-components
+loops behind ``dedup_clusters``) then runs it on a plan that holds every
+earlier round, so such an unpinned build can take many minutes. Plans are built at sf0.1 (the bench SF) in ``bench.bench_session``,
 the session the bench times in, so Exchange counts / join strategies match
 what the timed runs execute (AQE initial plan).
 
@@ -50,24 +55,51 @@ def normalize(plan: str) -> str:
     return plan
 
 
+@contextlib.contextmanager
+def unpinned():
+    """Builds inside see ``localCheckpoint`` as the identity. The
+    ``dup_pairs`` memo is emptied on the way in and out, so an unpinned
+    build never reuses a pinned pair table, nor a pinned build an
+    unpinned one."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from kafka_pyspark_bigdata_spark.operators import dedup
+
+    pin = DataFrame.localCheckpoint
+    dedup._DUP_PAIRS_CACHE.clear()
+    DataFrame.localCheckpoint = lambda self, *args, **kwargs: self
+    try:
+        yield
+    finally:
+        DataFrame.localCheckpoint = pin
+        dedup._DUP_PAIRS_CACHE.clear()
+
+
+def plan_text(df) -> str:
+    """Optimized logical plan above the formatted physical plan, normalized."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    return normalize(
+        f"== Optimized Logical Plan ==\n{optimized}\n\n{buf.getvalue()}"
+    )
+
+
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     os.makedirs(OUT_DIR, exist_ok=True)
     spark, qs = bench.bench_session("capture-plans")
     for name in names:
-        df = qs[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        optimized = df._jdf.queryExecution().optimizedPlan().toString()
-        plan = normalize(
-            f"== Optimized Logical Plan ==\n{optimized}\n\n{buf.getvalue()}"
-        )
-        path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+        plans = {suffix: plan_text(qs[name](spark, SF_DIR))}
+        with unpinned():
+            plans[f"{suffix}_unpinned"] = plan_text(qs[name](spark, SF_DIR))
+        for tag, plan in plans.items():
+            path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+            with open(path, "w") as fh:
+                fh.write(plan)
+            print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
 
 
 if __name__ == "__main__":
