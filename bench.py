@@ -16,6 +16,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.spans import tree_cpu_s  # noqa: E402
+
 
 # SENTINEL set: a fixed cross-family sample measured in a FRESH bare-session
 # subprocess, min-of-3 whole-list passes. The shared 156-query session's
@@ -294,9 +296,11 @@ def time_queries(spark, qs, names: list[str], sf_dir: str, n_passes: int) -> dic
     one warm-up run of every name at the sibling sf0.001, then ``n_passes``
     whole-list timed passes and min-of-passes per name.
 
-    Returns ``{"queries": {name: sec}, "passes": [{name: sec}, ...],
-    "errors": {name: "warmup: ..." | "run: ..."}}``. Wall time per query
-    includes building and planning the DataFrame.
+    Returns ``{"queries": {name: sec}, "cpu": {name: sec}, "passes":
+    [{name: sec}, ...], "errors": {name: "warmup: ..." | "run: ..."}}``.
+    Wall time per query includes building and planning the DataFrame;
+    ``cpu`` is the min-of-passes CPU time (user + system) of this process
+    tree over the same span: the driver, the JVM and its Python workers.
     """
     errors: dict[str, str] = {}
 
@@ -326,24 +330,32 @@ def time_queries(spark, qs, names: list[str], sf_dir: str, n_passes: int) -> dic
     # Whole-list passes (A then B) rather than back-to-back reruns of each
     # query keep the samples' GC states independent.
     passes: list[dict[str, float]] = []
+    cpu_passes: list[dict[str, float]] = []
     for _ in range(n_passes):
         pass_t: dict[str, float] = {}
+        pass_cpu: dict[str, float] = {}
         for name in names:
             if name in errors:
                 continue
+            c0 = tree_cpu_s()  # read outside the wall span: it walks /proc
             t0 = time.time()
             if run(name, sf_dir, "run"):
                 pass_t[name] = round(time.time() - t0, 3)
+                pass_cpu[name] = round(tree_cpu_s() - c0, 3)
         passes.append(pass_t)
+        cpu_passes.append(pass_cpu)
     # Policy: a name is EITHER timed or errored, never both. A query that
     # succeeds in pass 1 but throws in pass 2 is recorded as an error and
     # dropped from timings (a flaky query must surface as a failure, not
     # silently contribute its lucky pass to the total). Every name without
     # an error was timed in every pass.
-    timings = {
-        name: min(p[name] for p in passes) for name in names if name not in errors
+    timed = [name for name in names if name not in errors]
+    return {
+        "queries": {name: min(p[name] for p in passes) for name in timed},
+        "cpu": {name: min(p[name] for p in cpu_passes) for name in timed},
+        "passes": passes,
+        "errors": errors,
     }
-    return {"queries": timings, "passes": passes, "errors": errors}
 
 
 def sentinel_child() -> None:

@@ -1561,6 +1561,18 @@ ORDER BY doc_id
 LPA_ROUNDS = 3
 
 
+def _lpa_round(nbr_labels: DataFrame) -> DataFrame:
+    """One synchronous LPA round: ``nbr_labels`` holds one row (doc_a,
+    label) per directed edge, the label being the neighbour's; every node
+    ``doc_a`` takes the most common one, ties to the SMALLEST label.
+    ``F.mode(..., True)`` is that rule exactly: its deterministic flag
+    breaks count ties toward the smallest value (without it, the pick
+    among tied labels is arbitrary)."""
+    return nbr_labels.groupBy(F.col("doc_a").alias("node")).agg(
+        F.mode("label", True).alias("label")
+    )
+
+
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by LABEL PROPAGATION over the near-dup pair
     graph (Raghavan et al. 2007, public literature) — the cheap
@@ -1573,45 +1585,30 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact connected components): LPA splits bridged chains that CC
     merges, at the same per-round cost.
 
-    Scale shape per round: one equi-join of the edge list against the
-    node-sized label table + one (node, label) partial-agg count + a
-    per-node argmax via ``max(struct(count, -label))`` — shuffles carry
-    the edge list once per round, labels never leave node cardinality;
-    ``localCheckpoint`` pins each round. The output is the top-20
-    community census (size, id range), stable under (n_members DESC,
-    community) ordering. Oracle: the identical unroll as MATERIALIZED
-    CTEs with a ROW_NUMBER argmax."""
-    edges = _undirected(dup_pairs(spark, sf_dir)).localCheckpoint(eager=False)
-    labels = (
-        edges.select(F.col("doc_a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(LPA_ROUNDS):
-        counts = (
-            edges.join(labels, edges.doc_b == labels.node)
-            .groupBy(F.col("doc_a").alias("n2"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            counts.groupBy(F.col("n2").alias("node"))
-            .agg(
-                F.max(
-                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                ).alias("m")
-            )
-            .select("node", (-F.col("m.nl")).alias("label"))
-            .localCheckpoint(eager=False)
-        )
+    Scale shape per round (``_lpa_round``): one equi-join of the edge
+    list against the node-sized label table, then ONE shuffle on the
+    node id carrying partial ``mode`` buffers (a per-task label → count
+    map per node, so at most one entry per distinct neighbour label) —
+    labels never leave node cardinality. Round 1 needs no join: every
+    node is still labelled with its own id, so a neighbour's label is its
+    id. No pins: each round's labels are read once, by the next round, so
+    the plan grows linearly with LPA_ROUNDS (unlike the
+    connected-components loops, whose rounds read the previous frame
+    twice and double the plan). The whole unroll is one query: building
+    it starts no Spark job beyond the memoized ``dup_pairs``. The output
+    is the top-20 community census (size, id range), stable under
+    (n_members DESC, community) ordering. Oracle: the identical unroll as
+    MATERIALIZED CTEs with a ROW_NUMBER argmax."""
+    edges = _undirected(dup_pairs(spark, sf_dir))
+    labels = _lpa_round(edges.select("doc_a", F.col("doc_b").alias("label")))
+    for _ in range(LPA_ROUNDS - 1):
+        labels = _lpa_round(edges.join(labels, edges.doc_b == labels.node))
     return (
-        labels.groupBy("label")
+        labels.groupBy(F.col("label").alias("community"))
         .agg(
             F.count(F.lit(1)).alias("n_members"),
             F.min("node").alias("min_node"),
             F.max("node").alias("max_node"),
-        )
-        .select(
-            F.col("label").alias("community"), "n_members", "min_node", "max_node"
         )
         .orderBy(F.desc("n_members"), F.asc("community"))
         .limit(20)

@@ -14,9 +14,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.numeric import dsum, dsum_sql
-from ..sources.batch import load_table, read_events, scratch_dir, table_path
+from ..sources.batch import load_table, read_events, scratch_dir, table_path, table_stamp
 from .batcher import run_count_batched_stream
 from .windows import session_agg, sliding_agg, tumbling_agg
 
@@ -41,19 +42,34 @@ def _run_to_memory(agg, name_prefix: str, output_mode: str = "complete"):
     return name
 
 
+# Raw (nanos-as-long) events schema per (applicationId, sf_dir, events
+# file stamp): inferring it is one Parquet footer job, and every stream
+# builder here needs it. Keyed like load_table's _SCAN_CACHE, so a
+# rewritten events file is re-inferred.
+_EVENTS_SCHEMA_CACHE: dict[tuple[str, str, tuple[int, int, int]], StructType] = {}
+
+
+def _events_schema(spark: SparkSession, sf_dir: str) -> StructType:
+    path = table_path(sf_dir, "events")
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir.rstrip("/"), table_stamp(path))
+    schema = _EVENTS_SCHEMA_CACHE.get(key)
+    if schema is None:
+        for stale in [k for k in _EVENTS_SCHEMA_CACHE if k[0] != app or k[1] == key[1]]:
+            del _EVENTS_SCHEMA_CACHE[stale]
+        schema = _EVENTS_SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source streaming replay of the events fixture (the broker-free
     stand-in for the Kafka source; see streaming.kafka for the real one)."""
-
-    def read() -> DataFrame:
-        raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-        return (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
-    return read_events(spark, read)
+    return read_events(
+        spark,
+        lambda: spark.readStream.schema(_events_schema(spark, sf_dir))
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir),
+    )
 
 
 def streaming_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:

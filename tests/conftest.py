@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -38,3 +40,20 @@ def assert_oracle_match(spark, duck, fn, sql, sf_dir=SF_SMOKE):
     problems = compare("q", sdf, odf)
     assert not problems, problems
     return sdf
+
+
+@contextlib.contextmanager
+def no_spark_job(spark, what: str):
+    """Assert that the ``with`` block, on this thread, starts no Spark job:
+    the block runs under a fresh job group, whose job list must be empty
+    on exit."""
+    sc = spark.sparkContext
+    group = f"no-job-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, f"{what} must not start Spark jobs")
+    try:
+        yield
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs == [], f"{what} started Spark jobs {jobs}"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

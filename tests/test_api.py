@@ -11,6 +11,7 @@ import pytest
 
 pytest.importorskip("flask")
 
+from conftest import no_spark_job
 from kafka_pyspark_bigdata_spark.ml import serving, trainer
 from kafka_pyspark_bigdata_spark.ml.api import create_app
 
@@ -224,29 +225,22 @@ def test_endpoints_run_no_spark_job(spark):
         max_depth=2,
     )
     app = create_app(spark, {"1": fitted})  # builds the scorer: jobs allowed
-    sc = spark.sparkContext
-    sc.setJobGroup("api-no-jobs", "requests must not start Spark jobs")
-    try:
-        with app.test_client() as c:
-            bodies = {
-                "/predict/duration/1": FULL,
-                "/analyze/sensitivity/1": {
-                    "base_features": FULL,
-                    "variable_feature_name": "Temp",
-                    "variation_values": [1.0, 2.0],
-                },
-                "/suggest/optimal-time/1": {
-                    "base_conditions": FULL,
-                    "target_duration_max": 1e9,
-                    "hours_to_evaluate": [7, 8, 9],
-                },
-            }
-            for url, body in bodies.items():
-                assert c.post(url, json=body).status_code == 200, url
-        assert list(sc.statusTracker().getJobIdsForGroup("api-no-jobs")) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    with no_spark_job(spark, "requests"), app.test_client() as c:
+        bodies = {
+            "/predict/duration/1": FULL,
+            "/analyze/sensitivity/1": {
+                "base_features": FULL,
+                "variable_feature_name": "Temp",
+                "variation_values": [1.0, 2.0],
+            },
+            "/suggest/optimal-time/1": {
+                "base_conditions": FULL,
+                "target_duration_max": 1e9,
+                "hours_to_evaluate": [7, 8, 9],
+            },
+        }
+        for url, body in bodies.items():
+            assert c.post(url, json=body).status_code == 200, url
 
 
 def test_sensitivity_nan_variation_value_is_imputed_not_500(client, model):

@@ -12,8 +12,10 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 import bench
+from conftest import SF_ORACLE
 
 
 def test_bench_runs_clean_and_prints_one_json_line(tmp_path):
@@ -169,6 +171,41 @@ def test_time_queries_never_times_an_errored_name():
         "bad_warmup": "warmup: RuntimeError: boom",
     }
     assert [sorted(p) for p in res["passes"]] == [["flaky", "ok"], ["ok"]]
+
+
+def test_time_queries_reports_min_of_passes_process_cpu():
+    """``cpu`` holds, per timed name, the process-tree CPU seconds of its
+    cheapest pass: a query that spins the driver for 0.3 s of CPU in one
+    pass and 0.1 s in the other reads about 0.1 s; an errored name has no
+    entry."""
+
+    spins = iter([0.0, 0.3, 0.1])  # warm-up, pass 1, pass 2
+
+    class Frame:
+        write = property(lambda self: self)
+        format = mode = lambda self, _: self
+
+        def __init__(self, spin):
+            self.spin = spin
+
+        def save(self):
+            if self.spin is None:
+                raise RuntimeError("boom")
+            end = time.process_time() + self.spin
+            while time.process_time() < end:
+                pass
+
+    class Spark:
+        range = selectExpr = lambda self, _: self
+        collect = lambda self: []
+
+    qs = {
+        "spin": lambda spark, sf: Frame(next(spins)),
+        "bad": lambda spark, sf: Frame(None),
+    }
+    res = bench.time_queries(Spark(), qs, list(qs), SF_ORACLE, 2)
+    assert list(res["cpu"]) == list(res["queries"]) == ["spin"]
+    assert 0.08 <= res["cpu"]["spin"] < 0.25, res["cpu"]
 
 
 def test_capture_plans_normalize_strips_run_ids():

@@ -1271,6 +1271,18 @@ def test_label_propagation_matches_python_replica(spark):
         assert r.max_node == max(members[r.community])
 
 
+def test_lpa_round_breaks_ties_toward_the_smallest_label(spark):
+    """One LPA round on a hand-built frame: node 1 sees neighbour labels
+    {7, 3, 9} (all tied) and must take 3; node 2 sees {5, 5, 2, 2, 8} and
+    must take 2. ``F.mode`` without its deterministic flag returns 5 for
+    node 2."""
+    from kafka_pyspark_bigdata_spark.operators.dedup import _lpa_round
+
+    nbr_labels = [(1, 7), (1, 3), (1, 9), (2, 5), (2, 5), (2, 2), (2, 2), (2, 8)]
+    got = _lpa_round(spark.createDataFrame(nbr_labels, "doc_a long, label long"))
+    assert sorted((r.node, r.label) for r in got.collect()) == [(1, 3), (2, 2)]
+
+
 def test_hard_negatives_band_bucket_and_rank_contract(spark):
     """Hard negatives: every emitted negative shares the anchor's SRP
     bucket, sits inside [HN_LO, HN_HI) ppm, ranks are dense and ordered

@@ -5,8 +5,11 @@ disabled so the pre-runtime plan is inspected deterministically."""
 from __future__ import annotations
 
 import contextlib
+import re
 
 import pytest
+
+from conftest import no_spark_job
 
 SF = "/root/testdata/sf0.01"
 
@@ -418,3 +421,32 @@ def test_no_unpartitioned_windows_over_unreduced_input(spark):
             assert nl == 0, f"{name} plans {nl} unbounded nested-loop join(s)"
             checked += 1
     assert checked >= 90
+
+
+def test_label_propagation_builds_without_jobs_one_shuffle_per_round(spark):
+    """With the ``dup_pairs`` memo warm, building label propagation starts
+    no Spark job: no round is pinned, so the unroll is one query. Planned
+    with AQE off, its shuffles are one per round (the partial ``mode``
+    buffers, keyed on the node ``doc_a``), one for the census (keyed on
+    ``label``) and the edge list keyed on ``doc_b`` for each round's join
+    (rounds 2..). Those edge-list exchanges are one computation: a
+    ReusedExchange after the first, unless the ``dup_pairs`` pin was
+    planned with AQE off, which defeats the reuse; so the check counts
+    exchange nodes of both kinds by key."""
+    from kafka_pyspark_bigdata_spark.operators.dedup import (
+        LPA_ROUNDS,
+        dup_pairs,
+        graph_label_propagation,
+    )
+
+    dup_pairs(spark, SF)
+    with no_spark_job(spark, "building graph_label_propagation"):
+        df = graph_label_propagation(spark, SF)
+    with _conf(spark, **{"spark.sql.adaptive.enabled": "false"}):
+        plan = _plan(df)
+    keys = re.findall(
+        r"^[ :+-]*(?:Reused)?Exchange .*?hashpartitioning\((\w+)#", plan, re.M
+    )
+    want = ["doc_a"] * LPA_ROUNDS + ["doc_b"] * (LPA_ROUNDS - 1) + ["label"]
+    assert sorted(keys) == sorted(want), plan
+    assert plan.count("partial_mode(") == LPA_ROUNDS, plan

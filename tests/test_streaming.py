@@ -20,6 +20,8 @@ from kafka_pyspark_bigdata_spark.streaming.batcher import run_count_batched_stre
 from kafka_pyspark_bigdata_spark.streaming.kafka import decode_json_stream, encode_json
 from kafka_pyspark_bigdata_spark.streaming.queries import _events_stream
 
+from conftest import no_spark_job
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -42,6 +44,25 @@ def test_count_batcher_exact_sizes_and_cap(spark, tmp_path):
         .collect()
     }
     assert sizes == {0: 300, 1: 300, 2: 300}
+
+
+def test_events_stream_memoizes_schema_until_the_file_changes(spark, tmp_path):
+    """The first stream build infers the events schema (a Parquet job);
+    the second starts no job before ``.start()``. Rewriting the file with
+    another schema re-infers it."""
+    import pandas as pd
+
+    path = tmp_path / "events.parquet"
+    ev = pd.DataFrame(
+        {"event_id": [1, 2], "user_id": [7, 8], "event_type": ["a", "b"]}
+    )
+    ev.to_parquet(path)
+    assert _events_stream(spark, str(tmp_path)).columns == list(ev.columns)
+    with no_spark_job(spark, "a second events stream build"):
+        assert _events_stream(spark, str(tmp_path)).columns == list(ev.columns)
+    ev.assign(value=[0.5, 1.5]).to_parquet(path)
+    got = _events_stream(spark, str(tmp_path)).columns
+    assert got == [*ev.columns, "value"]
 
 
 def test_count_batcher_remainder_flush(spark, tmp_path):

@@ -5,8 +5,10 @@ Usage: python tools/ab_bench.py <query> [query ...]
 Fresh-JVM run of ``bench.time_queries`` over the named queries: warm-up at
 sf0.001 (JIT + codegen cache), then min-of-2 whole-list noop-sink passes at
 $SPARK_GRAFT_SF_DIR (default sf0.1). Prints one JSON line
-{name: sec, ..., "_total": sec}. If any query raised, the line also carries
-"_errors": {name: message} and the exit code is 1.
+{name: sec, ..., "_total": sec, "_cpu": {name: cpu_sec}}: wall seconds per
+query, then the process-tree CPU seconds of the same runs (min-of-2 each).
+If any query raised, the line also carries "_errors": {name: message} and
+the exit code is 1.
 Run back-to-back on the pre-edit (git stash) and post-edit tree to get a
 paired comparison that controls for the full bench's session-state tax.
 """
@@ -30,7 +32,9 @@ def main() -> int:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
     res = bench.time_queries(spark, qs, names, sf_dir, 2)
-    out = dict(res["queries"], _total=round(sum(res["queries"].values()), 3))
+    out = dict(
+        res["queries"], _total=round(sum(res["queries"].values()), 3), _cpu=res["cpu"]
+    )
     if res["errors"]:
         out["_errors"] = res["errors"]
     print(json.dumps(out))
