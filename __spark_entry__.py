@@ -56,12 +56,11 @@ def _modules():
     # registers last.
     import importlib
 
-    mods = []
     # Never-driver-verified families first (CORRECTNESS_r01/r02 covered
     # relational, advanced, tpch_extra, and the head of analytic): the
     # LLM-pipeline operator modules, then lakehouse/sources/streaming/ml,
     # then the already-twice-green families.
-    for modpath in (
+    return [importlib.import_module(modpath) for modpath in (
         "kafka_pyspark_bigdata_spark.operators.timeseries",
         "kafka_pyspark_bigdata_spark.plans.mining",
         "kafka_pyspark_bigdata_spark.operators.geo",
@@ -80,12 +79,7 @@ def _modules():
         "kafka_pyspark_bigdata_spark.plans.advanced",
         "kafka_pyspark_bigdata_spark.plans.relational",
         "kafka_pyspark_bigdata_spark.plans.tpch_extra",
-    ):
-        try:
-            mods.append(importlib.import_module(modpath))
-        except ModuleNotFoundError:
-            pass
-    return mods
+    )]
 
 
 # Round-13 rotation (optimization round 2). No new queries (registry

@@ -41,6 +41,12 @@ def davg(col: Column | str, scale: int = SCALE, prec: int = PREC) -> Column:
     return F.sum(c.cast(f"decimal({prec},{scale})")).cast("double") / F.count(c)
 
 
+def cents(col: Column | str) -> Column:
+    """Money as integer cents: exact decimal(18,2) times 100, as BIGINT."""
+    c = F.col(col) if isinstance(col, str) else col
+    return (c.cast(f"decimal({PREC},{SCALE})") * 100).cast("bigint")
+
+
 def dsum_expr(expr: Column) -> Column:
     """Order-independent SUM of a pre-built decimal expression."""
     return F.sum(expr).cast("double")

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
-from ..sources.batch import load_table, scratch_dir
+from ..sources.batch import app_memo, load_table, scratch_dir
 from . import serving, trainer
 
 LINEITEM_FEATURES = ["l_quantity", "l_discount", "l_tax", "l_linenumber"]
@@ -24,35 +24,33 @@ LINEITEM_LABEL = "l_extendedprice"
 EVENTS_FEATURES = ["hour", "dow"]
 EVENTS_LABEL = "value"
 
-# Keyed by (applicationId, sf_dir, table): a fitted model handle is bound
-# to the JVM that trained it, so a restarted SparkSession must retrain
-# rather than reuse a stale Py4J reference. Values are PipelineModel or a
-# bare fitted classifier (the purchase RF).
-_model_cache: dict[tuple[str, str, str], object] = {}
-
-
-def _app_id(spark: SparkSession) -> str:
-    return spark.sparkContext.applicationId
+# Fitted models, memoized by app_memo on the stamp of the table each is
+# fitted on: a fitted model handle is bound to the JVM that trained it, so
+# a restarted SparkSession must retrain rather than reuse a stale Py4J
+# reference, and a rewritten table must be refitted. Values are
+# PipelineModel or a bare fitted classifier (the purchase RF).
+_model_cache: dict[tuple[str, str, str, tuple[int, int, int]], object] = {}
 
 
 def _lineitem_model(spark: SparkSession, sf_dir: str) -> PipelineModel:
-    key = (_app_id(spark), sf_dir, "lineitem")
-    if key not in _model_cache:
-        df = load_table(spark, sf_dir, "lineitem")
-        _model_cache[key] = trainer.train(df, LINEITEM_FEATURES, LINEITEM_LABEL)
-    return _model_cache[key]
+    return app_memo(
+        _model_cache, spark, sf_dir, "lineitem", "lineitem",
+        lambda: trainer.train(
+            load_table(spark, sf_dir, "lineitem"), LINEITEM_FEATURES, LINEITEM_LABEL
+        ),
+    )
 
 
 def _events_model(spark: SparkSession, sf_dir: str) -> PipelineModel:
-    key = (_app_id(spark), sf_dir, "events")
-    if key not in _model_cache:
+    def fit() -> PipelineModel:
         df = load_table(spark, sf_dir, "events").select(
             F.hour("ts").alias("hour"),
             F.dayofweek("ts").alias("dow"),
             "value",
         )
-        _model_cache[key] = trainer.train(df, EVENTS_FEATURES, EVENTS_LABEL)
-    return _model_cache[key]
+        return trainer.train(df, EVENTS_FEATURES, EVENTS_LABEL)
+
+    return app_memo(_model_cache, spark, sf_dir, "events", "events", fit)
 
 
 def _lineitem_split_model(spark: SparkSession, sf_dir: str) -> PipelineModel:
@@ -61,20 +59,18 @@ def _lineitem_split_model(spark: SparkSession, sf_dir: str) -> PipelineModel:
     ml_permutation_importance, which previously each re-fit the IDENTICAL
     model (same frame, same features/label, fixed seed → deterministic
     ensemble, so sharing the handle cannot change any output; it removes
-    two full RF fits from every driver sweep). Cached per
-    (applicationId, sf_dir) like the serving models above."""
+    two full RF fits from every driver sweep). Memoized like the serving
+    models above."""
     from ..operators.pipeline import TRAIN_BUCKETS, hash_bucket_expr
 
-    key = (_app_id(spark), sf_dir, "lineitem_split")
-    if key not in _model_cache:
+    def fit() -> PipelineModel:
         df = load_table(spark, sf_dir, "lineitem").withColumn(
             "bucket", hash_bucket_expr("l_orderkey")
         )
         train_df = df.filter(F.col("bucket") < TRAIN_BUCKETS)
-        _model_cache[key] = trainer.train(
-            train_df, LINEITEM_FEATURES, LINEITEM_LABEL
-        )
-    return _model_cache[key]
+        return trainer.train(train_df, LINEITEM_FEATURES, LINEITEM_LABEL)
+
+    return app_memo(_model_cache, spark, sf_dir, "lineitem_split", "lineitem", fit)
 
 
 def _purchase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,10 +106,9 @@ def _purchase_classifier(spark: SparkSession, sf_dir: str):
     outputs unchanged."""
     from pyspark.ml.classification import RandomForestClassifier
 
-    key = (_app_id(spark), sf_dir, "purchase_clf")
-    if key not in _model_cache:
-        from ..operators.pipeline import TRAIN_BUCKETS
+    from ..operators.pipeline import TRAIN_BUCKETS
 
+    def fit():
         train = _purchase_assembler().transform(
             _purchase_events(spark, sf_dir).filter(
                 F.col("bucket") < TRAIN_BUCKETS
@@ -128,8 +123,9 @@ def _purchase_classifier(spark: SparkSession, sf_dir: str):
         )
         model = clf.fit(train)
         _strip_training_summary(model)
-        _model_cache[key] = model
-    return _model_cache[key]
+        return model
+
+    return app_memo(_model_cache, spark, sf_dir, "purchase_clf", "events", fit)
 
 
 def ml_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:

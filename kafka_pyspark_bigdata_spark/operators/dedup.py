@@ -58,7 +58,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.batch import load_table, parallelize_scan, table_path, table_stamp
+from ..functions.numeric import cents
+from ..sources.batch import app_memo, load_table, parallelize_scan
 from .text import NORMALIZED_SQL, TOKENS_SQL, normalized_text_expr, with_tokens
 
 # MinHash/LSH parameters: 16 hashes in 4 bands of 4 rows → catches
@@ -729,36 +730,25 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # materialized artifact. Keyed by applicationId so a restarted session
 # (dead checkpoint RDDs) falls through to a rebuild, per the round-8
 # catalog-cache lesson.
-_DUP_PAIRS_CACHE: dict[tuple[str, str, tuple[int, int, int]], DataFrame] = {}
+_DUP_PAIRS_CACHE: dict[tuple[str, str, str, tuple[int, int, int]], DataFrame] = {}
 
 
 def dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b) verified near-dup pairs, eagerly checkpointed and
-    cached per (applicationId, normalized sf_dir, documents file stamp).
-    The stamp (``table_stamp``, shared with ``load_table``) invalidates
-    the cache if documents.parquet is rewritten within one application
-    (the staleness class the bucketed-layout cache validates against the
-    live catalog); entries from other applications are evicted so
+    memoized by ``app_memo`` on the documents file stamp (shared with
+    ``load_table``): a documents.parquet rewritten within one application
+    is re-paired, and entries from other applications are evicted so
     dead-session DataFrames are not pinned for the process lifetime."""
-    app = spark.sparkContext.applicationId
-    norm = sf_dir.rstrip("/")
-    key = (app, norm, table_stamp(table_path(norm, "documents")))
-    cached = _DUP_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _DUP_PAIRS_CACHE if k[0] != app or k[:2] == (app, norm)]:
-        del _DUP_PAIRS_CACHE[stale]
     # EAGER on purpose (r12, measured): the unrolled graph fixed points
     # (HITS half-rounds, LPA rounds) re-read this frame many times —
     # deferring materialization into the first consumer made graph_hits
     # 1.67 → 1.88 s at sf0.1, so the upfront barrier stays.
-    df = (
-        dedup_minhash_lsh(spark, sf_dir)
+    return app_memo(
+        _DUP_PAIRS_CACHE, spark, sf_dir, "dup_pairs", "documents",
+        lambda: dedup_minhash_lsh(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .localCheckpoint(),
     )
-    _DUP_PAIRS_CACHE[key] = df
-    return df
 
 
 _SIG_EXPRS = ",\n         ".join(
@@ -2517,9 +2507,7 @@ def dedup_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_name",
         "c_nationkey",
-        (F.col("c_acctbal").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("c_acctbal").alias("cents"),
         "c_mktsegment",
     )
     a = cust.select(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.numeric import cents
 from ..sources.batch import load_table
 
 TS_SEGMENTS = 4  # PAA segments per series
@@ -49,15 +50,34 @@ TS_TOP_PAIRS = 20
 _SEG_PER_BAND = TS_SEGMENTS // TS_BANDS
 
 
-def _cents(col):
-    return (F.col(col).cast("decimal(18,2)") * 100).cast("bigint")
+# Oracle mirror of ``_dense_daily``: the CTE chain ev → bounds → daily →
+# days → users → dense, shared by every oracle over the dense series.
+_DENSE_DAILY_CTES = """ev AS (
+  SELECT user_id, CAST(ts AS DATE) AS d,
+         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+  FROM events
+),
+bounds AS (
+  SELECT MIN(d) AS d0, datediff('day', MIN(d), MAX(d)) + 1 AS nd FROM ev
+),
+daily AS (
+  SELECT user_id, datediff('day', d0, d) AS di, nd, SUM(cents) AS v
+  FROM ev, bounds GROUP BY 1, 2, 3
+),
+days AS (SELECT DISTINCT di, nd FROM daily),
+users AS (SELECT DISTINCT user_id FROM daily),
+dense AS (
+  SELECT u.user_id, g.di, g.nd, COALESCE(daily.v, 0) AS v
+  FROM users u CROSS JOIN days g
+  LEFT JOIN daily ON daily.user_id = u.user_id AND daily.di = g.di
+)"""
 
 
 def _dense_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, di, nd, v): day-indexed DENSE daily cent sums per user —
     day grid broadcast-joined so missing days are explicit zeros."""
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("d"), _cents("value").alias("cents")
+        "user_id", F.to_date("ts").alias("d"), cents("value").alias("cents")
     )
     bounds = ev.agg(
         F.min("d").alias("d0"), (F.datediff(F.max("d"), F.min("d")) + 1).alias("nd")
@@ -150,25 +170,7 @@ def ts_similarity_paa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TS_SIMILARITY_SQL = f"""
-WITH ev AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM events
-),
-bounds AS (
-  SELECT MIN(d) AS d0, datediff('day', MIN(d), MAX(d)) + 1 AS nd FROM ev
-),
-daily AS (
-  SELECT user_id, datediff('day', d0, d) AS di, nd, SUM(cents) AS v
-  FROM ev, bounds GROUP BY 1, 2, 3
-),
-days AS (SELECT DISTINCT di, nd FROM daily),
-users AS (SELECT DISTINCT user_id FROM daily),
-dense AS (
-  SELECT u.user_id, g.di, g.nd, COALESCE(daily.v, 0) AS v
-  FROM users u CROSS JOIN days g
-  LEFT JOIN daily ON daily.user_id = u.user_id AND daily.di = g.di
-),
+WITH {_DENSE_DAILY_CTES},
 series AS (
   SELECT user_id, list(v ORDER BY di) AS vec FROM dense GROUP BY 1
 ),
@@ -250,7 +252,7 @@ def ts_matrix_profile_paa(spark: SparkSession, sf_dir: str) -> DataFrame:
     m, L = MP_SEGMENTS, MP_WIN
     nwin = m - L + 1
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("d"), _cents("value").alias("cents")
+        "user_id", F.to_date("ts").alias("d"), cents("value").alias("cents")
     )
     days = ev.select("d").distinct()
     wd = Window.orderBy("d")
@@ -313,25 +315,7 @@ def _matrix_profile_sql() -> str:
         f" t -> (p[i + t] - p[j + t]) * (p[i + t] - p[j + t])))"
     )
     return f"""
-WITH ev AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM events
-),
-bounds AS (
-  SELECT MIN(d) AS d0, datediff('day', MIN(d), MAX(d)) + 1 AS nd FROM ev
-),
-daily AS (
-  SELECT user_id, datediff('day', d0, d) AS di, nd, SUM(cents) AS v
-  FROM ev, bounds GROUP BY 1, 2, 3
-),
-days AS (SELECT DISTINCT di, nd FROM daily),
-users AS (SELECT DISTINCT user_id FROM daily),
-dense AS (
-  SELECT u.user_id, g.di, g.nd, COALESCE(daily.v, 0) AS v
-  FROM users u CROSS JOIN days g
-  LEFT JOIN daily ON daily.user_id = u.user_id AND daily.di = g.di
-),
+WITH {_DENSE_DAILY_CTES},
 series AS (
   SELECT user_id, list(v ORDER BY di) AS vec FROM dense GROUP BY 1
 ),
@@ -426,25 +410,7 @@ def _autocorr_sql() -> str:
         for lag in TS_AC_LAGS
     )
     return f"""
-WITH ev AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM events
-),
-bounds AS (
-  SELECT MIN(d) AS d0, datediff('day', MIN(d), MAX(d)) + 1 AS nd FROM ev
-),
-daily AS (
-  SELECT user_id, datediff('day', d0, d) AS di, nd, SUM(cents) AS v
-  FROM ev, bounds GROUP BY 1, 2, 3
-),
-days AS (SELECT DISTINCT di, nd FROM daily),
-users AS (SELECT DISTINCT user_id FROM daily),
-dense AS (
-  SELECT u.user_id, g.di, g.nd, COALESCE(daily.v, 0) AS v
-  FROM users u CROSS JOIN days g
-  LEFT JOIN daily ON daily.user_id = u.user_id AND daily.di = g.di
-),
+WITH {_DENSE_DAILY_CTES},
 series AS (
   SELECT user_id, list(v ORDER BY di) AS vec FROM dense GROUP BY 1
 ),
@@ -589,7 +555,7 @@ def ts_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         (F.year("l_shipdate") * 12 + F.month("l_shipdate")).alias("ym"),
-        _cents("l_extendedprice").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
     )
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -1005,7 +971,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     when some day has no such events — matching the ``_dense_daily``
     convention used by the other ts_* operators."""
     ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.to_date("ts").alias("d"), _cents("value").alias("cents")
+        "event_type", F.to_date("ts").alias("d"), cents("value").alias("cents")
     )
     bounds = ev.agg(F.min("d").alias("d0"))
     daily = (
@@ -1213,25 +1179,7 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TS_SAX_SQL = f"""
-WITH ev AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM events
-),
-bounds AS (
-  SELECT MIN(d) AS d0, datediff('day', MIN(d), MAX(d)) + 1 AS nd FROM ev
-),
-daily AS (
-  SELECT user_id, datediff('day', d0, d) AS di, nd, SUM(cents) AS v
-  FROM ev, bounds GROUP BY 1, 2, 3
-),
-days AS (SELECT DISTINCT di, nd FROM daily),
-users AS (SELECT DISTINCT user_id FROM daily),
-dense AS (
-  SELECT u.user_id, g.di, g.nd, COALESCE(daily.v, 0) AS v
-  FROM users u CROSS JOIN days g
-  LEFT JOIN daily ON daily.user_id = u.user_id AND daily.di = g.di
-),
+WITH {_DENSE_DAILY_CTES},
 seg AS (
   SELECT user_id, di * {SAX_SEGMENTS} // nd AS seg,
          SUM(v) // {SAX_BUCKET_CENTS} AS bucket
@@ -1308,7 +1256,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     tested bound.
     """
     ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.to_date("ts").alias("d"), _cents("value").alias("cents")
+        "event_type", F.to_date("ts").alias("d"), cents("value").alias("cents")
     )
     daily = ev.groupBy("event_type", "d").agg(F.sum("cents").alias("v"))
     series = daily.groupBy("event_type").agg(
@@ -1422,7 +1370,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series rollup is a |series|-key agg. A million series are a
     million independent window partitions."""
     ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.to_date("ts").alias("d"), _cents("value").alias("cents")
+        "event_type", F.to_date("ts").alias("d"), cents("value").alias("cents")
     )
     daily = ev.groupBy("event_type", "d").agg(F.sum("cents").alias("v"))
     stats = daily.groupBy("event_type").agg(

@@ -23,14 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import davg, davg_sql, dsum, dsum_expr, dsum_sql
-from ..sources.batch import load_table
+from ..functions.numeric import cents, davg, davg_sql, dsum, dsum_expr, dsum_sql
+from ..sources.batch import EV_US, load_table
 from .relational import _REV_SQL, _revenue_expr
-
-# Microsecond-precision events CTE for the DuckDB oracles: the parquet
-# stores TIMESTAMP(NANOS); Spark-side load_table truncates to micros, so the
-# oracle casts to DuckDB's microsecond TIMESTAMP for identical arithmetic.
-_EV_US = "ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events)"
 
 
 # ---------------------------------------------------------------------------
@@ -405,7 +400,7 @@ def q_asof_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_ASOF_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 u AS (
   SELECT user_id, ts AS ets, event_id AS eid, 0 AS tag FROM ev WHERE event_type = 'click'
   UNION ALL
@@ -451,7 +446,7 @@ def q_range_join_error_context(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_RANGE_JOIN_SQL = f"""
-WITH {_EV_US}
+WITH {EV_US}
 SELECT e.event_id AS error_id, e.user_id, COUNT(c.ts) AS n_clicks_10m
 FROM ev e
 LEFT JOIN ev c ON c.user_id = e.user_id AND c.event_type = 'click'
@@ -496,7 +491,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_SESSIONIZE_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 g AS (
   SELECT user_id, ts, event_id,
          CASE WHEN LAG(ts) OVER w IS NULL
@@ -592,7 +587,7 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_SESSION_WINDOW_NATIVE_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 g AS (
   SELECT user_id, ts,
          CASE WHEN LAG(ts) OVER w IS NULL
@@ -664,7 +659,7 @@ def q_session_window_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_SESSION_DYNAMIC_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 spans AS (
   SELECT user_id, ts, event_id,
          epoch_us(ts) AS ts_us,
@@ -783,9 +778,7 @@ def q_recursive_bom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``WITH RECURSIVE``."""
     nodes = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"),
-        (F.col("p_retailprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("p_retailprice").alias("cents"),
     )
     max_key = nodes.agg(F.max("node")).first()[0] or 0
     depth = 0

@@ -14,10 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.numeric import dsum, dsum_sql
-from ..sources.batch import load_table
+from ..sources.batch import EV_US, load_table
 
-# Microsecond-precision events CTE (same rationale as plans.advanced).
-_EV_US = "ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events)"
 
 MAVG_WINDOW = 5  # current row + 4 preceding
 
@@ -47,7 +45,7 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_MOVING_AVG_SQL = f"""
-WITH {_EV_US}
+WITH {EV_US}
 SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, value,
        CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
          / COUNT(value) OVER w AS moving_avg
@@ -195,7 +193,7 @@ def q_lead_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_LEAD_GAP_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 g AS (
   SELECT user_id,
          epoch_us(LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
@@ -1160,7 +1158,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_MAD_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 r1 AS (
   SELECT event_type, value,
          ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
@@ -1220,7 +1218,7 @@ def q_range_frame_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_RANGE_FRAME_SQL = f"""
-WITH {_EV_US}
+WITH {EV_US}
 SELECT event_id, user_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
        CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
@@ -1556,7 +1554,7 @@ def q_histogram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_DRIFT_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 binned AS (
   SELECT event_type,
          LEAST(CAST(FLOOR(value / {DRIFT_BIN_WIDTH}) AS INTEGER), {DRIFT_BINS - 1})

@@ -18,14 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.numeric import dsum, dsum_sql
-from ..sources.batch import load_table, scratch_dir
+from ..sources.batch import EV_US, load_table, scratch_dir
 
-# Microsecond-precision events CTE (same rationale as plans.advanced:
-# the fixture stores TIMESTAMP(NANOS); both engines compare at micros).
-_EV_US = (
-    "ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,"
-    " event_type, value FROM events)"
-)
 
 FUNNEL_STAGES = ("signup", "click", "purchase")
 
@@ -77,7 +71,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_FUNNEL_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 s AS (
   SELECT user_id, MIN(ts) AS signup_ts FROM ev
   WHERE event_type = '{FUNNEL_STAGES[0]}' GROUP BY user_id
@@ -164,7 +158,7 @@ def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_FUNNEL_WINDOWED_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 s AS (
   SELECT user_id, MIN(ts) AS signup_ts FROM ev
   WHERE event_type = '{FUNNEL_STAGES[0]}' GROUP BY user_id
@@ -224,7 +218,7 @@ def q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_TOP_PATHS_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 t AS (
   SELECT event_type AS step1,
          LEAD(event_type, 1) OVER w AS step2,
@@ -287,7 +281,7 @@ def q_bot_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_BOT_FLAG_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 g AS (
   SELECT user_id, event_id,
          epoch_us(ts) - epoch_us(LAG(ts) OVER
@@ -365,7 +359,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_COHORT_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM ev),
 first AS (SELECT user_id, MIN(d) AS cohort_d FROM ud GROUP BY user_id),
 j AS (
@@ -438,7 +432,7 @@ def q_resample_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_RESAMPLE_LOCF_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 dayv AS (
   SELECT user_id, d, value FROM (
     SELECT user_id, CAST(ts AS DATE) AS d, value,
@@ -510,7 +504,7 @@ def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_HYPERTABLE_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 daily AS (
   SELECT CAST(ts AS DATE) AS d, event_type, COUNT(*) AS n_events,
          {dsum_sql('value')} AS sum_value
@@ -591,7 +585,7 @@ def q_interval_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_INTERVAL_CONC_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 iv AS (
   SELECT event_id, event_type, epoch_us(ts) AS s_us,
          epoch_us(ts) + (60 + event_id % {_DUR_MOD}) * 1000000 AS e_us
@@ -682,7 +676,7 @@ def q_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_EWMA_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 r AS (
   SELECT user_id, ts, event_id,
          CAST(round(value * {_EWMA_FP}, 0) AS BIGINT) AS v_int,
@@ -774,7 +768,7 @@ def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_GAPFILL_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 cents AS (
   SELECT user_id, CAST(ts AS DATE) AS d,
          CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents
@@ -861,7 +855,7 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_TRANSITION_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 seq AS (
   SELECT user_id, event_type,
          LEAD(event_type) OVER (PARTITION BY user_id
@@ -925,7 +919,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_RFM_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 base AS (
   SELECT user_id,
          date_diff('day', MAX(CAST(ts AS DATE)), DATE '{RFM_ASOF}')
@@ -988,7 +982,7 @@ def q_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_WOW_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 weekly AS (
   SELECT event_type,
          CAST(FLOOR(date_diff('day', DATE '{COHORT_EPOCH}', CAST(ts AS DATE))
@@ -1094,7 +1088,7 @@ def q_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_ABANDON_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 last_click AS (
   SELECT user_id, ts AS click_ts, event_id AS click_id FROM (
     SELECT user_id, ts, event_id,
@@ -1231,7 +1225,7 @@ def q_cusum_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_CUSUM_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS c
   FROM ev GROUP BY 1, 2
@@ -1298,7 +1292,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_TWAP_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 g AS (
   SELECT user_id,
          CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents,
@@ -1355,7 +1349,7 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_OHLC_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 c AS (
   SELECT event_type, date_trunc('hour', ts) AS bar,
          epoch_us(ts) AS us, event_id,

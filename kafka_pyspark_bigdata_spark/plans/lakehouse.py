@@ -25,25 +25,41 @@ Scale notes (SCALE.md has the full audit):
   build side and inlined as a literal array, exactly how engines ship
   runtime filters to scans — the 100 TB probe table is never shuffled
   or joined to test membership.
+
+Shared building blocks (each spelled once, every query routes through it):
+
+- ``_skipping_advisor``: the files-scanned advisor behind
+  ``q_zorder_skipping`` and ``q_hilbert_skipping`` — the bucketed 16x16
+  lineitem grid, one file-id column per layout, and one per-layout
+  min/max-vs-probe readout.
+- ``_encoding_input`` / ``_change_flags`` / ``_encoding_readout``: the
+  audited columns and sort key, the change flags, and the ``stack``
+  unpivot with the x100 run length and RLE/DICT/PLAIN verdict of both
+  encoding-stats forms.
+- ``_file_ledger``: the (source, file) → bytes ledger with each file's
+  add/remove log versions, for the compaction planner, log replay and
+  VACUUM audit.
+- ``_morton_sum``: the Spark-side Morton interleave at any bit width. The
+  oracles keep their own generators (``_z_interleave_sql``,
+  ``_interleave_duck``): they are the independent reference the Spark
+  polynomial is checked against, so they must not share its code.
+- ``_bloom_positions``: the k bit positions of a key.
+- Oracle CTEs ``_LEDGER_SQL`` and ``_BUCKETED_SQL``, used where the
+  oracle text stays byte-identical.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
-from ..functions.numeric import dsum, dsum_sql
-from ..sources.batch import load_table, scratch_dir
+from ..functions.numeric import cents, dsum, dsum_sql
+from ..sources.batch import EV_US, load_table, scratch_dir
 
-# Microsecond-precision events CTE (fixture stores TIMESTAMP(NANOS);
-# both engines compare at micros — same rationale as plans.behavioral).
-_EV_US = (
-    "ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,"
-    " event_type, value FROM events)"
-)
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_SQL = "%Y-%m-%d %H:%M:%S"
@@ -99,7 +115,7 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SCD2_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 flagged AS (
   SELECT user_id, ts, event_id, event_type,
          CASE WHEN LAG(event_type) OVER w IS NULL
@@ -236,9 +252,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderdate",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     base = o.filter(F.col("o_orderdate") < F.lit(MERGE_CUTOFF)).select(
         "o_orderkey", F.col("cents").alias("base_cents")
@@ -340,6 +354,11 @@ def _bloom_pos(key: Column, a: int, b: int) -> Column:
     return F.shiftright(h, 16) % F.lit(BLOOM_M)
 
 
+def _bloom_positions(key: Column) -> Column:
+    """The k bloom bit positions of ``key``, as an array."""
+    return F.array(*[_bloom_pos(key, a, b) for a, b in _BLOOM_HASHES])
+
+
 def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter join pruning: orders whose customer MIGHT be in the
     high-balance key set, per a 512-bit bloom built from that set, with
@@ -367,18 +386,10 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     keys = cust.filter(F.col("c_acctbal") > BLOOM_BAL_MIN).select("c_custkey")
     positions = sorted(
-        {
-            r[0]
-            for r in keys.select(
-                F.explode(
-                    F.array(
-                        *[_bloom_pos(F.col("c_custkey"), a, b) for a, b in _BLOOM_HASHES]
-                    )
-                ).alias("p")
-            )
-            .distinct()
-            .collect()
-        }
+        r[0]
+        for r in keys.select(F.explode(_bloom_positions(F.col("c_custkey"))))
+        .distinct()
+        .collect()
     )
     pos_lit = F.array(*[F.lit(int(p)) for p in positions])
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -405,22 +416,28 @@ def _bloom_pos_sql(key: str, a: int, b: int) -> str:
     )
 
 
-def _bloom_sql() -> str:
+def _bloom_build_sql() -> str:
+    """Oracle mirror of the bloom build: the member keys and the set of
+    their bit positions."""
     pos_union = "\n    UNION\n".join(
         f"    SELECT {_bloom_pos_sql('c_custkey', a, b)} AS pos FROM keys"
         for a, b in _BLOOM_HASHES
     )
+    return f"""WITH keys AS (
+  SELECT c_custkey FROM customer WHERE c_acctbal > {BLOOM_BAL_MIN}
+),
+bloom AS (
+{pos_union}
+)"""
+
+
+def _bloom_sql() -> str:
     membership = " AND ".join(
         f"{_bloom_pos_sql('o_custkey', a, b)} IN (SELECT pos FROM bloom)"
         for a, b in _BLOOM_HASHES
     )
     return f"""
-WITH keys AS (
-  SELECT c_custkey FROM customer WHERE c_acctbal > {BLOOM_BAL_MIN}
-),
-bloom AS (
-{pos_union}
-)
+{_bloom_build_sql()}
 SELECT o_orderkey, o_custkey,
        (o_custkey IN (SELECT c_custkey FROM keys)) AS is_member
 FROM orders
@@ -499,10 +516,7 @@ def q_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).agg(F.count(F.lit(1)).alias("n")),
         ),
     ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionByName(c)
-    return out.orderBy("table_name", "rule")
+    return reduce(DataFrame.unionByName, checks).orderBy("table_name", "rule")
 
 
 CONSTRAINT_AUDIT_SQL = """
@@ -785,17 +799,17 @@ _Z_BITS = 8
 _Z_FILE_ROWS = 1024
 
 
-def _z_interleave(x: Column, y: Column) -> Column:
-    # Disjoint bit positions, so + is exactly bitwise-OR (and sidesteps
-    # PySpark's `|`, which is logical OR on Columns).
-    z = F.lit(0).cast("long")
-    for i in range(_Z_BITS):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(x, i) % 2, 2 * i)
-            + F.shiftleft(F.shiftright(y, i) % 2, 2 * i + 1)
-        )
-    return z
+def _morton_sum(nx: str, ny: str, div: str, bits: int) -> str:
+    """The Morton interleave of the low ``bits`` bits of two non-negative
+    integer columns, as an unrolled integer polynomial in SQL text;
+    ``div`` spells integer division (Spark ``div``, DuckDB ``//``). The
+    terms hold disjoint bits, so + is exactly bitwise OR, and no bit
+    operator is needed (PySpark's ``|`` is logical OR on Columns)."""
+    terms = []
+    for b in range(bits):
+        terms.append(f"(({nx} {div} {1 << b}) % 2) * {1 << (2 * b)}")
+        terms.append(f"(({ny} {div} {1 << b}) % 2) * {1 << (2 * b + 1)}")
+    return " + ".join(terms)
 
 
 def _z_interleave_sql(x: str, y: str) -> str:
@@ -835,7 +849,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 256).alias("x"),
         (F.floor(F.col("value") / 2).cast("long") % 256).alias("y"),
     )
-    z = dims.withColumn("z", _z_interleave(F.col("x"), F.col("y"))).withColumn(
+    z = dims.withColumn("z", F.expr(_morton_sum("x", "y", "div", _Z_BITS))).withColumn(
         "zb", F.expr("z DIV 256")
     )
     per_b = z.groupBy("zb").agg(F.count(F.lit(1)).alias("bn"))
@@ -862,7 +876,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ZORDER_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 dims AS (
   SELECT event_id, user_id % 256 AS x,
          CAST(FLOOR(value / 2) AS BIGINT) % 256 AS y
@@ -1056,7 +1070,7 @@ def q_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RETENTION_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 policy AS (
   SELECT * FROM (VALUES {", ".join(f"('{t}', {d})" for t, d in RETENTION_POLICY)})
     AS p(event_type, ttl_days)
@@ -1092,14 +1106,10 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     after — compaction may only change layout. File counts are
     deterministic: round-robin repartition(N) writes exactly N
     non-empty files for N ≪ rows."""
-    import os as _os
-
-    from ..sources.batch import scratch_dir
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
     root = scratch_dir("compact", sf_dir)
-    small = _os.path.join(root, "small")
-    compacted = _os.path.join(root, "compacted")
+    small = os.path.join(root, "small")
+    compacted = os.path.join(root, "compacted")
     ev.repartition(COMPACT_SMALL_FILES).write.parquet(small)
     spark.read.parquet(small).repartition(COMPACT_TARGET_FILES).write.parquet(
         compacted
@@ -1140,6 +1150,23 @@ COMPACT_PLAN_DOCS_PER_FILE = 20     # ledger granularity: one "file" per 20 docs
 COMPACT_PLAN_TARGET_BYTES = 16_384  # close a compaction group once it reaches this
 
 
+def _file_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The file ledger (source, file_id, bytes): documents grouped into one
+    synthetic "file" per COMPACT_PLAN_DOCS_PER_FILE doc ids, with add_v and
+    rm_v, the versions that add and remove the file in the deterministic
+    transaction log (a remove at rm_v >= LOG_VERSIONS never lands)."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .groupBy(
+            "source",
+            (F.col("doc_id") / COMPACT_PLAN_DOCS_PER_FILE).cast("long").alias("file_id"),
+        )
+        .agg(F.sum("n_chars").alias("bytes"))
+        .withColumn("add_v", F.expr(f"file_id % {LOG_VERSIONS}"))
+        .withColumn("rm_v", F.expr("add_v + 1 + file_id % 3"))
+    )
+
+
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE bin-packing PLANNER — the decision step before
     `q_compact_small_files`'s rewrite: given a per-partition file ledger
@@ -1163,17 +1190,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by the table partition (`source`), never global, and
     all arithmetic is BIGINT. Output is one row per planned compaction
     job."""
-    docs = load_table(spark, sf_dir, "documents")
-    ledger = (
-        docs.groupBy(
-            "source",
-            (F.col("doc_id") / COMPACT_PLAN_DOCS_PER_FILE)
-            .cast("long")
-            .alias("file_id"),
-        )
-        .agg(F.sum("n_chars").alias("bytes"))
-    )
-    packed = ledger.withColumn(
+    packed = _file_ledger(spark, sf_dir).withColumn(
         "group_id",
         F.expr(
             "(sum(bytes) over ("
@@ -1196,13 +1213,17 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COMPACT_PLAN_SQL = f"""
-WITH ledger AS (
+# Oracle mirror of _file_ledger's (source, file_id, bytes).
+_LEDGER_SQL = f"""ledger AS (
   SELECT source,
          CAST(doc_id // {COMPACT_PLAN_DOCS_PER_FILE} AS BIGINT) AS file_id,
          CAST(SUM(n_chars) AS BIGINT) AS bytes
   FROM documents GROUP BY 1, 2
-),
+)"""
+
+
+COMPACT_PLAN_SQL = f"""
+WITH {_LEDGER_SQL},
 packed AS (
   SELECT source, file_id, bytes,
          (SUM(bytes) OVER (
@@ -1237,30 +1258,9 @@ def sketch_bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shape survives any key-set size."""
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     member = F.col("c_acctbal") > BLOOM_BAL_MIN
-    bits = (
-        cust.filter(member)
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        _bloom_pos(F.col("c_custkey"), a, b)
-                        for a, b in _BLOOM_HASHES
-                    ]
-                )
-            ).alias("pos")
-        )
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    probes = cust.select(
-        "c_custkey",
-        member.alias("is_member"),
-        F.explode(
-            F.array(
-                *[_bloom_pos(F.col("c_custkey"), a, b) for a, b in _BLOOM_HASHES]
-            )
-        ).alias("pos"),
-    )
+    pos = F.explode(_bloom_positions(F.col("c_custkey"))).alias("pos")
+    bits = cust.filter(member).select(pos).distinct().withColumn("hit", F.lit(1))
+    probes = cust.select("c_custkey", member.alias("is_member"), pos)
     per_probe = (
         probes.join(F.broadcast(bits), "pos", "left")
         .groupBy("c_custkey", "is_member")
@@ -1302,17 +1302,8 @@ def _bloom_fpr_sql() -> str:
         f" {_bloom_pos_sql('c_custkey', a, b)} AS pos FROM customer"
         for a, b in _BLOOM_HASHES
     )
-    pos_union = "\n    UNION\n".join(
-        f"    SELECT {_bloom_pos_sql('c_custkey', a, b)} AS pos FROM keys"
-        for a, b in _BLOOM_HASHES
-    )
     return f"""
-WITH keys AS (
-  SELECT c_custkey FROM customer WHERE c_acctbal > {BLOOM_BAL_MIN}
-),
-bloom AS (
-{pos_union}
-),
+{_bloom_build_sql()},
 probes AS (
 {probe_union}
 ),
@@ -1437,6 +1428,68 @@ ORDER BY m.l_returnflag
 # ---------------------------------------------------------------------------
 
 
+# Sort key of the encoding readouts: the row locator plus every compared
+# column, so rows tied on it are bit-identical in all compared columns and
+# any tie order yields the same change flags — no need to widen it further.
+_ENC_KEY = (
+    "l_shipdate", "l_orderkey", "l_linenumber", "l_quantity",
+    "l_returnflag", "l_linestatus",
+)
+# Audited columns: dates and decimals compare as their string form.
+_ENC_AUDITED = {
+    "l_returnflag": None,
+    "l_linestatus": None,
+    "l_shipdate": "string",
+    "l_quantity": "string",
+}
+
+
+def _encoding_input(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, dict[str, Column]]:
+    """lineitem's sort-key columns, and the audited value of each audited
+    column."""
+    li = load_table(spark, sf_dir, "lineitem").select(*_ENC_KEY)
+    return li, {
+        n: F.col(n) if t is None else F.col(n).cast(t) for n, t in _ENC_AUDITED.items()
+    }
+
+
+def _change_flags(cols: dict[str, Column], w: WindowSpec) -> list[Column]:
+    """chg_<col>: 1 where the audited value differs from the previous
+    row's under ``w``."""
+    return [
+        F.when(c != F.lag(c).over(w), 1).otherwise(0).alias(f"chg_{n}")
+        for n, c in cols.items()
+    ]
+
+
+def _encoding_readout(agg: DataFrame, runs: str, *keep: str) -> DataFrame:
+    """One row per audited column from ``agg``'s n, ``keep`` and per-column
+    nd_<col>, with n_runs = ``runs`` formatted with the column name: the
+    x100 fixed-point average run length and the RLE / DICT / PLAIN
+    verdict. Integer math only, so the oracle hash-matches."""
+    stacked = agg.selectExpr(
+        "n",
+        *keep,
+        f"stack({len(_ENC_AUDITED)}, "
+        + ", ".join(f"'{n}', {runs.format(n)}, nd_{n}" for n in _ENC_AUDITED)
+        + ") AS (col_name, n_runs, n_distinct)",
+    )
+    return stacked.select(
+        "col_name",
+        "n",
+        *keep,
+        "n_runs",
+        "n_distinct",
+        F.expr("n * 100 DIV n_runs").alias("avg_run_x100"),
+        F.expr(
+            "CASE WHEN n * 100 DIV n_runs >= 400 THEN 'RLE' "
+            "WHEN n_distinct <= 1000 THEN 'DICT' ELSE 'PLAIN' END"
+        ).alias("encoding"),
+    ).orderBy("col_name")
+
+
 def q_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Columnar-encoding diagnostics over a sorted layout: run counts,
     distinct counts, and an RLE / DICT / PLAIN encoding verdict per
@@ -1460,58 +1513,32 @@ def q_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per FILE via a shard-partitioned window, counts merged, run
     boundaries at file edges the only (file-count-bounded) difference.
     """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_linestatus", "l_shipdate", "l_orderkey",
-        "l_linenumber", "l_quantity",
-    )
-    # Sort key = row locator + every COMPARED column: rows tied on this
-    # key are bit-identical in all compared columns, so any tie order
-    # yields the same change flags — no need to widen the sort further.
-    w = Window.orderBy(
-        "l_shipdate", "l_orderkey", "l_linenumber", "l_quantity",
-        "l_returnflag", "l_linestatus",
-    )
-    cols = {
-        "l_returnflag": F.col("l_returnflag"),
-        "l_linestatus": F.col("l_linestatus"),
-        "l_shipdate": F.col("l_shipdate").cast("string"),
-        "l_quantity": F.col("l_quantity").cast("string"),
-    }
+    li, cols = _encoding_input(spark, sf_dir)
     flagged = li.select(
-        *[
-            F.when(expr != F.lag(expr).over(w), 1).otherwise(0).alias(f"chg_{n}")
-            for n, expr in cols.items()
-        ],
-        *[expr.alias(f"v_{n}") for n, expr in cols.items()],
+        *_change_flags(cols, Window.orderBy(*_ENC_KEY)),
+        *[c.alias(f"v_{n}") for n, c in cols.items()],
     )
     agg = flagged.agg(
         F.count(F.lit(1)).alias("n"),
-        *[(F.sum(f"chg_{n}") + 1).alias(f"runs_{n}") for n in cols],
+        *[F.sum(f"chg_{n}").alias(f"chgsum_{n}") for n in cols],
         *[F.countDistinct(f"v_{n}").alias(f"nd_{n}") for n in cols],
     )
-    stacked = agg.selectExpr(
-        "n",
-        "stack(4, "
-        + ", ".join(f"'{n}', runs_{n}, nd_{n}" for n in cols)
-        + ") AS (col_name, n_runs, n_distinct)",
-    )
-    return (
-        stacked.select(
-            "col_name",
-            "n",
-            "n_runs",
-            "n_distinct",
-            F.expr("n * 100 DIV n_runs").alias("avg_run_x100"),
-            F.expr(
-                "CASE WHEN n * 100 DIV n_runs >= 400 THEN 'RLE' "
-                "WHEN n_distinct <= 1000 THEN 'DICT' ELSE 'PLAIN' END"
-            ).alias("encoding"),
-        )
-        .orderBy("col_name")
-    )
+    return _encoding_readout(agg, "chgsum_{} + 1")
 
 
-Q_ENCODING_SQL = """
+# Oracle mirrors of the change flags and distinct counts of both forms.
+_ENC_FLAGS_SQL = "\n".join(
+    f"    CASE WHEN {n} <> lag({n}) OVER w THEN 1 ELSE 0 END AS chg_{n},"
+    for n in _ENC_AUDITED
+) + """
+    l_returnflag AS v_l_returnflag, l_linestatus AS v_l_linestatus,
+    l_shipdate AS v_l_shipdate, l_quantity AS v_l_quantity"""
+_ENC_ND_SQL = ",\n".join(
+    f"         count(DISTINCT v_{n}) AS nd_{n}" for n in _ENC_AUDITED
+)
+
+
+Q_ENCODING_SQL = f"""
 WITH ordered AS (
   SELECT l_returnflag, l_linestatus, l_shipdate AS ship_ts,
          CAST(l_shipdate AS VARCHAR) AS l_shipdate,
@@ -1521,12 +1548,7 @@ WITH ordered AS (
   FROM lineitem
 ), flags AS (
   SELECT
-    CASE WHEN l_returnflag <> lag(l_returnflag) OVER w THEN 1 ELSE 0 END AS chg_l_returnflag,
-    CASE WHEN l_linestatus <> lag(l_linestatus) OVER w THEN 1 ELSE 0 END AS chg_l_linestatus,
-    CASE WHEN l_shipdate <> lag(l_shipdate) OVER w THEN 1 ELSE 0 END AS chg_l_shipdate,
-    CASE WHEN l_quantity <> lag(l_quantity) OVER w THEN 1 ELSE 0 END AS chg_l_quantity,
-    l_returnflag AS v_l_returnflag, l_linestatus AS v_l_linestatus,
-    l_shipdate AS v_l_shipdate, l_quantity AS v_l_quantity
+{_ENC_FLAGS_SQL}
   FROM ordered
   WINDOW w AS (ORDER BY ship_ts, l_orderkey, l_linenumber, qty_raw,
                l_returnflag, l_linestatus)
@@ -1536,10 +1558,7 @@ WITH ordered AS (
          CAST(sum(chg_l_linestatus) + 1 AS BIGINT) AS runs_l_linestatus,
          CAST(sum(chg_l_shipdate) + 1 AS BIGINT) AS runs_l_shipdate,
          CAST(sum(chg_l_quantity) + 1 AS BIGINT) AS runs_l_quantity,
-         count(DISTINCT v_l_returnflag) AS nd_l_returnflag,
-         count(DISTINCT v_l_linestatus) AS nd_l_linestatus,
-         count(DISTINCT v_l_shipdate) AS nd_l_shipdate,
-         count(DISTINCT v_l_quantity) AS nd_l_quantity
+{_ENC_ND_SQL}
   FROM flags
 ), stacked AS (
   SELECT 'l_returnflag' AS col_name, n, runs_l_returnflag AS n_runs, nd_l_returnflag AS n_distinct FROM agg
@@ -1575,20 +1594,8 @@ def q_encoding_stats_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     global-window sibling stays registered as the oracle-reference
     baseline.
     """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_linestatus", "l_shipdate", "l_orderkey",
-        "l_linenumber", "l_quantity",
-    ).withColumn("shard", F.pmod(F.col("l_orderkey"), F.lit(N_ENC_SHARDS)))
-    w = Window.partitionBy("shard").orderBy(
-        "l_shipdate", "l_orderkey", "l_linenumber", "l_quantity",
-        "l_returnflag", "l_linestatus",
-    )
-    cols = {
-        "l_returnflag": F.col("l_returnflag"),
-        "l_linestatus": F.col("l_linestatus"),
-        "l_shipdate": F.col("l_shipdate").cast("string"),
-        "l_quantity": F.col("l_quantity").cast("string"),
-    }
+    li, cols = _encoding_input(spark, sf_dir)
+    li = li.withColumn("shard", F.pmod(F.col("l_orderkey"), F.lit(N_ENC_SHARDS)))
     # r13 (guide §2.3, VERDICT item 3): the multi-countDistinct Expand
     # (×6 row multiplication) used to run over the WINDOWED frame, so
     # every flagged row — already paid for with a full shard-keyed
@@ -1601,52 +1608,18 @@ def q_encoding_stats_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet reader, no sort above it) — then cross-join the two
     # 1-row results. Identical numbers: same aggregates over the same
     # rows, merely computed on different branches.
-    flagged = li.select(
-        "shard",
-        *[
-            F.when(expr != F.lag(expr).over(w), 1).otherwise(0).alias(f"chg_{n}")
-            for n, expr in cols.items()
-        ],
-    )
-    runs_agg = flagged.agg(
-        *[F.sum(f"chg_{n}").alias(f"chgsum_{n}") for n in cols],
+    w = Window.partitionBy("shard").orderBy(*_ENC_KEY)
+    runs_agg = li.select("shard", *_change_flags(cols, w)).agg(
+        *[F.sum(f"chg_{n}").alias(f"chgsum_{n}") for n in cols]
     )
     nd_agg = li.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("shard").alias("n_shards"),
-        *[F.countDistinct(expr).alias(f"nd_{n}") for n, expr in cols.items()],
+        *[F.countDistinct(c).alias(f"nd_{n}") for n, c in cols.items()],
     )
     # one run-start per shard: merged runs = Σ within-shard changes + #shards
-    agg = runs_agg.crossJoin(nd_agg).select(
-        "n",
-        "n_shards",
-        *[
-            (F.col(f"chgsum_{n}") + F.col("n_shards")).alias(f"runs_{n}")
-            for n in cols
-        ],
-        *[F.col(f"nd_{n}") for n in cols],
-    )
-    stacked = agg.selectExpr(
-        "n",
-        "n_shards",
-        "stack(4, "
-        + ", ".join(f"'{n}', runs_{n}, nd_{n}" for n in cols)
-        + ") AS (col_name, n_runs, n_distinct)",
-    )
-    return (
-        stacked.select(
-            "col_name",
-            "n",
-            "n_shards",
-            "n_runs",
-            "n_distinct",
-            F.expr("n * 100 DIV n_runs").alias("avg_run_x100"),
-            F.expr(
-                "CASE WHEN n * 100 DIV n_runs >= 400 THEN 'RLE' "
-                "WHEN n_distinct <= 1000 THEN 'DICT' ELSE 'PLAIN' END"
-            ).alias("encoding"),
-        )
-        .orderBy("col_name")
+    return _encoding_readout(
+        runs_agg.crossJoin(nd_agg), "chgsum_{} + n_shards", "n_shards"
     )
 
 
@@ -1661,12 +1634,7 @@ WITH ordered AS (
   FROM lineitem
 ), flags AS (
   SELECT shard,
-    CASE WHEN l_returnflag <> lag(l_returnflag) OVER w THEN 1 ELSE 0 END AS chg_l_returnflag,
-    CASE WHEN l_linestatus <> lag(l_linestatus) OVER w THEN 1 ELSE 0 END AS chg_l_linestatus,
-    CASE WHEN l_shipdate <> lag(l_shipdate) OVER w THEN 1 ELSE 0 END AS chg_l_shipdate,
-    CASE WHEN l_quantity <> lag(l_quantity) OVER w THEN 1 ELSE 0 END AS chg_l_quantity,
-    l_returnflag AS v_l_returnflag, l_linestatus AS v_l_linestatus,
-    l_shipdate AS v_l_shipdate, l_quantity AS v_l_quantity
+{_ENC_FLAGS_SQL}
   FROM ordered
   WINDOW w AS (PARTITION BY shard ORDER BY ship_ts, l_orderkey, l_linenumber,
                qty_raw, l_returnflag, l_linestatus)
@@ -1677,10 +1645,7 @@ WITH ordered AS (
          CAST(sum(chg_l_linestatus) + count(DISTINCT shard) AS BIGINT) AS runs_l_linestatus,
          CAST(sum(chg_l_shipdate) + count(DISTINCT shard) AS BIGINT) AS runs_l_shipdate,
          CAST(sum(chg_l_quantity) + count(DISTINCT shard) AS BIGINT) AS runs_l_quantity,
-         count(DISTINCT v_l_returnflag) AS nd_l_returnflag,
-         count(DISTINCT v_l_linestatus) AS nd_l_linestatus,
-         count(DISTINCT v_l_shipdate) AS nd_l_shipdate,
-         count(DISTINCT v_l_quantity) AS nd_l_quantity
+{_ENC_ND_SQL}
   FROM flags
 ), stacked AS (
   SELECT 'l_returnflag' AS col_name, n, n_shards, runs_l_returnflag AS n_runs, nd_l_returnflag AS n_distinct FROM agg
@@ -1696,20 +1661,74 @@ FROM stacked ORDER BY col_name
 """
 
 
-def _interleave_spark(px: str, py: str) -> str:
-    terms = []
-    for i in range(4):
-        terms.append(f"(shiftleft(shiftright({px}, {i}) & 1, {2 * i}))")
-        terms.append(f"(shiftleft(shiftright({py}, {i}) & 1, {2 * i + 1}))")
-    return " + ".join(terms)
-
-
 def _interleave_duck(px: str, py: str) -> str:
     terms = []
     for i in range(4):
         terms.append(f"((({px} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({py} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
+
+
+def _skipping_advisor(spark: SparkSession, sf_dir: str, **extra: Column) -> DataFrame:
+    """Files a point probe on each dimension must scan, per layout, with
+    lineitem's (partkey, suppkey) range-bucketed onto a 16x16 (px, py)
+    grid and tiled into 64 files by each of ``extra``'s file-id columns,
+    then by the Morton curve (``zorder``) and by partkey range
+    (``linear``). A layout's readout is the per-file min/max of both
+    buckets (the footer stats a scan planner prunes with) against the
+    probes."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    maxes = li.agg(
+        F.max("l_partkey").alias("max_pk"), F.max("l_suppkey").alias("max_sk")
+    )
+    layouts = {
+        **extra,
+        "zorder": F.expr(f"({_morton_sum('px', 'py', 'DIV', 4)}) DIV 4"),
+        "linear": F.expr("px * 4 + py DIV 4"),
+    }
+    z = li.crossJoin(F.broadcast(maxes)).select(
+        F.expr("l_partkey * 16 DIV (max_pk + 1)").alias("px"),
+        F.expr("l_suppkey * 16 DIV (max_sk + 1)").alias("py"),
+    ).select("px", "py", *[f.alias(layout) for layout, f in layouts.items()])
+    # Probe at the max-occupied bucket of each dimension: guaranteed
+    # non-empty at ANY sf (a fixed bucket constant can fall in a hole of
+    # a sparse key domain — the sf0.001 supplier key has only 10 values).
+    probes = z.agg(F.max("px").alias("ppx"), F.max("py").alias("ppy"))
+
+    def hits(d: str) -> Column:
+        p = F.col(f"pp{d}")
+        return F.sum(
+            F.when((F.col(f"min_p{d}") <= p) & (F.col(f"max_p{d}") >= p), 1).otherwise(0)
+        )
+
+    def readout(layout: str) -> DataFrame:
+        return (
+            z.groupBy(F.col(layout).alias("f"))
+            .agg(
+                F.min("px").alias("min_px"),
+                F.max("px").alias("max_px"),
+                F.min("py").alias("min_py"),
+                F.max("py").alias("max_py"),
+            )
+            .crossJoin(F.broadcast(probes))
+            .agg(
+                F.count(F.lit(1)).alias("files_total"),
+                hits("x").alias("hit_pk"),
+                hits("y").alias("hit_sk"),
+            )
+            .selectExpr(
+                f"'{layout}' AS layout",
+                "stack(2, 'partkey', CAST(hit_pk AS BIGINT), "
+                "'suppkey', CAST(hit_sk AS BIGINT)) AS (probe_dim, files_scanned)",
+                "files_total",
+            )
+        )
+
+    return (
+        reduce(DataFrame.unionAll, map(readout, layouts))
+        .select("layout", "probe_dim", "files_total", "files_scanned")
+        .orderBy("layout", "probe_dim")
+    )
 
 
 def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1729,76 +1748,21 @@ def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     for this column pair?") runnable on a live 100 TB table — the only
     shuffle is the 64-key file-stats aggregate.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    maxes = li.agg(
-        F.max("l_partkey").alias("max_pk"), F.max("l_suppkey").alias("max_sk")
-    )
-    bucketed = li.crossJoin(F.broadcast(maxes)).select(
-        F.expr("l_partkey * 16 DIV (max_pk + 1)").alias("px"),
-        F.expr("l_suppkey * 16 DIV (max_sk + 1)").alias("py"),
-    )
-    z = bucketed.select(
-        "px",
-        "py",
-        F.expr(f"({_interleave_spark('px', 'py')}) DIV 4").alias("zfile"),
-        F.expr("px * 4 + py DIV 4").alias("lfile"),
-    )
-    # Probe at the max-occupied bucket of each dimension: guaranteed
-    # non-empty at ANY sf (a fixed bucket constant can fall in a hole of
-    # a sparse key domain — the sf0.001 supplier key has only 10 values).
-    probes = z.agg(F.max("px").alias("ppx"), F.max("py").alias("ppy"))
-
-    def stats(df: DataFrame, filecol: str, layout: str) -> DataFrame:
-        return (
-            df.groupBy(F.col(filecol).alias("f"))
-            .agg(
-                F.min("px").alias("min_px"),
-                F.max("px").alias("max_px"),
-                F.min("py").alias("min_py"),
-                F.max("py").alias("max_py"),
-            )
-            .crossJoin(F.broadcast(probes))
-            .agg(
-                F.count(F.lit(1)).alias("files_total"),
-                F.sum(
-                    F.when(
-                        (F.col("min_px") <= F.col("ppx"))
-                        & (F.col("max_px") >= F.col("ppx")),
-                        1,
-                    ).otherwise(0)
-                ).alias("hit_pk"),
-                F.sum(
-                    F.when(
-                        (F.col("min_py") <= F.col("ppy"))
-                        & (F.col("max_py") >= F.col("ppy")),
-                        1,
-                    ).otherwise(0)
-                ).alias("hit_sk"),
-            )
-            .selectExpr(
-                f"'{layout}' AS layout",
-                "stack(2, 'partkey', CAST(hit_pk AS BIGINT), "
-                "'suppkey', CAST(hit_sk AS BIGINT)) AS (probe_dim, files_scanned)",
-                "files_total",
-            )
-        )
-
-    return (
-        stats(z, "zfile", "zorder")
-        .unionAll(stats(z, "lfile", "linear"))
-        .select("layout", "probe_dim", "files_total", "files_scanned")
-        .orderBy("layout", "probe_dim")
-    )
+    return _skipping_advisor(spark, sf_dir)
 
 
-Q_ZORDER_SQL = f"""
-WITH maxes AS (
+# Oracle mirror of _skipping_advisor's bucketed input.
+_BUCKETED_SQL = """maxes AS (
   SELECT max(l_partkey) AS max_pk, max(l_suppkey) AS max_sk FROM lineitem
 ), bucketed AS (
   SELECT l_partkey * 16 // (max_pk + 1) AS px,
          l_suppkey * 16 // (max_sk + 1) AS py
   FROM lineitem, maxes
-), z AS (
+)"""
+
+
+Q_ZORDER_SQL = f"""
+WITH {_BUCKETED_SQL}, z AS (
   SELECT px, py,
          ({_interleave_duck('px', 'py')}) // 4 AS zfile,
          px * 4 + py // 4 AS lfile
@@ -1937,10 +1901,7 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_sum("nation", ["n_nationkey", "n_name", "n_regionkey"]),
         table_sum("supplier", ["s_suppkey", "s_name", "s_nationkey"]),
     ]
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    return out.orderBy("table_name")
+    return reduce(DataFrame.unionByName, parts).orderBy("table_name")
 
 
 Q_TABLE_CHECKSUM_SQL = """
@@ -1998,80 +1959,20 @@ def q_hilbert_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     offline, ship it as a literal/broadcast). Probes are the
     max-occupied bucket of each dimension (non-empty at any sf).
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    maxes = li.agg(
-        F.max("l_partkey").alias("max_pk"), F.max("l_suppkey").alias("max_sk")
-    )
-    bucketed = li.crossJoin(F.broadcast(maxes)).select(
-        F.expr("l_partkey * 16 DIV (max_pk + 1)").alias("px"),
-        F.expr("l_suppkey * 16 DIV (max_sk + 1)").alias("py"),
-    )
     hb = F.array(*[F.lit(v) for v in _HILBERT16])
-    z = bucketed.select(
-        "px",
-        "py",
-        (F.element_at(hb, F.expr("CAST(px * 16 + py + 1 AS INT)")) / 4)
-        .cast("long")
-        .alias("hfile"),
-        F.expr(f"({_interleave_spark('px', 'py')}) DIV 4").alias("zfile"),
-        F.expr("px * 4 + py DIV 4").alias("lfile"),
-    )
-    probes = z.agg(F.max("px").alias("ppx"), F.max("py").alias("ppy"))
-
-    def stats(filecol: str, layout: str) -> DataFrame:
-        return (
-            z.groupBy(F.col(filecol).alias("f"))
-            .agg(
-                F.min("px").alias("min_px"),
-                F.max("px").alias("max_px"),
-                F.min("py").alias("min_py"),
-                F.max("py").alias("max_py"),
-            )
-            .crossJoin(F.broadcast(probes))
-            .agg(
-                F.count(F.lit(1)).alias("files_total"),
-                F.sum(
-                    F.when(
-                        (F.col("min_px") <= F.col("ppx"))
-                        & (F.col("max_px") >= F.col("ppx")),
-                        1,
-                    ).otherwise(0)
-                ).alias("hit_pk"),
-                F.sum(
-                    F.when(
-                        (F.col("min_py") <= F.col("ppy"))
-                        & (F.col("max_py") >= F.col("ppy")),
-                        1,
-                    ).otherwise(0)
-                ).alias("hit_sk"),
-            )
-            .selectExpr(
-                f"'{layout}' AS layout",
-                "stack(2, 'partkey', CAST(hit_pk AS BIGINT), "
-                "'suppkey', CAST(hit_sk AS BIGINT)) AS (probe_dim, files_scanned)",
-                "files_total",
-            )
-        )
-
-    return (
-        stats("hfile", "hilbert")
-        .unionAll(stats("zfile", "zorder"))
-        .unionAll(stats("lfile", "linear"))
-        .select("layout", "probe_dim", "files_total", "files_scanned")
-        .orderBy("layout", "probe_dim")
+    return _skipping_advisor(
+        spark,
+        sf_dir,
+        hilbert=(F.element_at(hb, F.expr("CAST(px * 16 + py + 1 AS INT)")) / 4).cast(
+            "long"
+        ),
     )
 
 
 Q_HILBERT_SQL = f"""
-WITH maxes AS (
-  SELECT max(l_partkey) AS max_pk, max(l_suppkey) AS max_sk FROM lineitem
-), bucketed AS (
-  SELECT l_partkey * 16 // (max_pk + 1) AS px,
-         l_suppkey * 16 // (max_sk + 1) AS py
-  FROM lineitem, maxes
-), z AS (
+WITH {_BUCKETED_SQL}, z AS (
   SELECT px, py,
-         ([0, 3, 4, 5, 58, 59, 60, 63, 64, 65, 78, 79, 80, 83, 84, 85, 1, 2, 7, 6, 57, 56, 61, 62, 67, 66, 77, 76, 81, 82, 87, 86, 14, 13, 8, 9, 54, 55, 50, 49, 68, 71, 72, 75, 94, 93, 88, 89, 15, 12, 11, 10, 53, 52, 51, 48, 69, 70, 73, 74, 95, 92, 91, 90, 16, 17, 30, 31, 32, 33, 46, 47, 122, 121, 118, 117, 96, 99, 100, 101, 19, 18, 29, 28, 35, 34, 45, 44, 123, 120, 119, 116, 97, 98, 103, 102, 20, 23, 24, 27, 36, 39, 40, 43, 124, 125, 114, 115, 110, 109, 104, 105, 21, 22, 25, 26, 37, 38, 41, 42, 127, 126, 113, 112, 111, 108, 107, 106, 234, 233, 230, 229, 218, 217, 214, 213, 128, 129, 142, 143, 144, 147, 148, 149, 235, 232, 231, 228, 219, 216, 215, 212, 131, 130, 141, 140, 145, 146, 151, 150, 236, 237, 226, 227, 220, 221, 210, 211, 132, 135, 136, 139, 158, 157, 152, 153, 239, 238, 225, 224, 223, 222, 209, 208, 133, 134, 137, 138, 159, 156, 155, 154, 240, 243, 244, 245, 202, 203, 204, 207, 186, 185, 182, 181, 160, 163, 164, 165, 241, 242, 247, 246, 201, 200, 205, 206, 187, 184, 183, 180, 161, 162, 167, 166, 254, 253, 248, 249, 198, 199, 194, 193, 188, 189, 178, 179, 174, 173, 168, 169, 255, 252, 251, 250, 197, 196, 195, 192, 191, 190, 177, 176, 175, 172, 171, 170])[px * 16 + py + 1] // 4 AS hfile,
+         ({_HILBERT16})[px * 16 + py + 1] // 4 AS hfile,
          ({_interleave_duck('px', 'py')}) // 4 AS zfile,
          px * 4 + py // 4 AS lfile
   FROM bucketed
@@ -2195,7 +2096,7 @@ def q_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BTEMP_ASOF_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 k0 AS (
   SELECT MAX(epoch_us(ts)) - {BTEMP_SNAPSHOT_LAG_US} AS k0_us FROM ev
 ),
@@ -2256,18 +2157,7 @@ def q_delta_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     by a cumulative window over the tiny (sources × versions) frame —
     post-aggregate, never data-sized. At 100 TB the ledger comes free
     from the table manifest; no data file is opened."""
-    docs = load_table(spark, sf_dir, "documents")
-    ledger = (
-        docs.groupBy(
-            "source",
-            (F.col("doc_id") / COMPACT_PLAN_DOCS_PER_FILE)
-            .cast("long")
-            .alias("file_id"),
-        )
-        .agg(F.sum("n_chars").alias("bytes"))
-        .withColumn("add_v", F.expr(f"file_id % {LOG_VERSIONS}"))
-        .withColumn("rm_v", F.expr("add_v + 1 + file_id % 3"))
-    )
+    ledger = _file_ledger(spark, sf_dir)
     adds = ledger.select(
         "source", F.col("add_v").alias("version"), F.lit(1).alias("n_add"),
         F.lit(0).alias("n_remove"), F.col("bytes").alias("delta_bytes"),
@@ -2305,12 +2195,7 @@ def q_delta_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DELTA_LOG_SQL = f"""
-WITH ledger AS (
-  SELECT source,
-         CAST(doc_id // {COMPACT_PLAN_DOCS_PER_FILE} AS BIGINT) AS file_id,
-         CAST(SUM(n_chars) AS BIGINT) AS bytes
-  FROM documents GROUP BY 1, 2
-),
+WITH {_LEDGER_SQL},
 log AS (
   SELECT source, file_id % {LOG_VERSIONS} AS version, bytes,
          1 AS n_add, 0 AS n_remove, bytes AS d_bytes, 1 AS d_files
@@ -2370,66 +2255,34 @@ def q_vacuum_eligibility(spark: SparkSession, sf_dir: str) -> DataFrame:
     the manifest-derived log, then a per-source rollup; no data file is
     opened, nothing data-sized past the first aggregate (the
     q_delta_log_replay argument)."""
-    current = LOG_VERSIONS - 1
-    horizon = current - VACUUM_RETAIN
-    docs = load_table(spark, sf_dir, "documents")
-    ledger = (
-        docs.groupBy(
-            "source",
-            (F.col("doc_id") / COMPACT_PLAN_DOCS_PER_FILE)
-            .cast("long")
-            .alias("file_id"),
-        )
-        .agg(F.sum("n_chars").alias("bytes"))
-        .withColumn("add_v", F.expr(f"file_id % {LOG_VERSIONS}"))
-        .withColumn("rm_v", F.expr("add_v + 1 + file_id % 3"))
-        .withColumn("tombstoned", F.expr(f"rm_v < {LOG_VERSIONS}"))
+    horizon = LOG_VERSIONS - 1 - VACUUM_RETAIN
+    ledger = _file_ledger(spark, sf_dir).withColumn(
+        "tombstoned", F.expr(f"rm_v < {LOG_VERSIONS}")
     )
+
+    def total(cond: str, of: str) -> Column:
+        return F.sum(F.expr(f"CASE WHEN {cond} THEN {of} ELSE 0 END"))
+
+    eligible = f"tombstoned AND rm_v <= {horizon}"
     return (
         ledger.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_files"),
-            F.sum(F.expr("CASE WHEN NOT tombstoned THEN 1 ELSE 0 END"))
-            .cast("bigint")
-            .alias("n_live"),
-            F.sum(
-                F.expr("CASE WHEN NOT tombstoned THEN bytes ELSE 0 END")
-            ).alias("live_bytes"),
-            F.sum(F.expr("CASE WHEN tombstoned THEN 1 ELSE 0 END"))
-            .cast("bigint")
-            .alias("n_tombstoned"),
-            F.sum(
-                F.expr(
-                    f"CASE WHEN tombstoned AND rm_v <= {horizon}"
-                    f" THEN 1 ELSE 0 END"
-                )
-            )
-            .cast("bigint")
-            .alias("n_vacuum_eligible"),
-            F.sum(
-                F.expr(
-                    f"CASE WHEN tombstoned AND rm_v <= {horizon}"
-                    f" THEN bytes ELSE 0 END"
-                )
-            ).alias("reclaim_bytes"),
-            F.sum(
-                F.expr(
-                    f"CASE WHEN tombstoned AND rm_v > {horizon}"
-                    f" THEN bytes ELSE 0 END"
-                )
-            ).alias("retained_dead_bytes"),
+            total("NOT tombstoned", "1").cast("bigint").alias("n_live"),
+            total("NOT tombstoned", "bytes").alias("live_bytes"),
+            total("tombstoned", "1").cast("bigint").alias("n_tombstoned"),
+            total(eligible, "1").cast("bigint").alias("n_vacuum_eligible"),
+            total(eligible, "bytes").alias("reclaim_bytes"),
+            total(f"tombstoned AND rm_v > {horizon}", "bytes").alias(
+                "retained_dead_bytes"
+            ),
         )
         .orderBy("source")
     )
 
 
 VACUUM_ELIGIBILITY_SQL = f"""
-WITH ledger AS (
-  SELECT source,
-         CAST(doc_id // {COMPACT_PLAN_DOCS_PER_FILE} AS BIGINT) AS file_id,
-         CAST(SUM(n_chars) AS BIGINT) AS bytes
-  FROM documents GROUP BY 1, 2
-),
+WITH {_LEDGER_SQL},
 files AS (
   SELECT source, bytes,
          file_id % {LOG_VERSIONS} AS add_v,
@@ -2524,12 +2377,7 @@ def q_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((~F.col("is_deleted")).cast("bigint")).alias("n_live"),
             F.sum(F.col("is_deleted").cast("bigint")).alias("n_deleted"),
             F.sum(
-                F.when(
-                    ~F.col("is_deleted"),
-                    (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast(
-                        "bigint"
-                    ),
-                ).otherwise(F.lit(0))
+                F.when(~F.col("is_deleted"), cents("o_totalprice")).otherwise(F.lit(0))
             ).alias("live_price_cents"),
         )
         .orderBy("o_orderstatus")
@@ -2707,17 +2555,6 @@ ZORD_QUERIES = [
 ]
 
 
-def _morton_sum(nx: str, ny: str, div: str) -> str:
-    """The 32-bit Morton interleave as an unrolled integer polynomial —
-    identical text in both engines modulo the integer-division spelling
-    (Spark ``div`` / DuckDB ``//``), no bit operators needed."""
-    terms = []
-    for b in range(ZORD_BITS):
-        terms.append(f"(({nx} {div} {1 << b}) % 2) * {1 << (2 * b)}")
-        terms.append(f"(({ny} {div} {1 << b}) % 2) * {1 << (2 * b + 1)}")
-    return " + ".join(terms)
-
-
 def q_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-ORDER layout audit, BOX-QUERY edition — third member of the
     layout trio and deliberately disjoint from it: ``q_zorder_layout``
@@ -2784,7 +2621,7 @@ def q_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     zed = norm.select(
         "nx",
         "ny",
-        F.expr(f"({_morton_sum('nx', 'ny', 'div')}) div {ZORD_FILE_W}").alias(
+        F.expr(f"({_morton_sum('nx', 'ny', 'div', ZORD_BITS)}) div {ZORD_FILE_W}").alias(
             "zfile"
         ),
         "nfile",
@@ -2878,7 +2715,7 @@ norm AS (
 ),
 zed AS (
   SELECT nx, ny,
-         ({_morton_sum('nx', 'ny', '//')}) // {ZORD_FILE_W} AS zfile,
+         ({_morton_sum('nx', 'ny', '//', ZORD_BITS)}) // {ZORD_FILE_W} AS zfile,
          nfile
   FROM norm
 ),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.numeric import cents
 from ..sources.batch import load_table
 
 # ---------------------------------------------------------------------------
@@ -786,9 +787,7 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the auditor wants surfaced about a column before trusting it.
     """
     o = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents")
+        cents("o_totalprice").alias("cents")
     ).filter(F.col("cents") > 0)
     digit = F.substring(F.col("cents").cast("string"), 1, 1).cast("int")
     counts = o.select(digit.alias("digit")).groupBy("digit").agg(
@@ -852,10 +851,7 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
-        .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .alias("cents")
-        )
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     w = Window.orderBy("cents", "o_custkey")
     ranked = spend.withColumn("i", F.row_number().over(w))
@@ -923,10 +919,7 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
-        .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint"))
-            .alias("cents")
-        )
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     w = Window.orderBy("cents", "o_custkey")
     dec = spend.withColumn("decile", F.ntile(10).over(w))
@@ -984,15 +977,9 @@ def q_hdr_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exponentially-wider buckets a latency/value distribution needs.
     One scan + one ~40-key partial agg; the exact bucket bounds ride
     along as powers of two."""
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents")
-        )
-        .filter(F.col("cents") > 0)
-    )
+    o = load_table(spark, sf_dir, "orders").select(
+        cents("o_totalprice").alias("cents")
+    ).filter(F.col("cents") > 0)
     bucket = (F.length(F.bin("cents")) - 1).alias("log2_bucket")
     return (
         o.select(bucket)
@@ -1048,9 +1035,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset + within-bucket running weight IS the global cumulative
     weight, row for row."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("price_cents"),
+        cents("l_extendedprice").alias("price_cents"),
         F.col("l_quantity").cast("bigint").alias("w"),
         "l_orderkey",
         "l_linenumber",
@@ -1200,7 +1185,7 @@ def q_trimmed_mean_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     return (
         ev.groupBy("event_type")
@@ -1288,19 +1273,12 @@ def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-group sort is the only cost and AQE splits any skewed
     priority class. All arithmetic is integer cents with one truncating
     division at the end — engine-exact."""
-    cents = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderpriority",
-            "o_orderkey",
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-        )
+    priced = load_table(spark, sf_dir, "orders").select(
+        "o_orderpriority", "o_orderkey", cents("o_totalprice").alias("cents")
     )
     w_rank = Window.partitionBy("o_orderpriority").orderBy("cents", "o_orderkey")
     w_grp = Window.partitionBy("o_orderpriority")
-    ranked = cents.select(
+    ranked = priced.select(
         "o_orderpriority",
         "cents",
         F.row_number().over(w_rank).alias("r"),

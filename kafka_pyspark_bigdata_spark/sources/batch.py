@@ -14,11 +14,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
+
+T = TypeVar("T")
 
 
 def _pid_alive(pid: int) -> bool:
@@ -97,19 +99,48 @@ def table_stamp(path: str) -> tuple[int, int, int]:
     )
 
 
+def app_memo(
+    cache: dict, spark: SparkSession, sf_dir: str, what: str, table: str,
+    build: Callable[[], T],
+) -> T:
+    """``cache``'s value for ``what`` under this Spark application and
+    ``sf_dir``, built by ``build()`` on a miss.
+
+    The key is (applicationId, normalized sf_dir, what, ``table_stamp`` of
+    the fixture table ``what`` is derived from): a value bound to a dead
+    JVM, or derived from a table file rewritten since, is never served.
+    A miss first evicts every entry of another application and the
+    superseded-stamp entry for the same ``what``, so the memo holds at
+    most one value per (sf_dir, what).
+    """
+    app = spark.sparkContext.applicationId
+    norm = sf_dir.rstrip("/")
+    key = (app, norm, what, table_stamp(table_path(norm, table)))
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
+    for stale in [k for k in cache if k[0] != app or k[:3] == key[:3]]:
+        del cache[stale]
+    value = cache[key] = build()
+    return value
+
+
 # Scan-PLAN memo (r12): building a parquet scan costs ~78 ms on the
 # driver per call (footer/schema read + py4j round-trips), and the query
 # builders call load_table thousands of times across a bench run — tens
 # of seconds of pure plan-construction overhead. A DataFrame is an
 # immutable lazy plan, so the SAME object can seed every query that
 # reads the table: each action still scans the parquet files from disk —
-# nothing row-shaped is ever held here (the (applicationId, sf_dir) key
-# and the stale-app pruning mirror the ml fit-sharing convention in
-# ml/queries.py). _PSCAN memoizes parallelize_scan's repartition
-# decision for exactly those cached frames (identity-checked so a
-# recycled id() can never alias a different frame).
+# nothing row-shaped is ever held here. _PSCAN memoizes
+# parallelize_scan's repartition decision for exactly those cached frames
+# (identity-checked so a recycled id() can never alias a different frame).
 _SCAN_CACHE: dict[tuple[str, str, str, tuple[int, int, int]], DataFrame] = {}
 _PSCAN_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
+
+
+# The oracles' events CTE: ``ts`` cast to DuckDB's microsecond TIMESTAMP,
+# the truncation ``read_events`` applies on the Spark side.
+EV_US = "ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events)"
 
 
 def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
@@ -147,31 +178,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # file index keeps the old file lengths, so its splits would drop or
     # misread every row group past them.
     path = table_path(sf_dir, name)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        name,
-        table_stamp(path),
-    )
-    hit = _SCAN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # evict other-application entries and superseded-stamp entries for
-    # this same table (the rewritten fixture's old listing)
-    stale = [
-        k for k in _SCAN_CACHE if k[0] != key[0] or k[:3] == key[:3]
-    ]
-    if stale:
-        for k in stale:
-            del _SCAN_CACHE[k]
-        _PSCAN_CACHE.clear()
 
-    if name == "events":
-        df = read_events(spark, lambda: spark.read.parquet(path))
-    else:
-        df = spark.read.parquet(path)
-    _SCAN_CACHE[key] = df
-    return df
+    def scan() -> DataFrame:
+        # app_memo has just evicted superseded scans: drop their
+        # repartition decisions too
+        live = {id(v) for v in _SCAN_CACHE.values()}
+        for k in [k for k in _PSCAN_CACHE if k not in live]:
+            del _PSCAN_CACHE[k]
+        if name == "events":
+            return read_events(spark, lambda: spark.read.parquet(path))
+        return spark.read.parquet(path)
+
+    return app_memo(_SCAN_CACHE, spark, sf_dir, name, name, scan)
 
 
 def parallelize_scan(df: DataFrame, min_ratio: int = 2) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.numeric import davg, davg_sql, dsum, dsum_expr, dsum_sql
+from ..functions.numeric import cents, davg, davg_sql, dsum, dsum_expr, dsum_sql
 from ..streaming.kafka import decode_json_stream, encode_json
 from .batch import load_table, read_csv, scratch_dir, write_bucketed, write_csv
 
@@ -903,9 +903,7 @@ def q_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(LedgerSink)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        cents("l_extendedprice").alias("cents"),
     )
     li.write.format("ledger").option("path", out_dir).mode("append").save()
 

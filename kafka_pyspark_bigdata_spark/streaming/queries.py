@@ -17,16 +17,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..functions.numeric import dsum, dsum_sql
-from ..sources.batch import load_table, read_events, scratch_dir, table_path, table_stamp
+from ..sources.batch import (
+    EV_US, app_memo, load_table, read_events, scratch_dir, table_path,
+)
 from .batcher import run_count_batched_stream
 from .windows import session_agg, sliding_agg, tumbling_agg
 
 BATCH_SIZE = 2000
 MAX_BATCHES = 3
-
-# Microsecond-precision events CTE for the oracles (parquet stores nanos;
-# the stream path truncates to micros — same note as plans.advanced).
-_EV_US = "ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events)"
 
 
 def _run_to_memory(agg, name_prefix: str, output_mode: str = "complete"):
@@ -42,23 +40,17 @@ def _run_to_memory(agg, name_prefix: str, output_mode: str = "complete"):
     return name
 
 
-# Raw (nanos-as-long) events schema per (applicationId, sf_dir, events
-# file stamp): inferring it is one Parquet footer job, and every stream
-# builder here needs it. Keyed like load_table's _SCAN_CACHE, so a
-# rewritten events file is re-inferred.
-_EVENTS_SCHEMA_CACHE: dict[tuple[str, str, tuple[int, int, int]], StructType] = {}
+# Raw (nanos-as-long) events schema, memoized by app_memo on the events
+# file stamp: inferring it is one Parquet footer job, and every
+# streaming query here needs it.
+_EVENTS_SCHEMA_CACHE: dict[tuple[str, str, str, tuple[int, int, int]], StructType] = {}
 
 
 def _events_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    path = table_path(sf_dir, "events")
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir.rstrip("/"), table_stamp(path))
-    schema = _EVENTS_SCHEMA_CACHE.get(key)
-    if schema is None:
-        for stale in [k for k in _EVENTS_SCHEMA_CACHE if k[0] != app or k[1] == key[1]]:
-            del _EVENTS_SCHEMA_CACHE[stale]
-        schema = _EVENTS_SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return schema
+    return app_memo(
+        _EVENTS_SCHEMA_CACHE, spark, sf_dir, "events_schema", "events",
+        lambda: spark.read.parquet(table_path(sf_dir, "events")).schema,
+    )
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,7 +92,7 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_SLIDING_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 expanded AS (
   SELECT UNNEST([date_trunc('hour', ts) - INTERVAL 1 HOUR,
                  date_trunc('hour', ts)]) AS ws,
@@ -132,7 +124,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_SESSION_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 g AS (
   SELECT user_id, ts, event_id, value,
          CASE WHEN LAG(ts) OVER w IS NULL
@@ -225,7 +217,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_JOIN_SQL = f"""
-WITH {_EV_US}
+WITH {EV_US}
 SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id
 FROM ev c JOIN ev p
   ON c.user_id = p.user_id
@@ -358,7 +350,7 @@ def streaming_tws_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_TWS_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 g AS (
   SELECT user_id,
          CASE WHEN LAG(ts) OVER w IS NULL
@@ -492,7 +484,7 @@ def streaming_watermark_lates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_WM_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 ontime AS (SELECT ts, value FROM ev WHERE event_id % {WM_LATE_MOD} <> 0),
 wm1 AS (
   SELECT MAX(epoch_ms(ts)) - {WM_DELAY_MS} AS wm FROM ontime
@@ -601,7 +593,7 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_UPSERT_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 r AS (
   SELECT user_id, event_id, ts, value,
          ROW_NUMBER() OVER (PARTITION BY user_id
@@ -711,7 +703,7 @@ def streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_EXACTLY_ONCE_SQL = f"""
-WITH {_EV_US}
+WITH {EV_US}
 SELECT event_type, COUNT(*) AS n_events,
        {dsum_sql('value')} AS sum_value
 FROM ev GROUP BY event_type ORDER BY event_type
@@ -765,7 +757,7 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_CHAINED_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 wm AS (SELECT MAX(epoch_us(ts) // 1000) AS wm_ms FROM ev),
 b AS (
   SELECT event_type,
@@ -839,7 +831,7 @@ def streaming_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STREAMING_OUTER_JOIN_SQL = f"""
-WITH {_EV_US},
+WITH {EV_US},
 wm AS (
   SELECT LEAST(
            MAX(CASE WHEN event_type = 'click'

@@ -14,6 +14,8 @@ import subprocess
 import sys
 import time
 
+import pytest
+
 import bench
 from conftest import SF_ORACLE
 
@@ -117,6 +119,51 @@ def test_rows_only_list_matches_oracle_gap_exactly():
 
     gap = set(em.queries()) - set(em.oracle_sql())
     assert gap == set(em.ROWS_ONLY), gap ^ set(em.ROWS_ONLY)
+
+
+def test_registry_import_failure_raises(monkeypatch):
+    """A query module that fails to import must fail queries(), not
+    silently drop its queries and oracles from the registry."""
+    import importlib
+
+    import __spark_entry__ as em
+
+    real = importlib.import_module
+    broken = "kafka_pyspark_bigdata_spark.plans.lakehouse"
+
+    def import_module(name, *args, **kwargs):
+        if name == broken:
+            raise ModuleNotFoundError(f"No module named {name!r}", name=name)
+        return real(name, *args, **kwargs)
+
+    monkeypatch.setattr(importlib, "import_module", import_module)
+    with pytest.raises(ModuleNotFoundError):
+        em.queries()
+
+
+def test_code_lines_counts_code_not_comments_or_docstrings():
+    """tools/code_lines counts a line only if it holds code: comments,
+    blank lines and docstrings do not count; every line of a multi-line
+    string that is not a docstring does."""
+    from tools.code_lines import code_lines
+
+    src = "\n".join([
+        '"""Module docstring,',
+        'two lines."""',
+        "",
+        "# a comment",
+        "import os  # a trailing comment leaves its line a code line",
+        "",
+        "def f():",
+        "    '''Function docstring.'''",
+        "    return 1",
+        "",
+        'SQL = """',
+        "SELECT 1",
+        '"""',
+        "",
+    ])
+    assert code_lines(src) == 6
 
 
 def test_time_queries_never_times_an_errored_name():

@@ -517,3 +517,26 @@ def test_vacuum_eligibility_accounting_closes(spark):
             r.retained_dead_bytes,
         ) == tuple(e)
         assert r.n_live + r.n_tombstoned == r.n_files
+
+
+def test_hilbert_advisor_zorder_and_linear_rows_equal_zorder_advisor(spark):
+    """Both skipping advisors share one implementation: the hilbert advisor's
+    zorder and linear rows are the zorder advisor's four rows."""
+    z = lakehouse.q_zorder_skipping(spark, SF_SMOKE).collect()
+    h = lakehouse.q_hilbert_skipping(spark, SF_SMOKE).filter("layout != 'hilbert'")
+    assert len(z) == 4
+    assert sorted(map(tuple, h.collect())) == sorted(map(tuple, z))
+
+
+def test_encoding_stats_forms_agree_on_counts(spark):
+    """The global and sharded encoding readouts differ only in run counts
+    (a run boundary at each shard edge): every audited column has the
+    same row count and distinct count in both."""
+
+    def counts(q):
+        df = q(spark, SF_SMOKE).select("col_name", "n", "n_distinct")
+        return sorted(map(tuple, df.collect()))
+
+    glob = counts(lakehouse.q_encoding_stats)
+    assert len(glob) == 4
+    assert glob == counts(lakehouse.q_encoding_stats_sharded)

@@ -583,3 +583,23 @@ def test_scorer_is_memoized_per_model_and_freed_with_it(model):
     del other
     gc.collect()
     assert len(serving._SCORERS) == n - 1
+
+
+def test_lineitem_model_refits_after_in_place_table_rewrite(spark, tmp_path):
+    """The fitted-model memo keys on the lineitem file stamp: rewriting the
+    table in place with other rows must refit, not serve the old model."""
+    import pyarrow.parquet as pq
+
+    from conftest import SF_SMOKE
+    from kafka_pyspark_bigdata_spark.ml import queries as mlq
+
+    rows = pq.read_table(f"{SF_SMOKE}/lineitem.parquet")
+    path = tmp_path / "lineitem.parquet"
+    pq.write_table(rows.slice(0, 1000), path)
+    first = mlq._lineitem_model(spark, str(tmp_path))
+    assert mlq._lineitem_model(spark, str(tmp_path)) is first
+
+    pq.write_table(rows.slice(1000, 2000), path)
+    second = mlq._lineitem_model(spark, str(tmp_path))
+    assert second is not first
+    assert mlq._lineitem_model(spark, str(tmp_path)) is second
