@@ -14,6 +14,9 @@ Input-side cast double→decimal is itself deterministic across engines as
 long as the value is not exactly on a rounding boundary — impossible for a
 binary double vs a decimal half-ulp except for short binary fractions, which
 the fixture generators don't produce.
+
+``md5_int`` is the one Spark spelling of a content-addressed integer (an
+md5 hex prefix read as BIGINT), the hash both engines compute alike.
 """
 
 from __future__ import annotations
@@ -50,6 +53,18 @@ def cents(col: Column | str) -> Column:
 def dsum_expr(expr: Column) -> Column:
     """Order-independent SUM of a pre-built decimal expression."""
     return F.sum(expr).cast("double")
+
+
+def md5_int(col: Column | str, n: int, start: int = 1) -> Column:
+    """The ``n`` hex digits of md5(col) from position ``start``, read as a
+    BIGINT: the content-addressed integer behind every engine-portable
+    sampler, sketch and bucket (DuckDB spells it
+    ``('0x' || substr(md5(x), start, n))::BIGINT``). ``n`` <= 15 keeps it
+    non-negative."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.conv(
+        F.substring(F.md5(F.encode(c.cast("string"), "UTF-8")), start, n), 16, 10
+    ).cast("bigint")
 
 
 # --- ANSI-SQL mirrors for the DuckDB oracle -------------------------------

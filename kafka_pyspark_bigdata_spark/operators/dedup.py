@@ -58,7 +58,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import cents
+from ..functions.numeric import cents, md5_int
 from ..sources.batch import app_memo, load_table, parallelize_scan
 from .text import NORMALIZED_SQL, TOKENS_SQL, normalized_text_expr, with_tokens
 
@@ -104,7 +104,13 @@ COSINE_DUP_THRESHOLD = 0.45
 def with_shingles(df: DataFrame) -> DataFrame:
     """Distinct word-3-gram shingles; docs with <3 tokens are dropped (no
     shingle support). The scan is re-parallelized first: shingling +
-    hashing is the compute-heavy part of every dedup operator."""
+    hashing is the compute-heavy part of every dedup operator.
+
+    The shingle expression must not fail on a shorter document: Catalyst
+    may evaluate it inside a Filter ahead of the ``size >= 3`` guard (a
+    common subexpression of the predicate), where ``sequence(0, -3)``
+    descends and ``toks[0]`` of an empty array is an ANSI error. ``get``
+    is NULL out of bounds instead, and identical in bounds."""
     return (
         with_tokens(parallelize_scan(df))
         .filter(F.size("toks") >= 3)
@@ -112,7 +118,7 @@ def with_shingles(df: DataFrame) -> DataFrame:
             "shingles",
             F.expr(
                 "array_distinct(transform(sequence(0, size(toks)-3),"
-                " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"
+                " i -> concat_ws(' ', get(toks, i), get(toks, i+1), get(toks, i+2))))"
             ),
         )
     )
@@ -628,10 +634,7 @@ def minhash_sigs(sh: DataFrame) -> DataFrame:
     aggregation (the one-hash minhash trick; integer mul-add-mod
     replaces 15 of the 16 md5 evaluations in the hot loop)."""
     exploded = sh.select("doc_id", F.explode("shingles").alias("s")).select(
-        "doc_id",
-        F.conv(F.substring(F.md5(F.encode("s", "UTF-8")), 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("h"),
+        "doc_id", md5_int("s", 8).alias("h")
     )
     return exploded.groupBy("doc_id").agg(
         *[
@@ -860,9 +863,7 @@ def _simhash(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
     partial-agg — fully distributed, one shuffle on doc_id."""
     docs = with_tokens(load_table(spark, sf_dir, "documents"))
     tok = docs.select("doc_id", F.explode(F.array_distinct("toks")).alias("tok"))
-    h = F.conv(
-        F.substring(F.md5(F.encode("tok", "UTF-8")), 1, bits // 4), 16, 10
-    ).cast("bigint")
+    h = md5_int("tok", bits // 4)
     votes = tok.select("doc_id", h.alias("h")).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tok"),
         *[F.sum(F.expr(f"(h >> {b}) & 1")).alias(f"o{b}") for b in range(bits)],
@@ -3286,11 +3287,7 @@ def graph_hyperball_nf(spark: SparkSession, sf_dir: str) -> DataFrame:
     round is in.
     """
     edges = _undirected(dup_pairs(spark, sf_dir)).localCheckpoint(eager=False)
-    h = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("h")
-    )
+    h = md5_int("doc_id", 8).alias("h")
     reg = (
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.numeric import md5_int
 from ..sources.batch import load_table
 
 # Synthetic world: a 0.1° × 0.1° region (100_000 µdeg per axis).
@@ -37,11 +38,7 @@ def _coords(user_col: str = "user_id") -> tuple[Column, Column]:
     """Deterministic synthetic coordinates: 48 bits of md5(user_id),
     split into lat/lon microdegree offsets inside the synthetic region.
     Engine-portable (md5 + integer ops only)."""
-    h = F.conv(
-        F.substring(F.md5(F.encode(F.col(user_col).cast("string"), "UTF-8")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_int(user_col, 12)
     return (
         (h % GEO_SPAN).alias("lat"),
         ((h / GEO_SPAN).cast("bigint") % GEO_SPAN).alias("lon"),

@@ -11,6 +11,15 @@ expression trees (zero Python UDFs) with value-exact DuckDB oracles.
 
 Scale notes per operator are on the functions; the common pattern is
 narrow projection → (optionally) one key shuffle, nothing quadratic.
+
+Token, bigram and stopword rules come from ``operators.text``
+(``with_tokens``, ``token_rows``, ``bigrams_expr``, ``stop_count``,
+``sql_list``), Gopher's word rules from ``quality.gopher_word_rules``,
+and the md5 hex-prefix integer from ``functions.numeric.md5_int``. Two
+skeletons shared by queries here have one home each: ``size_rank0``
+(the two-phase global size rank) and ``source_weight`` (the per-source
+mixture weight). A zero-token document contributes 0 tokens to every
+token total here and is never divided by.
 """
 
 from __future__ import annotations
@@ -19,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.numeric import md5_int
 from ..sources.batch import load_table
 from .dedup import (
     MINHASH_VERIFY_THRESHOLD,
@@ -27,11 +37,24 @@ from .dedup import (
     dup_pairs,
     with_shingles,
 )
+from .quality import (
+    _GOPHER_STOP_SQL,
+    GOPHER_MAX_WORDS,
+    GOPHER_MIN_WORDS,
+    GOPHER_STOPWORDS,
+    gopher_word_rules,
+)
 from .text import (
     EN_STOPWORDS,
+    NORMALIZED_SQL,
     _STOP_SQL,
     TOKENS_SQL,
+    bigrams_expr,
     load_documents,
+    normalized_text_expr,
+    sql_list,
+    stop_count,
+    token_rows,
     tokens_expr,
     with_tokens,
 )
@@ -46,10 +69,7 @@ def hash_bucket_expr(col: str = "doc_id", buckets: int = SAMPLE_BUCKETS) -> Colu
     """Deterministic bucket in [0, buckets): first 4 hex chars of
     md5(CAST(id AS string)) mod buckets. Stable across engines, runs and
     partitionings — the content-addressed alternative to rand() sampling."""
-    h = F.conv(
-        F.substring(F.md5(F.encode(F.col(col).cast("string"), "UTF-8")), 1, 4), 16, 10
-    ).cast("bigint")
-    return (h % buckets).cast("int")
+    return (md5_int(col, 4) % buckets).cast("int")
 
 
 def _bucket_sql(col: str = "doc_id", buckets: int = SAMPLE_BUCKETS) -> str:
@@ -192,8 +212,8 @@ def text_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the value avoids cross-engine libm ulp drift (exact integer ops +
     one double multiply/divide). Term stats are ONE explode + partial-agg
     pass; the scalar N is a broadcast one-row join; top-k is TakeOrdered."""
-    docs = with_tokens(load_table(spark, sf_dir, "documents"))
-    terms = docs.select("doc_id", F.explode("toks").alias("term")).filter(
+    docs = load_table(spark, sf_dir, "documents")
+    terms = token_rows(docs, "doc_id", alias="term").filter(
         ~F.col("term").isin(*EN_STOPWORDS)
     )
     stats = terms.groupBy("term").agg(
@@ -282,12 +302,8 @@ def corpus_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "bucket", hash_bucket_expr()
     )
-    rate = (
-        F.lit(1)
-        + F.pmod(F.substring("source", 4, 10).try_cast("int"), F.lit(9))
-    ).cast("int")
     return (
-        docs.withColumn("rate", rate)
+        docs.withColumn("rate", source_weight().cast("int"))
         .groupBy("source", "rate")
         .agg(
             F.count("*").alias("n_total"),
@@ -295,6 +311,12 @@ def corpus_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
+
+
+def source_weight() -> Column:
+    """The fixture's per-source mixture weight: 1 + (N mod 9) for source
+    ``srcN`` (a real pipeline joins a weight table instead)."""
+    return F.lit(1) + F.pmod(F.substring("source", 4, 10).try_cast("int"), F.lit(9))
 
 
 _MIX_RATE_SQL = "CAST(1 + CAST(substr(source, 4) AS INTEGER) % 9 AS INTEGER)"
@@ -326,8 +348,6 @@ def corpus_preprocess_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. Catalyst pipelines the flags through — a doc is scanned ONCE
     end to end, which is the point: at 100 TB, every materialized
     intermediate between pipeline stages is a full-corpus write."""
-    from .text import normalized_text_expr
-
     docs = load_table(spark, sf_dir, "documents")
     flagged = docs.select(
         "doc_id",
@@ -368,7 +388,7 @@ WITH flagged AS (
          len({TOKENS_SQL}) AS n_toks,
          (n_chars >= {PREP_MIN_CHARS}
           AND len({TOKENS_SQL}) >= {PREP_MIN_TOKS}) AS pass_quality,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+         md5({NORMALIZED_SQL}) AS fp
   FROM documents
 ),
 ranked AS (
@@ -409,15 +429,11 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     after is arithmetic on the tiny dimension. All integers (targets via
     BIGINT DIV, epochs in ppm) — engine-exact."""
     docs = with_tokens(load_table(spark, sf_dir, "documents"))
-    weight = (
-        F.lit(1)
-        + F.pmod(F.substring("source", 4, 10).try_cast("int"), F.lit(9))
-    ).cast("long")
     per_src = (
         docs.select("source", F.size("toks").alias("n_toks"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_toks").alias("toks_have"))
-        .withColumn("weight", weight)
+        .withColumn("weight", source_weight().cast("long"))
     )
     wtot = per_src.agg(F.sum("weight").alias("w_total"))
     return (
@@ -428,9 +444,10 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             "toks_have",
             "weight",
             F.expr(f"weight * {TOKEN_BUDGET} DIV w_total").alias("toks_target"),
+            # NULL, as in DuckDB, for a source of only zero-token docs
             F.expr(
                 f"(weight * {TOKEN_BUDGET} DIV w_total) * 1000000"
-                " DIV toks_have"
+                " DIV nullif(toks_have, 0)"
             ).alias("epochs_ppm"),
         )
         .orderBy("source")
@@ -585,6 +602,25 @@ FROM ranked GROUP BY source ORDER BY source
 N_SHARDS = 8
 
 
+def size_rank0(docs: DataFrame, descending: bool = False) -> DataFrame:
+    """``docs`` (with doc_id, n_chars) plus ``rank0``: each document's
+    0-based global rank by (n_chars, doc_id), n_chars descending if
+    asked — computed two-phase, with no single-task sort: bucket docs by
+    ``n_chars DIV 64``, turn the tiny per-bucket count table into rank
+    offsets with one cumulative window, and rank WITHIN each bucket (a
+    bucket-partitioned window). Size ties cannot straddle a bucket
+    boundary, so offset + in-bucket rank IS the global rank."""
+    order = F.desc if descending else F.asc
+    docs = docs.withColumn("b", F.expr("n_chars DIV 64"))
+    per_b = docs.groupBy("b").agg(F.count(F.lit(1)).alias("bn"))
+    wb = Window.orderBy(order("b")).rowsBetween(Window.unboundedPreceding, 0)
+    offsets = per_b.select("b", (F.sum("bn").over(wb) - F.col("bn")).alias("roff"))
+    win = Window.partitionBy("b").orderBy(order("n_chars"), "doc_id")
+    return docs.join(F.broadcast(offsets), "b").withColumn(
+        "rank0", F.col("roff") + F.row_number().over(win) - 1
+    )
+
+
 def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-balanced training-shard manifest: assign every document to
     one of {N_SHARDS} output shards so shard sizes come out nearly
@@ -600,33 +636,14 @@ def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ideal equal split in ppm; the complement of ``corpus_pack_greedy``
     (which packs a sequence dimension, not output files).
 
-    Scale: the global size rank is computed DISTRIBUTED, two-phase — no
-    single-task sort anywhere: (1) bucket docs by size range
-    (``n_chars DIV 64``), count per bucket, and turn the tiny per-bucket
-    table into rank offsets with one post-aggregate cumulative window;
-    (2) rank WITHIN each bucket (a bucket-partitioned window — parallel
-    across buckets) and add the bucket's offset. Size ties can't straddle
-    a bucket boundary, so offset + within-bucket rank IS the global
-    (n_chars DESC, doc_id) rank, row for row. Everything after is a
-    {N_SHARDS}-key aggregate. The manifest itself (doc → shard) stays
-    distributed — this query returns only the audit."""
+    Scale: the global (n_chars DESC, doc_id) rank is ``size_rank0``'s
+    distributed two-phase rank, with no single-task sort anywhere.
+    Everything after is a {N_SHARDS}-key aggregate. The manifest itself
+    (doc → shard) stays distributed — this query returns only the
+    audit."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    docs = docs.withColumn("b", F.expr("n_chars DIV 64"))
-    per_b = docs.groupBy("b").agg(F.count(F.lit(1)).alias("bn"))
-    wb = Window.orderBy(F.desc("b")).rowsBetween(Window.unboundedPreceding, 0)
-    offsets = per_b.select(
-        "b", (F.sum("bn").over(wb) - F.col("bn")).alias("roff")
-    )
-    win = Window.partitionBy("b").orderBy(F.desc("n_chars"), "doc_id")
-    assigned = (
-        docs.join(F.broadcast(offsets), "b")
-        .select(
-            "doc_id",
-            "n_chars",
-            ((F.col("roff") + F.row_number().over(win) - 1) % N_SHARDS).alias(
-                "shard"
-            ),
-        )
+    assigned = size_rank0(docs, descending=True).select(
+        "doc_id", "n_chars", (F.col("rank0") % N_SHARDS).alias("shard")
     )
     shards = assigned.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -698,10 +715,8 @@ def corpus_importance_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"LEAST(CAST(1000000 AS BIGINT),"
             f" n_chars * {IMP_HALF_PPM} DIV avg_chars)"
         ).alias("keep_ppm"),
-        F.expr(
-            "CAST(CONV(SUBSTRING(md5(CAST(doc_id AS STRING)), 1, 5), 16, 10)"
-            " AS BIGINT) * 1000000 DIV 1048576"
-        ).alias("u_ppm"),
+        # h·10⁶ DIV 2²⁰ as a shift: h is non-negative
+        F.shiftright(md5_int("doc_id", 5) * 1000000, 20).alias("u_ppm"),
     )
     return (
         scored.groupBy("source")
@@ -849,19 +864,12 @@ def corpus_upsampling_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the handful of source rows (metadata scale). At 100 TB the plan is
     the same: the allocator's input is the per-source ledger, never
     the corpus."""
-    from .quality import GOPHER_MAX_WORDS, GOPHER_MIN_WORDS, GOPHER_STOPWORDS
-
     docs = with_tokens(load_documents(spark, sf_dir))
+    r_wordcount, r_stopwords = gopher_word_rules(
+        F.size("toks"), stop_count(GOPHER_STOPWORDS)
+    )
     per_doc = docs.select(
-        "source",
-        F.size("toks").alias("nw"),
-        (
-            F.size("toks").between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS)
-            & (
-                F.size(F.filter("toks", lambda t: t.isin(*GOPHER_STOPWORDS)))
-                >= 2
-            )
-        ).alias("ok"),
+        "source", F.size("toks").alias("nw"), (r_wordcount & r_stopwords).alias("ok")
     )
     src = (
         per_doc.groupBy("source")
@@ -913,9 +921,6 @@ def corpus_upsampling_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _upsampling_sql() -> str:
-    from .quality import GOPHER_MAX_WORDS, GOPHER_MIN_WORDS, GOPHER_STOPWORDS
-
-    gstop = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
     return f"""
 WITH tok AS (
   SELECT source, {TOKENS_SQL} AS toks FROM documents
@@ -923,7 +928,7 @@ WITH tok AS (
 per_doc AS (
   SELECT source, len(toks) AS nw,
          (len(toks) BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS}
-          AND len(list_filter(toks, t -> t IN ({gstop}))) >= 2) AS ok
+          AND len(list_filter(toks, t -> t IN ({_GOPHER_STOP_SQL}))) >= 2) AS ok
   FROM tok
 ),
 src AS (
@@ -1333,33 +1338,21 @@ def corpus_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     [min, max n_chars] — the audit that the curriculum is monotone and
     no source is starved in early phases.
 
-    Scale: the global rank is the shard-manifest two-phase construction
-    — bucket by ``n_chars DIV 64``, turn the tiny per-bucket count
-    table into offsets with one post-aggregate window, rank within
-    buckets only (ties cannot straddle a bucket boundary) — so there is
-    no whole-corpus window; the 1-row n_docs rides a broadcast cross
-    join and the output is ({CURRICULUM_PHASES} × sources) rows."""
+    Scale: the global rank is ``size_rank0``'s two-phase construction,
+    so there is no whole-corpus window; the 1-row n_docs rides a
+    broadcast cross join and the output is ({CURRICULUM_PHASES} ×
+    sources) rows."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    docs = docs.withColumn("b", F.expr("n_chars DIV 64"))
-    per_b = docs.groupBy("b").agg(F.count(F.lit(1)).alias("bn"))
-    wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    offsets = per_b.select(
-        "b", (F.sum("bn").over(wb) - F.col("bn")).alias("roff")
-    )
     total = docs.agg(F.count(F.lit(1)).alias("n_docs_total"))
     return (
-        docs.join(F.broadcast(offsets), "b")
+        size_rank0(docs)
         .crossJoin(F.broadcast(total))
         .select(
             "source",
             "n_chars",
-            F.expr(
-                f"(roff + (ROW_NUMBER() OVER (PARTITION BY b ORDER BY"
-                f" n_chars, doc_id)) - 1) * {CURRICULUM_PHASES}"
-                f" DIV n_docs_total"
-            ).alias("phase"),
+            F.expr(f"rank0 * {CURRICULUM_PHASES} DIV n_docs_total").alias("phase"),
         )
         .groupBy("phase", "source")
         .agg(
@@ -1645,10 +1638,7 @@ def corpus_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_tokens(load_documents(spark, sf_dir))
     ledger = docs.groupBy("source").agg(
         F.expr("CAST(SUM(size(toks)) AS BIGINT)").alias("tokens"),
-        F.expr(
-            f"CAST(SUM(size(filter(toks, t -> t IN ({_STOP_SQL}))))"
-            f" AS BIGINT)"
-        ).alias("stop_tokens"),
+        F.sum(stop_count()).alias("stop_tokens"),
     )
     totals = ledger.agg(
         F.sum("tokens").alias("t_all"),
@@ -1747,7 +1737,7 @@ CORPUS_DOREMI_SQL = _doremi_sql()
 # a real signal).
 DSIR_BUCKETS = 64
 DSIR_TARGET_SOURCES = ("src0", "src1", "src2", "src3")
-_DSIR_TGT_SQL = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
+_DSIR_TGT_SQL = sql_list(DSIR_TARGET_SOURCES)
 
 
 def corpus_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1793,25 +1783,20 @@ def corpus_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "source",
+            # unigrams ++ adjacent bigrams (a 1-token doc has none)
             F.explode(
-                F.expr(
-                    "concat(toks, CASE WHEN size(toks) >= 2 THEN"
-                    " transform(sequence(1, size(toks) - 1),"
-                    "  i -> concat(element_at(toks, CAST(i AS INT)), ' ',"
-                    "              element_at(toks, CAST(i + 1 AS INT))))"
-                    " ELSE CAST(array() AS ARRAY<STRING>) END)"
+                F.concat(
+                    "toks",
+                    F.when(F.size("toks") >= 2, bigrams_expr()).otherwise(
+                        F.expr("CAST(array() AS ARRAY<STRING>)")
+                    ),
                 )
             ).alias("g"),
         )
         .select(
             "doc_id",
             "source",
-            (
-                F.conv(
-                    F.substring(F.md5(F.encode("g", "UTF-8")), 1, 8), 16, 10
-                ).cast("long")
-                % DSIR_BUCKETS
-            ).alias("bucket"),
+            (md5_int("g", 8) % DSIR_BUCKETS).alias("bucket"),
             F.col("source")
             .isin(*DSIR_TARGET_SOURCES)
             .cast("long")

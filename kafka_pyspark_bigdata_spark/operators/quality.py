@@ -13,15 +13,35 @@ length/punctuation scoring:
 Both stay engine-exact: counts are integers, ratios are single double
 divisions of integers, and redaction is pure regexp_replace — so the
 DuckDB oracle hash-verifies values, not just shapes.
+
+The token rules come from ``operators.text``: ``with_tokens``,
+``stop_count``, ``token_chars`` (the token-length sum) and the bigram
+fluency score (``bigram_docs`` + ``bigram_lm_scores``). A zero-token
+document therefore has a NULL token-length sum, so a rule on it (the
+mean word length of ``corpus_filter_verdict`` and
+``quality_gopher_rules``) is NULL, neither passed nor counted, as in the
+oracle. ``gopher_word_rules`` is the one home of Gopher's word-count and
+stopword rules, which ``pipeline.corpus_upsampling_epochs`` reuses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .text import TOKENS_SQL, load_documents, with_tokens
+from .text import (
+    TOKENS_SQL,
+    bigram_docs,
+    bigram_lm_scores,
+    load_documents,
+    sql_list,
+    stop_count,
+    token_chars,
+    with_tokens,
+)
 
 # ---------------------------------------------------------------------------
 # text_repetition — Gopher-style repetition stats
@@ -241,7 +261,7 @@ def corpus_filter_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_tokens(load_documents(spark, sf_dir))
     n = F.size("toks")
     n_dist = F.size(F.array_distinct("toks"))
-    sum_len = F.aggregate("toks", F.lit(0), lambda acc, t: acc + F.length(t))
+    sum_len = token_chars()
     r_len = (n >= FILTER_MIN_WORDS) & (n <= FILTER_MAX_WORDS)
     r_lang = F.col("lang") == "en"
     r_dup = (n - n_dist) * 100 <= F.lit(FILTER_MAX_DUP_PCT) * n
@@ -363,9 +383,15 @@ GROUP BY 1, 2 ORDER BY lang
 # Rae et al. 2021 ("Scaling Language Models: ... Gopher"), Appendix A1.1:
 # a document must contain >= 2 of these 8 English function words.
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
-_GOPHER_STOP_SQL = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
+_GOPHER_STOP_SQL = sql_list(GOPHER_STOPWORDS)
 GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
+
+
+def gopher_word_rules(nw: Column, ns: Column) -> tuple[Column, Column]:
+    """Gopher's word-count rule (``nw`` words in [50, 100 000]) and
+    stopword rule (``ns`` >= 2 GOPHER_STOPWORDS hits)."""
+    return nw.between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS), ns >= 2
 
 
 def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,9 +419,9 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = with_tokens(load_documents(spark, sf_dir))
     n_words = F.size("toks")
-    sum_len = F.aggregate("toks", F.lit(0), lambda acc, t: acc + F.length(t))
+    sum_len = token_chars()
     n_alpha = F.size(F.filter("toks", lambda t: t.rlike("[a-z]")))
-    n_stopw = F.size(F.filter("toks", lambda t: t.isin(*GOPHER_STOPWORDS)))
+    n_stopw = stop_count(GOPHER_STOPWORDS)
     n_hash = F.length("text") - F.length(F.replace(F.col("text"), F.lit("#")))
     n_ellipsis = (
         F.length("text") - F.length(F.replace(F.col("text"), F.lit("...")))
@@ -407,33 +433,26 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_alpha.alias("na"),
         n_stopw.alias("ns"),
         (n_hash + n_ellipsis.cast("int")).alias("nsym"),
-    ).select(
+    )
+    r_wordcount, r_stopwords = gopher_word_rules(F.col("nw"), F.col("ns"))
+    per_doc = per_doc.select(
         "source",
-        F.col("nw").between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS).alias("r_wordcount"),
+        r_wordcount.alias("r_wordcount"),
         ((F.lit(3) * F.col("nw") <= F.col("sl")) & (F.col("sl") <= F.lit(10) * F.col("nw"))).alias(
             "r_meanwordlen"
         ),
         (F.lit(5) * F.col("na") >= F.lit(4) * F.col("nw")).alias("r_alphafrac"),
         (F.lit(10) * F.col("nsym") <= F.col("nw")).alias("r_symbolratio"),
-        (F.col("ns") >= 2).alias("r_stopwords"),
+        r_stopwords.alias("r_stopwords"),
     )
-    pass_all = (
-        F.col("r_wordcount")
-        & F.col("r_meanwordlen")
-        & F.col("r_alphafrac")
-        & F.col("r_symbolratio")
-        & F.col("r_stopwords")
-    )
+    rules = ("wordcount", "meanwordlen", "alphafrac", "symbolratio", "stopwords")
+    pass_all = reduce(lambda a, b: a & b, [F.col(f"r_{r}") for r in rules])
     return (
         per_doc.withColumn("all_ok", pass_all)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("r_wordcount").cast("bigint")).alias("pass_wordcount"),
-            F.sum(F.col("r_meanwordlen").cast("bigint")).alias("pass_meanwordlen"),
-            F.sum(F.col("r_alphafrac").cast("bigint")).alias("pass_alphafrac"),
-            F.sum(F.col("r_symbolratio").cast("bigint")).alias("pass_symbolratio"),
-            F.sum(F.col("r_stopwords").cast("bigint")).alias("pass_stopwords"),
+            *[F.sum(F.col(f"r_{r}").cast("bigint")).alias(f"pass_{r}") for r in rules],
             F.sum(pass_all.cast("bigint")).alias("n_pass_all"),
         )
         .withColumn(
@@ -579,11 +598,7 @@ def quality_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "toks",
         F.size("toks").alias("n_toks"),
-        F.aggregate(
-            F.transform("toks", F.length),
-            F.lit(0).cast("bigint"),
-            lambda a, x: a + x,
-        ).alias("total_chars"),
+        token_chars().alias("total_chars"),
     # base feeds the chunk frame and the gram frame — pin it so the
     # tokenize tree derives once (r12: the coverage join consumer is
     # gone; toks now rides through the chunk frame instead).
@@ -827,16 +842,11 @@ def quality_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     keep = F.when(
-        F.lit(True)
-        & (F.col("dup_line_ppm") <= GOPHER_REP_MAX_PPM["dup_line_ppm"])
-        & (F.col("dup_para_ppm") <= GOPHER_REP_MAX_PPM["dup_para_ppm"])
-        & (F.col("dup_line_char_ppm") <= GOPHER_REP_MAX_PPM["dup_line_char_ppm"])
-        & (F.col("dup_para_char_ppm") <= GOPHER_REP_MAX_PPM["dup_para_char_ppm"])
-        & (F.col("top2_char_ppm") <= GOPHER_REP_MAX_PPM["top2_char_ppm"])
-        & (F.col("top3_char_ppm") <= GOPHER_REP_MAX_PPM["top3_char_ppm"])
-        & (F.col("top4_char_ppm") <= GOPHER_REP_MAX_PPM["top4_char_ppm"])
-        & (F.col("dup5_char_ppm") <= GOPHER_REP_MAX_PPM["dup5_char_ppm"])
-        & (F.col("dup10_char_ppm") <= GOPHER_REP_MAX_PPM["dup10_char_ppm"]),
+        reduce(
+            lambda a, b: a & b,
+            [F.col(c) <= mx for c, mx in GOPHER_REP_MAX_PPM.items()],
+            F.lit(True),
+        ),
         1,
     ).otherwise(0)
     return out.withColumn("keep", keep).orderBy("doc_id")
@@ -1170,43 +1180,13 @@ def quality_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (already aggregated, ~1e9 rows per trillion tokens, not data-
     sized), the same shape CCNet runs with its fasttext LM scores.
     """
-    from .text import tokens_expr
-
     # (r12: localCheckpoint pins on tokd and doc_bgs were tried for the
     # repeated tokenize/explode map trees and REVERTED — materializing
     # the token arrays cost more than re-deriving them: 1.95 → 2.67 s
     # at sf0.1 in the A/B harness.)
-    tokd = (
-        load_documents(spark, sf_dir)
-        .select("doc_id", "lang", "n_chars", tokens_expr().alias("toks"))
-        .filter(F.size("toks") >= 2)
-    )
-    doc_bgs = tokd.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-            )
-        ).alias("bg"),
-    )
-    bg_counts = doc_bgs.groupBy("bg").agg(F.count(F.lit(1)).alias("bg_count"))
-    total = bg_counts.agg(F.sum("bg_count").alias("total_bg"))
-    scores = (
-        doc_bgs.join(bg_counts, "bg")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("bg_count").alias("sum_counts"),
-        )
-        .crossJoin(F.broadcast(total))
-        .select(
-            "doc_id",
-            F.expr(
-                "CAST(CAST(sum_counts AS DECIMAL(38,0)) * 1000000"
-                " DIV (n_bigrams * total_bg) AS BIGINT)"
-            ).alias("score_ppm"),
-        )
+    tokd = bigram_docs(spark, sf_dir, "lang", "n_chars")
+    scores = bigram_lm_scores(tokd).select(
+        "doc_id", F.col("mean_bg_ppm").alias("score_ppm")
     )
     w = Window.partitionBy("lang").orderBy(
         F.desc("score_ppm"), F.asc("doc_id")

@@ -8,6 +8,23 @@ aggregation is explicitly requested. At 100 TB these are scan-bound ops.
 
 Tokenization contract (shared with the DuckDB oracles and the dedup
 module): lowercase, split on runs of whitespace, drop empty tokens.
+
+This module is the one home of the rules the corpus-text family
+(``text``, ``quality``, ``pipeline``) shares: ``tokens_expr`` /
+``with_tokens`` / ``token_rows`` (the token array, one row per token),
+``bigram_docs`` / ``bigrams_expr`` / ``bigram_lm_scores`` (adjacent-token
+bigrams and the corpus-bigram fluency score), ``stop_count`` /
+``langid_expr`` (stopword hits and the stopword-ratio language rule),
+``token_chars`` (the sum of token lengths), ``per_token`` (a per-token
+ratio), ``bpe_pieces`` / ``CHAR_PAIRS_SQL`` / ``_bpe_decode`` (BPE
+pre-tokenizer pieces, a token's adjacent-character pairs, placeholder
+decoding) and ``sql_list`` (a quoted SQL IN-list).
+
+Zero-token documents (empty or whitespace-only text) get the oracle's
+NULL semantics, not an error: ``token_chars`` of no tokens is NULL, as
+DuckDB's ``list_sum([])`` is, and ``per_token`` over zero tokens is
+NULL, as DuckDB's ``x / 0`` is. A ratio, score or rule built on them is
+NULL for such a document.
 """
 
 from __future__ import annotations
@@ -16,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.numeric import md5_int
 from ..sources.batch import load_table, parallelize_scan
 
 
@@ -24,9 +42,15 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (single small file locally; no-op on a real multi-split table)."""
     return parallelize_scan(load_table(spark, sf_dir, "documents"))
 
+
+def sql_list(values) -> str:
+    """``values`` as a quoted SQL IN-list: ``'a', 'b'``."""
+    return ", ".join(f"'{v}'" for v in values)
+
+
 # Tiny embedded stopword list for the n-gram/stopword language heuristic.
 EN_STOPWORDS = ("the", "a", "of", "to", "in", "is", "and")
-_STOP_SQL = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
+_STOP_SQL = sql_list(EN_STOPWORDS)
 # Classification threshold: fraction of tokens that are English stopwords.
 LANGID_THRESHOLD = 0.05
 
@@ -44,6 +68,41 @@ def with_tokens(df: DataFrame) -> DataFrame:
     return df.withColumn("toks", tokens_expr())
 
 
+def token_rows(df: DataFrame, *keep, alias: str = "tok") -> DataFrame:
+    """``keep`` plus one row per token of ``text``, named ``alias`` (the
+    tokenizer runs inside the generator)."""
+    return df.select(*keep, F.explode(tokens_expr()).alias(alias))
+
+
+def stop_count(words: tuple[str, ...] = EN_STOPWORDS) -> Column:
+    """Number of a ``toks`` row's tokens that are in ``words``."""
+    return F.size(F.filter("toks", lambda t: t.isin(*words)))
+
+
+def per_token(num: Column) -> Column:
+    """``num`` per token of a ``toks`` row, as a double; NULL for a
+    zero-token document (DuckDB's ``x / 0``)."""
+    return F.try_divide(num.cast("double"), F.size("toks"))
+
+
+def langid_expr() -> Column:
+    """The stopword-ratio language rule: 'en' when stopwords are at least
+    LANGID_THRESHOLD of the tokens, else 'other' (so also for a
+    zero-token document, whose ratio is NULL)."""
+    return F.when(
+        per_token(stop_count()) >= F.lit(LANGID_THRESHOLD), F.lit("en")
+    ).otherwise(F.lit("other"))
+
+
+def token_chars(length=F.length) -> Column:
+    """Σ ``length`` over a ``toks`` row's tokens as a BIGINT; NULL when it
+    has none, as DuckDB's ``list_sum([])`` is."""
+    return F.when(
+        F.size("toks") > 0,
+        F.aggregate("toks", F.lit(0).cast("bigint"), lambda a, t: a + length(t)),
+    )
+
+
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (whitespace tokenizer): counts, uniques, mean length.
 
@@ -54,12 +113,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size("toks").alias("n_tokens"),
         F.size(F.array_distinct("toks")).alias("n_unique_tokens"),
-        (
-            F.aggregate("toks", F.lit(0), lambda acc, t: acc + F.length(t)).cast(
-                "double"
-            )
-            / F.size("toks")
-        ).alias("avg_token_len"),
+        per_token(token_chars()).alias("avg_token_len"),
     ).orderBy("doc_id")
 
 
@@ -79,17 +133,11 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic ratio classifier): share of tokens that are English stopwords;
     >= threshold → 'en'."""
     docs = with_tokens(load_documents(spark, sf_dir))
-    ratio = (
-        F.size(F.filter("toks", lambda t: t.isin(*EN_STOPWORDS))).cast("double")
-        / F.size("toks")
-    )
     return docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        ratio.alias("stopword_ratio"),
-        F.when(ratio >= F.lit(LANGID_THRESHOLD), F.lit("en"))
-        .otherwise(F.lit("other"))
-        .alias("predicted_lang"),
+        per_token(stop_count()).alias("stopword_ratio"),
+        langid_expr().alias("predicted_lang"),
     ).orderBy("doc_id")
 
 
@@ -115,15 +163,10 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines → bit-identical doubles."""
     docs = with_tokens(load_documents(spark, sf_dir))
     n_tok = F.size("toks").cast("double")
-    uniq_ratio = F.size(F.array_distinct("toks")).cast("double") / n_tok
-    avg_len = (
-        F.aggregate("toks", F.lit(0), lambda acc, t: acc + F.length(t)).cast("double")
-        / n_tok
-    )
     score = (
         F.lit(0.4) * F.least(F.lit(1.0), n_tok / F.lit(100.0))
-        + F.lit(0.3) * uniq_ratio
-        + F.lit(0.3) * F.least(F.lit(1.0), avg_len / F.lit(8.0))
+        + F.lit(0.3) * per_token(F.size(F.array_distinct("toks")))
+        + F.lit(0.3) * F.least(F.lit(1.0), per_token(token_chars()) / F.lit(8.0))
     )
     return docs.select(
         "doc_id",
@@ -189,19 +232,29 @@ FROM documents ORDER BY doc_id
 BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
+def bpe_pieces() -> Column:
+    """The BPE pre-tokenizer's pieces of ``text``: BPE_PATTERN matches
+    over the lowercased, whitespace-collapsed text."""
+    return F.expr(
+        f"regexp_extract_all(regexp_replace(lower(text), '\\\\s+', ' '), '{BPE_PATTERN}', 0)"
+    )
+
+
+# A token ``w``'s adjacent-character pairs. ``w`` needs 2+ chars: Spark's
+# sequence(1, 0) DESCENDS to [1, 0] where DuckDB's range is empty.
+CHAR_PAIRS_SQL = "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"
+
+
 def text_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting, BPE-ish regex variant (complements the whitespace
     tokenizer in ``text_token_stats``): piece counts per class — the
     pre-tokenization statistics a tokenizer-training pipeline collects.
     Still a pure expression tree: regexp_extract_all + filters, no UDF."""
     docs = load_documents(spark, sf_dir)
-    pieces = F.expr(
-        f"regexp_extract_all(regexp_replace(lower(text), '\\\\s+', ' '), '{BPE_PATTERN}', 0)"
-    )
     alpha = F.size(F.filter("pieces", lambda p: p.rlike("^[a-z]+$")))
     num = F.size(F.filter("pieces", lambda p: p.rlike("^[0-9]+$")))
     return (
-        docs.withColumn("pieces", pieces)
+        docs.withColumn("pieces", bpe_pieces())
         .select(
             "doc_id",
             F.size("pieces").alias("n_pieces"),
@@ -242,6 +295,17 @@ WINNOW_W = 4          # window of consecutive k-gram hashes
 _WB = 31              # polynomial base
 _WM = 1_000_000_007   # modulus (sum of 8 terms stays < 2^63 pre-mod)
 _W_POWS = [pow(_WB, WINNOW_K - 1 - j) for j in range(WINNOW_K)]
+# character code at gram position i + j of the normalized text
+_ASCII_AT = "CAST(ascii(substr(norm, i + {j}, 1)) AS BIGINT)"
+
+
+def _gram_hash(char: str = _ASCII_AT, suffix: str = "") -> str:
+    """The k-gram polynomial hash at position i, before the modulus:
+    Σ_j char(i + j) · B^(K-1-j), ``char`` formatted with the offset {j};
+    ``suffix`` types the power literals (``L`` for Spark BIGINT)."""
+    return " + ".join(
+        f"{char.format(j=j)} * {_W_POWS[j]}{suffix}" for j in range(WINNOW_K)
+    )
 
 
 def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,13 +322,9 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir).select(
         "doc_id", normalized_text_expr().alias("norm")
     )
-    gram_hash = " + ".join(
-        f"CAST(ascii(substr(norm, i + {j}, 1)) AS BIGINT) * {_W_POWS[j]}L"
-        for j in range(WINNOW_K)
-    )
     hashes = F.expr(
         f"transform(sequence(1, greatest(1, length(norm) - {WINNOW_K - 1})),"
-        f" i -> ({gram_hash}) % {_WM}L)"
+        f" i -> ({_gram_hash(suffix='L')}) % {_WM}L)"
     )
     fps = F.expr(
         f"array_distinct(transform(sequence(1, greatest(1, size(hs) - {WINNOW_W - 1})),"
@@ -287,16 +347,12 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _winnow_sql() -> str:
-    gram_hash = " + ".join(
-        f"CAST(ascii(substr(norm, i + {j}, 1)) AS BIGINT) * {_W_POWS[j]}"
-        for j in range(WINNOW_K)
-    )
     return f"""
 WITH n AS (SELECT doc_id, {NORMALIZED_SQL} AS norm FROM documents),
 h AS (
   SELECT doc_id,
          list_transform(range(1, greatest(1, length(norm) - {WINNOW_K - 1}) + 1),
-                        i -> ({gram_hash}) % {_WM}) AS hs
+                        i -> ({_gram_hash()}) % {_WM}) AS hs
   FROM n
 ),
 f AS (
@@ -363,9 +419,7 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    gram_hash = " + ".join(
-        f"element_at(cs, i + {j}) * {_W_POWS[j]}L" for j in range(WINNOW_K)
-    )
+    gram_hash = _gram_hash("element_at(cs, i + {j})", "L")
     # EXPRESSION-SHAPE CONSTRAINT: each derived array below references its
     # upstream only via WHOLE-ARRAY ops (slice/size/concat/zip_with), never
     # element_at inside a lambda over another sequence. Catalyst's project
@@ -422,17 +476,13 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cdc_sql() -> str:
-    gram_hash = " + ".join(
-        f"CAST(ascii(substr(norm, i + {j}, 1)) AS BIGINT) * {_W_POWS[j]}"
-        for j in range(WINNOW_K)
-    )
     return f"""
 WITH n AS (SELECT doc_id, {NORMALIZED_SQL} AS norm FROM documents
            WHERE length({NORMALIZED_SQL}) > 0),
 h AS (
   SELECT doc_id, norm,
          list_transform(range(1, greatest(1, length(norm) - {WINNOW_K - 1}) + 1),
-                        i -> ({gram_hash}) % {_WM}) AS hs
+                        i -> ({_gram_hash()}) % {_WM}) AS hs
   FROM n
 ),
 b AS (
@@ -505,11 +555,7 @@ def text_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint that used to sit here only added materialization
     I/O — 2.95 → 2.24 s at sf0.1 in the A/B harness.
     """
-    toks = (
-        load_documents(spark, sf_dir)
-        .select("doc_id", F.explode(tokens_expr()).alias("tok"))
-        .distinct()
-    )
+    toks = token_rows(load_documents(spark, sf_dir), "doc_id").distinct()
     # n_docs stays IN-PLAN as a broadcast 1-row aggregate (same pattern as
     # q_mean_impute): an eager .count() here would be a full extra corpus
     # scan per plan build at 100 TB.
@@ -712,7 +758,7 @@ def text_search_and_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEARCH_TERMS_SQL = ", ".join(f"'{t}'" for t in SEARCH_TERMS)
+_SEARCH_TERMS_SQL = sql_list(SEARCH_TERMS)
 TEXT_SEARCH_SQL = f"""
 WITH toks AS (
   SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
@@ -754,13 +800,13 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream), per-term df as a broadcast side, corpus totals as a 1-row
     broadcast, one partial-agg fold per doc, global top-K of a
     SEARCH_TOP-bounded result."""
-    docs = with_tokens(load_documents(spark, sf_dir)).select("doc_id", "toks")
-    lens = docs.select("doc_id", F.size("toks").cast("long").alias("dl"))
+    docs = load_documents(spark, sf_dir)
+    lens = docs.select("doc_id", F.size(tokens_expr()).cast("long").alias("dl"))
     stats = lens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len")
     )
     hits = (
-        docs.select("doc_id", F.explode("toks").alias("term"))
+        token_rows(docs, "doc_id", alias="term")
         .filter(F.col("term").isin(*SEARCH_TERMS))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -830,38 +876,29 @@ LIMIT {SEARCH_TOP}
 """
 
 
-def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fluency scoring by corpus bigram statistics — the log-prob-free
-    stand-in for LM-perplexity filtering (the classic quality gate a
-    training pipeline runs before a real LM is available): each doc is
-    scored by the mean corpus frequency of its adjacent token bigrams,
-    in ppm of the corpus bigram total. Template/boilerplate text scores
-    high, token-salad scores low; the ranking matches what mean
-    per-bigram probability would give, computed as exact integers
-    (DECIMAL(38,0)/HUGEINT for the corpus-scale Σcount·10⁶ product)
-    instead of drift-prone log sums.
-
-    Plan: bigrams materialize per doc as an array transform (no
-    position self-join), counts collapse map-side into the corpus
-    bigram table, and scoring is one shuffle of the doc-bigram stream
-    joined against those counts — the inverted LM-scoring shape whose
-    shuffle carries tokens, never token². The 1-row bigram total rides
-    a broadcast cross join.
-    """
-    tokd = (
+def bigram_docs(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """(doc_id, keep..., toks) of the documents with at least 2 tokens:
+    the input of every adjacent-bigram query."""
+    return (
         load_documents(spark, sf_dir)
-        .select("doc_id", tokens_expr().alias("toks"))
+        .select("doc_id", *keep, tokens_expr().alias("toks"))
         .filter(F.size("toks") >= 2)
     )
-    doc_bgs = tokd.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-            )
-        ).alias("bg"),
-    )
+
+
+def bigrams_expr(pair: str = "concat({a}, ' ', {b})") -> Column:
+    """A ``toks`` row's adjacent-token bigrams, each built by ``pair``
+    from its left token {a} and right token {b}: by default the
+    space-joined string (tokens hold no space, so it splits back
+    exactly). Needs 2+ tokens: sequence(1, 0) descends in Spark."""
+    body = pair.format(a="element_at(toks, i)", b="element_at(toks, i + 1)")
+    return F.expr(f"transform(sequence(1, size(toks) - 1), i -> {body})")
+
+
+def bigram_lm_scores(tokd: DataFrame) -> DataFrame:
+    """(doc_id, n_bigrams, mean_bg_ppm) of a ``bigram_docs`` frame: each
+    doc's mean corpus count of its bigrams, in ppm of all bigrams."""
+    doc_bgs = tokd.select("doc_id", F.explode(bigrams_expr()).alias("bg"))
     bg_counts = doc_bgs.groupBy("bg").agg(F.count(F.lit(1)).alias("bg_count"))
     total = bg_counts.agg(F.sum("bg_count").alias("total_bg"))
     return (
@@ -880,8 +917,28 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " DIV (n_bigrams * total_bg) AS BIGINT)"
             ).alias("mean_bg_ppm"),
         )
-        .orderBy("doc_id")
     )
+
+
+def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fluency scoring by corpus bigram statistics — the log-prob-free
+    stand-in for LM-perplexity filtering (the classic quality gate a
+    training pipeline runs before a real LM is available): each doc is
+    scored by the mean corpus frequency of its adjacent token bigrams,
+    in ppm of the corpus bigram total. Template/boilerplate text scores
+    high, token-salad scores low; the ranking matches what mean
+    per-bigram probability would give, computed as exact integers
+    (DECIMAL(38,0)/HUGEINT for the corpus-scale Σcount·10⁶ product)
+    instead of drift-prone log sums.
+
+    Plan: bigrams materialize per doc as an array transform (no
+    position self-join), counts collapse map-side into the corpus
+    bigram table, and scoring is one shuffle of the doc-bigram stream
+    joined against those counts — the inverted LM-scoring shape whose
+    shuffle carries tokens, never token². The 1-row bigram total rides
+    a broadcast cross join.
+    """
+    return bigram_lm_scores(bigram_docs(spark, sf_dir)).orderBy("doc_id")
 
 
 TEXT_BIGRAM_LM_SQL = f"""
@@ -923,19 +980,10 @@ def text_bpe_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spurious doubled-letter pair ('a' -> 'aa'). DuckDB's generate_series(1, 0)
     # is empty, so the engines diverge (and the pair is semantically wrong for
     # BPE anyway — there is no adjacent pair inside a 1-symbol sequence).
-    toks = (
-        with_tokens(load_documents(spark, sf_dir))
-        .select(F.explode("toks").alias("w"))
-        .filter(F.length("w") >= 2)
+    toks = token_rows(load_documents(spark, sf_dir), alias="w")
+    pairs = toks.filter(F.length("w") >= 2).select(
+        F.explode(F.expr(CHAR_PAIRS_SQL)).alias("pair")
     )
-    pairs = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(w) - 1), "
-                "i -> concat(substring(w, i, 1), substring(w, i + 1, 1)))"
-            )
-        ).alias("pair")
-    ).filter(F.length("pair") == 2)
     return (
         pairs.groupBy("pair")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -972,6 +1020,15 @@ BPE_ROUNDS = 6
 _BPE_PH = "ABCDEF"
 
 
+def _bpe_decode(e: str, k: int) -> str:
+    """``e`` (an expression over round k's symbols) with the placeholders
+    of rules k-1..1 expanded, highest first, by their decoded columns
+    d{j}: a linear-size expression."""
+    for j in range(k - 1, 0, -1):
+        e = f"replace({e}, '{_BPE_PH[j - 1]}', d{j})"
+    return e
+
+
 def text_bpe_multiround(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full multi-round BPE merge TRAINING (Sennrich et al. 2016, §3.2)
     — the iterated form of ``text_bpe_pair_merges``, which learns only
@@ -1005,8 +1062,7 @@ def text_bpe_multiround(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger a tokenizer trainer tracks). All integers and ASCII strings;
     the oracle unrolls the identical rounds as MATERIALIZED CTEs."""
     vocab = (
-        with_tokens(load_documents(spark, sf_dir))
-        .select(F.explode("toks").alias("w"))
+        token_rows(load_documents(spark, sf_dir), alias="w")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("f"))
         .localCheckpoint(eager=False)
@@ -1016,15 +1072,7 @@ def text_bpe_multiround(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in range(1, BPE_ROUNDS + 1):
         pairs = (
             prev.filter(F.length("w") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, length(w) - 1),"
-                        " i -> substring(w, CAST(i AS INT), 2))"
-                    )
-                ).alias("pair"),
-                "f",
-            )
+            .select(F.explode(F.expr(CHAR_PAIRS_SQL)).alias("pair"), "f")
             .groupBy("pair")
             .agg(F.sum("f").alias("n"))
         )
@@ -1055,27 +1103,17 @@ def text_bpe_multiround(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc = best.crossJoin(stat) if acc is None else (
             acc.crossJoin(best).crossJoin(stat)
         )
-        # decoded expansion of rule k: expand placeholders (highest
-        # first) with the PREVIOUS rules' already-decoded expansions —
-        # linear-size expression via the accumulated d{j} columns
-        dexpr = f"p{k}"
-        for j in range(k - 1, 0, -1):
-            dexpr = f"replace({dexpr}, '{_BPE_PH[j - 1]}', d{j})"
-        acc = acc.withColumn(f"d{k}", F.expr(dexpr))
-
-    def _dec_char(k: int, pos: int) -> str:
-        e = f"substring(p{k}, {pos}, 1)"
-        for j in range(k - 1, 0, -1):
-            e = f"replace({e}, '{_BPE_PH[j - 1]}', d{j})"
-        return e
+        # decoded expansion of rule k, from the PREVIOUS rules' already
+        # decoded expansions
+        acc = acc.withColumn(f"d{k}", F.expr(_bpe_decode(f"p{k}", k)))
 
     assert acc is not None
     rows = F.array(
         *[
             F.struct(
                 F.lit(k).alias("merge_round"),
-                F.expr(_dec_char(k, 1)).alias("left_sym"),
-                F.expr(_dec_char(k, 2)).alias("right_sym"),
+                F.expr(_bpe_decode(f"substring(p{k}, 1, 1)", k)).alias("left_sym"),
+                F.expr(_bpe_decode(f"substring(p{k}, 2, 1)", k)).alias("right_sym"),
                 F.col(f"d{k}").alias("merged_sym"),
                 F.col(f"n{k}").alias("n"),
                 F.col(f"s{k}").alias("symbols_after"),
@@ -1117,27 +1155,19 @@ def _bpe_multiround_sql() -> str:
             f"s{k} AS (SELECT CAST(SUM(f * length(w)) AS BIGINT) AS s{k}"
             f" FROM vocab{k + 1}),"
         )
-        dexpr = f"p{k}"
-        for j in range(k - 1, 0, -1):
-            dexpr = f"replace({dexpr}, '{_BPE_PH[j - 1]}', d{j})"
         deps = ", ".join([f"b{k}"] + [f"dec{j}" for j in range(1, k)])
         parts.append(
-            f"dec{k} AS (SELECT {dexpr} AS d{k} FROM {deps}),"
+            f"dec{k} AS (SELECT {_bpe_decode(f'p{k}', k)} AS d{k} FROM {deps}),"
         )
     selects = []
     for k in range(1, BPE_ROUNDS + 1):
-        def dec_char(pos: int) -> str:
-            e = f"substr(p{k}, {pos}, 1)"
-            for j in range(k - 1, 0, -1):
-                e = f"replace({e}, '{_BPE_PH[j - 1]}', d{j})"
-            return e
-
         deps = ", ".join(
             [f"b{k}"] + [f"dec{j}" for j in range(1, k + 1)] + [f"s{k}"]
         )
+        left, right = (_bpe_decode(f"substr(p{k}, {p}, 1)", k) for p in (1, 2))
         selects.append(
-            f"SELECT {k} AS merge_round, {dec_char(1)} AS left_sym,"
-            f" {dec_char(2)} AS right_sym, d{k} AS merged_sym,"
+            f"SELECT {k} AS merge_round, {left} AS left_sym,"
+            f" {right} AS right_sym, d{k} AS merged_sym,"
             f" n{k} AS n, s{k} AS symbols_after FROM {deps}"
         )
     # the final CTE entry ends with a trailing comma — strip it
@@ -1166,9 +1196,7 @@ def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-lang fold of squared counts — token counts collapse map-side,
     so the exchange carries vocabulary, not the token stream.
     """
-    toks = with_tokens(load_documents(spark, sf_dir)).select(
-        "lang", F.explode("toks").alias("tok")
-    )
+    toks = token_rows(load_documents(spark, sf_dir), "lang")
     per_tok = toks.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("n"))
     return (
         per_tok.groupBy("lang")
@@ -1257,11 +1285,7 @@ CMS_TOP = 20
 
 def _cms_col_expr(tok: str, row: int) -> Column:
     # d independent-ish hashes from ONE md5: disjoint 8-hex-digit slices.
-    return (
-        F.conv(F.substring(F.md5(F.encode(tok, "UTF-8")), 1 + 8 * row, 8), 16, 10)
-        .cast("long")
-        % CMS_W
-    )
+    return md5_int(tok, 8, 1 + 8 * row) % CMS_W
 
 
 def _cms_col_sql(tok: str, row: int) -> str:
@@ -1282,10 +1306,7 @@ def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The d hashes are disjoint hex slices of one md5, so both engines
     compute identical positions with one hash call per token.
     """
-    toks = (
-        load_documents(spark, sf_dir)
-        .select(F.explode(tokens_expr()).alias("tok"))
-    )
+    toks = token_rows(load_documents(spark, sf_dir))
     # r12: hash per DISTINCT token, not per occurrence — the sketch cell
     # for (row, col) is Σ counts of the tokens hashing there, so the
     # per-token count table (which the exact top-k branch needs anyway,
@@ -1387,9 +1408,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical tf shuffle stage at runtime, so the pin only added
     materialization I/O, 1.64 → 1.77 s in the A/B harness.)
     """
-    toks = load_documents(spark, sf_dir).select(
-        "doc_id", F.explode(tokens_expr()).alias("term")
-    )
+    toks = token_rows(load_documents(spark, sf_dir), "doc_id", alias="term")
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = tf.join(df, "term").withColumn(
@@ -1447,21 +1466,9 @@ def text_bigram_topnext(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final per-head top-k window over head-bucket counts. Token
     strings contain no spaces (the tokenizer splits on them), so the
     'head next' encoding round-trips exactly in both engines."""
-    tokd = (
-        load_documents(spark, sf_dir)
-        .select("doc_id", tokens_expr().alias("toks"))
-        .filter(F.size("toks") >= 2)
-    )
-    bgs = tokd.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-            )
-        ).alias("bg")
-    )
+    bgs = bigram_docs(spark, sf_dir).select(F.explode(bigrams_expr()).alias("bg"))
     bg_counts = bgs.groupBy("bg").agg(F.count(F.lit(1)).alias("bg_count"))
-    toks = load_documents(spark, sf_dir).select(F.explode(tokens_expr()).alias("tok"))
+    toks = token_rows(load_documents(spark, sf_dir))
     heads = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("head_count"))
@@ -1530,16 +1537,9 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab dictionary to build, broadcast, or keep consistent across a
     100 TB corpus). Long (doc_id, bucket, cnt) format IS the sparse
     vector; one explode + one partial-agg shuffle."""
-    toks = (
-        load_documents(spark, sf_dir)
-        .filter(F.col("doc_id") < FH_DOCS)
-        .select("doc_id", F.explode(tokens_expr()).alias("tok"))
-    )
-    bucket = (
-        F.conv(F.substring(F.md5(F.encode("tok", "UTF-8")), 1, 8), 16, 10)
-        .cast("long")
-        % FH_DIM
-    )
+    docs = load_documents(spark, sf_dir).filter(F.col("doc_id") < FH_DOCS)
+    toks = token_rows(docs, "doc_id")
+    bucket = md5_int("tok", 8) % FH_DIM
     return (
         toks.select("doc_id", bucket.alias("bucket"))
         .groupBy("doc_id", "bucket")
@@ -1632,9 +1632,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     token ever aggregates globally. Fixed-point ppm output; at real
     scale the products move to DECIMAL(38) with the same plan.
     """
-    tok = with_tokens(load_documents(spark, sf_dir)).select(
-        "source", F.explode("toks").alias("tok")
-    )
+    tok = token_rows(load_documents(spark, sf_dir), "source")
     counts = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     totals = tok.groupBy("source").agg(F.count(F.lit(1)).alias("t"))
     a = counts.select(
@@ -1857,14 +1855,10 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point (pieces·10⁶ div words). Also reports mean piece counts
     per doc — integer div — so regressions in either tokenizer show up.
     """
-    docs = load_documents(spark, sf_dir)
-    pieces = F.expr(
-        f"regexp_extract_all(regexp_replace(lower(text), '\\\\s+', ' '), '{BPE_PATTERN}', 0)"
-    )
-    per_doc = docs.select(
+    per_doc = load_documents(spark, sf_dir).select(
         "lang",
         F.size(tokens_expr()).alias("n_words"),
-        F.size(pieces).alias("n_pieces"),
+        F.size(bpe_pieces()).alias("n_pieces"),
     )
     return (
         per_doc.groupBy("lang")
@@ -1878,7 +1872,8 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "words",
             "pieces",
-            F.expr("pieces * 1000000 div words").alias("fertility_ppm"),
+            # NULL, as in DuckDB, for a language of only zero-token docs
+            F.expr("pieces * 1000000 div nullif(words, 0)").alias("fertility_ppm"),
             F.expr("pieces div n_docs").alias("mean_pieces_per_doc"),
         )
         .orderBy("lang")
@@ -1950,15 +1945,11 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sequence(1, 0) would DESCEND in Spark, hence the length guard).
     base = docs.select(
         "toks",
-        F.expr(
-            f"CASE WHEN size(filter(toks, t -> t IN ({_STOP_SQL}))) * 20"
-            f" >= size(toks) THEN 'en' ELSE 'other' END"
-        ).alias("lang_pred"),
+        langid_expr().alias("lang_pred"),
         F.expr(
             f"transform(toks, w -> CASE WHEN length(w) >= 2 THEN"
-            f" transform(sequence(1, length(w) - 1),"
-            f"  j -> CASE WHEN array_contains({mset},"
-            f"   substring(w, CAST(j AS INT), 2)) THEN 1 ELSE 0 END)"
+            f" transform({CHAR_PAIRS_SQL},"
+            f"  p -> CASE WHEN array_contains({mset}, p) THEN 1 ELSE 0 END)"
             f" ELSE CAST(array() AS ARRAY<INT>) END)"
         ).alias("ms"),
     )
@@ -1980,13 +1971,8 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = base.select(
         "lang_pred",
         F.expr("size(toks)").alias("nw"),
-        F.expr(
-            "aggregate(toks, CAST(0 AS BIGINT), (a, w) -> a + length(w))"
-        ).alias("nc"),
-        F.expr(
-            "aggregate(toks, CAST(0 AS BIGINT),"
-            " (a, w) -> a + octet_length(w))"
-        ).alias("nb"),
+        token_chars().alias("nc"),
+        token_chars(F.octet_length).alias("nb"),
         F.expr(
             f"aggregate(zip_with(toks, ms,"
             f" (w, m) -> CAST(length(w) AS BIGINT) - ({nm})),"
@@ -2091,18 +2077,10 @@ def corpus_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall is integer fixed-point against broadcast per-label totals.
     """
     docs = with_tokens(load_documents(spark, sf_dir))
-    ratio = (
-        F.size(F.filter("toks", lambda t: t.isin(*EN_STOPWORDS))).cast("double")
-        / F.size("toks")
-    )
-    pred = (
-        F.when(ratio >= F.lit(LANGID_THRESHOLD), F.lit("en"))
-        .otherwise(F.lit("other"))
-    )
     # binarize the label the same way the classifier does: en vs other
     label = F.when(F.col("lang") == "en", F.lit("en")).otherwise(F.lit("other"))
     cells = (
-        docs.select(label.alias("labeled"), pred.alias("predicted"))
+        docs.select(label.alias("labeled"), langid_expr().alias("predicted"))
         .groupBy("labeled", "predicted")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -2171,19 +2149,8 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the K most frequent bigrams (TakeOrdered, no global sort) join
     back against the w1/w2 marginals. Readout: top-{KN_TOPK} bigrams by
     count with their exact KN ppm."""
-    tokd = (
-        load_documents(spark, sf_dir)
-        .select("doc_id", tokens_expr().alias("toks"))
-        .filter(F.size("toks") >= 2)
-    )
-    bgs = tokd.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS w1,"
-                " element_at(toks, i + 1) AS w2))"
-            )
-        ).alias("bg")
+    bgs = bigram_docs(spark, sf_dir).select(
+        F.explode(bigrams_expr("struct({a} AS w1, {b} AS w2)")).alias("bg")
     ).select("bg.w1", "bg.w2")
     # localCheckpoint: the bigram-count table feeds FOUR consumers (both
     # marginals, the type total, and the top-K readout) — pin it once

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import dsum, dsum_sql
+from ..functions.numeric import dsum, dsum_sql, md5_int
 from ..sources.batch import EV_US, load_table
 
 
@@ -283,16 +283,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey")
         .distinct()
     )
-    hv = (
-        F.conv(
-            F.substring(
-                F.md5(F.encode(F.col("l_partkey").cast("string"), "UTF-8")), 1, 15
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(_HASH_SPACE)
-    )
+    hv = md5_int("l_partkey", 15).cast("double") / F.lit(_HASH_SPACE)
     mink = d.select(hv.alias("hv")).orderBy("hv").limit(KMV_K)
     kth = mink.agg(F.max("hv").alias("kth_hash"))
     exact = d.agg(F.count("*").alias("exact_distinct"))
@@ -351,16 +342,7 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scan+distinct shuffle, not three
         .localCheckpoint(eager=False)
     )
-    hv = (
-        F.conv(
-            F.substring(
-                F.md5(F.encode(F.col("user_id").cast("string"), "UTF-8")), 1, 15
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(_HASH_SPACE)
-    )
+    hv = md5_int("user_id", 15).cast("double") / F.lit(_HASH_SPACE)
     hashed = ev.select("event_type", hv.alias("hv")).localCheckpoint(eager=False)
     a = hashed.filter(F.col("event_type") == "click").select("hv").orderBy(
         "hv"
@@ -1325,13 +1307,7 @@ def sketch_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # content-addressed key sample (md5, the engine-portable hash used by
     # every sampler in operators.pipeline — xxhash64 has no oracle twin)
-    in_sample = (
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % CARD_SAMPLE_MOD
-        == 0
-    )
+    in_sample = md5_int("user_id", 8) % CARD_SAMPLE_MOD == 0
     return cnts.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum(F.col("cnt") * F.col("cnt")).alias("exact_join_rows"),
@@ -1391,19 +1367,16 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fanout shrinks by the events-per-user factor while every Z_r is
     # the identical integer (Σ_u sign·cnt = Σ_events sign).
     ucnt = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
+    key = F.concat(
+        F.col("user_id").cast("string"), F.lit(":"), F.col("r").cast("string")
+    )
     est = ucnt.select(
         "user_id",
         "cnt",
         F.explode(F.sequence(F.lit(0), F.lit(AMS_R - 1))).alias("r"),
     ).select(
         "r",
-        (
-            F.expr(
-                "1 - 2 * (CAST(conv(substring(md5(concat(CAST(user_id AS STRING),"
-                " ':', CAST(r AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2)"
-            )
-            * F.col("cnt")
-        ).alias("sz"),
+        ((1 - 2 * (md5_int(key, 8) % 2)) * F.col("cnt")).alias("sz"),
     )
     z = est.groupBy("r").agg(F.sum("sz").alias("z"))
     ams = z.agg(

@@ -57,7 +57,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
-from ..functions.numeric import cents, dsum, dsum_sql
+from ..functions.numeric import cents, dsum, dsum_sql, md5_int
 from ..sources.batch import EV_US, load_table, scratch_dir
 
 
@@ -1881,9 +1881,7 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         canon = F.concat_ws(
             "\u0001", *[F.coalesce(F.col(c).cast("string"), F.lit("\u0000")) for c in cols]
         )
-        h = F.conv(F.substring(F.md5(F.encode(canon, "UTF-8")), 1, 15), 16, 10).cast(
-            "bigint"
-        )
+        h = md5_int(canon, 15)
         # 60-bit row hashes summed over millions of rows overflow BIGINT
         # (ANSI mode errors rather than wrapping): accumulate in
         # DECIMAL(38,0) — exact, order-independent, engine-portable.

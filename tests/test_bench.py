@@ -17,7 +17,7 @@ import time
 import pytest
 
 import bench
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_bench_runs_clean_and_prints_one_json_line(tmp_path):
@@ -257,22 +257,29 @@ def test_time_queries_reports_min_of_passes_process_cpu():
 
 def test_capture_plans_normalize_strips_run_ids():
     """Two captures of the same plan differ only in expression ids, plan
-    ids and lambda-variable suffixes; normalize must erase all three."""
+    ids, lambda-variable suffixes, pinned-RDD ids, common-subexpression
+    numbers and literal identity hashes; normalize must erase all six."""
     from tools.capture_plans import normalize
 
     run_a = (
         "Project [vec_id#0L AS query_id#73L, aggregate(v#4, 0, lambdafunction("
         "(lambda acc_3#9 + lambda x_281#10L), lambda acc_3#9, lambda x_281#10L"
-        ", false))], plan_id=17"
+        ", false))], plan_id=17\n"
+        "exists(UnsafeArrayData@7a50b5f7, f) AS _common_expr_0, "
+        "MapPartitionsRDD[86] at localCheckpoint"
     )
     run_b = (
         "Project [vec_id#212L AS query_id#285L, aggregate(v#216, 0, lambdafunction("
         "(lambda acc_40#221 + lambda x_9#222L), lambda acc_40#221, lambda x_9#222L"
-        ", false))], plan_id=301"
+        ", false))], plan_id=301\n"
+        "exists(UnsafeArrayData@1c2d3e, f) AS _common_expr_4, "
+        "MapPartitionsRDD[84] at localCheckpoint"
     )
     assert normalize(run_a) == normalize(run_b) == (
         "Project [vec_id AS query_id, aggregate(v, 0, lambdafunction("
-        "(lambda acc + lambda x), lambda acc, lambda x, false))], plan_id="
+        "(lambda acc + lambda x), lambda acc, lambda x, false))], plan_id=\n"
+        "exists(UnsafeArrayData@, f) AS _common_expr_, "
+        "MapPartitionsRDD[] at localCheckpoint"
     )
 
 
@@ -295,3 +302,36 @@ def test_capture_plans_unpinned_shows_the_subtree_under_each_pin(spark):
         dedup._DUP_PAIRS_CACHE[("stand-in", "", (0, 0, 0))] = df
     assert not dedup._DUP_PAIRS_CACHE
     assert "HashAggregate" not in plan_text(df.localCheckpoint(eager=False))
+
+
+def test_check_oracle_hashes_diff_only_where_results_or_sql_change(spark, tmp_path):
+    """``tools/check_oracle.py --hashes`` writes one sorted line per query:
+    name, sha256 of its oracle SQL, sha256 of its Spark result (schema +
+    sorted rows). The result digest ignores row order but no value, so two
+    runs of the same code write the same file."""
+    import pandas as pd
+
+    import __spark_entry__
+    from tools import check_oracle
+
+    a = pd.DataFrame({"k": [1, 2, 3], "v": [0.5, None, 1.25]})
+    digest = check_oracle.result_digest("struct<k:bigint,v:double>", a)
+    assert digest == check_oracle.result_digest(
+        "struct<k:bigint,v:double>", a.iloc[::-1].reset_index(drop=True)
+    )
+    assert digest != check_oracle.result_digest(
+        "struct<k:bigint,v:double>", a.assign(v=[0.5, None, 1.5])
+    )
+    assert digest != check_oracle.result_digest("struct<k:int,v:double>", a)
+
+    names = ["text_fingerprint", "corpus_sample_hash"]
+    paths = [str(tmp_path / f"h{i}.tsv") for i in range(2)]
+    for p in paths:
+        assert check_oracle.main(["--hashes", p, SF_SMOKE, *names]) == 0
+    lines = open(paths[0]).read().splitlines()
+    assert open(paths[1]).read().splitlines() == lines
+    oracles = __spark_entry__.oracle_sql()
+    assert [line.split("\t")[:2] for line in lines] == [
+        [n, check_oracle.sql_digest(oracles[n])] for n in sorted(names)
+    ]
+    assert all(len(line.split("\t")[2]) == 64 for line in lines)

@@ -8,6 +8,8 @@ from kafka_pyspark_bigdata_spark.operators import (
     dedup,
     geo,
     multimodal,
+    pipeline,
+    quality,
     similarity,
     text,
     timeseries,
@@ -1003,6 +1005,82 @@ def test_empty_candidate_set_matches_oracle(spark, tmp_path, name):
         assert sdf.n_candidates.tolist() == [0, 0, 0]
         assert sdf.n_verified.tolist() == [0, 0, 0]
         assert sdf.precision_ppm.isna().all()
+
+
+# Short and empty texts: a zero-token document, a whitespace-only one, two
+# 1-token ones and a repeated stopword. The fixtures' shortest text is over
+# 40 chars, so no fixture sweep reaches these.
+DEGENERATE_TEXTS = ["", "   ", "x", "a", "The the THE"]
+
+
+DEGENERATE_CASES = [
+    (m, name) for m in (text, quality, pipeline) for name in m.ORACLES
+] + [(dedup, "text_boilerplate_spans")]
+
+
+@pytest.fixture(scope="module")
+def degenerate_corpus(spark, tmp_path_factory):
+    """sf0.001's first 40 documents plus DEGENERATE_TEXTS, written as a
+    documents table, and a DuckDB connection with its view."""
+    import duckdb
+
+    d = str(tmp_path_factory.mktemp("degenerate"))
+    head = (
+        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        .orderBy("doc_id").limit(40).collect()
+    )
+    rows = [tuple(r) for r in head] + [
+        (40 + i, t, "en", f"src{i}", len(t)) for i, t in enumerate(DEGENERATE_TEXTS)
+    ]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.mode("overwrite").parquet(d + "/documents.parquet")
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{d}/documents.parquet/*.parquet')"
+    )
+    return d, duck
+
+
+@pytest.mark.parametrize(
+    "mod,name", DEGENERATE_CASES, ids=[name for _, name in DEGENERATE_CASES]
+)
+def test_degenerate_corpus_matches_oracle(spark, degenerate_corpus, mod, name):
+    """Every corpus-text query agrees with its oracle when documents have
+    zero, one or only stopword tokens: a per-token ratio over zero tokens
+    is NULL, the token-length sum of no tokens is NULL, and shingling a
+    document shorter than a shingle raises nothing."""
+    d, duck = degenerate_corpus
+    assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name], sf_dir=d)
+
+
+@pytest.mark.parametrize(
+    "name", ["corpus_tokenizer_fertility", "corpus_token_budget"]
+)
+def test_zero_token_group_matches_oracle(spark, tmp_path, name):
+    """A language and a source whose only document has no tokens: the
+    per-group ratio over zero words or tokens is NULL, as the oracle's
+    ``x // 0`` is, not a division-by-zero error."""
+    import duckdb
+
+    d = str(tmp_path / "zero_group")
+    rows = [
+        (0, "the cat sat on the mat", "en", "src1"),
+        (1, "a dog and a cat", "en", "src2"),
+        (2, "   ", "xx", "src3"),
+    ]
+    spark.createDataFrame(
+        [(i, t, lang, src, len(t)) for i, t, lang, src in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.mode("overwrite").parquet(d + "/documents.parquet")
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{d}/documents.parquet/*.parquet')"
+    )
+    mod = text if name in text.QUERIES else pipeline
+    assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name], sf_dir=d)
 
 
 def test_lsh_candidate_family_agrees_with_itself(spark):

@@ -40,11 +40,17 @@ OUT_DIR = os.path.join(
 )
 
 # Expression ids (vec_id#12L), plan ids and lambda-variable suffixes
-# (lambda x_281 → lambda x) differ from run to run for the same plan.
+# (lambda x_281 → lambda x) differ from run to run for the same plan; a
+# pinned scan's RDD id (MapPartitionsRDD[84]), the common-subexpression
+# numbering (_common_expr_4) and a literal's identity hash
+# (UnsafeArrayData@7a50b5f7) depend on what the process built before.
 _RUN_IDS = (
     (re.compile(r"#\d+L?\b"), ""),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"\b_common_expr_\d+\b"), "_common_expr_"),
+    (re.compile(r"\b([A-Z]\w*)@[0-9a-f]{6,8}\b"), r"\1@"),
 )
 
 

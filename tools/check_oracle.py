@@ -7,11 +7,18 @@ name, rows sorted by stringified tuple). Floats are compared bit-exactly —
 the engine's decimal-exact aggregation makes that achievable — with a
 max-abs-diff report when they differ.
 
-Usage: python tools/check_oracle.py [sf_dir] [query ...]
+With ``--hashes FILE`` it also writes one line per query: its name, the
+sha256 of its oracle SQL (``-`` for a rows-only query) and the sha256 of
+its Spark result (schema plus sorted rows; ``-`` if Spark raised). Two
+checkouts' files then diff to the queries whose oracle SQL or result
+changed.
+
+Usage: python tools/check_oracle.py [--hashes FILE] [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import time
@@ -34,7 +41,11 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
         if pd.api.types.is_datetime64_any_dtype(s):
             out[c] = s.dt.strftime("%Y-%m-%d %H:%M:%S.%f")
         elif s.dtype == object:
-            out[c] = s.map(lambda v: None if v is None else str(v))
+            # DuckDB hands a NULL BOOLEAN to pandas as a float NaN in an
+            # object column, Spark as None: both are NULL
+            out[c] = s.map(
+                lambda v: None if v is None or (isinstance(v, float) and v != v) else str(v)
+            )
         elif pd.api.types.is_float_dtype(s):
             out[c] = s.astype("float64")
         elif pd.api.types.is_integer_dtype(s):
@@ -78,9 +89,35 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     return problems
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+def sql_digest(sql: str) -> str:
+    return hashlib.sha256(sql.encode()).hexdigest()
+
+
+def _cell(v) -> str:
+    if isinstance(v, np.ndarray):
+        v = v.tolist()
+    elif isinstance(v, np.generic):
+        v = v.item()
+    return repr(v)
+
+
+def result_digest(schema: str, pdf: pd.DataFrame) -> str:
+    """sha256 of ``schema`` and ``pdf``'s rows, sorted, each cell by its
+    ``repr`` (floats bit-exact): independent of row order only."""
+    rows = sorted(
+        "\x1f".join(_cell(v) for v in row)
+        for row in pdf.itertuples(index=False, name=None)
+    )
+    return hashlib.sha256("\n".join([schema, *rows]).encode()).hexdigest()
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = list(sys.argv[1:] if argv is None else argv)
+    hashes_path = None
+    if args[:1] == ["--hashes"]:
+        hashes_path, args = args[1], args[2:]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    only = set(args[1:])
 
     import __spark_entry__ as entrymod
 
@@ -113,17 +150,24 @@ def main() -> int:
         # there is none.
         items = items[::-1]
     n_ok = n_bad = 0
+    digests = []
     for name, fn in items:
         if only and name not in only:
             continue
+        sql_sha = sql_digest(oracles[name]) if name in oracles else "-"
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            df = fn(spark, sf_dir)
+            sdf = df.toPandas()
         except Exception:
             print(f"FAIL {name}: spark raised\n{traceback.format_exc()}")
+            digests.append(f"{name}\t{sql_sha}\t-")
             n_bad += 1
             continue
         t_spark = time.time() - t0
+        digests.append(
+            f"{name}\t{sql_sha}\t{result_digest(df.schema.simpleString(), sdf)}"
+        )
         if name not in oracles:
             print(f"ok   {name}: rows={len(sdf)} ({t_spark:.1f}s) [rows-only, no oracle]")
             n_ok += 1
@@ -141,6 +185,9 @@ def main() -> int:
         else:
             print(f"ok   {name}: rows={len(sdf)} ({t_spark:.1f}s)")
             n_ok += 1
+    if hashes_path:
+        with open(hashes_path, "w") as fh:
+            fh.write("".join(f"{line}\n" for line in sorted(digests)))
     print(f"\n{n_ok} ok, {n_bad} failed")
     return 1 if n_bad else 0
 
