@@ -1008,46 +1008,34 @@ ORDER BY doc_a, doc_b
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-def cosine_expr(a: str, b: str, scale: int = 6) -> Column:
+def cosine_expr(a: str | Column, b: str | Column, scale: int = 6) -> Column:
     """Cosine similarity between two array<float> columns, computed in
     double and rounded to 6 decimals (64-term reduction error ~1e-14, so
     rounding is engine-portable)."""
-    def dot(x: str, y: str) -> Column:
-        return F.aggregate(
-            F.zip_with(x, y, lambda u, v: u.cast("double") * v.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def norm(x: str) -> Column:
-        return F.sqrt(
-            F.aggregate(
-                F.transform(x, lambda u: u.cast("double") * u.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-
-    return F.round(dot(a, b) / (norm(a) * norm(b)), scale)
+    return cosine_from_parts(dot_expr(a, b), norm_expr(a), norm_expr(b), scale)
 
 
-def norm_expr(col: str) -> Column:
+def norm_expr(col: str | Column) -> Column:
     """sqrt(Σu²) of an array<float> column, double — the hoistable half of
     ``cosine_expr``. Precompute it per SIDE of a pair join (one norm per
     vector instead of one per pair) and combine with ``dot_expr`` via
     ``cosine_from_parts``: the arithmetic is the identical double sequence
     cosine_expr runs, just factored out of the join, so rounded values are
     bit-equal while per-pair flops drop ~3x."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(col, lambda u: u.cast("double") * u.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+    return F.sqrt(sum_sq_expr(col))
+
+
+def sum_sq_expr(col: str | Column) -> Column:
+    """Σu² of an array column in double, left to right: ``norm_expr``
+    before its sqrt."""
+    return F.aggregate(
+        F.transform(col, lambda u: u.cast("double") * u.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
 
 
-def dot_expr(a: str, b: str) -> Column:
+def dot_expr(a: str | Column, b: str | Column) -> Column:
     """Σ aᵢ·bᵢ of two array<float> columns in double (the per-pair part)."""
     return F.aggregate(
         F.zip_with(a, b, lambda u, v: u.cast("double") * v.cast("double")),
@@ -1057,17 +1045,27 @@ def dot_expr(a: str, b: str) -> Column:
 
 
 def cosine_from_parts(dot: Column, na: Column, nb: Column, scale: int = 6) -> Column:
-    """round(dot/(na·nb), 6) — cosine_expr's tail over hoisted parts."""
-    return F.round(dot / (na * nb), scale)
+    """round(dot/(na·nb), 6) — cosine_expr's tail over hoisted parts. A
+    zero norm gives NULL, as the oracle's ``x / 0`` does (ANSI Spark would
+    raise): a zero vector has no direction."""
+    return F.round(F.try_divide(dot, na * nb), scale)
+
+
+def _ss_sql(x: str) -> str:
+    """Σx² of a DuckDB list in double (oracle SQL)."""
+    return f"list_sum(list_transform({x}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """Σ aᵢ·bᵢ of two DuckDB lists in double (oracle SQL)."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}),"
+        f" p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
+    )
 
 
 def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"ROUND(list_sum(list_transform(list_zip({a}, {b}),"
-        f" p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-        f" / (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        f" * sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)"
-    )
+    return f"ROUND({_dot_sql(a, b)} / (sqrt({_ss_sql(a)}) * sqrt({_ss_sql(b)})), 6)"
 
 
 ALLPAIRS_MAX_ROWS = 100_000  # refuse O(n²) beyond ~5e9 candidate pairs

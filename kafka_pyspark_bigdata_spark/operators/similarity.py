@@ -30,6 +30,26 @@ Two paths:
 All are value-exact against the oracle: cosine is computed in double and
 rounded to 6 decimals (reduction error over 64 terms ~1e-14).
 
+Each vector rule has one home. The double-precision rules live in
+``dedup``: ``dot_expr``, ``norm_expr`` and ``cosine_from_parts`` (whose
+composition is ``cosine_expr``), with ``_dot_sql`` / ``_ss_sql`` /
+``_cos_sql`` as their oracle text. The fixed-point rules live here:
+``round_grid`` (round(x·S)), ``floor_grid`` (FLOOR(x·S)) and
+``half_up_grid`` (floor(x·S + 0.5), or of the unit vector x/‖x‖) quantize
+an array to BIGINT at the caller's scale S; ``_int_dot_sql`` is the in-row
+BIGINT dot; ``_long_array`` inlines driver-side integers (a mean, an
+iterate, per-dim stats) as a literal array; ``_power_iterate`` runs the
+fixed-point power iteration PCA and All-but-the-Top share; and
+``_mean_cos_ppm`` is the mean pairwise cosine collapse. A divisor that is
+zero on degenerate input — the norm of a zero vector, the n² − n pairs of
+a one-row table, JL's ‖x‖² — gives NULL, as DuckDB's ``x / 0`` and
+``x // 0`` do, where ANSI Spark would raise: the cosine divides with
+``try_divide``, the unit quantizer too, and integer ratios divide by
+``nullif(…, 0)``. NULL scores rank last in both engines, so a zero vector
+never displaces a real neighbor. One exception is kept on purpose:
+``_guarded_cos`` (the prefix and scalar-quantized variants) scores a pair
+with a zero-norm side −2.0, because its oracles spell out that rule.
+
 Shared building blocks (Spark side only; the oracle SQL spells each query
 out in full): ``_query_corpus`` projects the query set (``vec_id <
 N_QUERIES`` → query_id, qv, qn) and the corpus (neighbor_id, cv, cn);
@@ -58,10 +78,13 @@ from ..sources.batch import load_table, parallelize_scan
 from .dedup import (
     COSINE_DUP_THRESHOLD,
     _cos_sql,
+    _dot_sql,
+    _ss_sql,
     cosine_expr,
     cosine_from_parts,
     dot_expr,
     norm_expr,
+    sum_sq_expr,
 )
 
 TOP_K = 5
@@ -77,38 +100,126 @@ _HYPERPLANES: list[list[float]] = [
 ]
 
 
-def _dot_with_literal(vec_col: str, plane: list[float]) -> Column:
-    lit_arr = F.array(*[F.lit(x) for x in plane])
-    return F.aggregate(
-        F.zip_with(vec_col, lit_arr, lambda u, v: u.cast("double") * v),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def bucket_expr(vec_col: str) -> Column:
-    """LSH bucket id: sign bits of the hyperplane dot products."""
+def _sign_bits(vec_col: str, planes: list[list[float]]) -> Column:
+    """Σ 2^j over the planes j with a positive dot product: an SRP-LSH
+    bucket id."""
     out = F.lit(0)
-    for j, plane in enumerate(_HYPERPLANES):
-        out = out + F.when(_dot_with_literal(vec_col, plane) > 0, F.lit(2**j)).otherwise(
-            F.lit(0)
-        )
+    for j, plane in enumerate(planes):
+        dot = dot_expr(vec_col, F.array(*[F.lit(x) for x in plane]))
+        out = out + F.when(dot > 0, F.lit(2**j)).otherwise(F.lit(0))
     return out.cast("int")
 
 
-def _plane_sql(plane: list[float]) -> str:
-    return "[" + ", ".join(repr(x) for x in plane) + "]::DOUBLE[]"
-
-
-def _bucket_sql(vec_col: str) -> str:
+def _sign_bits_sql(vec_col: str, planes: list[list[float]]) -> str:
+    """``_sign_bits`` as oracle SQL."""
     terms = []
-    for j, plane in enumerate(_HYPERPLANES):
+    for j, plane in enumerate(planes):
+        lit = "[" + ", ".join(repr(x) for x in plane) + "]::DOUBLE[]"
         dot = (
-            f"list_sum(list_transform(list_zip({vec_col}, {_plane_sql(plane)}),"
+            f"list_sum(list_transform(list_zip({vec_col}, {lit}),"
             f" p -> CAST(p[1] AS DOUBLE) * p[2]))"
         )
         terms.append(f"CASE WHEN {dot} > 0 THEN {2**j} ELSE 0 END")
     return "CAST(" + " + ".join(terms) + " AS INTEGER)"
+
+
+def bucket_expr(vec_col: str) -> Column:
+    """LSH bucket id: sign bits of the hyperplane dot products."""
+    return _sign_bits(vec_col, _HYPERPLANES)
+
+
+def _bucket_sql(vec_col: str) -> str:
+    return _sign_bits_sql(vec_col, _HYPERPLANES)
+
+
+# ---------------------------------------------------------------------------
+# Shared fixed-point rules (see the module docstring)
+# ---------------------------------------------------------------------------
+
+
+def round_grid(col: str | Column, scale: int) -> Column:
+    """Each element as round(x·scale) BIGINT (half away from zero)."""
+    return F.transform(
+        col, lambda x: F.round(x.cast("double") * scale, 0).cast("bigint")
+    )
+
+
+def floor_grid(col: str | Column, scale: int) -> Column:
+    """Each element as FLOOR(x·scale) BIGINT."""
+    return F.transform(col, lambda x: F.floor(x.cast("double") * scale).cast("bigint"))
+
+
+def half_up_grid(col: str | Column, scale: int, norm: Column | None = None) -> Column:
+    """Each element as floor(x·scale + 0.5) BIGINT. Given ``norm``, each
+    element of the unit vector x / norm instead: NULL for a zero norm."""
+
+    def q(x: Column) -> Column:
+        x = x.cast("double")
+        if norm is not None:
+            x = F.try_divide(x, norm)
+        return F.floor(x * scale + F.lit(0.5)).cast("bigint")
+
+    return F.transform(col, q)
+
+
+def _round_grid_sql(col: str, scale: int) -> str:
+    """``round_grid`` as oracle SQL."""
+    return (
+        f"list_transform({col}, x -> CAST(round(CAST(x AS DOUBLE)"
+        f" * {scale}, 0) AS BIGINT))"
+    )
+
+
+def _int_dot_sql(a: str, b: str) -> str:
+    """Σ aᵢ·bᵢ of two BIGINT arrays, in-row (Spark SQL text)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (a, b) -> a * b),"
+        f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    )
+
+
+def _long_array(values) -> str:
+    """Driver-side integers as a literal array<bigint> (Spark SQL text)."""
+    return "array(" + ", ".join(f"{int(c)}L" for c in values) + ")"
+
+
+def _power_iterate(rows: DataFrame, col: str, iters: int, v_scale: int) -> list[int]:
+    """``iters`` rounds of v ← sign(z)·(|z|·v_scale DIV max|z|), z = Xᵀ(Xv),
+    from the all-ones start, over the BIGINT vectors ``col`` of ``rows``.
+    The iterate rides into the plan as a literal; y = x·v folds in-row
+    (once per row, a plain column through the Generate) and z is a
+    posexplode + one 64-key partial-agg shuffle in DECIMAL(38,0), so the
+    sums cannot wrap. The normalization runs on 64 Python ints: floor
+    division of nonnegative operands matches both engines' DIV."""
+    v = [1] * EMB_DIM
+    for _ in range(iters):
+        y = F.expr(_int_dot_sql(col, _long_array(v)))
+        z_rows = (
+            rows.select(col, y.alias("y"))
+            .select(F.posexplode(col).alias("dim", "x"), "y")
+            .groupBy("dim")
+            .agg(F.sum((F.col("x") * F.col("y")).cast("decimal(38,0)")).alias("z"))
+            .collect()
+        )
+        z = [0] * EMB_DIM
+        for r in z_rows:
+            z[r.dim] = int(r.z)
+        mz = max(abs(c) for c in z)
+        v = [(1 if c > 0 else -1) * ((abs(c) * v_scale) // mz) if c else 0 for c in z]
+    return v
+
+
+def _mean_cos_ppm(sumsq: str, selfsq: str) -> Column:
+    """Mean pairwise cosine in ppm of ``n_vecs`` unit vectors quantized at
+    ISO_SCALE, from Σ_{i≠j} v̂ᵢ·v̂ⱼ = ‖Σv̂ᵢ‖² − Σ‖v̂ᵢ‖² (``sumsq`` −
+    ``selfsq``): one integer division by the (n² − n)·ISO_SCALE pair
+    count, widened to DECIMAL(38,0) before the square. NULL when there is
+    no pair (n_vecs ≤ 1)."""
+    return F.expr(
+        f"CAST(({sumsq} - {selfsq})"
+        f" div nullif((CAST(n_vecs AS DECIMAL(38,0)) * n_vecs - n_vecs)"
+        f" * {ISO_SCALE}, 0) AS BIGINT)"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -693,26 +804,8 @@ _DEDUP_PLANES: list[list[float]] = [
 ]
 
 
-def _band_bucket_expr(vec_col: str, band: int) -> Column:
-    out = F.lit(0)
-    for r in range(DEDUP_LSH_BITS):
-        plane = _DEDUP_PLANES[band * DEDUP_LSH_BITS + r]
-        out = out + F.when(
-            _dot_with_literal(vec_col, plane) > 0, F.lit(2**r)
-        ).otherwise(F.lit(0))
-    return out.cast("int")
-
-
-def _band_bucket_sql(vec_col: str, band: int) -> str:
-    terms = []
-    for r in range(DEDUP_LSH_BITS):
-        plane = _DEDUP_PLANES[band * DEDUP_LSH_BITS + r]
-        dot = (
-            f"list_sum(list_transform(list_zip({vec_col}, {_plane_sql(plane)}),"
-            f" p -> CAST(p[1] AS DOUBLE) * p[2]))"
-        )
-        terms.append(f"CASE WHEN {dot} > 0 THEN {2**r} ELSE 0 END")
-    return "CAST(" + " + ".join(terms) + " AS INTEGER)"
+def _band_planes(band: int) -> list[list[float]]:
+    return _DEDUP_PLANES[band * DEDUP_LSH_BITS : (band + 1) * DEDUP_LSH_BITS]
 
 
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,7 +824,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.posexplode(
             F.array(
-                *[_band_bucket_expr("embedding", b) for b in range(DEDUP_LSH_BANDS)]
+                *[_sign_bits("embedding", _band_planes(b)) for b in range(DEDUP_LSH_BANDS)]
             )
         ).alias("band_idx", "bk"),
     )
@@ -770,7 +863,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dedup_lsh_sql() -> str:
     band_cols = ",\n         ".join(
-        f"{_band_bucket_sql('embedding', b)} AS band{b}"
+        f"{_sign_bits_sql('embedding', _band_planes(b))} AS band{b}"
         for b in range(DEDUP_LSH_BANDS)
     )
     band_union = "\n  UNION ALL\n".join(
@@ -844,14 +937,12 @@ def _ivf_sims(emb: DataFrame) -> DataFrame:
     table ``emb`` against every coarse centroid — a broadcast cross join,
     map-side, no corpus shuffle."""
     emb = emb.select("vec_id", "embedding", norm_expr("embedding").alias("en"))
-    # PRECONDITION (nonzero norms): a zero-norm vector or centroid makes
-    # sim = 0/0 = NaN. The descending rankings of sim (the probe window,
-    # the max(struct) argmax) put NaN first, but ann_ivf_spill's ascending
-    # in-row sort on -sim puts it last. They agree only because the
-    # embedding fixture generator never emits a zero-norm vector
-    # (quantized integer grids, all lanes nonzero with probability 1 by
-    # construction; norm_expr > 0 for every fixture row). A deployment
-    # over arbitrary embeddings must pre-filter en > 0 / cn > 0 first.
+    # A zero vector's sims are all NULL (cosine_from_parts), so every
+    # ranking of them falls through to the cid tie-break, as in the
+    # oracle. PRECONDITION (nonzero centroids): a zero CENTROID would put
+    # one NULL among a vector's sims, which the descending rankings (the
+    # probe window, the max(struct) argmax) rank last like the oracle but
+    # ann_ivf_spill's ascending in-row sort on -sim ranks first.
     return emb.crossJoin(F.broadcast(_ivf_cents(emb))).select(
         "vec_id",
         "embedding",
@@ -962,13 +1053,6 @@ KMEANS_ITERS = 2
 _KM_SCALE = 1_000_000  # embedding floats → fixed-point BIGINT
 
 
-def _scaled_vec_expr(col: str) -> Column:
-    return F.transform(
-        F.col(col),
-        lambda x: F.floor(x.cast("double") * _KM_SCALE).cast("long"),
-    )
-
-
 def cluster_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd k-means (K=8, 2 update iterations) over fixed-point scaled
     embeddings — the training step that would produce ``ann_ivf``'s
@@ -1004,15 +1088,8 @@ def cluster_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # product instead of a subtract-square-sum, and the two norms are
     # computed once per row / once per centroid instead of K× / n×.
     vecs = (
-        emb.select("vec_id", _scaled_vec_expr("embedding").alias("v"))
-        .withColumn(
-            "xx",
-            F.aggregate(
-                F.transform("v", lambda a: a * a),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ),
-        )
+        emb.select("vec_id", floor_grid("embedding", _KM_SCALE).alias("v"))
+        .withColumn("xx", F.expr(_int_dot_sql("v", "v")))
         .cache()
     )
 
@@ -1041,8 +1118,7 @@ def cluster_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.collect_list(F.struct("cid", "c", "cc")).alias("cs"))
         best = F.expr(
             "array_min(transform(cs, s -> struct("
-            "xx + s.cc - 2 * aggregate(zip_with(v, s.c, (a, b) -> a * b),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d,"
+            f"xx + s.cc - 2 * {_int_dot_sql('v', 's.c')} AS d,"
             " s.cid AS cid)))"
         )
         return vecs.crossJoin(F.broadcast(cents_df)).select(
@@ -1165,29 +1241,14 @@ def cluster_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg — and the original shape was kept.)"""
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
-        "vec_id",
-        F.expr(
-            f"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-            f" * {PROTO_SCALE}) AS BIGINT))"
-        ).alias("v"),
-    ).withColumn(
-        "xx",
-        F.aggregate(
-            F.transform("v", lambda a: a * a),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
+        "vec_id", floor_grid("embedding", PROTO_SCALE).alias("v")
+    ).withColumn("xx", F.expr(_int_dot_sql("v", "v")))
     protos = vecs.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").cast("int").alias("cid"),
         F.col("v").alias("c"),
         F.col("xx").alias("cc"),
     )
-    dot = F.aggregate(
-        F.zip_with("v", "c", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = F.expr(_int_dot_sql("v", "c"))
     assign = (
         vecs.crossJoin(F.broadcast(protos))
         .select(
@@ -1278,12 +1339,7 @@ def emb_ood_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger in this module shares); shape is unchanged."""
     emb = load_table(spark, sf_dir, "embeddings")
     quant = emb.select(
-        "vec_id",
-        "label",
-        F.expr(
-            f"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-            f" * {OOD_SCALE}) AS BIGINT))"
-        ).alias("q"),
+        "vec_id", "label", floor_grid("embedding", OOD_SCALE).alias("q")
     ).localCheckpoint(eager=False)
     # localCheckpoint: quant feeds the moment ledger AND the scoring
     # crossJoin — without the pin the scan + quantization runs twice.
@@ -1682,18 +1738,23 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Previously this was a row_number + max window over the
     # 16×-exploded sims frame, i.e. a full-corpus shuffle carrying the
     # embedding payload; now the corpus never shuffles. Same doubles,
-    # same comparisons, bit-identical postings — given nonzero norms
+    # same comparisons, bit-identical postings — given nonzero centroids
     # (the precondition in _ivf_sims).
     cents1 = _ivf_cents(emb).agg(
         F.collect_list(F.struct("cid", "centv", "cn")).alias("cs")
     )
-    sorted_expr = (
-        "array_sort(transform(cs, s -> struct("
-        "-round(aggregate(zip_with(embedding, s.centv,"
-        " (u, v) -> CAST(u AS DOUBLE) * CAST(v AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (a, x) -> a + x)"
-        " / (en * s.cn), 6) AS ns,"
-        " s.cid AS cid)))"
+    ranked_arr = F.array_sort(
+        F.transform(
+            "cs",
+            lambda c: F.struct(
+                (
+                    -cosine_from_parts(
+                        dot_expr("embedding", c["centv"]), F.col("en"), c["cn"]
+                    )
+                ).alias("ns"),
+                c["cid"].alias("cid"),
+            ),
+        )
     )
     posts_expr = (
         f"filter(transform(ranked_arr, (e, i) -> struct(-e.ns AS sim,"
@@ -1708,7 +1769,7 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "en",
-            F.expr(sorted_expr).alias("ranked_arr"),
+            ranked_arr.alias("ranked_arr"),
         )
         .select(
             F.col("vec_id").alias("neighbor_id"),
@@ -2026,9 +2087,9 @@ def emb_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins and 64-key aggregations.
 
     Exactness (what makes this hash-checkable across engines): X is
-    quantized once to integers (round(x·2^10)); each X·v dot and each
-    Xᵀy per-dim reduction is then BIGINT arithmetic — associative,
-    order-independent; the normalization v ← sign(z)·(|z|·2^10 DIV
+    quantized once to integers (round(x·2^10)); each X·v dot is then
+    BIGINT and each Xᵀy per-dim reduction DECIMAL(38,0) arithmetic —
+    associative, order-independent; the normalization v ← sign(z)·(|z|·2^10 DIV
     max|z|) keeps DIV operands nonnegative so Spark's truncating DIV and
     DuckDB's flooring // agree. No floats anywhere until nowhere.
 
@@ -2043,51 +2104,12 @@ def emb_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix."""
     base = (
         load_table(spark, sf_dir, "embeddings")
-        .select(
-            F.expr(
-                f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-                f" * {PCA_X_SCALE}, 0) AS BIGINT))"
-            ).alias("xq")
-        )
+        .select(round_grid("embedding", PCA_X_SCALE).alias("xq"))
         # consumed by PCA_ITERS round jobs — pin so the scan+quantize tree
         # derives once; lazy so the first round materializes it in-line
         .localCheckpoint(eager=False)
     )
-
-    # Iterate travels as a 64-long literal (the kmeans-fixed pattern: the
-    # per-round driver collect is exactly the 64-element iterate, never
-    # data). Each round is then ONE map-only job, with the normalization
-    # done on 64 Python ints (arbitrary-precision, and floor-div on the
-    # nonnegative |z| matches both engines' DIV).
-    v = [1] * EMB_DIM
-    for _ in range(PCA_ITERS):
-        arr = "array(" + ",".join(str(int(c)) for c in v) + ")"
-        # y = x·v folds IN-ROW against the literal iterate (evaluated
-        # once per row — it rides through the Generate as a plain
-        # column, outside any lambda); the Xᵀy reduction is then a
-        # posexplode into (dim, x_dim) + ONE 64-key partial-agg shuffle
-        # (64 rows per task cross the wire). r12: the previous shape
-        # shuffled the full exploded corpus TWICE per round — a
-        # groupBy(vec_id) for y and a join-back for z.
-        y = F.expr(
-            f"aggregate(zip_with(xq, {arr}, (a, b) -> a * b),"
-            f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-        z_rows = (
-            base.select("xq", y.alias("y"))
-            .select(F.posexplode("xq").alias("dim", "xv"), "y")
-            .groupBy("dim")
-            .agg(F.sum(F.col("xv") * F.col("y")).alias("z"))
-            .collect()
-        )
-        z = [0] * EMB_DIM
-        for r in z_rows:
-            z[r.dim] = int(r.z)
-        mz = max(abs(c) for c in z)
-        v = [
-            (1 if c > 0 else -1) * ((abs(c) * PCA_V_SCALE) // mz) if c else 0
-            for c in z
-        ]
+    v = _power_iterate(base, "xq", PCA_ITERS, PCA_V_SCALE)
     return (
         spark.createDataFrame(
             [(d, int(c)) for d, c in enumerate(v)], "dim int, v_fp long"
@@ -2190,12 +2212,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _pq_cents(emb).localCheckpoint()
     xint = emb.select(
         "vec_id",
-        F.posexplode(
-            F.expr(
-                f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-                f" * {PQ_SCALE}, 0) AS BIGINT))"
-            )
-        ).alias("dim", "x_fp"),
+        F.posexplode(round_grid("embedding", PQ_SCALE)).alias("dim", "x_fp"),
     )
     sub = F.expr(f"dim DIV {PQ_SUB}")
     # encode: nearest code per (vector, subspace), min-code tie-break
@@ -2326,17 +2343,9 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     every product and sum is exact integer arithmetic — order-free,
     hash-checkable. Plan: one posexplode self-join per row bounded by
     i <= j (in-row, no shuffle), one (i, j)-keyed partial agg."""
+    xs = round_grid("embedding", PCA_X_SCALE)
     e = load_table(spark, sf_dir, "embeddings").select(
-        F.posexplode(
-            F.expr(
-                f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-                f" * {PCA_X_SCALE}, 0) AS BIGINT))"
-            )
-        ).alias("i", "xi"),
-        F.expr(
-            f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-            f" * {PCA_X_SCALE}, 0) AS BIGINT))"
-        ).alias("xs"),
+        F.posexplode(xs).alias("i", "xi"), xs.alias("xs")
     )
     pairs = e.select(
         "i",
@@ -2350,15 +2359,19 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gram_sql() -> str:
-    return f"""
-WITH e AS (
+# (vec_id, i, xi): one row per embedding cell on the PCA grid (oracle SQL)
+_GRID_CELLS_SQL = f"""WITH e AS (
   SELECT vec_id,
          unnest(generate_series(1, len(embedding))) - 1 AS i,
          CAST(round(CAST(unnest(embedding) AS DOUBLE) * {PCA_X_SCALE}, 0)
               AS BIGINT) AS xi
   FROM embeddings
-)
+)"""
+
+
+def _gram_sql() -> str:
+    return f"""
+{_GRID_CELLS_SQL}
 SELECT CAST(a.i AS INTEGER) AS i, CAST(b.i AS INTEGER) AS j,
        CAST(SUM(a.xi * b.xi) AS BIGINT) AS gram_fp
 FROM e a JOIN e b ON a.vec_id = b.vec_id AND b.i >= a.i
@@ -2479,22 +2492,17 @@ def emb_cka_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("hsic_xy").cast("long").alias("hsic_xy"),
         F.col("hsic_xx").cast("long").alias("hsic_xx"),
         F.col("hsic_yy").cast("long").alias("hsic_yy"),
-        (
-            F.col("hsic_xy").cast("double")
-            / F.sqrt(F.col("hsic_xx").cast("double") * F.col("hsic_yy").cast("double"))
+        # NULL, as in the oracle, when a view has no variance (one row)
+        F.try_divide(
+            F.col("hsic_xy").cast("double"),
+            F.sqrt(F.col("hsic_xx").cast("double") * F.col("hsic_yy").cast("double")),
         ).alias("cka"),
     )
 
 
 def _cka_sql() -> str:
     return f"""
-WITH e AS (
-  SELECT vec_id,
-         unnest(generate_series(1, len(embedding))) - 1 AS i,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {PCA_X_SCALE}, 0)
-              AS BIGINT) AS xi
-  FROM embeddings
-),
+{_GRID_CELLS_SQL},
 stats AS (
   SELECT a.i, b.i AS j,
          CAST(SUM(a.xi * b.xi) AS BIGINT) AS g,
@@ -2725,25 +2733,18 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact; the only doubles are final exact divisions.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    v_int = "CAST(round(CAST(val AS DOUBLE) * {s}, 0) AS BIGINT)".format(s=_Q_SCALE)
+    v_int = round_grid("embedding", _Q_SCALE)
     stats = (
-        emb.select(F.posexplode("embedding").alias("dim", "val"))
-        .select("dim", F.expr(v_int).alias("v"))
+        emb.select(F.posexplode(v_int).alias("dim", "v"))
         .groupBy("dim")
         .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
         .orderBy("dim")
         .collect()
     )
-    lo_arr = "array(%s)" % ", ".join(str(r.lo) + "L" for r in stats)
-    rng_arr = "array(%s)" % ", ".join(
-        str(max(r.hi - r.lo, 1)) + "L" for r in stats
-    )
-    expr = f"""
-    transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_Q_SCALE}, 0) AS BIGINT))
-    """
-    vals = F.expr(expr).alias("v_int")
+    lo_arr = _long_array(r.lo for r in stats)
+    rng_arr = _long_array(max(r.hi - r.lo, 1) for r in stats)
     out = (
-        emb.select("vec_id", "label", vals)
+        emb.select("vec_id", "label", v_int.alias("v_int"))
         .withColumn("d", F.expr(f"zip_with(v_int, {lo_arr}, (a, b) -> a - b)"))
         .withColumn(
             "q", F.expr(f"zip_with(d, {rng_arr}, (a, r) -> (a * {Q_LEVELS}) DIV r)")
@@ -3007,34 +3008,23 @@ def emb_jl_projection_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``zip_with``+``aggregate`` — no explode, no shuffle except the final
     orderBy; distortion is integer-ppm DIV. At 100 TB this is a map-only
     pass that pipelines into the sink."""
-    signs = _jl_signs()
+    dots = [_int_dot_sql("v", _long_array(row)) for row in _jl_signs()]
     emb = load_table(spark, sf_dir, "embeddings")
-    v_int = F.expr(
-        f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_JL_SCALE},"
-        " 0) AS BIGINT))"
-    ).alias("v")
-    dot_self = "aggregate(zip_with(v, v, (a, b) -> a * b), CAST(0 AS BIGINT), (s, x) -> s + x)"
-    proj_terms = " + ".join(
-        f"aggregate(zip_with(v, array({', '.join(str(s) + 'L' for s in row)}),"
-        " (a, b) -> a * b), CAST(0 AS BIGINT), (s, x) -> s + x)"
-        f" * aggregate(zip_with(v, array({', '.join(str(s) + 'L' for s in row)}),"
-        " (a, b) -> a * b), CAST(0 AS BIGINT), (s, x) -> s + x)"
-        for row in signs
-    )
     return (
-        emb.select("vec_id", v_int)
+        emb.select("vec_id", round_grid("embedding", _JL_SCALE).alias("v"))
         .select(
             "vec_id",
-            F.expr(dot_self).alias("x_sq"),
-            F.expr(proj_terms).alias("proj_sq"),
+            F.expr(_int_dot_sql("v", "v")).alias("x_sq"),
+            F.expr(" + ".join(f"{d} * {d}" for d in dots)).alias("proj_sq"),
         )
         .select(
             "vec_id",
             "x_sq",
             "proj_sq",
-            F.expr(f"proj_sq * 1000000 DIV ({JL_OUT_DIM} * x_sq)").alias(
-                "distortion_ppm"
-            ),
+            # NULL for a zero vector, as the oracle's x // 0
+            F.expr(
+                f"proj_sq * 1000000 DIV nullif({JL_OUT_DIM} * x_sq, 0)"
+            ).alias("distortion_ppm"),
         )
         .orderBy("vec_id")
     )
@@ -3167,20 +3157,8 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``cosine_expr``) so the band edges are bit-identical in both engines.
     """
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
-    norm = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.transform(
-                    "embedding", lambda u: u.cast("double") * u.cast("double")
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ),
-        6,
-    )
     return (
-        emb.select(norm.alias("norm"))
+        emb.select(F.round(norm_expr("embedding"), 6).alias("norm"))
         .groupBy(
             F.floor(F.col("norm") * NORM_BUCKET_SCALE).cast("int").alias("bucket")
         )
@@ -3317,10 +3295,7 @@ def emb_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rank_corr_sql() -> str:
-    dot6 = (
-        "ROUND(list_sum(list_transform(list_zip(qv, cv),"
-        " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), 6)"
-    )
+    dot6 = f"ROUND({_dot_sql('qv', 'cv')}, 6)"
     return f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {N_QUERIES}),
 scored AS (
@@ -3610,27 +3585,26 @@ def ann_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
             e_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             e_norm = _fold_norms(e_mat)
-            # GEMM for candidate SELECTION only (K+slack by approximate key).
+            # GEMM for candidate SELECTION only (K+slack by approximate
+            # key), one slot more for the query's own row, dropped below.
             cos = (e_mat @ q_mat.T) / (e_norm[:, None] * q_norm[None, :])
-            sel_ppm = np.rint(cos * 1_000_000).astype(np.int64)
-            # Self-match mask: sentinel below the -1e6 cosine floor.
-            self_mask = ids[:, None] == qids[None, :]
-            sel_ppm[self_mask] = -2_000_000
-            sel_key = sel_ppm * (1 << 40) - ids[:, None]
-            k = min(TOP_K + GEMM_SELECT_SLACK, sel_key.shape[0])
+            sel_key = np.rint(cos * 1_000_000).astype(np.int64) * (
+                1 << 40
+            ) - ids[:, None]
+            k = min(TOP_K + GEMM_SELECT_SLACK + 1, sel_key.shape[0])
             top = np.argpartition(-sel_key, kth=k - 1, axis=0)[:k, :]
             # EXACT rescore of survivors: oracle's sequential fold +
-            # half-away ppm; re-mask self matches on the rescored values.
+            # half-away ppm.
             dot = _fold_dot_pairs(e_mat, q_mat, top)
             score_ppm = _round_half_away(
                 dot / (e_norm[top] * q_norm[None, :]) * 1_000_000
             ).astype(np.int64)
-            score_ppm[ids[top] == qids[None, :]] = -2_000_000
+            other = (ids[top] != qids[None, :]).ravel()
             yield pd.DataFrame(
                 {
-                    "query_id": np.repeat(qids[None, :], k, axis=0).ravel(),
-                    "neighbor_id": ids[top].ravel(),
-                    "score_ppm": score_ppm.ravel(),
+                    "query_id": np.repeat(qids[None, :], k, axis=0).ravel()[other],
+                    "neighbor_id": ids[top].ravel()[other],
+                    "score_ppm": score_ppm.ravel()[other],
                 }
             )
 
@@ -3907,13 +3881,7 @@ def emb_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Norms are precomputed ONCE per vector on each join side (the oracle
     # recomputes them per pair — identical doubles either way), so the
     # per-pair work inside the join is the dot product alone.
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform("embedding", lambda u: u.cast("double") * u.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    norm = norm_expr("embedding")
     a = emb.select(
         F.col("vec_id").alias("a_id"),
         F.col("embedding").alias("av"),
@@ -3927,16 +3895,8 @@ def emb_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(17 * vec_id) % {mod}").alias("res"),
     )
     pairs = a.join(b, "res").filter(F.col("a_id") < F.col("b_id"))
-    dot = F.aggregate(
-        F.zip_with("av", "bv", lambda u, v: u.cast("double") * v.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    binned = pairs.select(
-        F.floor(F.round(dot / (F.col("na") * F.col("nb")), 6) * 10)
-        .cast("int")
-        .alias("bin")
-    )
+    cos = cosine_from_parts(dot_expr("av", "bv"), F.col("na"), F.col("nb"))
+    binned = pairs.select(F.floor(cos * 10).cast("int").alias("bin"))
     total = binned.agg(F.count(F.lit(1)).alias("n_pairs"))
     return (
         binned.groupBy("bin")
@@ -4068,11 +4028,11 @@ def emb_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes of model state), and scoring is a single NARROW in-row
     aggregate over the corpus — no second shuffle; the top-{ZSCORE_TOPK}
     readout is TakeOrdered."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = f"CAST(round(CAST(val AS DOUBLE) * {PCA_X_SCALE}, 0) AS BIGINT)"
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", round_grid("embedding", PCA_X_SCALE).alias("qx")
+    )
     stats = (
-        emb.select(F.posexplode("embedding").alias("dim", "val"))
-        .select("dim", F.expr(q).alias("v"))
+        emb.select(F.posexplode("qx").alias("dim", "v"))
         .groupBy("dim")
         .agg(
             F.sum("v").alias("s"),
@@ -4083,17 +4043,10 @@ def emb_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     n = int(stats[0].n)
-    s_arr = "array(%s)" % ", ".join(str(int(r.s)) + "L" for r in stats)
-    v_arr = "array(%s)" % ", ".join(
-        str(int((n * int(r.qsum) - int(r.s) ** 2) // (n * n))) + "L"
-        for r in stats
-    )
-    qx = (
-        f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-        f" * {PCA_X_SCALE}, 0) AS BIGINT))"
-    )
+    s_arr = _long_array(r.s for r in stats)
+    v_arr = _long_array((n * int(r.qsum) - int(r.s) ** 2) // (n * n) for r in stats)
     score = (
-        f"aggregate(zip_with({qx}, sequence(1, {EMB_DIM}), (x, i) ->"
+        f"aggregate(zip_with(qx, sequence(1, {EMB_DIM}), (x, i) ->"
         f" named_struct('x', x, 'i', i)), CAST(0 AS BIGINT), (acc, p) ->"
         f" acc + CASE WHEN element_at({v_arr}, p.i) <= 0 THEN CAST(0 AS BIGINT)"
         f" ELSE (abs({n}L * p.x - element_at({s_arr}, p.i)) DIV {n}L)"
@@ -4149,12 +4102,6 @@ KCENTER_K = 4
 KC_SCALE = 1_000_000  # components quantized to micros before the L2 math
 
 
-def _kc_quant(col: str):
-    return F.transform(
-        col, lambda u: F.floor(u.cast("double") * KC_SCALE + F.lit(0.5)).cast("bigint")
-    )
-
-
 def cluster_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center / farthest-first traversal (Gonzalez 1985, public
     — the 2-approximation for metric k-center and the seeding step
@@ -4179,7 +4126,7 @@ def cluster_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     round Lloyd iteration would be 10× the cost.
     """
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _kc_quant("embedding").alias("q")
+        "vec_id", half_up_grid("embedding", KC_SCALE).alias("q")
     ).localCheckpoint(eager=False)
 
     def mind_col():
@@ -4315,7 +4262,9 @@ def emb_isotropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact at any partition count. The pair-count divisor is
     widened to DECIMAL(38,0)/HUGEINT before squaring n_vecs, so the
     contract holds to n_vecs ≈ 1e16 (a BIGINT divisor would silently
-    wrap at ≈3.04M vectors under non-ANSI Spark).
+    wrap at ≈3.04M vectors under non-ANSI Spark). A zero vector has no
+    unit components (NULL, skipped by the sums) and a one-row corpus no
+    pair, so its mean cosine is NULL, as in the oracle.
 
     Plan shape: ONE embeddings scan → posexplode to (dim, q) → ONE
     partial-agg shuffle keyed by dim (d·n_partitions rows cross the wire,
@@ -4326,14 +4275,7 @@ def emb_isotropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
     norm = norm_expr("embedding")
     q = emb.select(
-        F.posexplode(
-            F.transform(
-                "embedding",
-                lambda u: F.floor(
-                    u.cast("double") / norm * ISO_SCALE + F.lit(0.5)
-                ).cast("bigint"),
-            )
-        ).alias("dim", "q"),
+        F.posexplode(half_up_grid("embedding", ISO_SCALE, norm)).alias("dim", "q"),
         F.floor(norm * ISO_SCALE + F.lit(0.5)).cast("bigint").alias("norm_micro"),
     )
     dims = q.groupBy("dim").agg(
@@ -4353,18 +4295,7 @@ def emb_isotropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_vecs",
         # all per-dim nm/n values are equal (= Σ norm_micro / n_vecs)
         F.col("mean_norm_micro_num").alias("mean_norm_micro"),
-        (
-            # n_vecs is widened to DECIMAL(38,0) BEFORE the square so the
-            # divisor never overflows BIGINT (the bare n_vecs*n_vecs*1e6
-            # wraps at n_vecs ≈ 3.04M under non-ANSI Spark while DuckDB
-            # throws — r09 review finding). DECIMAL(38,0)/HUGEINT keeps the
-            # divisor exact up to n_vecs ≈ 1e16, far past any corpus size.
-            F.expr(
-                f"CAST((sumsq - selfsq)"
-                f" div ((CAST(n_vecs AS DECIMAL(38,0)) * n_vecs - n_vecs)"
-                f" * {ISO_SCALE}) AS BIGINT)"
-            )
-        ).alias("mean_cos_ppm"),
+        _mean_cos_ppm("sumsq", "selfsq").alias("mean_cos_ppm"),
         F.expr("CAST(max_abs_s div n_vecs AS BIGINT)").alias("max_dim_bias_micro"),
     )
 
@@ -4458,11 +4389,7 @@ def emb_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
     this extends the pipeline family (SURVEY.md LLM-ops mandate).
     """
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings")).select(
-        "embedding",
-        F.expr(
-            f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-            f" * {ABTT_SCALE}, 0) AS BIGINT))"
-        ).alias("xq"),
+        "embedding", round_grid("embedding", ABTT_SCALE).alias("xq")
     ).localCheckpoint(eager=False)
 
     # Corpus mean per dim as ONE keyless aggregate (64 BIGINT sums + a
@@ -4486,7 +4413,6 @@ def emb_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
             if s >= 0
             else -((2 * (-s) + n_cnt) // (2 * n_cnt))
         )
-    mu_arr = "array(" + ",".join(str(c) for c in mu) + ")"
 
     # centered integer matrix, kept IN-ROW for the power rounds (r12:
     # replaced the 64×-exploded eager checkpoint + per-round
@@ -4500,41 +4426,12 @@ def emb_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computed exactly once per vector (r12, the _line_sorted idiom).
     cw = emb.select(
         "embedding",
-        F.expr(f"zip_with(xq, {mu_arr}, (a, b) -> a - b)").alias("w"),
+        F.expr(f"zip_with(xq, {_long_array(mu)}, (a, b) -> a - b)").alias("w"),
         norm_expr("embedding").alias("nb"),
     ).localCheckpoint(eager=False)
 
-    v = [1] * EMB_DIM
-    for _ in range(ABTT_ITERS):
-        arr = "array(" + ",".join(str(int(c)) for c in v) + ")"
-        # y = w·v folds IN-ROW (a plain column through the Generate);
-        # z is a posexplode + ONE 64-key partial-agg shuffle — r12: the
-        # previous shape shuffled the exploded corpus twice per round
-        # (groupBy(vec_id) + join-back), the emb_pca_power_iter fix.
-        y = F.expr(
-            f"aggregate(zip_with(w, {arr}, (a, b) -> a * b),"
-            f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-        z_rows = (
-            cw.select("w", y.alias("y"))
-            .select(F.posexplode("w").alias("dim", "wv"), "y")
-            .groupBy("dim")
-            .agg(
-                F.sum(
-                    (F.col("wv") * F.col("y")).cast("decimal(38,0)")
-                ).alias("z")
-            )
-            .collect()
-        )
-        z = [0] * EMB_DIM
-        for r in z_rows:
-            z[r.dim] = int(r.z)
-        mz = max(abs(c) for c in z)
-        v = [
-            (1 if c > 0 else -1) * ((abs(c) * ABTT_V_SCALE) // mz) if c else 0
-            for c in z
-        ]
-    v_arr = "array(" + ",".join(str(int(c)) for c in v) + ")"
+    v = _power_iterate(cw, "w", ABTT_ITERS, ABTT_V_SCALE)
+    v_arr = _long_array(v)
     vv = sum(int(c) * int(c) for c in v)
 
     rows = (
@@ -4543,22 +4440,19 @@ def emb_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             "w",
             "nb",
-            F.expr(
-                f"aggregate(zip_with(w, {v_arr}, (a, b) -> a * b),"
-                f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            ).alias("proj"),
-            F.expr(
-                "aggregate(w, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)"
-            ).alias("wss"),
+            F.expr(_int_dot_sql("w", v_arr)).alias("proj"),
+            F.expr(_int_dot_sql("w", "w")).alias("wss"),
         )
         .select(
             "embedding",
             "nb",
             "proj",
             "wss",
+            # nullif: a one-row corpus centers to zero, so v = 0 and the
+            # oracle's (proj * b) // 0 is NULL
             F.expr(
                 f"zip_with(w, {v_arr},"
-                f" (a, b) -> a - (proj * b) div {vv})"
+                f" (a, b) -> a - (proj * b) div nullif({vv}, 0))"
             ).alias("w2"),
         )
         # w2ss hoisted to a projected column (r12): the qa lambda divided
@@ -4568,30 +4462,22 @@ def emb_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (guard + lambda) CollapseProject keeps it a separate
         # projection, evaluated once per row. Same BIGINT fold, same
         # values.
-        .withColumn(
-            "w2ss",
-            F.expr("aggregate(w2, CAST(0 AS BIGINT), (a, y) -> a + y * y)"),
-        )
+        .withColumn("w2ss", F.expr(_int_dot_sql("w2", "w2")))
         .select(
             "proj",
             "wss",
-            F.transform(
-                "embedding",
-                lambda u: F.floor(
-                    u.cast("double") / F.col("nb") * ISO_SCALE + F.lit(0.5)
-                ).cast("bigint"),
-            ).alias("qb"),
+            half_up_grid("embedding", ISO_SCALE, F.col("nb")).alias("qb"),
             # Zero-guard: a vector fully annihilated by centering + top-
-            # direction removal has w2 sum-of-squares 0; dividing would be
-            # 0/0 → NaN (engine-divergent). Map it to the all-zero unit
-            # contribution instead (mirrored with CASE WHEN in the oracle).
-            F.expr(
-                f"CASE WHEN w2ss = 0"
-                f" THEN transform(w2, x -> CAST(0 AS BIGINT))"
-                f" ELSE transform(w2, x -> CAST(floor(CAST(x AS DOUBLE)"
-                f" / sqrt(CAST(w2ss AS DOUBLE))"
-                f" * {ISO_SCALE} + 0.5) AS BIGINT)) END"
-            ).alias("qa"),
+            # direction removal has w2 sum-of-squares 0. Map it to the
+            # all-zero unit contribution (mirrored with CASE WHEN in the
+            # oracle) rather than the unit quantizer's NULL.
+            F.when(
+                F.col("w2ss") == 0, F.transform("w2", lambda x: F.lit(0).cast("bigint"))
+            )
+            .otherwise(
+                half_up_grid("w2", ISO_SCALE, F.sqrt(F.col("w2ss").cast("double")))
+            )
+            .alias("qa"),
         )
     )
     ex = rows.select(
@@ -4625,30 +4511,18 @@ def emb_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("w2s").alias("w2s"),
     ).select(
         "n_vecs",
-        F.expr(f"CAST(p2 * 1000000 div (w2s * {vv}) AS BIGINT)").alias(
+        F.expr(f"CAST(p2 * 1000000 div nullif(w2s * {vv}, 0) AS BIGINT)").alias(
             "top_var_ppm"
         ),
-        F.expr(
-            f"CAST((sumsq_b - selfsq_b)"
-            f" div ((CAST(n_vecs AS DECIMAL(38,0)) * n_vecs - n_vecs)"
-            f" * {ISO_SCALE}) AS BIGINT)"
-        ).alias("mean_cos_ppm_before"),
-        F.expr(
-            f"CAST((sumsq_a - selfsq_a)"
-            f" div ((CAST(n_vecs AS DECIMAL(38,0)) * n_vecs - n_vecs)"
-            f" * {ISO_SCALE}) AS BIGINT)"
-        ).alias("mean_cos_ppm_after"),
+        _mean_cos_ppm("sumsq_b", "selfsq_b").alias("mean_cos_ppm_before"),
+        _mean_cos_ppm("sumsq_a", "selfsq_a").alias("mean_cos_ppm_after"),
     )
 
 
 def _abtt_sql() -> str:
-    xq = (
-        f"list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-        f" * {ABTT_SCALE}, 0) AS BIGINT))"
-    )
     ctes = [
         f"""e0 AS (
-  SELECT vec_id, embedding, {xq} AS xq FROM embeddings
+  SELECT vec_id, embedding, {_round_grid_sql('embedding', ABTT_SCALE)} AS xq FROM embeddings
 )""",
     ]
     ctes.append("""mudim AS (
@@ -4801,31 +4675,24 @@ EMB_ABTT_SQL = _abtt_sql()
 MRL_DIMS = (8, 16, 32, 64)  # prefix lengths; the last is the full dimension
 
 
-def _sum_sq_sql(col: str) -> str:
-    """Σx² of an array column as a left-to-right double fold (SQL text)."""
-    return (
-        f"aggregate({col}, CAST(0 AS DOUBLE),"
-        f" (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    )
-
-
-def _guarded_cos(qe: str, ce: str, qss: str, css: str) -> Column:
+def _guarded_cos(qe: str | Column, ce: str | Column, qss: str, css: str) -> Column:
     """6-decimal cosine of array expressions ``qe``/``ce`` given their
-    precomputed sums of squares ``qss``/``css``."""
-    # Zero-norm guard: a vector that is all zeros (a zero prefix, or a
-    # dequantized form collapsed to zero) would give 0/0 → NaN, and NaN
-    # ordering differs across engines — map such degenerate pairs to -2.0
-    # (below any cosine) so the rank tie-break stays deterministic (the
-    # emb_abtt_postprocess precedent).
-    dot = (
-        f"aggregate(zip_with({qe}, {ce},"
-        f" (u, v) -> CAST(u AS DOUBLE) * CAST(v AS DOUBLE)),"
-        f" CAST(0 AS DOUBLE), (a, x) -> a + x)"
+    hoisted sums of squares, the columns ``qss``/``css``."""
+    # Zero-norm guard: a pair with an all-zero side (a zero prefix, or a
+    # dequantized form collapsed to zero) scores -2.0, below any cosine,
+    # not the NULL of cosine_from_parts — the oracles spell out this rule.
+    return F.when((F.col(qss) == 0.0) | (F.col(css) == 0.0), F.lit(-2.0)).otherwise(
+        cosine_from_parts(dot_expr(qe, ce), F.sqrt(qss), F.sqrt(css))
     )
-    return F.expr(
+
+
+def _guarded_cos_sql(qe: str, ce: str) -> str:
+    """``_guarded_cos`` as oracle SQL, sums of squares inline."""
+    qss, css = _ss_sql(qe), _ss_sql(ce)
+    return (
         f"CASE WHEN {qss} = 0.0 OR {css} = 0.0"
         f" THEN CAST(-2.0 AS DOUBLE)"
-        f" ELSE round({dot} / (sqrt({qss}) * sqrt({css})), 6) END"
+        f" ELSE ROUND({_dot_sql(qe, ce)} / (sqrt({qss}) * sqrt({css})), 6) END"
     )
 
 
@@ -4905,7 +4772,7 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dot. The fold expression is IDENTICAL (same left-to-right double
     # reduction over the same prefix), so every cosine is bit-unchanged.
     def pref_ss(d: int) -> Column:
-        return F.expr(_sum_sq_sql(f"slice(embedding, 1, {d})"))
+        return sum_sq_expr(F.slice("embedding", 1, d))
 
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -4921,7 +4788,7 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             d,
             _guarded_cos(
-                f"slice(qv, 1, {d})", f"slice(cv, 1, {d})", f"qss{d}", f"css{d}"
+                F.slice("qv", 1, d), F.slice("cv", 1, d), f"qss{d}", f"css{d}"
             ),
         )
         for d in MRL_DIMS
@@ -4930,28 +4797,9 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _matryoshka_sql() -> str:
-    def cos_d(d: int) -> str:
-        qd, cd = f"qv[1:{d}]", f"cv[1:{d}]"
-        qss = (
-            f"list_sum(list_transform({qd},"
-            f" x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-        css = (
-            f"list_sum(list_transform({cd},"
-            f" x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-        dot = (
-            f"list_sum(list_transform(list_zip({qd}, {cd}),"
-            f" p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-        )
-        return (
-            f"CASE WHEN {qss} = 0.0 OR {css} = 0.0"
-            f" THEN CAST(-2.0 AS DOUBLE)"
-            f" ELSE ROUND({dot} / (sqrt({qss}) * sqrt({css})), 6) END"
-        )
-
     arms = "\n  UNION ALL\n  ".join(
-        f"SELECT query_id, neighbor_id, {d} AS dims, {cos_d(d)} AS cos"
+        f"SELECT query_id, neighbor_id, {d} AS dims,"
+        f" {_guarded_cos_sql(f'qv[1:{d}]', f'cv[1:{d}]')} AS cos"
         f" FROM pairs"
         for d in MRL_DIMS
     )
@@ -5015,11 +4863,7 @@ def emb_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection (the matryoshka shape), one window per query-scoped
     (query, bits) group, and a metadata-sized recall join."""
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = F.expr(
-        f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-        f" * {SQ_FP}, 0) AS BIGINT))"
-    )
-    base = emb.select("vec_id", fp.alias("xq"))
+    base = emb.select("vec_id", round_grid("embedding", SQ_FP).alias("xq"))
     rng = base.select(F.explode("xq").alias("c")).agg(
         F.min("c").alias("qlo"), F.max("c").alias("qhi")
     )
@@ -5053,9 +4897,9 @@ def emb_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "xq",
-            F.expr(_sum_sq_sql("xq")).alias("ssfp"),
+            sum_sq_expr("xq").alias("ssfp"),
             *[F.col(f"d{b}") for b in SQ_BITS],
-            *[F.expr(_sum_sq_sql(f"d{b}")).alias(f"ss{b}") for b in SQ_BITS],
+            *[sum_sq_expr(f"d{b}").alias(f"ss{b}") for b in SQ_BITS],
         )
         .localCheckpoint(eager=False)
     )
@@ -5092,42 +4936,19 @@ def _sq_recall_sql() -> str:
             f" // GREATEST(qhi - qlo, 1)) * (qhi - qlo) // {lev})"
         )
 
-    def cos(qe: str, ce: str) -> str:
-        qss = (
-            f"list_sum(list_transform({qe},"
-            f" x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-        css = (
-            f"list_sum(list_transform({ce},"
-            f" x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-        dot = (
-            f"list_sum(list_transform(list_zip({qe}, {ce}),"
-            f" p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-        )
-        return (
-            f"CASE WHEN {qss} = 0.0 OR {css} = 0.0"
-            f" THEN CAST(-2.0 AS DOUBLE)"
-            f" ELSE ROUND({dot} / (sqrt({qss}) * sqrt({css})), 6) END"
-        )
-
     arms = "\n  UNION ALL\n  ".join(
         [
             f"SELECT query_id, neighbor_id, {b} AS bits,"
-            f" {cos(deq('qv', b), deq('cv', b))} AS cos FROM pairs"
+            f" {_guarded_cos_sql(deq('qv', b), deq('cv', b))} AS cos FROM pairs"
             for b in SQ_BITS
         ]
         + [
             f"SELECT query_id, neighbor_id, 32 AS bits,"
-            f" {cos('qv', 'cv')} AS cos FROM pairs"
+            f" {_guarded_cos_sql('qv', 'cv')} AS cos FROM pairs"
         ]
     )
-    xq = (
-        f"list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
-        f" * {SQ_FP}, 0) AS BIGINT))"
-    )
     return f"""
-WITH base AS (SELECT vec_id, {xq} AS xq FROM embeddings),
+WITH base AS (SELECT vec_id, {_round_grid_sql('embedding', SQ_FP)} AS xq FROM embeddings),
 rng AS (
   SELECT MIN(c) AS qlo, MAX(c) AS qhi
   FROM (SELECT UNNEST(xq) AS c FROM base)

@@ -33,6 +33,21 @@ def duck():
     yield con
 
 
+def edge_table(spark, d: str, table: str, rows, schema: str):
+    """Write ``rows`` (with Spark DDL ``schema``) as ``table`` of an edge
+    fixture in directory ``d``, and return a DuckDB connection with a view
+    of that table. Queries read the fixture with ``sf_dir=d``."""
+    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
+        f"{d}/{table}.parquet"
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW {table} AS SELECT * FROM "
+        f"read_parquet('{d}/{table}.parquet/*.parquet')"
+    )
+    return con
+
+
 def assert_oracle_match(spark, duck, fn, sql, sf_dir=SF_SMOKE):
     """Spark-vs-DuckDB compare (same normalization as tools/check_oracle)."""
     sdf = fn(spark, sf_dir).toPandas()

@@ -15,7 +15,9 @@ from kafka_pyspark_bigdata_spark.operators import (
     timeseries,
 )
 
-from conftest import SF_SMOKE, assert_oracle_match
+from conftest import SF_SMOKE, assert_oracle_match, edge_table
+
+DOCUMENTS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
 
 MODULES = [text, dedup, similarity, multimodal, geo, timeseries]
 CASES = [(m, name) for m in MODULES for name in sorted(m.QUERIES)]
@@ -980,8 +982,6 @@ def test_empty_candidate_set_matches_oracle(spark, tmp_path, name):
     candidates, 0 verified and a NULL precision for every config, as the
     oracle's COUNT(*) and 0 // 0 do (a sum over zero candidate rows would
     be NULL)."""
-    import duckdb
-
     d = str(tmp_path / "no_dups")
     texts = [
         "alpha beta gamma delta epsilon",
@@ -989,14 +989,10 @@ def test_empty_candidate_set_matches_oracle(spark, tmp_path, name):
         "oak pine elm ash birch",
         "north south east west center",
     ]
-    spark.createDataFrame(
+    duck = edge_table(
+        spark, d, "documents",
         [(i, t, "en", "s0", len(t)) for i, t in enumerate(texts)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(d + "/documents.parquet")
-    duck = duckdb.connect()
-    duck.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{d}/documents.parquet/*.parquet')"
+        DOCUMENTS_DDL,
     )
     sdf = assert_oracle_match(
         spark, duck, dedup.QUERIES[name], dedup.ORACLES[name], sf_dir=d
@@ -1022,8 +1018,6 @@ DEGENERATE_CASES = [
 def degenerate_corpus(spark, tmp_path_factory):
     """sf0.001's first 40 documents plus DEGENERATE_TEXTS, written as a
     documents table, and a DuckDB connection with its view."""
-    import duckdb
-
     d = str(tmp_path_factory.mktemp("degenerate"))
     head = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -1032,15 +1026,7 @@ def degenerate_corpus(spark, tmp_path_factory):
     rows = [tuple(r) for r in head] + [
         (40 + i, t, "en", f"src{i}", len(t)) for i, t in enumerate(DEGENERATE_TEXTS)
     ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(d + "/documents.parquet")
-    duck = duckdb.connect()
-    duck.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{d}/documents.parquet/*.parquet')"
-    )
-    return d, duck
+    return d, edge_table(spark, d, "documents", rows, DOCUMENTS_DDL)
 
 
 @pytest.mark.parametrize(
@@ -1062,24 +1048,64 @@ def test_zero_token_group_matches_oracle(spark, tmp_path, name):
     """A language and a source whose only document has no tokens: the
     per-group ratio over zero words or tokens is NULL, as the oracle's
     ``x // 0`` is, not a division-by-zero error."""
-    import duckdb
-
     d = str(tmp_path / "zero_group")
     rows = [
         (0, "the cat sat on the mat", "en", "src1"),
         (1, "a dog and a cat", "en", "src2"),
         (2, "   ", "xx", "src3"),
     ]
-    spark.createDataFrame(
+    duck = edge_table(
+        spark, d, "documents",
         [(i, t, lang, src, len(t)) for i, t, lang, src in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(d + "/documents.parquet")
-    duck = duckdb.connect()
-    duck.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{d}/documents.parquet/*.parquet')"
+        DOCUMENTS_DDL,
     )
     mod = text if name in text.QUERIES else pipeline
+    assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name], sf_dir=d)
+
+
+# Edge embedding corpora built from sf0.001's first 40 vectors: one
+# all-zero vector appended (a failed encode), the first vector alone, and
+# three exact copies of vector 0 appended (cosine ties at 1.0). No fixture
+# has a zero vector or fewer than TOP_K + 1 rows.
+EDGE_EMBEDDINGS = ["zero_vector", "one_row", "duplicates"]
+
+EMBEDDING_CASES = [(similarity, name) for name in similarity.ORACLES] + [
+    (dedup, "dedup_embedding_cosine")
+]
+
+
+@pytest.fixture(scope="module")
+def edge_embeddings(spark, tmp_path_factory, request):
+    """(sf_dir, DuckDB connection) of the edge corpus ``request.param``."""
+    head = [
+        tuple(r)
+        for r in spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        .orderBy("vec_id").limit(40).collect()
+    ]
+    _, vec0, label0 = head[0]
+    rows = {
+        "zero_vector": head + [(40, [0.0] * similarity.EMB_DIM, label0)],
+        "one_row": head[:1],
+        "duplicates": head + [(40 + i, vec0, label0) for i in range(3)],
+    }[request.param]
+    d = str(tmp_path_factory.mktemp(request.param))
+    duck = edge_table(
+        spark, d, "embeddings", rows, "vec_id long, embedding array<float>, label int"
+    )
+    return d, duck
+
+
+@pytest.mark.parametrize("edge_embeddings", EDGE_EMBEDDINGS, indirect=True)
+@pytest.mark.parametrize(
+    "mod,name", EMBEDDING_CASES, ids=[name for _, name in EMBEDDING_CASES]
+)
+def test_degenerate_embeddings_match_oracle(spark, edge_embeddings, mod, name):
+    """Every embedding query agrees with its oracle on a zero vector, a
+    one-row table and exact duplicates: a cosine, unit vector or ratio
+    over a zero norm or an empty pair set is NULL, as DuckDB's ``x / 0``
+    is; NULL scores rank last; equal scores resolve toward the smaller
+    id; and no query pairs a vector with itself."""
+    d, duck = edge_embeddings
     assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name], sf_dir=d)
 
 
