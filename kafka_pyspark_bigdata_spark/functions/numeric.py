@@ -15,8 +15,10 @@ long as the value is not exactly on a rounding boundary — impossible for a
 binary double vs a decimal half-ulp except for short binary fractions, which
 the fixture generators don't produce.
 
-``md5_int`` is the one Spark spelling of a content-addressed integer (an
-md5 hex prefix read as BIGINT), the hash both engines compute alike.
+``half_up_cents`` is the one Spark spelling of a DOUBLE rounded half up
+to integer cents. ``md5_int`` is the one Spark spelling of a
+content-addressed integer (an md5 hex prefix read as BIGINT), the hash
+both engines compute alike.
 """
 
 from __future__ import annotations
@@ -48,6 +50,14 @@ def cents(col: Column | str) -> Column:
     """Money as integer cents: exact decimal(18,2) times 100, as BIGINT."""
     c = F.col(col) if isinstance(col, str) else col
     return (c.cast(f"decimal({PREC},{SCALE})") * 100).cast("bigint")
+
+
+def half_up_cents(col: str) -> Column:
+    """Money as integer cents rounded half up from the DOUBLE itself,
+    floor(x·100 + 0.5) as BIGINT (DuckDB spells it
+    ``CAST(floor(x * 100.0 + 0.5) AS BIGINT)``); ``cents`` goes through
+    decimal(18,2) instead."""
+    return F.expr(f"CAST(FLOOR({col} * 100.0 + 0.5) AS BIGINT)")
 
 
 def dsum_expr(expr: Column) -> Column:

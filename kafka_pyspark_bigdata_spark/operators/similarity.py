@@ -4272,8 +4272,12 @@ def emb_isotropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a map-side pass plus a 64-key aggregate — the cheapest corpus-wide
     statistic in the embedding family.
     """
-    emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
-    norm = norm_expr("embedding")
+    # the norm is projected once per row: inside the grid's lambda Spark
+    # would fold its 64-term sum again for every element
+    emb = parallelize_scan(load_table(spark, sf_dir, "embeddings")).select(
+        "embedding", norm_expr("embedding").alias("norm")
+    )
+    norm = F.col("norm")
     q = emb.select(
         F.posexplode(half_up_grid("embedding", ISO_SCALE, norm)).alias("dim", "q"),
         F.floor(norm * ISO_SCALE + F.lit(0.5)).cast("bigint").alias("norm_micro"),

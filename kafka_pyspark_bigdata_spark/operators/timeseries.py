@@ -26,15 +26,31 @@ dense 30-vector build is a broadcast day-grid join + per-user
 collect/sort (state = series length per user); banding shuffles 2 short
 keys per user; the verify join touches candidates only — never the
 users² product.
+
+Shared rules, each with one home: ``_events_by_day`` is the events →
+(key, day, cents) scan under every daily series (``_daily_sums`` its
+per-day sum, ``_ev_cte`` its oracle CTE); ``_dense_daily`` the
+user × observed-day grid; ``_ordered_list`` a series as one day-ordered array;
+``_paa_sums`` the PAA segment sums; ``_array_sum`` / ``_dot`` the exact
+in-row integer sums; ``_lag_overlap`` the lag-L overlap pair;
+``_lower_median`` the exact per-series lower median; ``_lttb_area`` the
+LTTB triangle area in either engine.
+
+Short series: a lag-L statistic over a series of n ≤ L days has no
+overlap, so it is NULL (``ts_autocorr``'s rL, ``ts_cross_correlation``'s
+r, whose ``n_overlap`` reads n − L, negative below the lag and −L on an
+empty table) — DuckDB's answer, whose list slices come out empty where
+Spark's ``slice`` would raise. A correlation over an overlap with no
+variance is NULL too.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import cents
+from ..functions.numeric import cents, half_up_cents
 from ..sources.batch import load_table
 
 TS_SEGMENTS = 4  # PAA segments per series
@@ -50,13 +66,77 @@ TS_TOP_PAIRS = 20
 _SEG_PER_BAND = TS_SEGMENTS // TS_BANDS
 
 
-# Oracle mirror of ``_dense_daily``: the CTE chain ev → bounds → daily →
-# days → users → dense, shared by every oracle over the dense series.
-_DENSE_DAILY_CTES = """ev AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
+def _events_by_day(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
+    """(key, d, cents): each event's ``key``, calendar day and value in
+    exact integer cents — the scan under every daily series here."""
+    return load_table(spark, sf_dir, "events").select(
+        key, F.to_date("ts").alias("d"), cents("value").alias("cents")
+    )
+
+
+def _daily_sums(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
+    """(key, d, v): the cent sum of each ``key`` on each observed day."""
+    return (
+        _events_by_day(spark, sf_dir, key)
+        .groupBy(key, "d")
+        .agg(F.sum("cents").alias("v"))
+    )
+
+
+def _ev_cte(key: str) -> str:
+    """Oracle mirror of ``_events_by_day``: the ``ev`` CTE."""
+    return f"""ev AS (
+  SELECT {key}, CAST(ts AS DATE) AS d,
          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
   FROM events
-),
+)"""
+
+
+def _ordered_list(order: str, value: str) -> Column:
+    """Aggregate: the group's ``value``s as one array in ``order`` order
+    (DuckDB: ``list(value ORDER BY order)``)."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct(order, value))), lambda s: s[value]
+    )
+
+
+def _paa_sums(dense: DataFrame, segments: int) -> DataFrame:
+    """(user_id, seg, segsum): PAA — each dense series' cent sum over
+    ``segments`` equal slices of the day grid (day di is in segment
+    di·segments div nd)."""
+    return (
+        dense.withColumn("seg", F.expr(f"di * {segments} div nd"))
+        .groupBy("user_id", "seg")
+        .agg(F.sum("v").alias("segsum"))
+    )
+
+
+def _array_sum(arr: Column | str, acc_type: str = "bigint") -> Column:
+    """Exact in-row sum of an integer array, accumulated in ``acc_type``."""
+    return F.aggregate(arr, F.lit(0).cast(acc_type), lambda acc, v: acc + v)
+
+
+def _dot(a: Column | str, b: Column | str, acc_type: str = "bigint") -> Column:
+    """Exact in-row Σ aᵢ·bᵢ of two equal-length integer arrays."""
+    return _array_sum(F.zip_with(a, b, lambda x, y: x * y), acc_type)
+
+
+def _lag_overlap(
+    x: str, y: str, n: Column, lag: Column | int
+) -> tuple[Column, Column]:
+    """The windows a lag-``lag`` statistic pairs over length-``n`` arrays:
+    x's first n − lag elements and y's last n − lag, so element i of one
+    meets element i + lag of the other. A series no longer than the lag
+    has no overlap: both windows are NULL, and so is every sum over them,
+    as DuckDB's list_sum over its empty slices is; ``slice`` never sees
+    the negative length it would raise on."""
+    m = n - lag
+    return F.when(m > 0, F.slice(x, 1, m)), F.when(m > 0, F.slice(y, 1 + lag, m))
+
+
+# Oracle mirror of ``_dense_daily``: the CTE chain ev → bounds → daily →
+# days → users → dense, shared by every oracle over the dense series.
+_DENSE_DAILY_CTES = _ev_cte("user_id") + """,
 bounds AS (
   SELECT MIN(d) AS d0, datediff('day', MIN(d), MAX(d)) + 1 AS nd FROM ev
 ),
@@ -72,13 +152,17 @@ dense AS (
   LEFT JOIN daily ON daily.user_id = u.user_id AND daily.di = g.di
 )"""
 
+# ... plus each user's dense series as one day-ordered list
+_DENSE_SERIES_CTES = _DENSE_DAILY_CTES + """,
+series AS (
+  SELECT user_id, list(v ORDER BY di) AS vec FROM dense GROUP BY 1
+)"""
+
 
 def _dense_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, di, nd, v): day-indexed DENSE daily cent sums per user —
     day grid broadcast-joined so missing days are explicit zeros."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("d"), cents("value").alias("cents")
-    )
+    ev = _events_by_day(spark, sf_dir, "user_id")
     bounds = ev.agg(
         F.min("d").alias("d0"), (F.datediff(F.max("d"), F.min("d")) + 1).alias("nd")
     )
@@ -108,17 +192,10 @@ def ts_similarity_paa(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the PAA query reads the densified grid TWICE (full series + segment
     # sums); pin so the multi-join densification chain runs once
     dense = _dense_daily(spark, sf_dir).localCheckpoint(eager=False)
-    series = dense.groupBy("user_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("di", "v"))), lambda s: s["v"]
-        ).alias("vec")
-    )
+    series = dense.groupBy("user_id").agg(_ordered_list("di", "v").alias("vec"))
     # PAA segment sums -> quantized levels -> band keys
-    seg = (
-        dense.withColumn("seg", F.expr(f"di * {TS_SEGMENTS} div nd"))
-        .groupBy("user_id", "seg")
-        .agg(F.sum("v").alias("segsum"))
-        .withColumn("q", F.expr(f"segsum div {TS_QSTEP_CENTS}"))
+    seg = _paa_sums(dense, TS_SEGMENTS).withColumn(
+        "q", F.expr(f"segsum div {TS_QSTEP_CENTS}")
     )
     bands = (
         seg.withColumn("band", F.expr(f"seg div {_SEG_PER_BAND}"))
@@ -141,24 +218,17 @@ def ts_similarity_paa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     va = series.select(F.col("user_id").alias("user_a"), F.col("vec").alias("va"))
     vb = series.select(F.col("user_id").alias("user_b"), F.col("vec").alias("vb"))
-    sum_sq = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
+    sum_sq = _array_sum(F.zip_with("va", "vb", lambda x, y: (x - y) * (x - y)))
     # r13 (guide §2.4): rank-then-filter ran a row_number window over
     # every verified candidate pair — a single-partition global sort.
     # orderBy().limit() is a TakeOrdered (per-partition top-k), so only
-    # TS_TOP_PAIRS rows sort globally; rank is then a window over those
-    # few rows. Same ordering, same rows, same ranks.
-    w = Window.orderBy("sum_sq", "user_a", "user_b")
+    # TS_TOP_PAIRS rows sort globally. Same ordering, same rows.
     return (
         cand.join(va, "user_a")
         .join(vb, "user_b")
         .select("user_a", "user_b", sum_sq.alias("sum_sq"))
         .orderBy("sum_sq", "user_a", "user_b")
         .limit(TS_TOP_PAIRS)
-        .withColumn("rank", F.row_number().over(w))
         .select(
             "user_a",
             "user_b",
@@ -170,10 +240,7 @@ def ts_similarity_paa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TS_SIMILARITY_SQL = f"""
-WITH {_DENSE_DAILY_CTES},
-series AS (
-  SELECT user_id, list(v ORDER BY di) AS vec FROM dense GROUP BY 1
-),
+WITH {_DENSE_SERIES_CTES},
 seg AS (
   SELECT user_id, di * {TS_SEGMENTS} // nd AS seg, SUM(v) AS segsum
   FROM dense GROUP BY 1, 2
@@ -251,9 +318,7 @@ def ts_matrix_profile_paa(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops; it never leaves the row."""
     m, L = MP_SEGMENTS, MP_WIN
     nwin = m - L + 1
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("d"), cents("value").alias("cents")
-    )
+    ev = _events_by_day(spark, sf_dir, "user_id")
     days = ev.select("d").distinct()
     wd = Window.orderBy("d")
     # day -> PAA segment: dr is the day's 0-based rank among OBSERVED
@@ -315,10 +380,7 @@ def _matrix_profile_sql() -> str:
         f" t -> (p[i + t] - p[j + t]) * (p[i + t] - p[j + t])))"
     )
     return f"""
-WITH {_DENSE_DAILY_CTES},
-series AS (
-  SELECT user_id, list(v ORDER BY di) AS vec FROM dense GROUP BY 1
-),
+WITH {_DENSE_SERIES_CTES},
 paa AS (
   SELECT user_id,
          list_transform(range(0, {m}), s -> CAST(COALESCE(list_sum(
@@ -361,37 +423,21 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded and engine-identical; no running float sums anywhere.
     Plan: the dense-series build (one shuffle keyed by user) then pure
     per-row array expressions — autocorrelation at any number of lags
-    adds zero shuffles.
+    adds zero shuffles. A series of n ≤ L days has no lag-L pair: rL is
+    NULL (``_lag_overlap``).
     """
     dense = _dense_daily(spark, sf_dir)
-    series = dense.groupBy("user_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("di", "v"))), lambda s: s["v"]
-        ).alias("vec")
-    )
+    series = dense.groupBy("user_id").agg(_ordered_list("di", "v").alias("vec"))
     n = F.size("vec")
-    s = F.aggregate("vec", F.lit(0).cast("bigint"), lambda acc, v: acc + v)
     base = series.select(
         "user_id",
         n.alias("n"),
-        F.transform("vec", lambda x: x * n - s).alias("cvec"),
+        F.transform("vec", lambda x: x * n - _array_sum("vec")).alias("cvec"),
     )
-    den = F.aggregate(
-        F.transform("cvec", lambda x: x * x),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
+    den = _dot("cvec", "cvec")
 
     def r_lag(lag: int):
-        num = F.aggregate(
-            F.zip_with(
-                F.slice("cvec", 1, F.col("n") - lag),
-                F.slice("cvec", 1 + lag, F.col("n") - lag),
-                lambda x, y: x * y,
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
+        num = _dot(*_lag_overlap("cvec", "cvec", F.col("n"), lag))
         return F.round(
             num.cast("double") / F.nullif(den, F.lit(0)).cast("double"), 6
         ).alias(f"r{lag}")
@@ -410,10 +456,7 @@ def _autocorr_sql() -> str:
         for lag in TS_AC_LAGS
     )
     return f"""
-WITH {_DENSE_DAILY_CTES},
-series AS (
-  SELECT user_id, list(v ORDER BY di) AS vec FROM dense GROUP BY 1
-),
+WITH {_DENSE_SERIES_CTES},
 base AS (
   SELECT user_id, len(vec) AS n,
          list_transform(vec, x -> x * len(vec) - list_sum(vec)) AS cvec
@@ -487,12 +530,8 @@ def ts_stl_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("di")
 
 
-TS_STL_SQL = """
-WITH ev AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM events
-),
+TS_STL_SQL = f"""
+WITH {_ev_cte("user_id")},
 bounds AS (
   SELECT MIN(d) AS d0 FROM ev
 ),
@@ -634,6 +673,18 @@ FROM m ORDER BY n_name
 LTTB_BUCKETS = 32
 
 
+def _lttb_area(num_type: str) -> str:
+    """The triangle area both engines rank LTTB points by, scaled by
+    c1²·c3 and doubled, with every term cast to ``num_type``
+    (DECIMAL(38,0) in Spark, HUGEINT in DuckDB)."""
+    terms = ("sx1", "sx3", "sy1", "sy3", "c1", "c3", "x", "y")
+    t = {k: f"CAST({k} AS {num_type})" for k in terms}
+    return (
+        "abs(({sx1} * {c3} - {sx3} * {c1}) * ({y} * {c1} - {sy1})"
+        " - ({sx1} - {x} * {c1}) * ({sy3} * {c1} - {sy1} * {c3}))"
+    ).format(**t)
+
+
 def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Visualization-grade series downsampling: Largest-Triangle-Three-
     Buckets (Steinarsson 2013), bucket-anchor variant. Each per-type
@@ -658,7 +709,7 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         F.unix_seconds(F.col("ts")).alias("x"),
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("y"),
+        half_up_cents("value").alias("y"),
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
     )
     rng = ev.groupBy("event_type").agg(
@@ -687,15 +738,7 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("c").over(wb).alias("c3"),
     )
     joined = pts.join(F.broadcast(anchors), ["event_type", "b"])
-    d = "CAST({} AS DECIMAL(38,0))"
-    area = (
-        "abs(("
-        + d.format("sx1") + " * " + d.format("c3") + " - " + d.format("sx3") + " * " + d.format("c1")
-        + ") * (" + d.format("y") + " * " + d.format("c1") + " - " + d.format("sy1")
-        + ") - (" + d.format("sx1") + " - " + d.format("x") + " * " + d.format("c1")
-        + ") * (" + d.format("sy3") + " * " + d.format("c1") + " - " + d.format("sy1") + " * " + d.format("c3") + "))"
-    )
-    scored = joined.withColumn("area", F.expr(area))
+    scored = joined.withColumn("area", F.expr(_lttb_area("DECIMAL(38,0)")))
     # First/last buckets have no prev/next anchor (area NULL): keep the
     # earliest point — LTTB's "always keep the endpoints" rule.
     # r13 (guide §2.4): the per-bucket top-1 was a row_number window over
@@ -729,15 +772,6 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HD = "CAST({} AS HUGEINT)"
-_LTTB_AREA = (
-    "abs(("
-    + _HD.format("sx1") + " * " + _HD.format("c3") + " - " + _HD.format("sx3") + " * " + _HD.format("c1")
-    + ") * (" + _HD.format("y") + " * " + _HD.format("c1") + " - " + _HD.format("sy1")
-    + ") - (" + _HD.format("sx1") + " - " + _HD.format("x") + " * " + _HD.format("c1")
-    + ") * (" + _HD.format("sy3") + " * " + _HD.format("c1") + " - " + _HD.format("sy1") + " * " + _HD.format("c3") + "))"
-)
-
 TS_LTTB_SQL = f"""
 WITH ev AS (
   SELECT event_type, event_id,
@@ -762,7 +796,7 @@ WITH ev AS (
   WINDOW w AS (PARTITION BY event_type ORDER BY b)
 ), scored AS (
   SELECT p.event_type, p.b, p.event_id, p.x, p.y, p.ts_s,
-         {_LTTB_AREA} AS area
+         {_lttb_area("HUGEINT")} AS area
   FROM pts p JOIN anchors a ON p.event_type = a.event_type AND p.b = a.b
 ), picked AS (
   SELECT event_type, b, ts_s, y, event_id,
@@ -796,7 +830,7 @@ def ts_forecast_eval_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").alias("day"),
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
     daily = ev.groupBy("event_type", "day").agg(F.sum("cents").alias("y"))
     w = Window.partitionBy("event_type").orderBy("day")
@@ -855,6 +889,18 @@ ORDER BY event_type
 MAD_K = 3  # outlier threshold: |dev| > K * MAD
 
 
+def _lower_median(df: DataFrame, key: str, value: str, out: str) -> DataFrame:
+    """(key, out): each ``key``'s exact lower median of ``value`` — the
+    row ranked (cnt + 1) DIV 2 by (value, event_id)."""
+    w = Window.partitionBy(key).orderBy(value, "event_id")
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .withColumn("cnt", F.count(F.lit(1)).over(Window.partitionBy(key)))
+        .filter(F.col("rn") == F.expr("(cnt + 1) DIV 2"))
+        .select(key, F.col(value).alias(out))
+    )
+
+
 def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-series outlier screen: median + MAD (median absolute
     deviation) instead of mean + stddev — a single wild value shifts a
@@ -871,16 +917,9 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
-    nw = Window.partitionBy("event_type")
-    w = Window.partitionBy("event_type").orderBy("cents", "event_id")
-    ranked = ev.withColumn("rn", F.row_number().over(w)).withColumn(
-        "cnt", F.count(F.lit(1)).over(nw)
-    )
-    med = ranked.filter(F.col("rn") == F.expr("(cnt + 1) DIV 2")).select(
-        "event_type", F.col("cents").alias("med_cents")
-    )
+    med = _lower_median(ev, "event_type", "cents", "med_cents")
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type",
         "event_id",
@@ -888,13 +927,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("cents") - F.col("med_cents")).alias("adev"),
         "med_cents",
     )
-    w2 = Window.partitionBy("event_type").orderBy("adev", "event_id")
-    ranked2 = dev.withColumn("rn", F.row_number().over(w2)).withColumn(
-        "cnt", F.count(F.lit(1)).over(nw)
-    )
-    mad = ranked2.filter(F.col("rn") == F.expr("(cnt + 1) DIV 2")).select(
-        "event_type", F.col("adev").alias("mad_cents")
-    )
+    mad = _lower_median(dev, "event_type", "adev", "mad_cents")
     return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type", "med_cents", "mad_cents")
@@ -969,10 +1002,12 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide min date, zero-filled through the max observed
     click/purchase day) so lag L means "L calendar days later" even
     when some day has no such events — matching the ``_dense_daily``
-    convention used by the other ts_* operators."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.to_date("ts").alias("d"), cents("value").alias("cents")
-    )
+    convention used by the other ts_* operators.
+
+    Short series: n_overlap is n − L (negative when the n-day grid is
+    shorter than the lag, −L on no click or purchase at all), and r is
+    NULL when the overlap has no rows or no variance."""
+    ev = _events_by_day(spark, sf_dir, "event_type")
     bounds = ev.agg(F.min("d").alias("d0"))
     daily = (
         ev.crossJoin(F.broadcast(bounds))
@@ -993,53 +1028,49 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.map_from_entries(
             F.collect_list(F.struct("di", F.struct("ac", "pc")))
         ).alias("m"),
-        (F.max("di") + F.lit(1)).alias("n"),
+        # the oracle's grid COUNT(*): 0 days on an empty grid
+        F.coalesce(F.max("di") + F.lit(1), F.lit(0)).alias("n"),
     ).selectExpr(
         "transform(sequence(0, n - 1), i -> coalesce(m[i].ac, CAST(0 AS BIGINT))) AS avec",
         "transform(sequence(0, n - 1), i -> coalesce(m[i].pc, CAST(0 AS BIGINT))) AS pvec",
         "CAST(n AS INT) AS n",
     )
     lags = spark.createDataFrame([(l,) for l in XCORR_LAGS], "lag int")
-    j = F.broadcast(row).crossJoin(lags).selectExpr(
-        "lag",
-        "n - lag AS m",
-        "slice(avec, 1, n - lag) AS aw",
-        "slice(pvec, 1 + lag, n - lag) AS bw",
+    aw, bw = _lag_overlap("avec", "pvec", F.col("n"), F.col("lag"))
+    j = F.broadcast(row).crossJoin(lags).select(
+        "lag", (F.col("n") - F.col("lag")).alias("m"), aw.alias("aw"), bw.alias("bw")
     )
-    dec = "CAST(0 AS DECIMAL(38,0))"
-    centered = j.selectExpr(
+    dec = "decimal(38,0)"
+    centered = j.select(
         "lag",
         "m",
-        f"aggregate(aw, {dec}, (acc, x) -> acc + x) AS sa",
-        f"aggregate(bw, {dec}, (acc, x) -> acc + x) AS sb",
         "aw",
         "bw",
-    ).selectExpr(
+        _array_sum("aw", dec).alias("sa"),
+        _array_sum("bw", dec).alias("sb"),
+    ).select(
         "lag",
         "m",
-        "transform(aw, x -> CAST(m AS DECIMAL(38,0)) * x - sa) AS ca",
-        "transform(bw, x -> CAST(m AS DECIMAL(38,0)) * x - sb) AS cb",
+        F.transform("aw", lambda x: F.col("m").cast(dec) * x - F.col("sa")).alias("ca"),
+        F.transform("bw", lambda x: F.col("m").cast(dec) * x - F.col("sb")).alias("cb"),
     )
-    stats = centered.selectExpr(
+    stats = centered.select(
         "lag",
         "m",
-        f"aggregate(zip_with(ca, cb, (x, y) -> x * y), {dec}, (acc, v) -> acc + v) AS num",
-        f"aggregate(transform(ca, x -> x * x), {dec}, (acc, v) -> acc + v) AS da",
-        f"aggregate(transform(cb, x -> x * x), {dec}, (acc, v) -> acc + v) AS db",
+        _dot("ca", "cb", dec).alias("num"),
+        _dot("ca", "ca", dec).alias("da"),
+        _dot("cb", "cb", dec).alias("db"),
     )
     return stats.selectExpr(
         "lag",
         "CAST(m AS INT) AS n_overlap",
-        "ROUND(CAST(num AS DOUBLE) / sqrt(CAST(da AS DOUBLE) * CAST(db AS DOUBLE)), 9) AS r",
+        "ROUND(try_divide(CAST(num AS DOUBLE),"
+        " sqrt(CAST(da AS DOUBLE) * CAST(db AS DOUBLE))), 9) AS r",
     ).orderBy("lag")
 
 
 TS_XCORR_SQL = f"""
-WITH ev AS (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM events
-),
+WITH {_ev_cte("event_type")},
 bounds AS (SELECT MIN(d) AS d0 FROM ev),
 daily AS (
   SELECT datediff('day', d0, d) AS di,
@@ -1128,9 +1159,7 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the symbol assignment); pin it or the densification chain runs 3x
     # (no cross-branch subplan reuse — the ts_similarity_paa precedent)
     seg = (
-        dense.withColumn("seg", F.expr(f"di * {SAX_SEGMENTS} div nd"))
-        .groupBy("user_id", "seg")
-        .agg(F.sum("v").alias("segsum"))
+        _paa_sums(dense, SAX_SEGMENTS)
         .withColumn("bucket", F.expr(f"segsum div {SAX_BUCKET_CENTS}"))
         .localCheckpoint(eager=False)
     )
@@ -1160,13 +1189,7 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("s"),
     )
     words = sym.groupBy("user_id").agg(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seg", "s"))),
-                lambda t: t["s"].cast("string"),
-            ),
-        ).alias("word")
+        F.concat_ws("", _ordered_list("seg", "s").cast("array<string>")).alias("word")
     )
     return (
         words.groupBy("word")
@@ -1255,14 +1278,9 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     saturates BIGINT and would need DECIMAL carry, noted here as the
     tested bound.
     """
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.to_date("ts").alias("d"), cents("value").alias("cents")
-    )
-    daily = ev.groupBy("event_type", "d").agg(F.sum("cents").alias("v"))
+    daily = _daily_sums(spark, sf_dir, "event_type")
     series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "v"))), lambda p: p["v"]
-        ).alias("vals")
+        _ordered_list("d", "v").alias("vals")
     ).filter(F.size("vals") >= 2)
     fold = (
         "aggregate("
@@ -1369,10 +1387,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (≈ n_days rows each), never over raw events; the final
     per-series rollup is a |series|-key agg. A million series are a
     million independent window partitions."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.to_date("ts").alias("d"), cents("value").alias("cents")
-    )
-    daily = ev.groupBy("event_type", "d").agg(F.sum("cents").alias("v"))
+    daily = _daily_sums(spark, sf_dir, "event_type")
     stats = daily.groupBy("event_type").agg(
         F.expr("sum(v) div count(*)").alias("mu"),
         F.count(F.lit(1)).alias("n_days"),
@@ -1391,34 +1406,20 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("d")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    keep = ["event_type", "d", "n_days", "mu", "k", "h"]
     pref = base.select(
-        "event_type",
-        "d",
-        "n_days",
-        "mu",
-        "k",
-        "h",
+        *keep,
         F.sum(F.expr("v - mu - k")).over(w).alias("pp"),
         F.sum(F.expr("mu - v - k")).over(w).alias("pn"),
     )
     cum = pref.select(
-        "event_type",
-        "d",
-        "n_days",
-        "mu",
-        "k",
-        "h",
+        *keep,
         "pp",
         F.min("pp").over(w).alias("pp_min"),
         "pn",
         F.min("pn").over(w).alias("pn_min"),
     ).select(
-        "event_type",
-        "d",
-        "n_days",
-        "mu",
-        "k",
-        "h",
+        *keep,
         F.expr("pp - least(CAST(0 AS BIGINT), pp_min)").alias("s_pos"),
         F.expr("pn - least(CAST(0 AS BIGINT), pn_min)").alias("s_neg"),
     )
@@ -1456,11 +1457,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TS_CUSUM_SQL = f"""
-WITH ev AS (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM events
-),
+WITH {_ev_cte("event_type")},
 daily AS (
   SELECT event_type, d, CAST(SUM(cents) AS BIGINT) AS v
   FROM ev GROUP BY event_type, d

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import dsum, dsum_sql
+from ..functions.numeric import dsum, dsum_sql, half_up_cents
 from ..sources.batch import EV_US, load_table, scratch_dir
 
 
@@ -719,7 +719,7 @@ def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.to_date("ts").alias("d"),
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
     dayv = ev.groupBy("user_id", "d").agg(F.sum("cents").alias("v_fp"))
     bounds = ev.groupBy("user_id").agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
@@ -901,9 +901,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(RFM_ASOF).cast("date"), F.max(F.to_date("ts"))
             ).alias("recency_days"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(
-                F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)")
-            ).alias("monetary_cents"),
+            F.sum(half_up_cents("value")).alias("monetary_cents"),
         )
     )
     # Lower recency is better — rank ascending so bucket 1 = most recent.
@@ -953,7 +951,7 @@ def q_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(
             F.datediff(F.to_date("ts"), F.lit(COHORT_EPOCH).cast("date")) / 7
         ).cast("int").alias("week_idx"),
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
     weekly = ev.groupBy("event_type", "week_idx").agg(
         F.count(F.lit(1)).alias("n_events"), F.sum("cents").alias("sum_cents")
@@ -1271,7 +1269,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gapped = ev.withColumn(
@@ -1324,7 +1322,7 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("bar"),
         F.unix_micros("ts").alias("us"),
         "event_id",
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
     return (
         ev.groupBy("event_type", "bar")

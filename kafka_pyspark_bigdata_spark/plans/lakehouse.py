@@ -57,7 +57,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
-from ..functions.numeric import cents, dsum, dsum_sql, md5_int
+from ..functions.numeric import cents, dsum, dsum_sql, half_up_cents, md5_int
 from ..sources.batch import EV_US, load_table, scratch_dir
 
 
@@ -2049,7 +2049,7 @@ def q_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"unix_micros(ts) + ((event_id % {BTEMP_DELAY_MOD}) + 1)"
                 " * 60000000"
             ).alias("tx_us"),
-            F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+            half_up_cents("value").alias("cents"),
             F.lit(0).alias("tag"),
         )
         .crossJoin(F.broadcast(k0))

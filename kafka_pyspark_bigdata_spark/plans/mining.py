@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import cents
+from ..functions.numeric import cents, half_up_cents
 from ..sources.batch import load_table
 
 # ---------------------------------------------------------------------------
@@ -177,7 +177,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         F.lit(None).cast("int").alias("camp"),
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
         F.lit(1).alias("is_p"),
     )
     # At equal ts the touch (is_p=0) sorts first, so a same-instant touch
@@ -264,7 +264,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_micros("ts").alias("p_us"),
         F.col("event_id").alias("pid"),
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
     matched = purchases.join(touches, "user_id").filter(
         (F.col("t_us") <= F.col("p_us"))
@@ -362,7 +362,7 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
     w_frame = (
         Window.partitionBy("user_id")
@@ -1364,7 +1364,7 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("value").alias("cents"),
     )
     tagged = ev.filter(F.col("event_type").isin(KS_A, KS_B)).select(
         "cents",

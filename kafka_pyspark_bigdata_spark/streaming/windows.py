@@ -16,10 +16,6 @@ from pyspark.sql import functions as F
 from ..functions.numeric import dsum
 
 
-def with_watermark(df: DataFrame, ts_col: str = "ts", delay: str = "1 hour") -> DataFrame:
-    return df.withWatermark(ts_col, delay)
-
-
 def tumbling_agg(
     df: DataFrame,
     ts_col: str = "ts",

@@ -1109,6 +1109,49 @@ def test_degenerate_embeddings_match_oracle(spark, edge_embeddings, mod, name):
     assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name], sf_dir=d)
 
 
+# Edge events corpora cut from sf0.001 (1,000 events over 30 days): the
+# first 200 events by ts (6 days, shorter than the largest lag, 7), the
+# first day's events, the first event alone, and no events.
+EDGE_EVENTS = ["first_200", "one_day", "one_row", "empty"]
+EVENTS_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string,"
+    " value double, props string"
+)
+# every time-series query but ts_trend_forecast, which reads TPC-H tables
+EVENTS_TS = [name for name in timeseries.ORACLES if name != "ts_trend_forecast"]
+
+
+@pytest.fixture(scope="module")
+def edge_events(spark, tmp_path_factory, request):
+    """(sf_dir, DuckDB connection) of the edge corpus ``request.param``."""
+    from pyspark.sql import functions as F
+
+    from kafka_pyspark_bigdata_spark.sources.batch import load_table
+
+    ev = load_table(spark, SF_SMOKE, "events").orderBy("ts", "event_id")
+    rows = ev.withColumn("day", F.to_date("ts")).collect()
+    rows = {
+        "first_200": rows[:200],
+        "one_day": [r for r in rows if r.day == rows[0].day],
+        "one_row": rows[:1],
+        "empty": [],
+    }[request.param]
+    d = str(tmp_path_factory.mktemp(request.param))
+    return d, edge_table(spark, d, "events", [tuple(r)[:-1] for r in rows], EVENTS_DDL)
+
+
+@pytest.mark.parametrize("edge_events", EDGE_EVENTS, indirect=True)
+@pytest.mark.parametrize("name", EVENTS_TS)
+def test_degenerate_timeseries_match_oracle(spark, edge_events, name):
+    """Every events time-series query agrees with its oracle on a series
+    shorter than its lag, one day, one event and none: a lag-L statistic
+    over n ≤ L days is NULL with n − L overlap days, a correlation over
+    an overlap with no variance is NULL, and nothing raises."""
+    d, duck = edge_events
+    fn, sql = timeseries.QUERIES[name], timeseries.ORACLES[name]
+    assert_oracle_match(spark, duck, fn, sql, sf_dir=d)
+
+
 def test_lsh_candidate_family_agrees_with_itself(spark):
     """The LSH queries share one candidate rule and one verify rule. C =
     the doc pairs that agree on every signature of at least one band,
