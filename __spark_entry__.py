@@ -1,10 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship query at sf0.001 as a smoke check.
-``queries()``/``oracle_sql()`` aggregate every implemented operator's
-(spark, sf_dir) -> DataFrame callable and its DuckDB oracle SQL from the
-engine's query modules. Queries without an oracle entry (ML / streaming —
-not SQL-expressible) get the driver's rows-only check.
+Each query module registers its queries once, in one ``QUERIES`` mapping
+from a ``(spark, sf_dir) -> DataFrame`` callable to its DuckDB oracle SQL,
+or to ``None`` for a rows-only query (ML model internals, count-triggered
+batch boundaries; the entry's comment gives the reason). ``queries()``
+names every callable by its ``__name__``; ``oracle_sql()`` keeps the
+entries that have SQL, so the driver gives the others its rows-only check.
 """
 
 from __future__ import annotations
@@ -14,32 +16,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 SF0001 = "/root/testdata/sf0.001"
-
-# ROWS-ONLY BY CONTRACT — the complete list of queries() entries with no
-# oracle_sql() counterpart, so the driver record's `no_oracle` rows are
-# self-explaining. All are RandomForest model internals (training,
-# inference, importances, grid/permutation sweeps — not SQL-expressible)
-# except streaming_count_batcher (count-triggered micro-batch boundaries
-# are an execution artifact, not a relational result). Each has pytest
-# coverage asserting its semantic contract instead.
-ROWS_ONLY = frozenset({
-    "ml_lift_deciles",
-    "ml_classifier_auc",
-    "ml_calibration_bins",
-    "ml_isotonic_calibration",
-    "ml_quality_classifier",
-    "ml_permutation_importance",
-    "ml_grid_search",
-    "ml_feature_importances",
-    "ml_eval_rmse",
-    "ml_predict_grid",
-    "ml_sensitivity_quantity",
-    "ml_optimal_hour",
-    "ml_predict_loaded",
-    "ml_incremental_versions",
-    "streaming_count_batcher",
-})
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1 pricing summary) on sf0.001."""
@@ -160,15 +136,18 @@ def _ordered(raw: dict) -> dict:
     return out
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+def _registered() -> dict:
+    out: dict = {}
     for mod in _modules():
-        out.update(getattr(mod, "QUERIES", {}))
-    return _ordered(out)
+        out.update(mod.QUERIES)
+    return out
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return _ordered({fn.__name__: fn for fn in _registered()})
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _modules():
-        out.update(getattr(mod, "ORACLES", {}))
-    return _ordered(out)
+    return _ordered(
+        {fn.__name__: sql for fn, sql in _registered().items() if sql is not None}
+    )

@@ -903,23 +903,21 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    "ml_target_encoding": ml_target_encoding,
-    "ml_permutation_importance": ml_permutation_importance,
-    "ml_quality_classifier": ml_quality_classifier,
-    "ml_lift_deciles": ml_lift_deciles,
-    "ml_classifier_auc": ml_classifier_auc,
-    "ml_calibration_bins": ml_calibration_bins,
-    "ml_isotonic_calibration": ml_isotonic_calibration,
-    "ml_grid_search": ml_grid_search,
-    "ml_feature_importances": ml_feature_importances,
-    "ml_eval_rmse": ml_eval_rmse,
-    "ml_predict_grid": ml_predict_grid,
-    "ml_sensitivity_quantity": ml_sensitivity_quantity,
-    "ml_optimal_hour": ml_optimal_hour,
-    "ml_predict_loaded": ml_predict_loaded,
-    "ml_incremental_versions": ml_incremental_versions,
+    ml_target_encoding: ML_TARGET_ENC_SQL,
+    # Rows-only: RandomForest model internals (training, inference,
+    # importances, grid and permutation sweeps) are not SQL-expressible.
+    ml_permutation_importance: None,
+    ml_quality_classifier: None,
+    ml_lift_deciles: None,
+    ml_classifier_auc: None,
+    ml_calibration_bins: None,
+    ml_isotonic_calibration: None,
+    ml_grid_search: None,
+    ml_feature_importances: None,
+    ml_eval_rmse: None,
+    ml_predict_grid: None,
+    ml_sensitivity_quantity: None,
+    ml_optimal_hour: None,
+    ml_predict_loaded: None,
+    ml_incremental_versions: None,
 }
-
-# Not SQL-expressible (model training/inference) → no ORACLES entries;
-# the driver records rows-only checks for these.
-ORACLES: dict[str, str] = {"ml_target_encoding": ML_TARGET_ENC_SQL}

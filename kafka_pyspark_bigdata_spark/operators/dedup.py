@@ -3608,81 +3608,41 @@ FROM flagged GROUP BY doc_id ORDER BY doc_id
 
 
 QUERIES = {
-    "dedup_repeated_lines": dedup_repeated_lines,
-    "graph_hits": graph_hits,
-    "graph_hyperball_nf": graph_hyperball_nf,
-    "dedup_bbit_minhash": dedup_bbit_minhash,
-    "graph_link_prediction": graph_link_prediction,
-    "graph_resource_allocation": graph_resource_allocation,
-    "graph_kcore": graph_kcore,
-    "graph_ktruss": graph_ktruss,
-    "graph_modularity": graph_modularity,
-    "dedup_record_linkage": dedup_record_linkage,
-    "dedup_savings_summary": dedup_savings_summary,
-    "graph_cc_two_phase": graph_cc_two_phase,
-    "dedup_threshold_sweep": dedup_threshold_sweep,
-    "sketch_minhash_error": sketch_minhash_error,
-    "dedup_shingle_coverage": dedup_shingle_coverage,
-    "corpus_ngram_novelty": corpus_ngram_novelty,
-    "text_boilerplate_spans": text_boilerplate_spans,
-    "dedup_simhash_pairs": dedup_simhash_pairs,
-    "corpus_dup_source_matrix": corpus_dup_source_matrix,
-    "dedup_containment": dedup_containment,
-    "dedup_incremental_minhash": dedup_incremental_minhash,
-    "corpus_survivorship": corpus_survivorship,
-    "dedup_keep_best_quality": dedup_keep_best_quality,
-    "dedup_exact": dedup_exact,
-    "dedup_blocked_levenshtein": dedup_blocked_levenshtein,
-    "dedup_clusters": dedup_clusters,
-    "graph_khop_reach": graph_khop_reach,
-    "graph_triangle_count": graph_triangle_count,
-    "graph_pagerank": graph_pagerank,
-    "graph_label_propagation": graph_label_propagation,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_dup_spans": dedup_dup_spans,
-    "dedup_dup_spans_removal": dedup_dup_spans_removal,
-    "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_lsh_tuning_curve": dedup_lsh_tuning_curve,
-    "dedup_simhash": dedup_simhash,
-    "dedup_embedding_cosine": dedup_embedding_cosine,
-}
-
-ORACLES = {
-    "dedup_repeated_lines": DEDUP_REPEATED_LINES_SQL,
-    "graph_hits": _hits_sql(),
-    "graph_hyperball_nf": _hyperball_sql(),
-    "dedup_bbit_minhash": _bbit_sql(),
-    "graph_link_prediction": _linkpred_sql(),
-    "graph_resource_allocation": GRAPH_RESOURCE_ALLOCATION_SQL,
-    "graph_kcore": _kcore_sql(),
-    "graph_ktruss": _ktruss_sql(),
-    "graph_modularity": GRAPH_MODULARITY_SQL,
-    "dedup_record_linkage": RECORD_LINKAGE_SQL,
-    "dedup_savings_summary": _savings_sql(),
-    "graph_cc_two_phase": DEDUP_CLUSTERS_SQL,
-    "dedup_threshold_sweep": _threshold_sweep_sql(),
-    "sketch_minhash_error": _minhash_error_sql(),
-    "dedup_shingle_coverage": DEDUP_COVERAGE_SQL,
-    "corpus_ngram_novelty": CORPUS_NOVELTY_SQL,
-    "text_boilerplate_spans": BOILERPLATE_SQL,
-    "dedup_simhash_pairs": _simhash_pairs_sql(),
-    "corpus_dup_source_matrix": _dup_source_matrix_sql(),
-    "dedup_containment": DEDUP_CONTAINMENT_SQL,
-    "dedup_incremental_minhash": _incremental_minhash_sql(),
-    "corpus_survivorship": _survivorship_sql(),
-    "dedup_keep_best_quality": _keep_best_sql(),
-    "dedup_exact": DEDUP_EXACT_SQL,
-    "dedup_blocked_levenshtein": DEDUP_LEVENSHTEIN_SQL,
-    "dedup_clusters": DEDUP_CLUSTERS_SQL,
-    "graph_khop_reach": _khop_sql(),
-    "graph_triangle_count": GRAPH_TRIANGLES_SQL,
-    "graph_pagerank": _pagerank_sql(),
-    "graph_label_propagation": _lpa_sql(),
-    "dedup_ngram_jaccard": DEDUP_NGRAM_SQL,
-    "dedup_dup_spans": DUP_SPANS_SQL,
-    "dedup_dup_spans_removal": DUP_SPANS_REMOVAL_SQL,
-    "dedup_minhash_lsh": _minhash_sql(),
-    "dedup_lsh_tuning_curve": _lsh_tuning_sql(),
-    "dedup_simhash": _simhash_sql(),
-    "dedup_embedding_cosine": DEDUP_EMBEDDING_SQL,
+    dedup_repeated_lines: DEDUP_REPEATED_LINES_SQL,
+    graph_hits: _hits_sql(),
+    graph_hyperball_nf: _hyperball_sql(),
+    dedup_bbit_minhash: _bbit_sql(),
+    graph_link_prediction: _linkpred_sql(),
+    graph_resource_allocation: GRAPH_RESOURCE_ALLOCATION_SQL,
+    graph_kcore: _kcore_sql(),
+    graph_ktruss: _ktruss_sql(),
+    graph_modularity: GRAPH_MODULARITY_SQL,
+    dedup_record_linkage: RECORD_LINKAGE_SQL,
+    dedup_savings_summary: _savings_sql(),
+    graph_cc_two_phase: DEDUP_CLUSTERS_SQL,
+    dedup_threshold_sweep: _threshold_sweep_sql(),
+    sketch_minhash_error: _minhash_error_sql(),
+    dedup_shingle_coverage: DEDUP_COVERAGE_SQL,
+    corpus_ngram_novelty: CORPUS_NOVELTY_SQL,
+    text_boilerplate_spans: BOILERPLATE_SQL,
+    dedup_simhash_pairs: _simhash_pairs_sql(),
+    corpus_dup_source_matrix: _dup_source_matrix_sql(),
+    dedup_containment: DEDUP_CONTAINMENT_SQL,
+    dedup_incremental_minhash: _incremental_minhash_sql(),
+    corpus_survivorship: _survivorship_sql(),
+    dedup_keep_best_quality: _keep_best_sql(),
+    dedup_exact: DEDUP_EXACT_SQL,
+    dedup_blocked_levenshtein: DEDUP_LEVENSHTEIN_SQL,
+    dedup_clusters: DEDUP_CLUSTERS_SQL,
+    graph_khop_reach: _khop_sql(),
+    graph_triangle_count: GRAPH_TRIANGLES_SQL,
+    graph_pagerank: _pagerank_sql(),
+    graph_label_propagation: _lpa_sql(),
+    dedup_ngram_jaccard: DEDUP_NGRAM_SQL,
+    dedup_dup_spans: DUP_SPANS_SQL,
+    dedup_dup_spans_removal: DUP_SPANS_REMOVAL_SQL,
+    dedup_minhash_lsh: _minhash_sql(),
+    dedup_lsh_tuning_curve: _lsh_tuning_sql(),
+    dedup_simhash: _simhash_sql(),
+    dedup_embedding_cosine: DEDUP_EMBEDDING_SQL,
 }

@@ -375,15 +375,8 @@ ORDER BY b.user_id
 
 
 QUERIES = {
-    "geo_knn_join": geo_knn_join,
-    "geo_dbscan_core": geo_dbscan_core,
-    "geo_cell_stats": geo_cell_stats,
-    "geo_grid_pairs": geo_grid_pairs,
-}
-
-ORACLES = {
-    "geo_knn_join": GEO_KNN_SQL,
-    "geo_dbscan_core": GEO_DBSCAN_SQL,
-    "geo_cell_stats": GEO_CELL_STATS_SQL,
-    "geo_grid_pairs": GEO_GRID_PAIRS_SQL,
+    geo_knn_join: GEO_KNN_SQL,
+    geo_dbscan_core: GEO_DBSCAN_SQL,
+    geo_cell_stats: GEO_CELL_STATS_SQL,
+    geo_grid_pairs: GEO_GRID_PAIRS_SQL,
 }

@@ -534,21 +534,11 @@ FROM documents ORDER BY doc_id
 
 
 QUERIES = {
-    "mm_arrow_byte_stats": mm_arrow_byte_stats,
-    "mm_modality_router": mm_modality_router,
-    "mm_decode_image": mm_decode_image,
-    "mm_frame_sample": mm_frame_sample,
-    "mm_resize_image": mm_resize_image,
-    "mm_audio_features": mm_audio_features,
-    "mm_phash_dedup": mm_phash_dedup,
-}
-
-ORACLES = {
-    "mm_arrow_byte_stats": MM_ARROW_BYTES_SQL,
-    "mm_modality_router": MM_ROUTER_SQL,
-    "mm_phash_dedup": MM_PHASH_SQL,
-    "mm_decode_image": MM_DECODE_SQL,
-    "mm_frame_sample": MM_FRAME_SQL,
-    "mm_resize_image": MM_RESIZE_SQL,
-    "mm_audio_features": MM_AUDIO_SQL,
+    mm_arrow_byte_stats: MM_ARROW_BYTES_SQL,
+    mm_modality_router: MM_ROUTER_SQL,
+    mm_decode_image: MM_DECODE_SQL,
+    mm_frame_sample: MM_FRAME_SQL,
+    mm_resize_image: MM_RESIZE_SQL,
+    mm_audio_features: MM_AUDIO_SQL,
+    mm_phash_dedup: MM_PHASH_SQL,
 }

@@ -1900,55 +1900,28 @@ FROM per_doc GROUP BY source ORDER BY source
 
 
 QUERIES = {
-    "corpus_soft_dedup_weights": corpus_soft_dedup_weights,
-    "corpus_curriculum_schedule": corpus_curriculum_schedule,
-    "corpus_ablation_grid": corpus_ablation_grid,
-    "corpus_epoch_shuffle": corpus_epoch_shuffle,
-    "corpus_span_corruption": corpus_span_corruption,
-    "corpus_temperature_sampling": corpus_temperature_sampling,
-    "corpus_upsampling_epochs": corpus_upsampling_epochs,
-    "corpus_unimax_budget": corpus_unimax_budget,
-    "corpus_doremi_weights": corpus_doremi_weights,
-    "corpus_split_leakage": corpus_split_leakage,
-    "corpus_dsir_selection": corpus_dsir_selection,
-    "corpus_importance_sampling": corpus_importance_sampling,
-    "corpus_shard_manifest": corpus_shard_manifest,
-    "corpus_cap_per_source": corpus_cap_per_source,
-    "corpus_preprocess_e2e": corpus_preprocess_e2e,
-    "corpus_token_budget": corpus_token_budget,
-    "corpus_length_survival": corpus_length_survival,
-    "corpus_mix_weighted": corpus_mix_weighted,
-    "corpus_sample_hash": corpus_sample_hash,
-    "corpus_sample_stratified": corpus_sample_stratified,
-    "corpus_split_stats": corpus_split_stats,
-    "text_decontaminate": text_decontaminate,
-    "text_topk_terms": text_topk_terms,
-    "corpus_pack_greedy": corpus_pack_greedy,
-}
-
-ORACLES = {
-    "corpus_soft_dedup_weights": CORPUS_SOFT_DEDUP_SQL,
-    "corpus_curriculum_schedule": CORPUS_CURRICULUM_SQL,
-    "corpus_ablation_grid": CORPUS_ABLATION_SQL,
-    "corpus_epoch_shuffle": CORPUS_EPOCH_SQL,
-    "corpus_span_corruption": CORPUS_SPAN_SQL,
-    "corpus_temperature_sampling": CORPUS_TEMPERATURE_SQL,
-    "corpus_upsampling_epochs": CORPUS_UPSAMPLING_SQL,
-    "corpus_unimax_budget": CORPUS_UNIMAX_SQL,
-    "corpus_doremi_weights": CORPUS_DOREMI_SQL,
-    "corpus_split_leakage": CORPUS_SPLIT_LEAKAGE_SQL,
-    "corpus_dsir_selection": CORPUS_DSIR_SQL,
-    "corpus_importance_sampling": CORPUS_IMPORTANCE_SQL,
-    "corpus_shard_manifest": CORPUS_SHARD_SQL,
-    "corpus_cap_per_source": CORPUS_CAP_SQL,
-    "corpus_token_budget": CORPUS_TOKEN_BUDGET_SQL,
-    "corpus_length_survival": CORPUS_LENGTH_SURVIVAL_SQL,
-    "corpus_mix_weighted": CORPUS_MIX_SQL,
-    "corpus_sample_hash": CORPUS_SAMPLE_SQL,
-    "corpus_sample_stratified": CORPUS_STRATIFIED_SQL,
-    "corpus_split_stats": CORPUS_SPLIT_SQL,
-    "text_decontaminate": TEXT_DECONTAMINATE_SQL,
-    "text_topk_terms": TEXT_TOPK_TERMS_SQL,
-    "corpus_pack_greedy": CORPUS_PACK_SQL,
-    "corpus_preprocess_e2e": CORPUS_PREP_SQL,
+    corpus_soft_dedup_weights: CORPUS_SOFT_DEDUP_SQL,
+    corpus_curriculum_schedule: CORPUS_CURRICULUM_SQL,
+    corpus_ablation_grid: CORPUS_ABLATION_SQL,
+    corpus_epoch_shuffle: CORPUS_EPOCH_SQL,
+    corpus_span_corruption: CORPUS_SPAN_SQL,
+    corpus_temperature_sampling: CORPUS_TEMPERATURE_SQL,
+    corpus_upsampling_epochs: CORPUS_UPSAMPLING_SQL,
+    corpus_unimax_budget: CORPUS_UNIMAX_SQL,
+    corpus_doremi_weights: CORPUS_DOREMI_SQL,
+    corpus_split_leakage: CORPUS_SPLIT_LEAKAGE_SQL,
+    corpus_dsir_selection: CORPUS_DSIR_SQL,
+    corpus_importance_sampling: CORPUS_IMPORTANCE_SQL,
+    corpus_shard_manifest: CORPUS_SHARD_SQL,
+    corpus_cap_per_source: CORPUS_CAP_SQL,
+    corpus_preprocess_e2e: CORPUS_PREP_SQL,
+    corpus_token_budget: CORPUS_TOKEN_BUDGET_SQL,
+    corpus_length_survival: CORPUS_LENGTH_SURVIVAL_SQL,
+    corpus_mix_weighted: CORPUS_MIX_SQL,
+    corpus_sample_hash: CORPUS_SAMPLE_SQL,
+    corpus_sample_stratified: CORPUS_STRATIFIED_SQL,
+    corpus_split_stats: CORPUS_SPLIT_SQL,
+    text_decontaminate: TEXT_DECONTAMINATE_SQL,
+    text_topk_terms: TEXT_TOPK_TERMS_SQL,
+    corpus_pack_greedy: CORPUS_PACK_SQL,
 }

@@ -1368,25 +1368,13 @@ FROM per_doc GROUP BY source ORDER BY source
 
 
 QUERIES = {
-    "text_readability_fk": text_readability_fk,
-    "corpus_quality_floor": corpus_quality_floor,
-    "corpus_filter_verdict": corpus_filter_verdict,
-    "text_repetition": text_repetition,
-    "text_pii_scrub": text_pii_scrub,
-    "quality_gopher_rules": quality_gopher_rules,
-    "quality_gopher_repetition": quality_gopher_repetition,
-    "quality_fineweb_rules": quality_fineweb_rules,
-    "quality_ccnet_buckets": quality_ccnet_buckets,
-}
-
-ORACLES = {
-    "text_readability_fk": TEXT_READABILITY_SQL,
-    "corpus_quality_floor": CORPUS_QUALITY_FLOOR_SQL,
-    "corpus_filter_verdict": CORPUS_FILTER_SQL,
-    "text_repetition": TEXT_REPETITION_SQL,
-    "text_pii_scrub": TEXT_PII_SQL,
-    "quality_gopher_rules": QUALITY_GOPHER_SQL,
-    "quality_gopher_repetition": QUALITY_GOPHER_REP_SQL,
-    "quality_fineweb_rules": QUALITY_FINEWEB_SQL,
-    "quality_ccnet_buckets": QUALITY_CCNET_SQL,
+    text_readability_fk: TEXT_READABILITY_SQL,
+    corpus_quality_floor: CORPUS_QUALITY_FLOOR_SQL,
+    corpus_filter_verdict: CORPUS_FILTER_SQL,
+    text_repetition: TEXT_REPETITION_SQL,
+    text_pii_scrub: TEXT_PII_SQL,
+    quality_gopher_rules: QUALITY_GOPHER_SQL,
+    quality_gopher_repetition: QUALITY_GOPHER_REP_SQL,
+    quality_fineweb_rules: QUALITY_FINEWEB_SQL,
+    quality_ccnet_buckets: QUALITY_CCNET_SQL,
 }

@@ -939,10 +939,8 @@ def _ivf_sims(emb: DataFrame) -> DataFrame:
     emb = emb.select("vec_id", "embedding", norm_expr("embedding").alias("en"))
     # A zero vector's sims are all NULL (cosine_from_parts), so every
     # ranking of them falls through to the cid tie-break, as in the
-    # oracle. PRECONDITION (nonzero centroids): a zero CENTROID would put
-    # one NULL among a vector's sims, which the descending rankings (the
-    # probe window, the max(struct) argmax) rank last like the oracle but
-    # ann_ivf_spill's ascending in-row sort on -sim ranks first.
+    # oracle; a zero CENTROID puts one NULL among a vector's sims, which
+    # every ranking puts last, as the oracle's ORDER BY sim DESC does.
     return emb.crossJoin(F.broadcast(_ivf_cents(emb))).select(
         "vec_id",
         "embedding",
@@ -1738,21 +1736,30 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Previously this was a row_number + max window over the
     # 16×-exploded sims frame, i.e. a full-corpus shuffle carrying the
     # embedding payload; now the corpus never shuffles. Same doubles,
-    # same comparisons, bit-identical postings — given nonzero centroids
-    # (the precondition in _ivf_sims).
+    # same comparisons, bit-identical postings. A NULL sim (a zero
+    # centroid) would sort first inside the struct, so a leading
+    # isnull flag sorts it last, as the oracle's ORDER BY sim DESC does.
     cents1 = _ivf_cents(emb).agg(
         F.collect_list(F.struct("cid", "centv", "cn")).alias("cs")
     )
+    scored = F.transform(
+        "cs",
+        lambda c: F.struct(
+            (
+                -cosine_from_parts(
+                    dot_expr("embedding", c["centv"]), F.col("en"), c["cn"]
+                )
+            ).alias("ns"),
+            c["cid"].alias("cid"),
+        ),
+    )
     ranked_arr = F.array_sort(
         F.transform(
-            "cs",
-            lambda c: F.struct(
-                (
-                    -cosine_from_parts(
-                        dot_expr("embedding", c["centv"]), F.col("en"), c["cn"]
-                    )
-                ).alias("ns"),
-                c["cid"].alias("cid"),
+            scored,
+            lambda e: F.struct(
+                e["ns"].isNull().alias("nul"),
+                e["ns"].alias("ns"),
+                e["cid"].alias("cid"),
             ),
         )
     )
@@ -4986,97 +4993,49 @@ GROUP BY bits ORDER BY bits
 
 
 QUERIES = {
-    "emb_sq_recall": emb_sq_recall,
-    "emb_matryoshka_eval": emb_matryoshka_eval,
-    "cluster_kcenter_greedy": cluster_kcenter_greedy,
-    "emb_isotropy_score": emb_isotropy_score,
-    "emb_abtt_postprocess": emb_abtt_postprocess,
-    "ann_ivf_spill": ann_ivf_spill,
-    "ann_filtered_search": ann_filtered_search,
-    "emb_zscore_outliers": emb_zscore_outliers,
-    "ann_topk_gemm": ann_topk_gemm,
-    "emb_bitpack_hamming_topk": emb_bitpack_hamming_topk,
-    "emb_bitpack_recall_eval": emb_bitpack_recall_eval,
-    "ann_two_stage_rerank": ann_two_stage_rerank,
-    "emb_cosine_histogram": emb_cosine_histogram,
-    "ann_mrr_eval": ann_mrr_eval,
-    "emb_rank_correlation": emb_rank_correlation,
-    "ml_knn_classifier_eval": ml_knn_classifier_eval,
-    "ann_ivf_balance_audit": ann_ivf_balance_audit,
-    "ann_ivf_persisted": ann_ivf_persisted,
-    "emb_norm_stats": emb_norm_stats,
-    "semdedup_bucketed": semdedup_bucketed,
-    "emb_jl_projection_eval": emb_jl_projection_eval,
-    "emb_mrl_recall": emb_mrl_recall,
-    "emb_pca_power_iter": emb_pca_power_iter,
-    "emb_gram_matrix": emb_gram_matrix,
-    "ann_pq_adc": ann_pq_adc,
-    "ann_pq_recall_eval": ann_pq_recall_eval,
-    "ann_recall_eval": ann_recall_eval,
-    "ann_dot_pandas_udf": ann_dot_pandas_udf,
-    "emb_label_centroids": emb_label_centroids,
-    "ann_topk_bruteforce": ann_topk_bruteforce,
-    "ann_lsh_bucketed": ann_lsh_bucketed,
-    "emb_hard_negatives": emb_hard_negatives,
-    "ann_mmr_diversified": ann_mmr_diversified,
-    "cluster_stability_rand": cluster_stability_rand,
-    "ann_multiprobe_lsh": ann_multiprobe_lsh,
-    "ann_ivf_nprobe_recall": ann_ivf_nprobe_recall,
-    "emb_cka_alignment": emb_cka_alignment,
-    "ann_ivf": ann_ivf,
-    "cluster_kmeans_fixed": cluster_kmeans_fixed,
-    "cluster_prototype_prune": cluster_prototype_prune,
-    "emb_ood_mahalanobis": emb_ood_mahalanobis,
-    "dedup_embedding_lsh": dedup_embedding_lsh,
-    "knn_graph_lsh": knn_graph_lsh,
-    "emb_knn_outlier_score": emb_knn_outlier_score,
-    "emb_quantize_int8": emb_quantize_int8,
-}
-
-ORACLES = {
-    "emb_sq_recall": _sq_recall_sql(),
-    "emb_matryoshka_eval": _matryoshka_sql(),
-    "cluster_kcenter_greedy": _kcenter_sql(),
-    "emb_isotropy_score": EMB_ISOTROPY_SQL,
-    "emb_abtt_postprocess": EMB_ABTT_SQL,
-    "ann_ivf_spill": _ann_ivf_spill_sql(),
-    "ann_filtered_search": ANN_FILTERED_SQL,
-    "emb_zscore_outliers": _zscore_sql(),
-    "ann_topk_gemm": ANN_GEMM_SQL,
-    "emb_bitpack_hamming_topk": EMB_HAMMING_SQL,
-    "emb_bitpack_recall_eval": EMB_BITPACK_RECALL_SQL,
-    "ann_two_stage_rerank": ANN_RERANK_SQL,
-    "emb_cosine_histogram": EMB_COSHIST_SQL,
-    "ann_ivf_balance_audit": _ivf_balance_sql(),
-    "ann_ivf_persisted": ANN_IVF_SQL,
-    "emb_norm_stats": EMB_NORM_SQL,
-    "semdedup_bucketed": _semdedup_sql(),
-    "emb_jl_projection_eval": _jl_sql(),
-    "emb_mrl_recall": _mrl_sql(),
-    "emb_pca_power_iter": _pca_sql(),
-    "emb_gram_matrix": _gram_sql(),
-    "ann_pq_adc": _pq_sql(),
-    "ann_pq_recall_eval": _pq_recall_sql(),
-    "ann_dot_pandas_udf": _pudf_sql(),
-    "knn_graph_lsh": _knn_graph_sql(),
-    "emb_knn_outlier_score": _knn_outlier_sql(),
-    "emb_quantize_int8": EMB_QUANTIZE_SQL,
-    "ann_recall_eval": _ann_recall_sql(),
-    "ann_mrr_eval": _ann_mrr_sql(),
-    "emb_rank_correlation": _rank_corr_sql(),
-    "ml_knn_classifier_eval": _knn_classifier_sql(),
-    "emb_label_centroids": EMB_CENTROIDS_SQL,
-    "cluster_kmeans_fixed": _kmeans_sql(),
-    "cluster_prototype_prune": CLUSTER_PROTO_PRUNE_SQL,
-    "emb_ood_mahalanobis": EMB_OOD_MAHALANOBIS_SQL,
-    "ann_topk_bruteforce": ANN_TOPK_SQL,
-    "ann_lsh_bucketed": _ann_lsh_sql(),
-    "emb_hard_negatives": _hard_negatives_sql(),
-    "ann_mmr_diversified": _mmr_sql(),
-    "cluster_stability_rand": CLUSTER_STABILITY_SQL,
-    "ann_multiprobe_lsh": _ann_multiprobe_sql(),
-    "ann_ivf_nprobe_recall": _ann_ivf_nprobe_sql(),
-    "emb_cka_alignment": _cka_sql(),
-    "ann_ivf": ANN_IVF_SQL,
-    "dedup_embedding_lsh": _dedup_lsh_sql(),
+    emb_sq_recall: _sq_recall_sql(),
+    emb_matryoshka_eval: _matryoshka_sql(),
+    cluster_kcenter_greedy: _kcenter_sql(),
+    emb_isotropy_score: EMB_ISOTROPY_SQL,
+    emb_abtt_postprocess: EMB_ABTT_SQL,
+    ann_ivf_spill: _ann_ivf_spill_sql(),
+    ann_filtered_search: ANN_FILTERED_SQL,
+    emb_zscore_outliers: _zscore_sql(),
+    ann_topk_gemm: ANN_GEMM_SQL,
+    emb_bitpack_hamming_topk: EMB_HAMMING_SQL,
+    emb_bitpack_recall_eval: EMB_BITPACK_RECALL_SQL,
+    ann_two_stage_rerank: ANN_RERANK_SQL,
+    emb_cosine_histogram: EMB_COSHIST_SQL,
+    ann_mrr_eval: _ann_mrr_sql(),
+    emb_rank_correlation: _rank_corr_sql(),
+    ml_knn_classifier_eval: _knn_classifier_sql(),
+    ann_ivf_balance_audit: _ivf_balance_sql(),
+    ann_ivf_persisted: ANN_IVF_SQL,
+    emb_norm_stats: EMB_NORM_SQL,
+    semdedup_bucketed: _semdedup_sql(),
+    emb_jl_projection_eval: _jl_sql(),
+    emb_mrl_recall: _mrl_sql(),
+    emb_pca_power_iter: _pca_sql(),
+    emb_gram_matrix: _gram_sql(),
+    ann_pq_adc: _pq_sql(),
+    ann_pq_recall_eval: _pq_recall_sql(),
+    ann_recall_eval: _ann_recall_sql(),
+    ann_dot_pandas_udf: _pudf_sql(),
+    emb_label_centroids: EMB_CENTROIDS_SQL,
+    ann_topk_bruteforce: ANN_TOPK_SQL,
+    ann_lsh_bucketed: _ann_lsh_sql(),
+    emb_hard_negatives: _hard_negatives_sql(),
+    ann_mmr_diversified: _mmr_sql(),
+    cluster_stability_rand: CLUSTER_STABILITY_SQL,
+    ann_multiprobe_lsh: _ann_multiprobe_sql(),
+    ann_ivf_nprobe_recall: _ann_ivf_nprobe_sql(),
+    emb_cka_alignment: _cka_sql(),
+    ann_ivf: ANN_IVF_SQL,
+    cluster_kmeans_fixed: _kmeans_sql(),
+    cluster_prototype_prune: CLUSTER_PROTO_PRUNE_SQL,
+    emb_ood_mahalanobis: EMB_OOD_MAHALANOBIS_SQL,
+    dedup_embedding_lsh: _dedup_lsh_sql(),
+    knn_graph_lsh: _knn_graph_sql(),
+    emb_knn_outlier_score: _knn_outlier_sql(),
+    emb_quantize_int8: EMB_QUANTIZE_SQL,
 }

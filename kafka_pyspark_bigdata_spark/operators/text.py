@@ -2219,61 +2219,31 @@ ORDER BY c12 DESC, w1, w2
 
 
 QUERIES = {
-    "text_kneser_ney_bigram": text_kneser_ney_bigram,
-    "corpus_langid_confusion": corpus_langid_confusion,
-    "corpus_tokenizer_fertility": corpus_tokenizer_fertility,
-    "text_tokenizer_fertility": text_tokenizer_fertility,
-    "text_source_divergence": text_source_divergence,
-    "text_keyphrase_rake": text_keyphrase_rake,
-    "text_bigram_topnext": text_bigram_topnext,
-    "text_vocab_growth": text_vocab_growth,
-    "text_cooccurrence_pairs": text_cooccurrence_pairs,
-    "text_chunk_windows": text_chunk_windows,
-    "text_search_and_rank": text_search_and_rank,
-    "text_bm25_topk": text_bm25_topk,
-    "text_bigram_lm_score": text_bigram_lm_score,
-    "text_bpe_pair_merges": text_bpe_pair_merges,
-    "text_bpe_multiround": text_bpe_multiround,
-    "text_simpson_diversity": text_simpson_diversity,
-    "text_chunk_udtf": text_chunk_udtf,
-    "text_feature_hashing": text_feature_hashing,
-    "text_cms_heavy_hitters": text_cms_heavy_hitters,
-    "text_tfidf_topterms": text_tfidf_topterms,
-    "text_token_stats": text_token_stats,
-    "text_token_bpe": text_token_bpe,
-    "text_winnow_fingerprint": text_winnow_fingerprint,
-    "text_cdc_chunks": text_cdc_chunks,
-    "text_langid": text_langid,
-    "text_quality": text_quality,
-    "text_fingerprint": text_fingerprint,
-}
-
-ORACLES = {
-    "text_kneser_ney_bigram": TEXT_KNESER_NEY_SQL,
-    "corpus_langid_confusion": CORPUS_LANGID_CONFUSION_SQL,
-    "corpus_tokenizer_fertility": CORPUS_FERTILITY_SQL,
-    "text_tokenizer_fertility": TEXT_TOKENIZER_FERTILITY_SQL,
-    "text_source_divergence": TEXT_SOURCE_DIVERGENCE_SQL,
-    "text_keyphrase_rake": TEXT_RAKE_SQL,
-    "text_bigram_topnext": TEXT_BIGRAM_SQL,
-    "text_vocab_growth": TEXT_VOCAB_GROWTH_SQL,
-    "text_cooccurrence_pairs": _cooc_sql(),
-    "text_chunk_windows": TEXT_CHUNK_SQL,
-    "text_search_and_rank": TEXT_SEARCH_SQL,
-    "text_bm25_topk": TEXT_BM25_SQL,
-    "text_bigram_lm_score": TEXT_BIGRAM_LM_SQL,
-    "text_bpe_pair_merges": TEXT_BPE_PAIRS_SQL,
-    "text_bpe_multiround": TEXT_BPE_MULTIROUND_SQL,
-    "text_simpson_diversity": TEXT_SIMPSON_SQL,
-    "text_chunk_udtf": TEXT_CHUNK_SQL,
-    "text_feature_hashing": TEXT_FH_SQL,
-    "text_cms_heavy_hitters": _cms_sql(),
-    "text_tfidf_topterms": TEXT_TFIDF_SQL,
-    "text_token_stats": TEXT_TOKEN_STATS_SQL,
-    "text_token_bpe": TEXT_TOKEN_BPE_SQL,
-    "text_winnow_fingerprint": _winnow_sql(),
-    "text_cdc_chunks": _cdc_sql(),
-    "text_langid": TEXT_LANGID_SQL,
-    "text_quality": TEXT_QUALITY_SQL,
-    "text_fingerprint": TEXT_FINGERPRINT_SQL,
+    text_kneser_ney_bigram: TEXT_KNESER_NEY_SQL,
+    corpus_langid_confusion: CORPUS_LANGID_CONFUSION_SQL,
+    corpus_tokenizer_fertility: CORPUS_FERTILITY_SQL,
+    text_tokenizer_fertility: TEXT_TOKENIZER_FERTILITY_SQL,
+    text_source_divergence: TEXT_SOURCE_DIVERGENCE_SQL,
+    text_keyphrase_rake: TEXT_RAKE_SQL,
+    text_bigram_topnext: TEXT_BIGRAM_SQL,
+    text_vocab_growth: TEXT_VOCAB_GROWTH_SQL,
+    text_cooccurrence_pairs: _cooc_sql(),
+    text_chunk_windows: TEXT_CHUNK_SQL,
+    text_search_and_rank: TEXT_SEARCH_SQL,
+    text_bm25_topk: TEXT_BM25_SQL,
+    text_bigram_lm_score: TEXT_BIGRAM_LM_SQL,
+    text_bpe_pair_merges: TEXT_BPE_PAIRS_SQL,
+    text_bpe_multiround: TEXT_BPE_MULTIROUND_SQL,
+    text_simpson_diversity: TEXT_SIMPSON_SQL,
+    text_chunk_udtf: TEXT_CHUNK_SQL,
+    text_feature_hashing: TEXT_FH_SQL,
+    text_cms_heavy_hitters: _cms_sql(),
+    text_tfidf_topterms: TEXT_TFIDF_SQL,
+    text_token_stats: TEXT_TOKEN_STATS_SQL,
+    text_token_bpe: TEXT_TOKEN_BPE_SQL,
+    text_winnow_fingerprint: _winnow_sql(),
+    text_cdc_chunks: _cdc_sql(),
+    text_langid: TEXT_LANGID_SQL,
+    text_quality: TEXT_QUALITY_SQL,
+    text_fingerprint: TEXT_FINGERPRINT_SQL,
 }

@@ -428,18 +428,22 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     dense = _dense_daily(spark, sf_dir)
     series = dense.groupBy("user_id").agg(_ordered_list("di", "v").alias("vec"))
-    n = F.size("vec")
-    base = series.select(
-        "user_id",
-        n.alias("n"),
-        F.transform("vec", lambda x: x * n - _array_sum("vec")).alias("cvec"),
+    # Σx and the denominator Σ cvec² are projected once per series: inside
+    # the centering lambda, or under each lag's nullif, Spark would fold
+    # them again
+    n, s = F.col("n"), F.col("s")
+    base = (
+        series.select(
+            "user_id", "vec", F.size("vec").alias("n"), _array_sum("vec").alias("s")
+        )
+        .select("user_id", "n", F.transform("vec", lambda x: x * n - s).alias("cvec"))
+        .withColumn("den", _dot("cvec", "cvec"))
     )
-    den = _dot("cvec", "cvec")
 
     def r_lag(lag: int):
-        num = _dot(*_lag_overlap("cvec", "cvec", F.col("n"), lag))
+        num = _dot(*_lag_overlap("cvec", "cvec", n, lag))
         return F.round(
-            num.cast("double") / F.nullif(den, F.lit(0)).cast("double"), 6
+            num.cast("double") / F.nullif("den", F.lit(0)).cast("double"), 6
         ).alias(f"r{lag}")
 
     return base.select(
@@ -1514,31 +1518,16 @@ FROM cus GROUP BY event_type ORDER BY event_type
 
 
 QUERIES = {
-    "ts_changepoint_cusum": ts_changepoint_cusum,
-    "ts_holt_linear": ts_holt_linear,
-    "ts_sax_symbols": ts_sax_symbols,
-    "ts_downsample_lttb": ts_downsample_lttb,
-    "ts_forecast_eval_mase": ts_forecast_eval_mase,
-    "ts_mad_outliers": ts_mad_outliers,
-    "ts_trend_forecast": ts_trend_forecast,
-    "ts_similarity_paa": ts_similarity_paa,
-    "ts_matrix_profile_paa": ts_matrix_profile_paa,
-    "ts_autocorr": ts_autocorr,
-    "ts_cross_correlation": ts_cross_correlation,
-    "ts_stl_lite": ts_stl_lite,
-}
-
-ORACLES = {
-    "ts_changepoint_cusum": TS_CUSUM_SQL,
-    "ts_holt_linear": TS_HOLT_SQL,
-    "ts_sax_symbols": TS_SAX_SQL,
-    "ts_downsample_lttb": TS_LTTB_SQL,
-    "ts_forecast_eval_mase": TS_MASE_SQL,
-    "ts_mad_outliers": TS_MAD_SQL,
-    "ts_trend_forecast": TS_TREND_SQL,
-    "ts_similarity_paa": TS_SIMILARITY_SQL,
-    "ts_matrix_profile_paa": TS_MATRIX_PROFILE_SQL,
-    "ts_autocorr": _autocorr_sql(),
-    "ts_cross_correlation": TS_XCORR_SQL,
-    "ts_stl_lite": TS_STL_SQL,
+    ts_changepoint_cusum: TS_CUSUM_SQL,
+    ts_holt_linear: TS_HOLT_SQL,
+    ts_sax_symbols: TS_SAX_SQL,
+    ts_downsample_lttb: TS_LTTB_SQL,
+    ts_forecast_eval_mase: TS_MASE_SQL,
+    ts_mad_outliers: TS_MAD_SQL,
+    ts_trend_forecast: TS_TREND_SQL,
+    ts_similarity_paa: TS_SIMILARITY_SQL,
+    ts_matrix_profile_paa: TS_MATRIX_PROFILE_SQL,
+    ts_autocorr: _autocorr_sql(),
+    ts_cross_correlation: TS_XCORR_SQL,
+    ts_stl_lite: TS_STL_SQL,
 }

@@ -1211,57 +1211,29 @@ ORDER BY semantics
 
 
 QUERIES = {
-    "q_lateral_topk": q_lateral_topk,
-    "q_array_analytics": q_array_analytics,
-    "q_sql_udf_pricing": q_sql_udf_pricing,
-    "q_pandas_api_rollup": q_pandas_api_rollup,
-    "q_collated_group": q_collated_group,
-    "q_arrow_udf_checksum": q_arrow_udf_checksum,
-    "q_not_in_null_trap": q_not_in_null_trap,
-    "q_recursive_bom": q_recursive_bom,
-    "q_recursive_cte_native": q_recursive_cte_native,
-    "q12_priority_counts": q12_priority_counts,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q17_small_quantity_revenue": q17_small_quantity_revenue,
-    "q18_large_volume_orders": q18_large_volume_orders,
-    "q22_rich_idle_customers": q22_rich_idle_customers,
-    "q_count_distinct_suppliers": q_count_distinct_suppliers,
-    "q_cube_order_stats": q_cube_order_stats,
-    "q_argmax_events": q_argmax_events,
-    "q_pivot_user_events": q_pivot_user_events,
-    "q_asof_click_purchase": q_asof_click_purchase,
-    "q_range_join_error_context": q_range_join_error_context,
-    "q_sessionize": q_sessionize,
-    "q_sql_sessionize": q_sql_sessionize,
-    "q_session_window_native": q_session_window_native,
-    "q_session_window_dynamic": q_session_window_dynamic,
-    "q_exact_median": q_exact_median,
-}
-
-ORACLES = {
-    "q_lateral_topk": Q_LATERAL_SQL,
-    "q_array_analytics": Q_ARRAY_ANALYTICS_SQL,
-    "q_sql_udf_pricing": Q_SQL_UDF_SQL,
-    "q_pandas_api_rollup": Q_PANDAS_API_SQL,
-    "q_collated_group": Q_COLLATED_SQL,
-    "q_arrow_udf_checksum": Q_ARROW_UDF_SQL,
-    "q_not_in_null_trap": Q_NOT_IN_SQL,
-    "q_recursive_bom": Q_RECURSIVE_BOM_SQL,
-    "q_recursive_cte_native": Q_RECURSIVE_BOM_SQL,
-    "q12_priority_counts": Q12_SQL,
-    "q14_promo_revenue": Q14_SQL,
-    "q17_small_quantity_revenue": Q17_SQL,
-    "q18_large_volume_orders": Q18_SQL,
-    "q22_rich_idle_customers": Q22_SQL,
-    "q_count_distinct_suppliers": Q_COUNT_DISTINCT_SQL,
-    "q_cube_order_stats": Q_CUBE_SQL,
-    "q_argmax_events": Q_ARGMAX_SQL,
-    "q_pivot_user_events": Q_PIVOT_SQL,
-    "q_asof_click_purchase": Q_ASOF_SQL,
-    "q_range_join_error_context": Q_RANGE_JOIN_SQL,
-    "q_sessionize": Q_SESSIONIZE_SQL,
-    "q_sql_sessionize": Q_SESSIONIZE_SQL,
-    "q_session_window_native": Q_SESSION_WINDOW_NATIVE_SQL,
-    "q_session_window_dynamic": Q_SESSION_DYNAMIC_SQL,
-    "q_exact_median": Q_EXACT_MEDIAN_SQL,
+    q_lateral_topk: Q_LATERAL_SQL,
+    q_array_analytics: Q_ARRAY_ANALYTICS_SQL,
+    q_sql_udf_pricing: Q_SQL_UDF_SQL,
+    q_pandas_api_rollup: Q_PANDAS_API_SQL,
+    q_collated_group: Q_COLLATED_SQL,
+    q_arrow_udf_checksum: Q_ARROW_UDF_SQL,
+    q_not_in_null_trap: Q_NOT_IN_SQL,
+    q_recursive_bom: Q_RECURSIVE_BOM_SQL,
+    q_recursive_cte_native: Q_RECURSIVE_BOM_SQL,
+    q12_priority_counts: Q12_SQL,
+    q14_promo_revenue: Q14_SQL,
+    q17_small_quantity_revenue: Q17_SQL,
+    q18_large_volume_orders: Q18_SQL,
+    q22_rich_idle_customers: Q22_SQL,
+    q_count_distinct_suppliers: Q_COUNT_DISTINCT_SQL,
+    q_cube_order_stats: Q_CUBE_SQL,
+    q_argmax_events: Q_ARGMAX_SQL,
+    q_pivot_user_events: Q_PIVOT_SQL,
+    q_asof_click_purchase: Q_ASOF_SQL,
+    q_range_join_error_context: Q_RANGE_JOIN_SQL,
+    q_sessionize: Q_SESSIONIZE_SQL,
+    q_sql_sessionize: Q_SESSIONIZE_SQL,
+    q_session_window_native: Q_SESSION_WINDOW_NATIVE_SQL,
+    q_session_window_dynamic: Q_SESSION_DYNAMIC_SQL,
+    q_exact_median: Q_EXACT_MEDIAN_SQL,
 }

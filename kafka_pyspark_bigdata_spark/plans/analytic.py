@@ -925,10 +925,14 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(v).cast("double").alias("sv"),
         F.sum(v * v).cast("double").alias("svv"),
     )
+    # one event (n - 1 = 0) or a constant value (std = 0) gives NULL,
+    # as the oracle's x / 0 does
     mean = F.col("sv") / F.col("n")
-    std = F.sqrt((F.col("svv") - F.col("sv") * F.col("sv") / F.col("n")) / (F.col("n") - 1))
-    stats = stats.select("et", mean.alias("mean"), std.alias("std"))
-    z = (F.col("value") - F.col("mean")) / F.col("std")
+    var = F.try_divide(
+        F.col("svv") - F.col("sv") * F.col("sv") / F.col("n"), F.col("n") - 1
+    )
+    stats = stats.select("et", mean.alias("mean"), F.sqrt(var).alias("std"))
+    z = F.try_divide(F.col("value") - F.col("mean"), F.col("std"))
     return (
         ev.join(F.broadcast(stats), ev.event_type == F.col("et"))
         .select("event_id", "event_type", "value", z.alias("zscore"))
@@ -1511,8 +1515,9 @@ def q_histogram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares = per_bin.join(tot, "event_type").select(
         "event_type",
         "bin",
-        F.expr("a * 1000000 DIV ta").alias("share_a_ppm"),
-        F.expr("b * 1000000 DIV tb").alias("share_b_ppm"),
+        # a period with no events has no shares: NULL, as the oracle's // 0
+        F.expr("a * 1000000 DIV nullif(ta, 0)").alias("share_a_ppm"),
+        F.expr("b * 1000000 DIV nullif(tb, 0)").alias("share_b_ppm"),
     )
     return (
         shares.groupBy("event_type")
@@ -1688,65 +1693,33 @@ FROM b GROUP BY bucket ORDER BY bucket
 
 
 QUERIES = {
-    "sketch_kmv_setops": sketch_kmv_setops,
-    "sketch_gk_quantile_eval": sketch_gk_quantile_eval,
-    "sketch_ddsketch_quantile": sketch_ddsketch_quantile,
-    "sketch_hll_error": sketch_hll_error,
-    "q_hist_equidepth": q_hist_equidepth,
-    "q_skyline_pareto": q_skyline_pareto,
-    "q_nested_collect_explode": q_nested_collect_explode,
-    "q_histogram_drift": q_histogram_drift,
-    "sketch_join_cardinality": sketch_join_cardinality,
-    "sketch_ams_f2": sketch_ams_f2,
-    "q_key_skew_stats": q_key_skew_stats,
-    "q_quantiles_exact": q_quantiles_exact,
-    "q_mad_outliers": q_mad_outliers,
-    "q_range_frame_sum": q_range_frame_sum,
-    "q_value_histogram": q_value_histogram,
-    "q_percent_rank": q_percent_rank,
-    "q_unpivot_order_stats": q_unpivot_order_stats,
-    "q_corr_ols": q_corr_ols,
-    "q_rank_with_ties": q_rank_with_ties,
-    "q_zscore_outliers": q_zscore_outliers,
-    "q_moving_avg": q_moving_avg,
-    "q_ntile_quartiles": q_ntile_quartiles,
-    "sketch_kmv_distinct": sketch_kmv_distinct,
-    "q_sql_grouping_sets": q_sql_grouping_sets,
-    "q_intersect_parts": q_intersect_parts,
-    "q_except_parts": q_except_parts,
-    "q_union_distinct_parts": q_union_distinct_parts,
-    "q_lead_gap": q_lead_gap,
-    "q_scalar_functions": q_scalar_functions,
-}
-
-ORACLES = {
-    "sketch_kmv_setops": SKETCH_KMV_SETOPS_SQL,
-    "sketch_gk_quantile_eval": SKETCH_GK_SQL,
-    "sketch_ddsketch_quantile": SKETCH_DDSKETCH_SQL,
-    "sketch_hll_error": SKETCH_HLL_SQL,
-    "q_hist_equidepth": Q_HIST_EQUIDEPTH_SQL,
-    "q_skyline_pareto": Q_SKYLINE_SQL,
-    "q_nested_collect_explode": Q_NESTED_SQL,
-    "q_histogram_drift": Q_DRIFT_SQL,
-    "sketch_join_cardinality": SKETCH_JOIN_CARD_SQL,
-    "sketch_ams_f2": SKETCH_AMS_SQL,
-    "q_key_skew_stats": Q_KEY_SKEW_SQL,
-    "q_quantiles_exact": Q_QUANTILES_SQL,
-    "q_mad_outliers": Q_MAD_SQL,
-    "q_range_frame_sum": Q_RANGE_FRAME_SQL,
-    "q_value_histogram": Q_HISTOGRAM_SQL,
-    "q_percent_rank": Q_PERCENT_RANK_SQL,
-    "q_unpivot_order_stats": Q_UNPIVOT_SQL,
-    "q_corr_ols": Q_CORR_OLS_SQL,
-    "q_rank_with_ties": Q_RANK_TIES_SQL,
-    "q_zscore_outliers": Q_ZSCORE_SQL,
-    "q_moving_avg": Q_MOVING_AVG_SQL,
-    "q_ntile_quartiles": Q_NTILE_SQL,
-    "sketch_kmv_distinct": SKETCH_KMV_SQL,
-    "q_sql_grouping_sets": Q_SQL_GROUPING_SETS_SQL,
-    "q_intersect_parts": Q_INTERSECT_SQL,
-    "q_except_parts": Q_EXCEPT_SQL,
-    "q_union_distinct_parts": Q_UNION_DISTINCT_SQL,
-    "q_lead_gap": Q_LEAD_GAP_SQL,
-    "q_scalar_functions": Q_SCALAR_SQL,
+    sketch_kmv_setops: SKETCH_KMV_SETOPS_SQL,
+    sketch_gk_quantile_eval: SKETCH_GK_SQL,
+    sketch_ddsketch_quantile: SKETCH_DDSKETCH_SQL,
+    sketch_hll_error: SKETCH_HLL_SQL,
+    q_hist_equidepth: Q_HIST_EQUIDEPTH_SQL,
+    q_skyline_pareto: Q_SKYLINE_SQL,
+    q_nested_collect_explode: Q_NESTED_SQL,
+    q_histogram_drift: Q_DRIFT_SQL,
+    sketch_join_cardinality: SKETCH_JOIN_CARD_SQL,
+    sketch_ams_f2: SKETCH_AMS_SQL,
+    q_key_skew_stats: Q_KEY_SKEW_SQL,
+    q_quantiles_exact: Q_QUANTILES_SQL,
+    q_mad_outliers: Q_MAD_SQL,
+    q_range_frame_sum: Q_RANGE_FRAME_SQL,
+    q_value_histogram: Q_HISTOGRAM_SQL,
+    q_percent_rank: Q_PERCENT_RANK_SQL,
+    q_unpivot_order_stats: Q_UNPIVOT_SQL,
+    q_corr_ols: Q_CORR_OLS_SQL,
+    q_rank_with_ties: Q_RANK_TIES_SQL,
+    q_zscore_outliers: Q_ZSCORE_SQL,
+    q_moving_avg: Q_MOVING_AVG_SQL,
+    q_ntile_quartiles: Q_NTILE_SQL,
+    sketch_kmv_distinct: SKETCH_KMV_SQL,
+    q_sql_grouping_sets: Q_SQL_GROUPING_SETS_SQL,
+    q_intersect_parts: Q_INTERSECT_SQL,
+    q_except_parts: Q_EXCEPT_SQL,
+    q_union_distinct_parts: Q_UNION_DISTINCT_SQL,
+    q_lead_gap: Q_LEAD_GAP_SQL,
+    q_scalar_functions: Q_SCALAR_SQL,
 }

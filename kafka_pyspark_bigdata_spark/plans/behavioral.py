@@ -149,8 +149,11 @@ def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_signup",
             "n_click",
             "n_purchase",
-            F.expr("n_click * 1000000 div n_signup").alias("click_rate_ppm"),
-            F.expr("n_purchase * 1000000 div n_click").alias(
+            # a stage nobody reached has no rate: NULL, as the oracle's // 0
+            F.expr("n_click * 1000000 div nullif(n_signup, 0)").alias(
+                "click_rate_ppm"
+            ),
+            F.expr("n_purchase * 1000000 div nullif(n_click, 0)").alias(
                 "purchase_rate_ppm"
             ),
         )
@@ -1539,49 +1542,25 @@ FROM stacked ORDER BY pattern
 
 
 QUERIES = {
-    "q_seq_pattern_match": q_seq_pattern_match,
-    "q_funnel_windowed": q_funnel_windowed,
-    "q_bot_flag": q_bot_flag,
-    "q_top_paths": q_top_paths,
-    "q_gapfill_interpolate": q_gapfill_interpolate,
-    "q_cusum_anomaly": q_cusum_anomaly,
-    "q_time_weighted_avg": q_time_weighted_avg,
-    "q_ohlc_bars": q_ohlc_bars,
-    "q_dau_mau_stickiness": q_dau_mau_stickiness,
-    "q_rolling_wau": q_rolling_wau,
-    "q_wow_growth": q_wow_growth,
-    "q_cumulative_distinct_users": q_cumulative_distinct_users,
-    "q_click_no_purchase": q_click_no_purchase,
-    "q_event_transition_matrix": q_event_transition_matrix,
-    "q_rfm_segmentation": q_rfm_segmentation,
-    "q_funnel": q_funnel,
-    "q_interval_concurrency": q_interval_concurrency,
-    "q_ewma_decay": q_ewma_decay,
-    "q_cohort_retention": q_cohort_retention,
-    "q_resample_locf": q_resample_locf,
-    "q_hypertable_rollup": q_hypertable_rollup,
-}
-
-ORACLES = {
-    "q_seq_pattern_match": Q_SEQ_PATTERN_SQL,
-    "q_funnel_windowed": Q_FUNNEL_WINDOWED_SQL,
-    "q_bot_flag": Q_BOT_FLAG_SQL,
-    "q_top_paths": Q_TOP_PATHS_SQL,
-    "q_gapfill_interpolate": Q_GAPFILL_SQL,
-    "q_cusum_anomaly": Q_CUSUM_SQL,
-    "q_time_weighted_avg": Q_TWAP_SQL,
-    "q_ohlc_bars": Q_OHLC_SQL,
-    "q_dau_mau_stickiness": Q_DAU_MAU_SQL,
-    "q_rolling_wau": Q_ROLLING_WAU_SQL,
-    "q_wow_growth": Q_WOW_SQL,
-    "q_cumulative_distinct_users": Q_CUM_USERS_SQL,
-    "q_click_no_purchase": Q_ABANDON_SQL,
-    "q_event_transition_matrix": Q_TRANSITION_SQL,
-    "q_rfm_segmentation": Q_RFM_SQL,
-    "q_funnel": Q_FUNNEL_SQL,
-    "q_interval_concurrency": Q_INTERVAL_CONC_SQL,
-    "q_ewma_decay": Q_EWMA_SQL,
-    "q_cohort_retention": Q_COHORT_SQL,
-    "q_resample_locf": Q_RESAMPLE_LOCF_SQL,
-    "q_hypertable_rollup": Q_HYPERTABLE_SQL,
+    q_seq_pattern_match: Q_SEQ_PATTERN_SQL,
+    q_funnel_windowed: Q_FUNNEL_WINDOWED_SQL,
+    q_bot_flag: Q_BOT_FLAG_SQL,
+    q_top_paths: Q_TOP_PATHS_SQL,
+    q_gapfill_interpolate: Q_GAPFILL_SQL,
+    q_cusum_anomaly: Q_CUSUM_SQL,
+    q_time_weighted_avg: Q_TWAP_SQL,
+    q_ohlc_bars: Q_OHLC_SQL,
+    q_dau_mau_stickiness: Q_DAU_MAU_SQL,
+    q_rolling_wau: Q_ROLLING_WAU_SQL,
+    q_wow_growth: Q_WOW_SQL,
+    q_cumulative_distinct_users: Q_CUM_USERS_SQL,
+    q_click_no_purchase: Q_ABANDON_SQL,
+    q_event_transition_matrix: Q_TRANSITION_SQL,
+    q_rfm_segmentation: Q_RFM_SQL,
+    q_funnel: Q_FUNNEL_SQL,
+    q_interval_concurrency: Q_INTERVAL_CONC_SQL,
+    q_ewma_decay: Q_EWMA_SQL,
+    q_cohort_retention: Q_COHORT_SQL,
+    q_resample_locf: Q_RESAMPLE_LOCF_SQL,
+    q_hypertable_rollup: Q_HYPERTABLE_SQL,
 }

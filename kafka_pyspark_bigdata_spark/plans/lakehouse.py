@@ -2751,65 +2751,33 @@ FROM read GROUP BY layout, query_id ORDER BY query_id, layout
 
 
 QUERIES = {
-    "q_zorder_clustering": q_zorder_clustering,
-    "q_partition_evolution": q_partition_evolution,
-    "q_deletion_vectors": q_deletion_vectors,
-    "q_delta_log_replay": q_delta_log_replay,
-    "q_vacuum_eligibility": q_vacuum_eligibility,
-    "q_bitemporal_asof": q_bitemporal_asof,
-    "q_encoding_stats": q_encoding_stats,
-    "q_encoding_stats_sharded": q_encoding_stats_sharded,
-    "q_observe_metrics": q_observe_metrics,
-    "q_table_checksum": q_table_checksum,
-    "q_zorder_skipping": q_zorder_skipping,
-    "q_hilbert_skipping": q_hilbert_skipping,
-    "q_merge_upsert": q_merge_upsert,
-    "q_partial_agg_merge": q_partial_agg_merge,
-    "q_compact_small_files": q_compact_small_files,
-    "q_compaction_plan": q_compaction_plan,
-    "sketch_bloom_fpr_eval": sketch_bloom_fpr_eval,
-    "q_medallion_audit": q_medallion_audit,
-    "q_scd2_asof_lookup": q_scd2_asof_lookup,
-    "q_scd2_intervals": q_scd2_intervals,
-    "q_cdc_diff": q_cdc_diff,
-    "q_bloom_prune": q_bloom_prune,
-    "q_constraint_audit": q_constraint_audit,
-    "q_zorder_layout": q_zorder_layout,
-    "q_ivm_join_delta": q_ivm_join_delta,
-    "q_ivm_agg_retract": q_ivm_agg_retract,
-    "q_salted_join_agg": q_salted_join_agg,
-    "q_join_skew_audit": q_join_skew_audit,
-    "q_retention_sweep": q_retention_sweep,
-}
-
-ORACLES = {
-    "q_zorder_clustering": _zorder_sql(),
-    "q_partition_evolution": PARTITION_EVOLUTION_SQL,
-    "q_deletion_vectors": DELETION_VECTORS_SQL,
-    "q_delta_log_replay": DELTA_LOG_SQL,
-    "q_vacuum_eligibility": VACUUM_ELIGIBILITY_SQL,
-    "q_bitemporal_asof": BTEMP_ASOF_SQL,
-    "q_encoding_stats": Q_ENCODING_SQL,
-    "q_encoding_stats_sharded": Q_ENCODING_SHARDED_SQL,
-    "q_observe_metrics": Q_OBSERVE_SQL,
-    "q_table_checksum": Q_TABLE_CHECKSUM_SQL,
-    "q_zorder_skipping": Q_ZORDER_SQL,
-    "q_hilbert_skipping": Q_HILBERT_SQL,
-    "q_merge_upsert": MERGE_UPSERT_SQL,
-    "q_partial_agg_merge": PARTIAL_AGG_MERGE_SQL,
-    "q_compact_small_files": COMPACT_SQL,
-    "q_compaction_plan": COMPACT_PLAN_SQL,
-    "sketch_bloom_fpr_eval": _bloom_fpr_sql(),
-    "q_medallion_audit": MEDALLION_SQL,
-    "q_scd2_asof_lookup": _scd2_asof_sql(),
-    "q_scd2_intervals": SCD2_SQL,
-    "q_cdc_diff": CDC_DIFF_SQL,
-    "q_bloom_prune": _bloom_sql(),
-    "q_constraint_audit": CONSTRAINT_AUDIT_SQL,
-    "q_zorder_layout": ZORDER_SQL,
-    "q_ivm_join_delta": IVM_SQL,
-    "q_ivm_agg_retract": IVM_RETRACT_SQL,
-    "q_salted_join_agg": SALTED_JOIN_SQL,
-    "q_join_skew_audit": SKEW_AUDIT_SQL,
-    "q_retention_sweep": RETENTION_SQL,
+    q_zorder_clustering: _zorder_sql(),
+    q_partition_evolution: PARTITION_EVOLUTION_SQL,
+    q_deletion_vectors: DELETION_VECTORS_SQL,
+    q_delta_log_replay: DELTA_LOG_SQL,
+    q_vacuum_eligibility: VACUUM_ELIGIBILITY_SQL,
+    q_bitemporal_asof: BTEMP_ASOF_SQL,
+    q_encoding_stats: Q_ENCODING_SQL,
+    q_encoding_stats_sharded: Q_ENCODING_SHARDED_SQL,
+    q_observe_metrics: Q_OBSERVE_SQL,
+    q_table_checksum: Q_TABLE_CHECKSUM_SQL,
+    q_zorder_skipping: Q_ZORDER_SQL,
+    q_hilbert_skipping: Q_HILBERT_SQL,
+    q_merge_upsert: MERGE_UPSERT_SQL,
+    q_partial_agg_merge: PARTIAL_AGG_MERGE_SQL,
+    q_compact_small_files: COMPACT_SQL,
+    q_compaction_plan: COMPACT_PLAN_SQL,
+    sketch_bloom_fpr_eval: _bloom_fpr_sql(),
+    q_medallion_audit: MEDALLION_SQL,
+    q_scd2_asof_lookup: _scd2_asof_sql(),
+    q_scd2_intervals: SCD2_SQL,
+    q_cdc_diff: CDC_DIFF_SQL,
+    q_bloom_prune: _bloom_sql(),
+    q_constraint_audit: CONSTRAINT_AUDIT_SQL,
+    q_zorder_layout: ZORDER_SQL,
+    q_ivm_join_delta: IVM_SQL,
+    q_ivm_agg_retract: IVM_RETRACT_SQL,
+    q_salted_join_agg: SALTED_JOIN_SQL,
+    q_join_skew_audit: SKEW_AUDIT_SQL,
+    q_retention_sweep: RETENTION_SQL,
 }

@@ -612,12 +612,15 @@ def q_ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("arm") == 1) & F.col("conv").isNotNull()).cast("long")
         ).alias("conv_b"),
     )
+    # an empty arm divides by nullif(n, 0): NULL, as the oracle's x / 0
     z = F.expr(
-        "(CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)"
+        "(CAST(conv_a AS DOUBLE) / nullif(n_a, 0)"
+        "  - CAST(conv_b AS DOUBLE) / nullif(n_b, 0))"
         " / nullif(sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))"
         "        * (CAST(1 AS DOUBLE) - CAST(conv_a + conv_b AS DOUBLE)"
         "           / (n_a + n_b))"
-        "        * (CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b)),"
+        "        * (CAST(1 AS DOUBLE) / nullif(n_a, 0)"
+        "           + CAST(1 AS DOUBLE) / nullif(n_b, 0))),"
         " CAST(0 AS DOUBLE))"
     )
     return stats.select(
@@ -625,8 +628,8 @@ def q_ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conv_a",
         "n_b",
         "conv_b",
-        F.expr("conv_a * 1000000 DIV n_a").alias("cvr_a_ppm"),
-        F.expr("conv_b * 1000000 DIV n_b").alias("cvr_b_ppm"),
+        F.expr("conv_a * 1000000 DIV nullif(n_a, 0)").alias("cvr_a_ppm"),
+        F.expr("conv_b * 1000000 DIV nullif(n_b, 0)").alias("cvr_b_ppm"),
         z.alias("z_score"),
     )
 
@@ -1638,47 +1641,24 @@ ORDER BY c_nationkey, spend_cents DESC, o_custkey
 
 
 QUERIES = {
-    "q_skyline_grouped": q_skyline_grouped,
-    "q_ks_drift": q_ks_drift,
-    "q_interval_overlap_join": q_interval_overlap_join,
-    "q_winsorized_mean": q_winsorized_mean,
-    "q_keyset_page": q_keyset_page,
-    "q_trimmed_mean_pandas": q_trimmed_mean_pandas,
-    "q_weighted_median": q_weighted_median,
-    "corpus_modality_coverage": corpus_modality_coverage,
-    "q_hdr_histogram": q_hdr_histogram,
-    "q_lorenz_deciles": q_lorenz_deciles,
-    "q_gini_concentration": q_gini_concentration,
-    "q_benford_audit": q_benford_audit,
-    "q_market_basket_pairs": q_market_basket_pairs,
-    "q_ab_test_conversion": q_ab_test_conversion,
-    "q_chi2_independence": q_chi2_independence,
-    "q_attribution_last_touch": q_attribution_last_touch,
-    "q_attribution_linear": q_attribution_linear,
-    "q_rolling_median": q_rolling_median,
-    "q_asof_forward": q_asof_forward,
-    "q_profile_columns": q_profile_columns,
-}
-
-ORACLES = {
-    "q_skyline_grouped": Q_SKYLINE_GROUPED_SQL,
-    "q_ks_drift": Q_KS_SQL,
-    "q_interval_overlap_join": Q_INTERVAL_OVERLAP_SQL,
-    "q_winsorized_mean": Q_WINSOR_SQL,
-    "q_keyset_page": Q_KEYSET_SQL,
-    "q_trimmed_mean_pandas": Q_TRIMMED_MEAN_SQL,
-    "q_weighted_median": Q_WEIGHTED_MEDIAN_SQL,
-    "corpus_modality_coverage": CORPUS_COVERAGE_SQL,
-    "q_hdr_histogram": Q_HDR_SQL,
-    "q_lorenz_deciles": Q_LORENZ_SQL,
-    "q_gini_concentration": Q_GINI_SQL,
-    "q_benford_audit": _benford_sql(),
-    "q_market_basket_pairs": Q_BASKET_SQL,
-    "q_ab_test_conversion": Q_AB_TEST_SQL,
-    "q_chi2_independence": CHI2_SQL,
-    "q_attribution_last_touch": Q_ATTRIBUTION_SQL,
-    "q_attribution_linear": Q_ATTR_LINEAR_SQL,
-    "q_rolling_median": Q_ROLLING_MEDIAN_SQL,
-    "q_asof_forward": Q_ASOF_FWD_SQL,
-    "q_profile_columns": Q_PROFILE_SQL,
+    q_skyline_grouped: Q_SKYLINE_GROUPED_SQL,
+    q_ks_drift: Q_KS_SQL,
+    q_interval_overlap_join: Q_INTERVAL_OVERLAP_SQL,
+    q_winsorized_mean: Q_WINSOR_SQL,
+    q_keyset_page: Q_KEYSET_SQL,
+    q_trimmed_mean_pandas: Q_TRIMMED_MEAN_SQL,
+    q_weighted_median: Q_WEIGHTED_MEDIAN_SQL,
+    corpus_modality_coverage: CORPUS_COVERAGE_SQL,
+    q_hdr_histogram: Q_HDR_SQL,
+    q_lorenz_deciles: Q_LORENZ_SQL,
+    q_gini_concentration: Q_GINI_SQL,
+    q_benford_audit: _benford_sql(),
+    q_market_basket_pairs: Q_BASKET_SQL,
+    q_ab_test_conversion: Q_AB_TEST_SQL,
+    q_chi2_independence: CHI2_SQL,
+    q_attribution_last_touch: Q_ATTRIBUTION_SQL,
+    q_attribution_linear: Q_ATTR_LINEAR_SQL,
+    q_rolling_median: Q_ROLLING_MEDIAN_SQL,
+    q_asof_forward: Q_ASOF_FWD_SQL,
+    q_profile_columns: Q_PROFILE_SQL,
 }

@@ -1,7 +1,8 @@
 """Relational query library (reference parity + TPC-H-shaped surface).
 
-Each query is a pure function ``(spark, sf_dir) -> DataFrame`` with a
-matching ANSI-SQL oracle in ``ORACLES`` (run by the driver under DuckDB).
+Each query is a pure function ``(spark, sf_dir) -> DataFrame``, registered
+in ``QUERIES`` with its matching ANSI-SQL oracle (run by the driver under
+DuckDB).
 Column names and types are aligned on both sides; all large floating sums go
 through the decimal-exact helpers in ``functions.numeric`` so values are
 bit-identical across engines and across parallelism levels.
@@ -582,43 +583,22 @@ FROM events GROUP BY 1 ORDER BY local_date
 
 
 QUERIES = {
-    "q_tz_daily_rollup": q_tz_daily_rollup,
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_local_supplier_volume": q5_local_supplier_volume,
-    "q_top_customers": q_top_customers,
-    "q_rollup_acctbal": q_rollup_acctbal,
-    "q_window_top_orders": q_window_top_orders,
-    "q_semi_join": q_semi_join,
-    "q_anti_join": q_anti_join,
-    "q_distinct_flags": q_distinct_flags,
-    "q_union_all": q_union_all,
-    "q_topk_orders": q_topk_orders,
-    "q_between_sort": q_between_sort,
-    "q_cast_default_json": q_cast_default_json,
-    "q_null_drop": q_null_drop,
-    "q_mean_impute": q_mean_impute,
-    "q_sweep_hours": q_sweep_hours,
-    "q_events_hourly": q_events_hourly,
-}
-
-ORACLES = {
-    "q_tz_daily_rollup": Q_TZ_DAILY_SQL,
-    "q1_pricing_summary": Q1_SQL,
-    "q3_shipping_priority": Q3_SQL,
-    "q5_local_supplier_volume": Q5_SQL,
-    "q_top_customers": Q_TOP_CUSTOMERS_SQL,
-    "q_rollup_acctbal": Q_ROLLUP_SQL,
-    "q_window_top_orders": Q_WINDOW_SQL,
-    "q_semi_join": Q_SEMI_SQL,
-    "q_anti_join": Q_ANTI_SQL,
-    "q_distinct_flags": Q_DISTINCT_SQL,
-    "q_union_all": Q_UNION_SQL,
-    "q_topk_orders": Q_TOPK_SQL,
-    "q_between_sort": Q_BETWEEN_SQL,
-    "q_cast_default_json": Q_CAST_DEFAULT_SQL,
-    "q_null_drop": Q_NULL_DROP_SQL,
-    "q_mean_impute": Q_MEAN_IMPUTE_SQL,
-    "q_sweep_hours": Q_SWEEP_SQL,
-    "q_events_hourly": Q_EVENTS_HOURLY_SQL,
+    q_tz_daily_rollup: Q_TZ_DAILY_SQL,
+    q1_pricing_summary: Q1_SQL,
+    q3_shipping_priority: Q3_SQL,
+    q5_local_supplier_volume: Q5_SQL,
+    q_top_customers: Q_TOP_CUSTOMERS_SQL,
+    q_rollup_acctbal: Q_ROLLUP_SQL,
+    q_window_top_orders: Q_WINDOW_SQL,
+    q_semi_join: Q_SEMI_SQL,
+    q_anti_join: Q_ANTI_SQL,
+    q_distinct_flags: Q_DISTINCT_SQL,
+    q_union_all: Q_UNION_SQL,
+    q_topk_orders: Q_TOPK_SQL,
+    q_between_sort: Q_BETWEEN_SQL,
+    q_cast_default_json: Q_CAST_DEFAULT_SQL,
+    q_null_drop: Q_NULL_DROP_SQL,
+    q_mean_impute: Q_MEAN_IMPUTE_SQL,
+    q_sweep_hours: Q_SWEEP_SQL,
+    q_events_hourly: Q_EVENTS_HOURLY_SQL,
 }

@@ -756,35 +756,18 @@ LIMIT 20
 
 
 QUERIES = {
-    "q2_min_metric_supplier": q2_min_metric_supplier,
-    "q4_order_priority": q4_order_priority,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q8_market_share": q8_market_share,
-    "q9_product_profit": q9_product_profit,
-    "q10_returned_items": q10_returned_items,
-    "q11_important_stock": q11_important_stock,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q16_parts_supplier_cnt": q16_parts_supplier_cnt,
-    "q19_discounted_revenue": q19_discounted_revenue,
-    "q20_part_promotion": q20_part_promotion,
-    "q21_waiting_supplier": q21_waiting_supplier,
-}
-
-ORACLES = {
-    "q2_min_metric_supplier": Q2_SQL,
-    "q4_order_priority": Q4_SQL,
-    "q6_forecast_revenue": Q6_SQL,
-    "q7_volume_shipping": Q7_SQL,
-    "q8_market_share": Q8_SQL,
-    "q9_product_profit": Q9_SQL,
-    "q10_returned_items": Q10_SQL,
-    "q11_important_stock": Q11_SQL,
-    "q13_customer_distribution": Q13_SQL,
-    "q15_top_supplier": Q15_SQL,
-    "q16_parts_supplier_cnt": Q16_SQL,
-    "q19_discounted_revenue": Q19_SQL,
-    "q20_part_promotion": Q20_SQL,
-    "q21_waiting_supplier": Q21_SQL,
+    q2_min_metric_supplier: Q2_SQL,
+    q4_order_priority: Q4_SQL,
+    q6_forecast_revenue: Q6_SQL,
+    q7_volume_shipping: Q7_SQL,
+    q8_market_share: Q8_SQL,
+    q9_product_profit: Q9_SQL,
+    q10_returned_items: Q10_SQL,
+    q11_important_stock: Q11_SQL,
+    q13_customer_distribution: Q13_SQL,
+    q15_top_supplier: Q15_SQL,
+    q16_parts_supplier_cnt: Q16_SQL,
+    q19_discounted_revenue: Q19_SQL,
+    q20_part_promotion: Q20_SQL,
+    q21_waiting_supplier: Q21_SQL,
 }

@@ -932,43 +932,22 @@ FROM lineitem
 
 
 QUERIES = {
-    "q_variant_shred": q_variant_shred,
-    "q_python_datasource": q_python_datasource,
-    "q_python_datasource_writer": q_python_datasource_writer,
-    "q_ingest_quarantine": q_ingest_quarantine,
-    "q_nested_roundtrip": q_nested_roundtrip,
-    "q_dpp_prune": q_dpp_prune,
-    "q_text_lines_roundtrip": q_text_lines_roundtrip,
-    "q_binaryfile_scan": q_binaryfile_scan,
-    "q_partitioned_scan": q_partitioned_scan,
-    "q_schema_evolution": q_schema_evolution,
-    "q_csv_roundtrip": q_csv_roundtrip,
-    "q_json_roundtrip": q_json_roundtrip,
-    "q_jsonl_roundtrip": q_jsonl_roundtrip,
-    "q_orc_roundtrip": q_orc_roundtrip,
-    "q_xml_roundtrip": q_xml_roundtrip,
-    "q_bucketed_join": q_bucketed_join,
-    "q_bucketed_reuse": q_bucketed_reuse,
-    "q_bucketed_agg": q_bucketed_agg,
-}
-
-ORACLES = {
-    "q_variant_shred": Q_VARIANT_SQL,
-    "q_python_datasource": Q_PYDS_SQL,
-    "q_python_datasource_writer": PYDS_WRITER_SQL,
-    "q_ingest_quarantine": Q_QUARANTINE_SQL,
-    "q_nested_roundtrip": Q_NESTED_SQL,
-    "q_dpp_prune": Q_DPP_SQL,
-    "q_text_lines_roundtrip": Q_TEXT_LINES_SQL,
-    "q_binaryfile_scan": Q_BINARYFILE_SQL,
-    "q_partitioned_scan": Q_PARTITIONED_SQL,
-    "q_schema_evolution": Q_SCHEMA_EVO_SQL,
-    "q_csv_roundtrip": Q_CSV_ROUNDTRIP_SQL,
-    "q_json_roundtrip": Q_CSV_ROUNDTRIP_SQL,
-    "q_jsonl_roundtrip": Q_CSV_ROUNDTRIP_SQL,
-    "q_orc_roundtrip": Q_ORC_ROUNDTRIP_SQL,
-    "q_xml_roundtrip": Q_CSV_ROUNDTRIP_SQL,
-    "q_bucketed_join": Q_BUCKETED_JOIN_SQL,
-    "q_bucketed_reuse": Q_BUCKETED_REUSE_SQL,
-    "q_bucketed_agg": Q_BUCKETED_AGG_SQL,
+    q_variant_shred: Q_VARIANT_SQL,
+    q_python_datasource: Q_PYDS_SQL,
+    q_python_datasource_writer: PYDS_WRITER_SQL,
+    q_ingest_quarantine: Q_QUARANTINE_SQL,
+    q_nested_roundtrip: Q_NESTED_SQL,
+    q_dpp_prune: Q_DPP_SQL,
+    q_text_lines_roundtrip: Q_TEXT_LINES_SQL,
+    q_binaryfile_scan: Q_BINARYFILE_SQL,
+    q_partitioned_scan: Q_PARTITIONED_SQL,
+    q_schema_evolution: Q_SCHEMA_EVO_SQL,
+    q_csv_roundtrip: Q_CSV_ROUNDTRIP_SQL,
+    q_json_roundtrip: Q_CSV_ROUNDTRIP_SQL,
+    q_jsonl_roundtrip: Q_CSV_ROUNDTRIP_SQL,
+    q_orc_roundtrip: Q_ORC_ROUNDTRIP_SQL,
+    q_xml_roundtrip: Q_CSV_ROUNDTRIP_SQL,
+    q_bucketed_join: Q_BUCKETED_JOIN_SQL,
+    q_bucketed_reuse: Q_BUCKETED_REUSE_SQL,
+    q_bucketed_agg: Q_BUCKETED_AGG_SQL,
 }

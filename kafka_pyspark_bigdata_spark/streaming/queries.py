@@ -1180,28 +1180,6 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-QUERIES = {
-    "streaming_checkpoint_resume": streaming_checkpoint_resume,
-    "streaming_python_source": streaming_python_source,
-    "streaming_rocksdb_agg": streaming_rocksdb_agg,
-    "streaming_dedup_within_watermark": streaming_dedup_within_watermark,
-    "streaming_hll_windowed": streaming_hll_windowed,
-    "streaming_hourly_window": streaming_hourly_window,
-    "streaming_chained_windows": streaming_chained_windows,
-    "streaming_stream_outer_join": streaming_stream_outer_join,
-    "streaming_upsert_latest": streaming_upsert_latest,
-    "streaming_exactly_once_sink": streaming_exactly_once_sink,
-    "streaming_watermark_lates": streaming_watermark_lates,
-    "streaming_sliding_window": streaming_sliding_window,
-    "streaming_session_window": streaming_session_window,
-    "streaming_dedup_counts": streaming_dedup_counts,
-    "streaming_stream_join": streaming_stream_join,
-    "streaming_static_join": streaming_static_join,
-    "streaming_stateful_totals": streaming_stateful_totals,
-    "streaming_count_batcher": streaming_count_batcher,
-}
-
-
 def _tws_available() -> bool:
     """transformWithStateInPandas ships state over a protobuf channel;
     the API exists on every Spark 4 install but EXECUTES only where
@@ -1216,28 +1194,28 @@ def _tws_available() -> bool:
         return False
 
 
-if _tws_available():
-    QUERIES["streaming_tws_sessions"] = streaming_tws_sessions
-
-ORACLES = {
-    "streaming_checkpoint_resume": STREAMING_CKPT_RESUME_SQL,
-    "streaming_python_source": STREAMING_PYSRC_SQL,
-    "streaming_rocksdb_agg": STREAMING_ROCKSDB_SQL,
-    "streaming_dedup_within_watermark": STREAMING_WM_DEDUP_SQL,
-    "streaming_hll_windowed": STREAMING_HLL_WIN_SQL,
-    "streaming_hourly_window": STREAMING_HOURLY_SQL,
-    "streaming_chained_windows": STREAMING_CHAINED_SQL,
-    "streaming_stream_outer_join": STREAMING_OUTER_JOIN_SQL,
-    "streaming_upsert_latest": STREAMING_UPSERT_SQL,
-    "streaming_exactly_once_sink": STREAMING_EXACTLY_ONCE_SQL,
-    "streaming_watermark_lates": STREAMING_WM_SQL,
-    "streaming_sliding_window": STREAMING_SLIDING_SQL,
-    "streaming_session_window": STREAMING_SESSION_SQL,
-    "streaming_dedup_counts": STREAMING_DEDUP_SQL,
-    "streaming_stream_join": STREAMING_JOIN_SQL,
-    "streaming_static_join": STREAMING_STATIC_JOIN_SQL,
-    "streaming_stateful_totals": STREAMING_STATEFUL_SQL,
+QUERIES = {
+    streaming_checkpoint_resume: STREAMING_CKPT_RESUME_SQL,
+    streaming_python_source: STREAMING_PYSRC_SQL,
+    streaming_rocksdb_agg: STREAMING_ROCKSDB_SQL,
+    streaming_dedup_within_watermark: STREAMING_WM_DEDUP_SQL,
+    streaming_hll_windowed: STREAMING_HLL_WIN_SQL,
+    streaming_hourly_window: STREAMING_HOURLY_SQL,
+    streaming_chained_windows: STREAMING_CHAINED_SQL,
+    streaming_stream_outer_join: STREAMING_OUTER_JOIN_SQL,
+    streaming_upsert_latest: STREAMING_UPSERT_SQL,
+    streaming_exactly_once_sink: STREAMING_EXACTLY_ONCE_SQL,
+    streaming_watermark_lates: STREAMING_WM_SQL,
+    streaming_sliding_window: STREAMING_SLIDING_SQL,
+    streaming_session_window: STREAMING_SESSION_SQL,
+    streaming_dedup_counts: STREAMING_DEDUP_SQL,
+    streaming_stream_join: STREAMING_JOIN_SQL,
+    streaming_static_join: STREAMING_STATIC_JOIN_SQL,
+    streaming_stateful_totals: STREAMING_STATEFUL_SQL,
+    # Rows-only: count-triggered micro-batch boundaries are an execution
+    # artifact, not a relational result.
+    streaming_count_batcher: None,
 }
 
 if _tws_available():
-    ORACLES["streaming_tws_sessions"] = STREAMING_TWS_SQL
+    QUERIES[streaming_tws_sessions] = STREAMING_TWS_SQL

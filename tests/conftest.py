@@ -57,6 +57,23 @@ def assert_oracle_match(spark, duck, fn, sql, sf_dir=SF_SMOKE):
     return sdf
 
 
+def oracle_test(*mods):
+    """The sf0.001 oracle-match test over every query that ``mods``
+    register with oracle SQL, one case per query named after it. A test
+    module binds it once (``test_x_oracle = oracle_test(x)``), so the
+    cases follow each module's ``QUERIES`` and keep the module's test ids;
+    ``oracle_modules`` records ``mods`` for the registry guard that every
+    query module is bound somewhere."""
+    cases = [(fn, sql) for m in mods for fn, sql in m.QUERIES.items() if sql]
+
+    @pytest.mark.parametrize("fn,sql", cases, ids=[fn.__name__ for fn, _ in cases])
+    def test(spark, duck, fn, sql):
+        assert_oracle_match(spark, duck, fn, sql)
+
+    test.oracle_modules = mods
+    return test
+
+
 @contextlib.contextmanager
 def no_spark_job(spark, what: str):
     """Assert that the ``with`` block, on this thread, starts no Spark job:

@@ -3,16 +3,12 @@
 
 from __future__ import annotations
 
-import pytest
-
 from kafka_pyspark_bigdata_spark.plans import advanced
 
-from conftest import assert_oracle_match
+from conftest import oracle_test
 
 
-@pytest.mark.parametrize("name", sorted(advanced.QUERIES))
-def test_advanced_oracle(spark, duck, name):
-    assert_oracle_match(spark, duck, advanced.QUERIES[name], advanced.ORACLES[name])
+test_advanced_oracle = oracle_test(advanced)
 
 
 def test_asof_gap_nonnegative(spark):

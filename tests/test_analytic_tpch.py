@@ -3,20 +3,11 @@ extended TPC-H shapes at sf0.001 (same compare as the driver gate)."""
 
 from __future__ import annotations
 
-import pytest
-
 from kafka_pyspark_bigdata_spark.plans import analytic, tpch_extra
 
-from conftest import assert_oracle_match
+from conftest import oracle_test
 
-CASES = [(analytic, n) for n in sorted(analytic.QUERIES)] + [
-    (tpch_extra, n) for n in sorted(tpch_extra.QUERIES)
-]
-
-
-@pytest.mark.parametrize("mod,name", CASES, ids=[n for _, n in CASES])
-def test_plan_oracle(spark, duck, mod, name):
-    assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name])
+test_plan_oracle = oracle_test(analytic, tpch_extra)
 
 
 def test_quantiles_monotone_and_mad_bounds(spark):

@@ -3,18 +3,15 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from kafka_pyspark_bigdata_spark.plans import behavioral
 from kafka_pyspark_bigdata_spark.sources.batch import load_table
 
-from conftest import SF_SMOKE, assert_oracle_match
+from conftest import SF_SMOKE, oracle_test
 
 
-@pytest.mark.parametrize("name", sorted(behavioral.QUERIES))
-def test_behavioral_oracle(spark, duck, name):
-    assert_oracle_match(spark, duck, behavioral.QUERIES[name], behavioral.ORACLES[name])
+test_behavioral_oracle = oracle_test(behavioral)
 
 
 def test_funnel_monotone(spark):

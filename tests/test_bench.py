@@ -86,39 +86,44 @@ def test_bench_runs_clean_and_prints_one_json_line(tmp_path):
 
 
 def test_registry_has_no_cross_module_name_collisions():
-    """Two modules exporting the same query name would silently shadow
-    each other in __spark_entry__ (dict.update last-wins) — the oracle
-    could then verify a DIFFERENT plan than the one a module claims.
-    Guard: every QUERIES/ORACLES key is globally unique, every oracle
-    has a query, every _PRIORITY name resolves (except env-gated
-    entries that declare themselves optional), and every bench SENTINEL
-    and HEADLINE name resolves (the bench skips unregistered names, so a
-    stale one would silently shrink the timed set)."""
+    """Two modules registering callables with the same ``__name__`` would
+    silently shadow each other in __spark_entry__ (last one wins) — the
+    oracle could then verify a DIFFERENT plan than the one a module
+    claims. Guard: every registered name is globally unique, and every
+    hand-kept name list resolves: _PRIORITY (except env-gated entries),
+    the bench SENTINEL and HEADLINE (the bench skips unregistered names,
+    so a stale one would silently shrink the timed set) and the plan
+    audit's exception dicts (a stale exception would excuse nothing)."""
     import __spark_entry__ as em
     from collections import Counter
 
-    qn, on = Counter(), Counter()
-    for m in em._modules():
-        qn.update(getattr(m, "QUERIES", {}).keys())
-        on.update(getattr(m, "ORACLES", {}).keys())
-    assert not {k for k, v in qn.items() if v > 1}
-    assert not {k for k, v in on.items() if v > 1}
-    qs, os_ = em.queries(), em.oracle_sql()
-    assert set(os_) <= set(qs)
+    from tools.explain_audit import GWIN_EXCEPTIONS, NLJOIN_EXCEPTIONS
+
+    names = Counter(fn.__name__ for m in em._modules() for fn in m.QUERIES)
+    assert not {k for k, v in names.items() if v > 1}
+    qs = em.queries()
     env_gated = {"streaming_tws_sessions"}
     assert set(em._PRIORITY) - set(qs) <= env_gated
     assert not set(bench.SENTINEL + bench.HEADLINE) - set(qs)
+    assert not (set(GWIN_EXCEPTIONS) | set(NLJOIN_EXCEPTIONS)) - set(qs)
 
 
-def test_rows_only_list_matches_oracle_gap_exactly():
-    """ROWS_ONLY documents the oracle-less entries for the driver record;
-    it must equal queries() minus oracle_sql() EXACTLY — a new oracle-less
-    query must be consciously added here (or given an oracle), never
-    silently recorded as `no_oracle`."""
+def test_every_query_module_has_an_oracle_test():
+    """The sf0.001 oracle-match cases come from ``conftest.oracle_test``,
+    bound once per test module: a query module that no test module binds
+    would have its oracles checked by no test."""
+    import importlib
+    import pathlib
+
     import __spark_entry__ as em
 
-    gap = set(em.queries()) - set(em.oracle_sql())
-    assert gap == set(em.ROWS_ONLY), gap ^ set(em.ROWS_ONLY)
+    bound = {
+        m
+        for path in pathlib.Path(__file__).parent.glob("test_*.py")
+        for obj in vars(importlib.import_module(path.stem)).values()
+        for m in getattr(obj, "oracle_modules", ())
+    }
+    assert not set(em._modules()) - bound
 
 
 def test_registry_import_failure_raises(monkeypatch):

@@ -3,19 +3,16 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kafka_pyspark_bigdata_spark.plans import lakehouse
 from kafka_pyspark_bigdata_spark.sources.batch import load_table
 
-from conftest import SF_SMOKE, assert_oracle_match
+from conftest import SF_SMOKE, oracle_test
 
 
-@pytest.mark.parametrize("name", sorted(lakehouse.QUERIES))
-def test_lakehouse_oracle(spark, duck, name):
-    assert_oracle_match(spark, duck, lakehouse.QUERIES[name], lakehouse.ORACLES[name])
+test_lakehouse_oracle = oracle_test(lakehouse)
 
 
 def test_scd2_intervals_tile_history(spark):

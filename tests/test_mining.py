@@ -4,18 +4,15 @@ median, forward as-of, column profiling)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from kafka_pyspark_bigdata_spark.plans import mining
 from kafka_pyspark_bigdata_spark.sources.batch import load_table
 
-from conftest import SF_SMOKE, assert_oracle_match
+from conftest import SF_SMOKE, oracle_test
 
 
-@pytest.mark.parametrize("name", sorted(mining.QUERIES))
-def test_mining_oracle(spark, duck, name):
-    assert_oracle_match(spark, duck, mining.QUERIES[name], mining.ORACLES[name])
+test_mining_oracle = oracle_test(mining)
 
 
 def test_basket_pair_invariants(spark):

@@ -7,7 +7,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from kafka_pyspark_bigdata_spark.ml import serving, trainer
+from kafka_pyspark_bigdata_spark.ml import queries, serving, trainer
+
+from conftest import oracle_test
+
+test_ml_oracle = oracle_test(queries)
 
 
 @pytest.fixture(scope="module")
@@ -343,20 +347,14 @@ def test_quality_classifier_beats_chance(spark):
     assert 0.6 < r.auc <= 1.0
 
 
-def test_target_encoding_oracle_and_leakage(spark, duck):
-    """Out-of-fold encoding: hash-exact vs the SQL oracle, and the
-    leakage invariant — no (category, fold) cell's encoding uses its own
+def test_target_encoding_oracle_and_leakage(spark):
+    """Out-of-fold encoding (value-exact vs the SQL oracle in
+    test_ml_oracle): no (category, fold) cell's encoding uses its own
     fold (verified by recomputing the leave-fold-out mean directly)."""
-    from conftest import SF_SMOKE, assert_oracle_match
-    from kafka_pyspark_bigdata_spark.ml.queries import (
-        ML_TARGET_ENC_SQL,
-        TE_FOLDS,
-        ml_target_encoding,
-    )
+    from conftest import SF_SMOKE
+    from kafka_pyspark_bigdata_spark.ml.queries import TE_FOLDS, ml_target_encoding
     from kafka_pyspark_bigdata_spark.sources.batch import load_table
     from pyspark.sql import functions as F
-
-    assert_oracle_match(spark, duck, ml_target_encoding, ML_TARGET_ENC_SQL)
 
     rows = ml_target_encoding(spark, SF_SMOKE).collect()
     o = (

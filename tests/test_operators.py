@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 
 from kafka_pyspark_bigdata_spark.operators import (
@@ -15,25 +17,20 @@ from kafka_pyspark_bigdata_spark.operators import (
     timeseries,
 )
 
-from conftest import SF_SMOKE, assert_oracle_match, edge_table
+import __spark_entry__ as entry
+
+from conftest import SF_SMOKE, assert_oracle_match, edge_table, oracle_test
 
 DOCUMENTS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
 
-MODULES = [text, dedup, similarity, multimodal, geo, timeseries]
-CASES = [(m, name) for m in MODULES for name in sorted(m.QUERIES)]
+test_operator_oracle = oracle_test(text, dedup, similarity, multimodal, geo, timeseries)
+
+# the registry by name, for the edge-corpus tests below
+QUERY_FN, ORACLE_SQL = entry.queries(), entry.oracle_sql()
 
 
-@pytest.mark.parametrize(
-    "mod,name", CASES, ids=[name for _, name in CASES]
-)
-def test_operator_oracle(spark, duck, mod, name):
-    if name not in mod.ORACLES:
-        # rows-only contract (e.g. ann_topk_gemm: BLAS summation order) —
-        # smoke the plan end to end; value parity has its own test
-        rows = mod.QUERIES[name](spark, "/root/testdata/sf0.001").collect()
-        assert rows is not None
-        return
-    assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name])
+def oracle_names(*mods):
+    return [fn.__name__ for m in mods for fn, sql in m.QUERIES.items() if sql]
 
 
 def test_ngram_jaccard_finds_planted_dups(spark):
@@ -994,9 +991,7 @@ def test_empty_candidate_set_matches_oracle(spark, tmp_path, name):
         [(i, t, "en", "s0", len(t)) for i, t in enumerate(texts)],
         DOCUMENTS_DDL,
     )
-    sdf = assert_oracle_match(
-        spark, duck, dedup.QUERIES[name], dedup.ORACLES[name], sf_dir=d
-    )
+    sdf = assert_oracle_match(spark, duck, QUERY_FN[name], ORACLE_SQL[name], sf_dir=d)
     if name == "dedup_lsh_tuning_curve":
         assert sdf.n_candidates.tolist() == [0, 0, 0]
         assert sdf.n_verified.tolist() == [0, 0, 0]
@@ -1009,9 +1004,7 @@ def test_empty_candidate_set_matches_oracle(spark, tmp_path, name):
 DEGENERATE_TEXTS = ["", "   ", "x", "a", "The the THE"]
 
 
-DEGENERATE_CASES = [
-    (m, name) for m in (text, quality, pipeline) for name in m.ORACLES
-] + [(dedup, "text_boilerplate_spans")]
+DEGENERATE_CASES = oracle_names(text, quality, pipeline) + ["text_boilerplate_spans"]
 
 
 @pytest.fixture(scope="module")
@@ -1029,16 +1022,14 @@ def degenerate_corpus(spark, tmp_path_factory):
     return d, edge_table(spark, d, "documents", rows, DOCUMENTS_DDL)
 
 
-@pytest.mark.parametrize(
-    "mod,name", DEGENERATE_CASES, ids=[name for _, name in DEGENERATE_CASES]
-)
-def test_degenerate_corpus_matches_oracle(spark, degenerate_corpus, mod, name):
+@pytest.mark.parametrize("name", DEGENERATE_CASES)
+def test_degenerate_corpus_matches_oracle(spark, degenerate_corpus, name):
     """Every corpus-text query agrees with its oracle when documents have
     zero, one or only stopword tokens: a per-token ratio over zero tokens
     is NULL, the token-length sum of no tokens is NULL, and shingling a
     document shorter than a shingle raises nothing."""
     d, duck = degenerate_corpus
-    assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name], sf_dir=d)
+    assert_oracle_match(spark, duck, QUERY_FN[name], ORACLE_SQL[name], sf_dir=d)
 
 
 @pytest.mark.parametrize(
@@ -1059,54 +1050,65 @@ def test_zero_token_group_matches_oracle(spark, tmp_path, name):
         [(i, t, lang, src, len(t)) for i, t, lang, src in rows],
         DOCUMENTS_DDL,
     )
-    mod = text if name in text.QUERIES else pipeline
-    assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name], sf_dir=d)
+    assert_oracle_match(spark, duck, QUERY_FN[name], ORACLE_SQL[name], sf_dir=d)
+
+
+def written_corpora(spark, tmp_path_factory, table, corpora, ddl):
+    """corpus name -> (sf_dir, DuckDB connection) of an edge fixture whose
+    ``table`` holds ``corpora[name]`` (Spark DDL ``ddl``), written once."""
+
+    @functools.cache
+    def get(name):
+        d = str(tmp_path_factory.mktemp(name))
+        return d, edge_table(spark, d, table, corpora[name], ddl)
+
+    return get
 
 
 # Edge embedding corpora built from sf0.001's first 40 vectors: one
 # all-zero vector appended (a failed encode), the first vector alone, and
 # three exact copies of vector 0 appended (cosine ties at 1.0). No fixture
-# has a zero vector or fewer than TOP_K + 1 rows.
+# has a zero vector or fewer than TOP_K + 1 rows. The IVF queries also run
+# with centroid 12 (not a query) zeroed: every similarity to it is NULL.
 EDGE_EMBEDDINGS = ["zero_vector", "one_row", "duplicates"]
+IVF_QUERIES = [n for n in oracle_names(similarity) if n.startswith("ann_ivf")]
 
-EMBEDDING_CASES = [(similarity, name) for name in similarity.ORACLES] + [
-    (dedup, "dedup_embedding_cosine")
-]
+EMBEDDING_CASES = [
+    (name, corpus)
+    for corpus in EDGE_EMBEDDINGS
+    for name in oracle_names(similarity) + ["dedup_embedding_cosine"]
+] + [(name, "zero_centroid") for name in IVF_QUERIES]
 
 
 @pytest.fixture(scope="module")
-def edge_embeddings(spark, tmp_path_factory, request):
-    """(sf_dir, DuckDB connection) of the edge corpus ``request.param``."""
+def edge_embeddings(spark, tmp_path_factory):
     head = [
         tuple(r)
         for r in spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
         .orderBy("vec_id").limit(40).collect()
     ]
     _, vec0, label0 = head[0]
-    rows = {
-        "zero_vector": head + [(40, [0.0] * similarity.EMB_DIM, label0)],
+    zero = [0.0] * similarity.EMB_DIM
+    corpora = {
+        "zero_vector": head + [(40, zero, label0)],
         "one_row": head[:1],
         "duplicates": head + [(40 + i, vec0, label0) for i in range(3)],
-    }[request.param]
-    d = str(tmp_path_factory.mktemp(request.param))
-    duck = edge_table(
-        spark, d, "embeddings", rows, "vec_id long, embedding array<float>, label int"
-    )
-    return d, duck
+        "zero_centroid": [(i, zero if i == 12 else v, lab) for i, v, lab in head],
+    }
+    ddl = "vec_id long, embedding array<float>, label int"
+    return written_corpora(spark, tmp_path_factory, "embeddings", corpora, ddl)
 
 
-@pytest.mark.parametrize("edge_embeddings", EDGE_EMBEDDINGS, indirect=True)
-@pytest.mark.parametrize(
-    "mod,name", EMBEDDING_CASES, ids=[name for _, name in EMBEDDING_CASES]
-)
-def test_degenerate_embeddings_match_oracle(spark, edge_embeddings, mod, name):
+@pytest.mark.parametrize("name,corpus", EMBEDDING_CASES)
+def test_degenerate_embeddings_match_oracle(spark, edge_embeddings, name, corpus):
     """Every embedding query agrees with its oracle on a zero vector, a
-    one-row table and exact duplicates: a cosine, unit vector or ratio
-    over a zero norm or an empty pair set is NULL, as DuckDB's ``x / 0``
-    is; NULL scores rank last; equal scores resolve toward the smaller
-    id; and no query pairs a vector with itself."""
-    d, duck = edge_embeddings
-    assert_oracle_match(spark, duck, mod.QUERIES[name], mod.ORACLES[name], sf_dir=d)
+    one-row table and exact duplicates, and every IVF query on a zero
+    centroid: a cosine, unit vector or ratio over a zero norm or an empty
+    pair set is NULL, as DuckDB's ``x / 0`` is; NULL scores rank last;
+    equal scores resolve toward the smaller id; and no query pairs a
+    vector with itself."""
+    d, duck = edge_embeddings(corpus)
+    assert_oracle_match(spark, duck, QUERY_FN[name], ORACLE_SQL[name], sf_dir=d)
 
 
 # Edge events corpora cut from sf0.001 (1,000 events over 30 days): the
@@ -1117,39 +1119,55 @@ EVENTS_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string,"
     " value double, props string"
 )
-# every time-series query but ts_trend_forecast, which reads TPC-H tables
-EVENTS_TS = [name for name in timeseries.ORACLES if name != "ts_trend_forecast"]
+# Every time-series query but ts_trend_forecast, which reads TPC-H tables,
+# runs on every corpus. The queries that divide by an event count run on
+# the corpora where that count is zero: no event after mid-month
+# (histogram drift), nobody at a funnel stage, one event in a type
+# (z-score's n - 1) and one user, so one empty A/B arm.
+EVENTS_CASES = [
+    (name, corpus)
+    for corpus in EDGE_EVENTS
+    for name in oracle_names(timeseries)
+    if name != "ts_trend_forecast"
+] + [
+    ("q_histogram_drift", "first_200"),
+    ("q_histogram_drift", "one_day"),
+    ("q_histogram_drift", "one_row"),
+    ("q_funnel_windowed", "one_row"),
+    ("q_funnel_windowed", "empty"),
+    ("q_zscore_outliers", "one_row"),
+    ("q_ab_test_conversion", "one_row"),
+]
 
 
 @pytest.fixture(scope="module")
-def edge_events(spark, tmp_path_factory, request):
-    """(sf_dir, DuckDB connection) of the edge corpus ``request.param``."""
+def edge_events(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from kafka_pyspark_bigdata_spark.sources.batch import load_table
 
     ev = load_table(spark, SF_SMOKE, "events").orderBy("ts", "event_id")
     rows = ev.withColumn("day", F.to_date("ts")).collect()
-    rows = {
+    corpora = {
         "first_200": rows[:200],
         "one_day": [r for r in rows if r.day == rows[0].day],
         "one_row": rows[:1],
         "empty": [],
-    }[request.param]
-    d = str(tmp_path_factory.mktemp(request.param))
-    return d, edge_table(spark, d, "events", [tuple(r)[:-1] for r in rows], EVENTS_DDL)
+    }
+    corpora = {k: [tuple(r)[:-1] for r in v] for k, v in corpora.items()}
+    return written_corpora(spark, tmp_path_factory, "events", corpora, EVENTS_DDL)
 
 
-@pytest.mark.parametrize("edge_events", EDGE_EVENTS, indirect=True)
-@pytest.mark.parametrize("name", EVENTS_TS)
-def test_degenerate_timeseries_match_oracle(spark, edge_events, name):
+@pytest.mark.parametrize("name,corpus", EVENTS_CASES)
+def test_degenerate_timeseries_match_oracle(spark, edge_events, name, corpus):
     """Every events time-series query agrees with its oracle on a series
     shorter than its lag, one day, one event and none: a lag-L statistic
     over n ≤ L days is NULL with n − L overlap days, a correlation over
-    an overlap with no variance is NULL, and nothing raises."""
-    d, duck = edge_events
-    fn, sql = timeseries.QUERIES[name], timeseries.ORACLES[name]
-    assert_oracle_match(spark, duck, fn, sql, sf_dir=d)
+    an overlap with no variance is NULL, and nothing raises. So do the
+    events queries whose divisor (an event count, or a variance) is zero
+    there: the ratio is NULL, as DuckDB's ``x // 0`` is."""
+    d, duck = edge_events(corpus)
+    assert_oracle_match(spark, duck, QUERY_FN[name], ORACLE_SQL[name], sf_dir=d)
 
 
 def test_lsh_candidate_family_agrees_with_itself(spark):

@@ -3,7 +3,6 @@ the pure-Python serving coercion."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -11,14 +10,12 @@ from pyspark.sql import functions as F
 from kafka_pyspark_bigdata_spark.ml.serving import coerce_features
 from kafka_pyspark_bigdata_spark.operators import pipeline
 
-from conftest import assert_oracle_match
+from conftest import oracle_test
 
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.mark.parametrize("name", sorted(pipeline.ORACLES))
-def test_pipeline_oracle(spark, duck, name):
-    assert_oracle_match(spark, duck, pipeline.QUERIES[name], pipeline.ORACLES[name])
+test_pipeline_oracle = oracle_test(pipeline)
 
 
 def test_token_budget_partitions_budget(spark):

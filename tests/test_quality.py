@@ -3,16 +3,12 @@
 
 from __future__ import annotations
 
-import pytest
-
 from kafka_pyspark_bigdata_spark.operators import quality
 
-from conftest import SF_SMOKE, assert_oracle_match
+from conftest import SF_SMOKE, oracle_test
 
 
-@pytest.mark.parametrize("name", sorted(quality.QUERIES))
-def test_quality_oracle(spark, duck, name):
-    assert_oracle_match(spark, duck, quality.QUERIES[name], quality.ORACLES[name])
+test_quality_oracle = oracle_test(quality)
 
 
 def test_repetition_bounds(spark):

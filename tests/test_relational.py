@@ -3,18 +3,12 @@ gate the driver runs at sf0.01)."""
 
 from __future__ import annotations
 
-import pytest
-
 from kafka_pyspark_bigdata_spark.plans import relational
 
-from conftest import assert_oracle_match
+from conftest import oracle_test
 
 
-@pytest.mark.parametrize("name", sorted(relational.QUERIES))
-def test_relational_oracle(spark, duck, name):
-    assert_oracle_match(
-        spark, duck, relational.QUERIES[name], relational.ORACLES[name]
-    )
+test_relational_oracle = oracle_test(relational)
 
 
 def test_entry_smoke(spark):

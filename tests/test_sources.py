@@ -2,16 +2,12 @@
 
 from __future__ import annotations
 
-import pytest
-
 from kafka_pyspark_bigdata_spark.sources import queries as src
 
-from conftest import assert_oracle_match
+from conftest import oracle_test
 
 
-@pytest.mark.parametrize("name", sorted(src.QUERIES))
-def test_source_oracle(spark, duck, name):
-    assert_oracle_match(spark, duck, src.QUERIES[name], src.ORACLES[name])
+test_source_oracle = oracle_test(src)
 
 
 def test_binaryfile_scan_is_bounded_and_declarative(spark):

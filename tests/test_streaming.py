@@ -15,14 +15,17 @@ from pyspark.sql.types import (
 )
 
 from kafka_pyspark_bigdata_spark.sources.batch import load_table
+from kafka_pyspark_bigdata_spark.streaming import queries as sq
 from kafka_pyspark_bigdata_spark.streaming import windows
 from kafka_pyspark_bigdata_spark.streaming.batcher import run_count_batched_stream
 from kafka_pyspark_bigdata_spark.streaming.kafka import decode_json_stream, encode_json
 from kafka_pyspark_bigdata_spark.streaming.queries import _events_stream
 
-from conftest import no_spark_job
+from conftest import no_spark_job, oracle_test
 
 SF = "/root/testdata/sf0.001"
+
+test_streaming_oracle = oracle_test(sq)
 
 
 def test_count_batcher_exact_sizes_and_cap(spark, tmp_path):
@@ -308,33 +311,11 @@ def test_watermark_lates_drop_and_retention(spark):
     out.unpersist()
 
 
-def test_tws_sessions_oracle_or_env_skip(spark, duck):
-    """transformWithStateInPandas session counter vs the batch
-    sessionization oracle — runnable only where google.protobuf exists
-    (the v2 state channel's transport); skipped, not failed, elsewhere."""
-    from kafka_pyspark_bigdata_spark.streaming import queries as sq
-
-    if not sq._tws_available():
-        pytest.skip("google.protobuf unavailable: transformWithState cannot execute")
-    from conftest import assert_oracle_match
-
-    assert_oracle_match(
-        spark, duck, sq.streaming_tws_sessions, sq.STREAMING_TWS_SQL
-    )
-
-
-def test_chained_windows_oracle_and_cascade_invariants(spark, duck):
-    """Two chained stateful aggregations in one query: value-exact vs the
-    batch cascade oracle, plus the cascade contracts — every emitted hour
+def test_chained_windows_oracle_and_cascade_invariants(spark):
+    """Two chained stateful aggregations in one query (value-exact vs the
+    batch cascade oracle in test_streaming_oracle): every emitted hour
     has 1..4 15-minute blocks, the peak block never exceeds the hour
     total, and block counts sum consistently."""
-    from conftest import assert_oracle_match
-
-    from kafka_pyspark_bigdata_spark.streaming import queries as sq
-
-    assert_oracle_match(
-        spark, duck, sq.streaming_chained_windows, sq.STREAMING_CHAINED_SQL
-    )
     rows = sq.streaming_chained_windows(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) > 0
     for r in rows:
@@ -343,17 +324,11 @@ def test_chained_windows_oracle_and_cascade_invariants(spark, duck):
         assert r.n_events >= r.n_blocks  # every block holds ≥1 event
 
 
-def test_outer_join_supersets_inner_with_expired_nulls(spark, duck):
-    """Left-outer stream join: value-exact vs the watermark-emission
-    oracle; its matched subset equals the inner join exactly, and every
-    NULL row's click window fully precedes the final watermark."""
-    from conftest import assert_oracle_match
-
-    from kafka_pyspark_bigdata_spark.streaming import queries as sq
-
-    assert_oracle_match(
-        spark, duck, sq.streaming_stream_outer_join, sq.STREAMING_OUTER_JOIN_SQL
-    )
+def test_outer_join_supersets_inner_with_expired_nulls(spark):
+    """Left-outer stream join (value-exact vs the watermark-emission oracle
+    in test_streaming_oracle): its matched subset equals the inner join
+    exactly, and every NULL row's click window fully precedes the final
+    watermark."""
     sf = "/root/testdata/sf0.001"
     outer = sq.streaming_stream_outer_join(spark, sf).collect()
     inner = {
