@@ -3594,10 +3594,11 @@ def ann_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
             e_norm = _fold_norms(e_mat)
             # GEMM for candidate SELECTION only (K+slack by approximate
             # key), one slot more for the query's own row, dropped below.
+            # A zero vector's cosine is 0/0 = NaN: a NULL score, which
+            # selects and ranks last, then by id, as the oracle orders it.
             cos = (e_mat @ q_mat.T) / (e_norm[:, None] * q_norm[None, :])
-            sel_key = np.rint(cos * 1_000_000).astype(np.int64) * (
-                1 << 40
-            ) - ids[:, None]
+            ppm = np.nan_to_num(np.rint(cos * 1_000_000), nan=-2_000_000)
+            sel_key = ppm.astype(np.int64) * (1 << 40) - ids[:, None]
             k = min(TOP_K + GEMM_SELECT_SLACK + 1, sel_key.shape[0])
             top = np.argpartition(-sel_key, kth=k - 1, axis=0)[:k, :]
             # EXACT rescore of survivors: oracle's sequential fold +
@@ -3605,13 +3606,13 @@ def ann_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot = _fold_dot_pairs(e_mat, q_mat, top)
             score_ppm = _round_half_away(
                 dot / (e_norm[top] * q_norm[None, :]) * 1_000_000
-            ).astype(np.int64)
+            )
             other = (ids[top] != qids[None, :]).ravel()
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(qids[None, :], k, axis=0).ravel()[other],
                     "neighbor_id": ids[top].ravel()[other],
-                    "score_ppm": score_ppm.ravel()[other],
+                    "score_ppm": pd.array(score_ppm.ravel()[other], dtype="Int64"),
                 }
             )
 

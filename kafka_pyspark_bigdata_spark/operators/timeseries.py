@@ -409,13 +409,16 @@ FROM prof ORDER BY user_id
 TS_MATRIX_PROFILE_SQL = _matrix_profile_sql()
 
 
-TS_AC_LAGS = (1, 2, 3, 7)  # lag-7 = weekly periodicity on a daily series
+TS_AC_LAGS = (1, 2, 3, 7)  # lags in observed days of the series
 
 
 def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user lag autocorrelation of the daily activity series — the
-    periodicity detector (lag-7 on daily data = weekly habit strength)
-    that decides which series get seasonal models downstream.
+    periodicity detector that decides which series get seasonal models
+    downstream. A lag counts observed days, the days of the series grid
+    (``_dense_daily``): a calendar day with no event anywhere in the
+    corpus is not in the grid, so lag 7 is a week only where every day
+    has an event.
 
     Exactness: with S = Σx and n fixed, r_L = Σ(n·xᵢ−S)(n·xᵢ₊L−S) /
     Σ(n·xᵢ−S)² — numerator and denominator are EXACT bigints (cent

@@ -95,6 +95,15 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 PRUNE_MONTH = "2024-01"
 
 
+def _day_partitioned(ev: DataFrame, out: str) -> DataFrame:
+    """Write ``ev`` to ``out`` partitioned by its ``ts`` day
+    (``event_date=yyyy-MM-dd`` directories) and read it back with the
+    written schema: a write with no rows leaves no file to infer one from."""
+    part = ev.withColumn("event_date", F.to_date("ts"))
+    part.write.mode("overwrite").partitionBy("event_date").parquet(out)
+    return ev.sparkSession.read.schema(part.schema).parquet(out)
+
+
 def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned write + partition-pruned read: events land
     partitioned by (event_date=...) directories, then a single-day
@@ -108,13 +117,9 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "event_type", "value"
     )
     out = os.path.join(scratch_dir("part_scan", sf_dir), "events_part")
-    (
-        ev.withColumn("event_date", F.date_format("ts", "yyyy-MM-dd"))
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(out)
+    back = _day_partitioned(ev, out).filter(
+        F.col("event_date") == f"{PRUNE_MONTH}-15"
     )
-    back = spark.read.parquet(out).filter(F.col("event_date") == f"{PRUNE_MONTH}-15")
     return (
         back.groupBy(F.hour("ts").alias("hour"))
         .agg(F.count(F.lit(1)).alias("n_rows"), dsum("value").alias("sum_value"))
@@ -525,13 +530,7 @@ def q_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "event_type", "value"
     )
     out = os.path.join(scratch_dir("dpp_prune", sf_dir), "events_part")
-    (
-        ev.withColumn("event_date", F.date_format("ts", "yyyy-MM-dd"))
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(out)
-    )
-    fact = spark.read.parquet(out)
+    fact = _day_partitioned(ev, out)
     dim = (
         ev.filter(
             (F.col("event_type") == "purchase") & (F.col("value") > DPP_MIN_VALUE)

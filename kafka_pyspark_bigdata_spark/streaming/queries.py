@@ -5,39 +5,85 @@
 1-hour window over a bounded replay is semantically identical to the batch
 hourly rollup, so the DuckDB comparison validates the streaming plan's
 values, not just its row count.
+
+Each rule the queries share has one home:
+
+- ``_run`` runs a configured stream writer to completion (``availableNow``
+  trigger, then wait); ``_run_to_memory`` runs a stream into a fresh
+  memory table through it and returns that table.
+- ``_replay`` writes a frame as N single-file parts with increasing
+  mtimes and returns the ``maxFilesPerTrigger=1`` stream over them. The
+  file source takes files in mtime order, one per trigger, and a part
+  with no rows still lands one file, so N parts always replay as N
+  micro-batches, in order, whatever the input holds. That is what lets
+  ``streaming_exactly_once_sink`` crash at batch 2 on one event or none.
+- ``windows._totals`` is the count + exact ``value`` sum every rollup
+  emits; ``windows._ts`` and ``windows._bounds`` format window bounds.
+- ``_click_purchase_join`` builds the watermarked click and purchase
+  streams and their interval condition for the inner and outer joins.
+- ``stateful.STREAM_SESSION_GAP_MIN`` is the session gap of the session
+  window, the transformWithState counter and their oracles.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
-from ..functions.numeric import dsum, dsum_sql
+from ..functions.numeric import dsum_sql
 from ..sources.batch import (
     EV_US, app_memo, load_table, read_events, scratch_dir, table_path,
 )
 from .batcher import run_count_batched_stream
-from .windows import session_agg, sliding_agg, tumbling_agg
+from .stateful import STREAM_SESSION_GAP_MIN, running_user_totals, session_counts
+from .windows import _bounds, _totals, _ts, session_agg, sliding_agg, tumbling_agg
 
 BATCH_SIZE = 2000
 MAX_BATCHES = 3
 
 
-def _run_to_memory(agg, name_prefix: str, output_mode: str = "complete"):
+def _run(writer: DataStreamWriter) -> None:
+    """Run ``writer``'s stream over all its source holds now, then stop;
+    an exception a batch raises surfaces here."""
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def _run_to_memory(
+    agg: DataFrame, name_prefix: str, output_mode: str = "complete"
+) -> DataFrame:
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    _run(agg.writeStream.format("memory").queryName(name).outputMode(output_mode))
+    return agg.sparkSession.table(name)
+
+
+def _replay(
+    frame: DataFrame, src: str, parts: list[Column], first: int = 0
+) -> DataFrame:
+    """Write ``frame.filter(p)`` for each ``p`` in ``parts`` as one parquet
+    file in ``src``, the i-th (counting from ``first``) with mtime
+    1e9 + 100·i s, and return the ``maxFilesPerTrigger=1`` stream over
+    ``src``: one micro-batch per file, in mtime order."""
+    os.makedirs(src, exist_ok=True)
+    for i, part in enumerate(parts, first):
+        tmp = f"{src}_tmp{i}"
+        frame.filter(part).coalesce(1).write.parquet(tmp)
+        name = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet"))
+        dst = os.path.join(src, f"part{i}.parquet")
+        shutil.move(os.path.join(tmp, name), dst)
+        os.utime(dst, (1_000_000_000 + 100 * i,) * 2)
+        shutil.rmtree(tmp)
+    return (
+        frame.sparkSession.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
     )
-    q.awaitTermination()
-    return name
 
 
 # Raw (nanos-as-long) events schema, memoized by app_memo on the events
@@ -69,8 +115,7 @@ def streaming_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed in a memory sink — value-identical to the batch rollup."""
     stream = _events_stream(spark, sf_dir)
     agg = tumbling_agg(stream, ts_col="ts", width="1 hour")
-    name = _run_to_memory(agg, "hourly")
-    return spark.table(name).orderBy("window_start")
+    return _run_to_memory(agg, "hourly").orderBy("window_start")
 
 
 STREAMING_HOURLY_SQL = f"""
@@ -87,8 +132,7 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     state machine on a bounded replay."""
     stream = _events_stream(spark, sf_dir)
     agg = sliding_agg(stream, ts_col="ts", width="2 hours", slide="1 hour")
-    name = _run_to_memory(agg, "sliding")
-    return spark.table(name).orderBy("window_start")
+    return _run_to_memory(agg, "sliding").orderBy("window_start")
 
 
 STREAMING_SLIDING_SQL = f"""
@@ -106,9 +150,6 @@ FROM expanded GROUP BY ws ORDER BY window_start
 """
 
 
-STREAM_SESSION_GAP_MIN = 30
-
-
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows closed by a 30-minute idle gap — the
     dynamic-window stateful operator (`session_window`). The oracle
@@ -119,8 +160,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = session_agg(
         stream, ts_col="ts", gap=f"{STREAM_SESSION_GAP_MIN} minutes", key="user_id"
     )
-    name = _run_to_memory(agg, "session")
-    return spark.table(name).orderBy("user_id", "session_start")
+    return _run_to_memory(agg, "session").orderBy("user_id", "session_start")
 
 
 STREAMING_SESSION_SQL = f"""
@@ -163,8 +203,7 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_distinct_users"))
     )
-    name = _run_to_memory(agg, "dedup")
-    return spark.table(name).orderBy("event_type")
+    return _run_to_memory(agg, "dedup").orderBy("event_type")
 
 
 STREAMING_DEDUP_SQL = """
@@ -176,6 +215,35 @@ FROM events GROUP BY event_type ORDER BY event_type
 STREAM_JOIN_WINDOW_MIN = 30
 
 
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Each click joined (``how``) to the same user's purchases at most
+    STREAM_JOIN_WINDOW_MIN after it, both sides watermarked replays of
+    events, run to a memory sink in append mode."""
+
+    def side(kind: str, p: str) -> DataFrame:
+        return (
+            _events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == kind)
+            .select(
+                F.col("event_id").alias(f"{kind}_id"),
+                F.col("user_id").alias(f"{p}_user"),
+                F.col("ts").alias(f"{p}_ts"),
+            )
+            .withWatermark(f"{p}_ts", "1 hour")
+        )
+
+    window = F.expr(f"INTERVAL {STREAM_JOIN_WINDOW_MIN} MINUTES")
+    joined = side("click", "c").join(
+        side("purchase", "p"),
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + window),
+        how,
+    ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
+    joined = _run_to_memory(joined, f"ss_{how}", output_mode="append")
+    return joined.orderBy("click_id", "purchase_id")
+
+
 def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join: purchases within 30 minutes AFTER a click
     by the same user — two independent streaming sources joined on the
@@ -183,37 +251,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join state (each side holds only 1h of events at steady state); on a
     bounded availableNow replay the emitted matches equal the batch join,
     which is exactly what the oracle runs."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (
-            F.col("p_ts")
-            <= F.col("c_ts") + F.expr(f"INTERVAL {STREAM_JOIN_WINDOW_MIN} MINUTES")
-        ),
-    ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-    name = _run_to_memory(joined, "ssjoin", output_mode="append")
-    return spark.table(name).orderBy("click_id", "purchase_id")
+    return _click_purchase_join(spark, sf_dir, "inner")
 
 
 STREAMING_JOIN_SQL = f"""
@@ -241,8 +279,6 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The streamed aggregate per (profile cohort, event_type) is bounded
     and batch-equivalent on an availableNow replay, which is exactly
     what the oracle computes."""
-    from ..sources.batch import load_table
-
     ev_batch = load_table(spark, sf_dir, "events")
     profile = ev_batch.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("first_d"),
@@ -254,8 +290,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("is_heavy", "event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    name = _run_to_memory(agg, "ssjoin_static")
-    return spark.table(name).orderBy("is_heavy", "event_type")
+    return _run_to_memory(agg, "ssjoin_static").orderBy("is_heavy", "event_type")
 
 
 STREAMING_STATIC_JOIN_SQL = """
@@ -275,13 +310,10 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     maximal (monotonically growing) event count — selected with ``max_by``
     — and must equal the batch aggregate the oracle computes, however the
     replay was split into batches."""
-    from .stateful import running_user_totals
-
     stream = _events_stream(spark, sf_dir)
-    name = _run_to_memory(
+    updates = _run_to_memory(
         running_user_totals(stream), "stateful", output_mode="update"
     )
-    updates = spark.table(name)
     return (
         updates.groupBy("user_id")
         .agg(
@@ -311,36 +343,13 @@ def streaming_tws_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     state survives between batches. The oracle is the batch
     sessionization (lag → 30-min-gap flags → sum) per user, so the
     streaming state machine's final answer gets a full value check."""
-    import shutil
-
-    from ..sources.batch import load_table
-    from .stateful import session_counts
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
     )
     mid = F.unix_micros(F.lit(TWS_SPLIT_TS).cast("timestamp"))
-    root = scratch_dir("tws_sessions", sf_dir)
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-    for tag, pred, mtime in (
-        ("early", F.col("ts_us") < mid, 1_000_000_000),
-        ("late", F.col("ts_us") >= mid, 1_000_000_100),
-    ):
-        tmp = os.path.join(root, f"tmp_{tag}")
-        ev.filter(pred).coalesce(1).write.parquet(tmp)
-        part = next(p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet"))
-        dst = os.path.join(src, f"{tag}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-        shutil.rmtree(tmp)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    name = _run_to_memory(session_counts(stream), "tws", output_mode="update")
-    updates = spark.table(name)
+    src = os.path.join(scratch_dir("tws_sessions", sf_dir), "src")
+    stream = _replay(ev, src, [F.col("ts_us") < mid, F.col("ts_us") >= mid])
+    updates = _run_to_memory(session_counts(stream), "tws", output_mode="update")
     # final state per user = the row with the maximal (monotone) last_us
     return (
         updates.groupBy("user_id")
@@ -355,7 +364,7 @@ g AS (
   SELECT user_id,
          CASE WHEN LAG(ts) OVER w IS NULL
                    OR epoch_us(ts) - epoch_us(LAG(ts) OVER w)
-                      > 30 * 60 * 1000000
+                      > {STREAM_SESSION_GAP_MIN} * 60 * 1000000
               THEN 1 ELSE 0 END AS new_sess
   FROM ev
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -419,66 +428,30 @@ def streaming_watermark_lates(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark — O(open windows) — which is the 100 TB property this
     operator exists to keep.
     """
-    import shutil
-
-    from ..functions.numeric import dsum
-    from ..sources.batch import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "value"
     )
     ontime = F.col("event_id") % WM_LATE_MOD != 0
     mid = F.lit(WM_MID_TS).cast("timestamp")
     root = scratch_dir("wm_lates", sf_dir)
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-    for tag, pred, mtime in (
-        ("ontime_a", ontime & (F.col("ts") < mid), 1_000_000_000),
-        ("ontime_b", ontime & (F.col("ts") >= mid), 1_000_000_100),
-        ("late", F.col("event_id") % WM_LATE_MOD == 0, 1_000_000_200),
-    ):
-        tmp = os.path.join(root, f"tmp_{tag}")
-        ev.filter(pred).coalesce(1).write.parquet(tmp)
-        part = next(
-            p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet")
-        )
-        dst = os.path.join(src, f"{tag}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-        shutil.rmtree(tmp)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("sum_value"),
-        )
+    stream = _replay(ev, os.path.join(root, "src"), [
+        ontime & (F.col("ts") < mid),
+        ontime & (F.col("ts") >= mid),
+        F.col("event_id") % WM_LATE_MOD == 0,
+    ])
+    agg = _totals(
+        stream.withWatermark("ts", "2 hours"), F.window("ts", "1 hour").alias("w")
     )
     out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "_ckpt")
-    q = (
+    _run(
         agg.writeStream.format("parquet")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", os.path.join(root, "_ckpt"))
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(out)
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-            "n_events",
-            "sum_value",
-        )
+        .select(*_bounds("window"), "n_events", "sum_value")
         .orderBy("window_start", "n_events")
     )
 
@@ -535,16 +508,14 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than the whole state. State size is O(distinct keys), never
     O(events). The oracle is the batch argmax over all events — this
     streaming operator gets a full value-hash check, not rows-only."""
-    import shutil
-
-    from ..sources.batch import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    src_dir = os.path.join(scratch_dir("upsert_src", sf_dir), "src")
-    ev.repartition(UPSERT_SRC_FILES).write.parquet(src_dir)
     state_root = scratch_dir("upsert_state", sf_dir)
+    n = UPSERT_SRC_FILES
+    stream = _replay(ev, os.path.join(state_root, "src"), [
+        F.col("event_id") % n == i for i in range(n)
+    ])
     state_dir = os.path.join(state_root, "state")
     tmp_dir = os.path.join(state_root, "state_tmp")
     ckpt = os.path.join(state_root, "_ckpt")
@@ -568,24 +539,13 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(state_dir)
         os.replace(tmp_dir, state_dir)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run(stream.writeStream.foreachBatch(_merge).option("checkpointLocation", ckpt))
     return (
         spark.read.parquet(state_dir)
         .select(
             "user_id",
             F.col("event_id").alias("last_event_id"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
+            _ts("ts").alias("last_ts"),
             F.col("value").alias("last_value"),
         )
         .orderBy("user_id")
@@ -639,8 +599,10 @@ def streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     root = scratch_dir("exactly_once", sf_dir)
-    src_dir = os.path.join(root, "src")
-    ev.repartition(EXACTLY_ONCE_SRC_FILES).write.parquet(src_dir)
+    n = EXACTLY_ONCE_SRC_FILES
+    stream = _replay(ev, os.path.join(root, "src"), [
+        F.col("event_id") % n == i for i in range(n)
+    ])
     sink_dir = os.path.join(root, "sink")
     tmp_root = os.path.join(root, "tmp")
     ckpt = os.path.join(root, "_ckpt")
@@ -661,26 +623,13 @@ def streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the exact window where a non-idempotent sink double-writes.
             raise RuntimeError("injected crash between sink and checkpoint commit")
 
-    def _run() -> None:
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-            .writeStream.foreachBatch(_commit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    crashed = False
+    writer = stream.writeStream.foreachBatch(_commit).option("checkpointLocation", ckpt)
     try:
-        _run()
+        _run(writer)
     except Exception as exc:  # noqa: BLE001 — StreamingQueryException expected
         if "injected crash" not in str(exc):
             raise
-        crashed = True
-    if not crashed:
+    else:
         # loud failure on a DISTINCT path: the sentinel below must not
         # share the "injected crash" substring the except clause matches,
         # or a never-firing injection would be silently swallowed
@@ -689,17 +638,9 @@ def streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "never raised (check maxFilesPerTrigger batching and "
             "EXACTLY_ONCE_FAIL_AT)"
         )
-    _run()  # restart, same checkpoint: replays the failed batch id, guard skips
-
-    return (
-        spark.read.parquet(os.path.join(sink_dir, "txn_*"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    _run(writer)  # restart, same checkpoint: replays the failed batch id, guard skips
+    sink = spark.read.parquet(os.path.join(sink_dir, "txn_*"))
+    return _totals(sink, "event_type").orderBy("event_type")
 
 
 STREAMING_EXACTLY_ONCE_SQL = f"""
@@ -742,11 +683,10 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n15").alias("peak_15min"),
         )
     )
-    name = _run_to_memory(hourly, "chained", output_mode="append")
     return (
-        spark.table(name)
+        _run_to_memory(hourly, "chained", output_mode="append")
         .select(
-            F.date_format("wh.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
+            _ts("wh.start").alias("hour_start"),
             "event_type",
             "n_blocks",
             "n_events",
@@ -796,38 +736,7 @@ def streaming_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces exactly that set. State stays bounded by the same
     watermark that drives the null emission — the property that makes
     outer stream joins runnable at 100 TB."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (
-            F.col("p_ts")
-            <= F.col("c_ts") + F.expr(f"INTERVAL {STREAM_JOIN_WINDOW_MIN} MINUTES")
-        ),
-        "left_outer",
-    ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-    name = _run_to_memory(joined, "ssouter", output_mode="append")
-    return spark.table(name).orderBy("click_id", "purchase_id")
+    return _click_purchase_join(spark, sf_dir, "left_outer")
 
 
 STREAMING_OUTER_JOIN_SQL = f"""
@@ -885,22 +794,12 @@ def streaming_hll_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.approx_count_distinct("user_id", HLL_WIN_RSD).alias("approx_users")
         )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "approx_users",
-        )
+        .select(_ts("w.start").alias("window_start"), "approx_users")
     )
-    name = _run_to_memory(agg, "hllwin")
-    streamed = spark.table(name)
-    from ..sources.batch import load_table
-
+    streamed = _run_to_memory(agg, "hllwin")
     exact = (
         load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_format(
-                F.window("ts", "6 hours")["start"], "yyyy-MM-dd HH:mm:ss"
-            ).alias("window_start")
-        )
+        .groupBy(_ts(F.window("ts", "6 hours")["start"]).alias("window_start"))
         .agg(F.count_distinct("user_id").alias("exact_users"))
     )
     return (
@@ -946,37 +845,22 @@ def streaming_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     wiped per invocation so repeated gate runs stay deterministic.
     """
     root = scratch_dir("ckpt_resume", sf_dir)
-    src = os.path.join(root, "src")
-    ckpt = os.path.join(root, "ckpt")
     sink = os.path.join(root, "sink")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-
-    def run_once() -> None:
-        schema = spark.read.parquet(src).schema
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    for phase in (0, 1):  # even event ids, then odd ones land and rerun
+        stream = _replay(
+            ev, os.path.join(root, "src"), [F.col("event_id") % 2 == phase], phase
         )
-        q.awaitTermination()
-
-    ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(src)
-    run_once()
-    ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
-    run_once()
-
-    back = spark.read.parquet(sink)
-    return (
-        back.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_rows"), dsum("value").alias("sum_value"))
-        .orderBy("event_type")
+        _run(
+            stream.writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .outputMode("append")
+        )
+    return _totals(spark.read.parquet(sink), "event_type", n="n_rows").orderBy(
+        "event_type"
     )
 
 
@@ -1007,9 +891,6 @@ def streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — bounded by a timeout, deterministic at completion. The
     rollup over the drained ticks is closed-form oracle-checked.
     """
-    import time as _time
-    import uuid as _uuid
-
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
@@ -1043,7 +924,7 @@ def streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             return TickReader()
 
     spark.dataSource.register(TickSource)
-    name = "pyticks_" + _uuid.uuid4().hex[:8]
+    name = "pyticks_" + uuid.uuid4().hex[:8]
     q = (
         spark.readStream.format("pyticks")
         .load()
@@ -1056,11 +937,11 @@ def streaming_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
+        deadline = time.time() + 120
+        while time.time() < deadline:
             if spark.table(name).count() >= PYTICKS_N:
                 break
-            _time.sleep(0.2)
+            time.sleep(0.2)
     finally:
         q.stop()
     got = spark.table(name).count()
@@ -1122,14 +1003,9 @@ def streaming_rocksdb_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
     )
     try:
-        stream = _events_stream(spark, sf_dir)
-        agg = stream.groupBy("event_type").agg(
-            F.count("*").alias("n_events"),
-            dsum("value").alias("sum_value"),
-        )
-        name = _run_to_memory(agg, "rocksdb")
+        agg = _totals(_events_stream(spark, sf_dir), "event_type")
         # materialize fully before the conf flips back
-        out = spark.table(name).orderBy("event_type").localCheckpoint()
+        out = _run_to_memory(agg, "rocksdb").orderBy("event_type").localCheckpoint()
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -1170,14 +1046,7 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         .groupBy("event_type")
         .agg(F.count("*").alias("n_distinct_users"))
     )
-    name = _run_to_memory(agg, "wmdedup")
-    return spark.table(name).orderBy("event_type")
-
-
-STREAMING_WM_DEDUP_SQL = """
-SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct_users
-FROM events GROUP BY event_type ORDER BY event_type
-"""
+    return _run_to_memory(agg, "wmdedup").orderBy("event_type")
 
 
 def _tws_available() -> bool:
@@ -1198,7 +1067,7 @@ QUERIES = {
     streaming_checkpoint_resume: STREAMING_CKPT_RESUME_SQL,
     streaming_python_source: STREAMING_PYSRC_SQL,
     streaming_rocksdb_agg: STREAMING_ROCKSDB_SQL,
-    streaming_dedup_within_watermark: STREAMING_WM_DEDUP_SQL,
+    streaming_dedup_within_watermark: STREAMING_DEDUP_SQL,
     streaming_hll_windowed: STREAMING_HLL_WIN_SQL,
     streaming_hourly_window: STREAMING_HOURLY_SQL,
     streaming_chained_windows: STREAMING_CHAINED_SQL,

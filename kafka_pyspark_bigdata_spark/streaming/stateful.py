@@ -86,7 +86,8 @@ def running_user_totals(stream: DataFrame) -> DataFrame:
 # transformWithState (the v2 stateful API): per-user session counting
 # ---------------------------------------------------------------------------
 
-TWS_GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap, microseconds
+STREAM_SESSION_GAP_MIN = 30  # session gap of every sessionizing query
+TWS_GAP_US = STREAM_SESSION_GAP_MIN * 60 * 1_000_000  # the gap in microseconds
 
 TWS_OUTPUT_SCHEMA = StructType(
     [

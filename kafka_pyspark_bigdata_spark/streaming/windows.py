@@ -10,10 +10,29 @@ standard scale-out shape for streaming rollups.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
+
+
+def _ts(col) -> Column:
+    """``col`` (a timestamp or a window bound) as ``yyyy-MM-dd HH:mm:ss``."""
+    return F.date_format(col, "yyyy-MM-dd HH:mm:ss")
+
+
+def _bounds(prefix: str) -> list[Column]:
+    """Window ``w``'s start and end as text, named ``{prefix}_start`` and
+    ``{prefix}_end``."""
+    return [_ts(f"w.{b}").alias(f"{prefix}_{b}") for b in ("start", "end")]
+
+
+def _totals(df: DataFrame, *groups, n: str = "n_events") -> DataFrame:
+    """Row count (named ``n``) and exact ``value`` sum per ``groups``: the
+    totals every streaming rollup emits."""
+    return df.groupBy(*groups).agg(
+        F.count(F.lit(1)).alias(n), dsum("value").alias("sum_value")
+    )
 
 
 def tumbling_agg(
@@ -23,16 +42,9 @@ def tumbling_agg(
     keys: list[str] | None = None,
 ) -> DataFrame:
     """Tumbling event-time window: count + exact sum per window (+keys)."""
-    groups = [F.window(ts_col, width).alias("w"), *(keys or [])]
-    return (
-        df.groupBy(*groups)
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            *(keys or []),
-            "n_events",
-            "sum_value",
-        )
+    keys = keys or []
+    return _totals(df, F.window(ts_col, width).alias("w"), *keys).select(
+        _ts("w.start").alias("window_start"), *keys, "n_events", "sum_value"
     )
 
 
@@ -43,15 +55,8 @@ def sliding_agg(
     slide: str = "1 hour",
 ) -> DataFrame:
     """Sliding window: each event lands in width/slide windows."""
-    return (
-        df.groupBy(F.window(ts_col, width, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-            "n_events",
-            "sum_value",
-        )
+    return _totals(df, F.window(ts_col, width, slide).alias("w")).select(
+        *_bounds("window"), "n_events", "sum_value"
     )
 
 
@@ -63,14 +68,6 @@ def session_agg(
 ) -> DataFrame:
     """Session window: activity sessions per key closed by a gap timeout —
     the dynamic-window stateful op (state size bounded by the watermark)."""
-    return (
-        df.groupBy(F.session_window(ts_col, gap).alias("w"), key)
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            key,
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
+    return _totals(df, F.session_window(ts_col, gap).alias("w"), key).select(
+        key, *_bounds("session"), "n_events", "sum_value"
     )

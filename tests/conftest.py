@@ -63,12 +63,14 @@ def oracle_test(*mods):
     module binds it once (``test_x_oracle = oracle_test(x)``), so the
     cases follow each module's ``QUERIES`` and keep the module's test ids;
     ``oracle_modules`` records ``mods`` for the registry guard that every
-    query module is bound somewhere."""
+    query module is bound somewhere. A query must stop every stream it
+    starts."""
     cases = [(fn, sql) for m in mods for fn, sql in m.QUERIES.items() if sql]
 
     @pytest.mark.parametrize("fn,sql", cases, ids=[fn.__name__ for fn, _ in cases])
     def test(spark, duck, fn, sql):
         assert_oracle_match(spark, duck, fn, sql)
+        assert not spark.streams.active, "a query left a stream running"
 
     test.oracle_modules = mods
     return test

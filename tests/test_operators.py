@@ -1070,6 +1070,8 @@ def written_corpora(spark, tmp_path_factory, table, corpora, ddl):
 # three exact copies of vector 0 appended (cosine ties at 1.0). No fixture
 # has a zero vector or fewer than TOP_K + 1 rows. The IVF queries also run
 # with centroid 12 (not a query) zeroed: every similarity to it is NULL.
+# ann_topk_gemm also runs with query vector 3 zeroed: its every score is
+# NULL, so its neighbors are the smallest other ids.
 EDGE_EMBEDDINGS = ["zero_vector", "one_row", "duplicates"]
 IVF_QUERIES = [n for n in oracle_names(similarity) if n.startswith("ann_ivf")]
 
@@ -1077,7 +1079,9 @@ EMBEDDING_CASES = [
     (name, corpus)
     for corpus in EDGE_EMBEDDINGS
     for name in oracle_names(similarity) + ["dedup_embedding_cosine"]
-] + [(name, "zero_centroid") for name in IVF_QUERIES]
+] + [(name, "zero_centroid") for name in IVF_QUERIES] + [
+    ("ann_topk_gemm", "zero_query")
+]
 
 
 @pytest.fixture(scope="module")
@@ -1094,6 +1098,7 @@ def edge_embeddings(spark, tmp_path_factory):
         "one_row": head[:1],
         "duplicates": head + [(40 + i, vec0, label0) for i in range(3)],
         "zero_centroid": [(i, zero if i == 12 else v, lab) for i, v, lab in head],
+        "zero_query": [(i, zero if i == 3 else v, lab) for i, v, lab in head],
     }
     ddl = "vec_id long, embedding array<float>, label int"
     return written_corpora(spark, tmp_path_factory, "embeddings", corpora, ddl)
@@ -1123,7 +1128,16 @@ EVENTS_DDL = (
 # runs on every corpus. The queries that divide by an event count run on
 # the corpora where that count is zero: no event after mid-month
 # (histogram drift), nobody at a funnel stage, one event in a type
-# (z-score's n - 1) and one user, so one empty A/B arm.
+# (z-score's n - 1) and one user, so one empty A/B arm. The streaming
+# queries that replay events from written files run on one event and none
+# (each replay part is still one file, so one micro-batch), and the two
+# partitioned-write queries on none (a write with no rows has no files).
+REPLAY_QUERIES = [
+    "streaming_exactly_once_sink",
+    "streaming_upsert_latest",
+    "streaming_watermark_lates",
+    "streaming_checkpoint_resume",
+]
 EVENTS_CASES = [
     (name, corpus)
     for corpus in EDGE_EVENTS
@@ -1137,6 +1151,11 @@ EVENTS_CASES = [
     ("q_funnel_windowed", "empty"),
     ("q_zscore_outliers", "one_row"),
     ("q_ab_test_conversion", "one_row"),
+] + [
+    (name, corpus) for name in REPLAY_QUERIES for corpus in ["one_row", "empty"]
+] + [
+    ("q_dpp_prune", "empty"),
+    ("q_partitioned_scan", "empty"),
 ]
 
 
@@ -1165,7 +1184,8 @@ def test_degenerate_timeseries_match_oracle(spark, edge_events, name, corpus):
     over n ≤ L days is NULL with n − L overlap days, a correlation over
     an overlap with no variance is NULL, and nothing raises. So do the
     events queries whose divisor (an event count, or a variance) is zero
-    there: the ratio is NULL, as DuckDB's ``x // 0`` is."""
+    there: the ratio is NULL, as DuckDB's ``x // 0`` is. So do the
+    streaming replays and partitioned writes of one event or none."""
     d, duck = edge_events(corpus)
     assert_oracle_match(spark, duck, QUERY_FN[name], ORACLE_SQL[name], sf_dir=d)
 
