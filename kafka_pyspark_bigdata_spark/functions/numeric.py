@@ -16,15 +16,21 @@ binary double vs a decimal half-ulp except for short binary fractions, which
 the fixture generators don't produce.
 
 ``half_up_cents`` is the one Spark spelling of a DOUBLE rounded half up
-to integer cents. ``md5_int`` is the one Spark spelling of a
-content-addressed integer (an md5 hex prefix read as BIGINT), the hash
-both engines compute alike.
+to integer cents, and ``half_up_cents_sql`` its oracle twin. ``md5_int``
+is the one Spark spelling of a content-addressed integer (an md5 hex
+prefix read as BIGINT), the hash both engines compute alike.
+
+Order statistics are rank arithmetic, never interpolating percentile
+built-ins: ``ranked`` adds each row's ``rn`` within its group and the
+group's ``cnt``; ``exact_median`` reads the mean of the middle one or two
+rows off it, and ``lower_median`` the row ranked (cnt + 1) DIV 2.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 # Default precision/scale: fits TPC-H-ish money (< 10^10) with 2 decimals.
 PREC, SCALE = 18, 2
@@ -54,10 +60,50 @@ def cents(col: Column | str) -> Column:
 
 def half_up_cents(col: str) -> Column:
     """Money as integer cents rounded half up from the DOUBLE itself,
-    floor(x·100 + 0.5) as BIGINT (DuckDB spells it
-    ``CAST(floor(x * 100.0 + 0.5) AS BIGINT)``); ``cents`` goes through
-    decimal(18,2) instead."""
-    return F.expr(f"CAST(FLOOR({col} * 100.0 + 0.5) AS BIGINT)")
+    floor(x·100 + 0.5) as BIGINT, spelled as ``half_up_cents_sql`` in both
+    engines; ``cents`` goes through decimal(18,2) instead."""
+    return F.expr(half_up_cents_sql(col))
+
+
+def ranked(df: DataFrame, key: str | None, *order: str) -> DataFrame:
+    """``df`` plus ``rn``, each row's row_number within its ``key`` group
+    in ``order`` (a total order, so the rank is engine-exact), and
+    ``cnt``, the group's row count. ``key`` None ranks the whole frame as
+    one group."""
+    keys = [key] if key else []
+    return df.select(
+        "*",
+        F.row_number().over(Window.partitionBy(*keys).orderBy(*order)).alias("rn"),
+        F.count(F.lit(1)).over(Window.partitionBy(*keys)).alias("cnt"),
+    )
+
+
+def exact_median(
+    df: DataFrame, key: str, value: str, tiebreak: str, out: str, n: str | None = None
+) -> DataFrame:
+    """(key, out[, n]): each ``key``'s exact median of ``value``, the mean
+    of its middle one or two rows by (value, tiebreak), and with ``n`` the
+    group's row count. A mean of at most two doubles is order-independent,
+    so the median is bit-identical in any engine."""
+    mid = ranked(df, key, value, tiebreak).filter(
+        (F.col("rn") == F.expr("(cnt + 1) div 2"))
+        | (F.col("rn") == F.expr("(cnt + 2) div 2"))
+    )
+    size = [F.max("cnt").alias(n)] if n else []
+    return mid.groupBy(key).agg(F.avg(value).alias(out), *size)
+
+
+def lower_median(
+    df: DataFrame, key: str, value: str, tiebreak: str, out: str
+) -> DataFrame:
+    """(key, out, cnt): each ``key``'s exact lower median of ``value``, the
+    row ranked (cnt + 1) DIV 2 by (value, tiebreak), and the group's row
+    count."""
+    return (
+        ranked(df, key, value, tiebreak)
+        .filter(F.col("rn") == F.expr("(cnt + 1) div 2"))
+        .select(key, F.col(value).alias(out), "cnt")
+    )
 
 
 def dsum_expr(expr: Column) -> Column:
@@ -78,6 +124,12 @@ def md5_int(col: Column | str, n: int, start: int = 1) -> Column:
 
 
 # --- ANSI-SQL mirrors for the DuckDB oracle -------------------------------
+
+def half_up_cents_sql(x: str) -> str:
+    """SQL text of ``x`` (a DOUBLE expression) rounded half up to integer
+    cents: the rule of ``half_up_cents``, as both engines parse it."""
+    return f"CAST(FLOOR({x} * 100.0 + 0.5) AS BIGINT)"
+
 
 def dsum_sql(col: str, scale: int = SCALE, prec: int = PREC) -> str:
     return f"CAST(SUM(CAST({col} AS DECIMAL({prec},{scale}))) AS DOUBLE)"

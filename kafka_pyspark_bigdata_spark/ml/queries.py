@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
+from ..functions.numeric import half_up_cents, half_up_cents_sql
 from ..sources.batch import app_memo, load_table, scratch_dir
 from . import serving, trainer
 
@@ -785,7 +786,7 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("category"),
-        F.expr("CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)").alias("cents"),
+        half_up_cents("o_totalprice").alias("cents"),
         F.expr(f"o_orderkey % {TE_FOLDS}").alias("fold"),
     )
     per_fold = o.groupBy("category", "fold").agg(
@@ -813,7 +814,7 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 ML_TARGET_ENC_SQL = f"""
 WITH o AS (
   SELECT o_orderpriority AS category,
-         CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
+         {half_up_cents_sql("o_totalprice")} AS cents,
          o_orderkey % {TE_FOLDS} AS fold
   FROM orders
 ), per_fold AS (

@@ -33,8 +33,8 @@ per-day sum, ``_ev_cte`` its oracle CTE); ``_dense_daily`` the
 user × observed-day grid; ``_ordered_list`` a series as one day-ordered array;
 ``_paa_sums`` the PAA segment sums; ``_array_sum`` / ``_dot`` the exact
 in-row integer sums; ``_lag_overlap`` the lag-L overlap pair;
-``_lower_median`` the exact per-series lower median; ``_lttb_area`` the
-LTTB triangle area in either engine.
+``_lttb_area`` the LTTB triangle area in either engine. The exact
+per-series lower median is ``functions.numeric.lower_median``.
 
 Short series: a lag-L statistic over a series of n ≤ L days has no
 overlap, so it is NULL (``ts_autocorr``'s rL, ``ts_cross_correlation``'s
@@ -50,7 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import cents, half_up_cents
+from ..functions.numeric import cents, half_up_cents, lower_median
 from ..sources.batch import load_table
 
 TS_SEGMENTS = 4  # PAA segments per series
@@ -896,18 +896,6 @@ ORDER BY event_type
 MAD_K = 3  # outlier threshold: |dev| > K * MAD
 
 
-def _lower_median(df: DataFrame, key: str, value: str, out: str) -> DataFrame:
-    """(key, out): each ``key``'s exact lower median of ``value`` — the
-    row ranked (cnt + 1) DIV 2 by (value, event_id)."""
-    w = Window.partitionBy(key).orderBy(value, "event_id")
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .withColumn("cnt", F.count(F.lit(1)).over(Window.partitionBy(key)))
-        .filter(F.col("rn") == F.expr("(cnt + 1) DIV 2"))
-        .select(key, F.col(value).alias(out))
-    )
-
-
 def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-series outlier screen: median + MAD (median absolute
     deviation) instead of mean + stddev — a single wild value shifts a
@@ -926,7 +914,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         half_up_cents("value").alias("cents"),
     )
-    med = _lower_median(ev, "event_type", "cents", "med_cents")
+    med = lower_median(ev, "event_type", "cents", "event_id", "med_cents")
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type",
         "event_id",
@@ -934,7 +922,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("cents") - F.col("med_cents")).alias("adev"),
         "med_cents",
     )
-    mad = _lower_median(dev, "event_type", "adev", "mad_cents")
+    mad = lower_median(dev, "event_type", "adev", "event_id", "mad_cents")
     return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type", "med_cents", "mad_cents")

@@ -23,8 +23,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import cents, davg, davg_sql, dsum, dsum_expr, dsum_sql
-from ..sources.batch import EV_US, load_table
+from ..functions.numeric import (
+    cents,
+    davg,
+    davg_sql,
+    dsum,
+    dsum_expr,
+    dsum_sql,
+    exact_median,
+    half_up_cents_sql,
+)
+from ..sources.batch import EV_US, gap_to_prev_us, load_table, user_timeline
 from .relational import _REV_SQL, _revenue_expr
 
 
@@ -467,9 +476,8 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``user_id``; both window passes and the aggregate reuse that
     partitioning."""
     ev = load_table(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wrun = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(wo))
+    wrun = user_timeline().rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    gap = gap_to_prev_us()
     new_sess = F.when(gap.isNull() | (gap > SESSION_GAP_US), 1).otherwise(0)
     sess = ev.select(
         "user_id",
@@ -706,26 +714,12 @@ def q_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number + group count pick the middle one-or-two rows; their mean is
     the median. Sum of ≤2 doubles is order-independent, so the value is
     bit-identical everywhere."""
-    orders = load_table(spark, sf_dir, "orders")
-    wo = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    wc = Window.partitionBy("o_orderpriority")
-    ranked = orders.select(
-        "o_orderpriority",
-        "o_totalprice",
-        F.row_number().over(wo).alias("rn"),
-        F.count("*").over(wc).alias("cnt"),
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderpriority", "o_totalprice", "o_orderkey"
     )
-    mid = ranked.filter(
-        (F.col("rn") == F.expr("(cnt + 1) div 2")) | (F.col("rn") == F.expr("(cnt + 2) div 2"))
-    )
-    return (
-        mid.groupBy("o_orderpriority")
-        .agg(
-            F.avg("o_totalprice").alias("median_price"),
-            F.max("cnt").alias("n_orders"),
-        )
-        .orderBy("o_orderpriority")
-    )
+    return exact_median(
+        orders, "o_orderpriority", "o_totalprice", "o_orderkey", "median_price", "n_orders"
+    ).orderBy("o_orderpriority")
 
 
 Q_EXACT_MEDIAN_SQL = """
@@ -979,7 +973,7 @@ def q_sql_udf_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION disc_cents(p DOUBLE, d DOUBLE) "
-        "RETURNS BIGINT RETURN CAST(FLOOR(p * (1 - d) * 100.0 + 0.5) AS BIGINT)"
+        f"RETURNS BIGINT RETURN {half_up_cents_sql('p * (1 - d)')}"
     )
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION qty_thresholds(n INT) "
@@ -999,11 +993,11 @@ ORDER BY t.threshold, l.l_returnflag
     )
 
 
-Q_SQL_UDF_SQL = """
+Q_SQL_UDF_SQL = f"""
 WITH t AS (SELECT unnest(generate_series(10, 50, 10)) AS threshold)
 SELECT t.threshold, l.l_returnflag,
        COUNT(*) AS n_items,
-       CAST(SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
+       CAST(SUM({half_up_cents_sql("l.l_extendedprice * (1 - l.l_discount)")}) AS BIGINT) AS revenue_cents
 FROM t JOIN lineitem l ON l.l_quantity <= t.threshold
 GROUP BY t.threshold, l.l_returnflag
 ORDER BY t.threshold, l.l_returnflag

@@ -9,12 +9,20 @@ DECIMAL (functions.numeric rationale) so frame values are engine-portable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import dsum, dsum_sql, md5_int
-from ..sources.batch import EV_US, load_table
+from ..functions.numeric import (
+    dsum,
+    dsum_sql,
+    exact_median,
+    half_up_cents,
+    half_up_cents_sql,
+    md5_int,
+    ranked,
+)
+from ..sources.batch import EV_US, gap_to_next_us, load_table, user_timeline
 
 
 MAVG_WINDOW = 5  # current row + 4 preceding
@@ -26,11 +34,7 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the frame count in double, so the result is bit-identical across
     engines regardless of frame evaluation order."""
     ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-(MAVG_WINDOW - 1), 0)
-    )
+    w = user_timeline().rowsBetween(-(MAVG_WINDOW - 1), 0)
     mavg = (
         F.sum(F.col("value").cast("decimal(18,2)")).over(w).cast("double")
         / F.count("value").over(w)
@@ -176,9 +180,7 @@ def q_lead_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer microseconds, so the sum/avg are engine-exact without decimal
     help."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros(F.lead("ts").over(w)) - F.unix_micros(F.col("ts"))
-    gaps = ev.select("user_id", gap.alias("gap_us")).filter(
+    gaps = ev.select("user_id", gap_to_next_us().alias("gap_us")).filter(
         F.col("gap_us").isNotNull()
     )
     return (
@@ -373,12 +375,10 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("exact_union"),
         F.sum((F.col("n_types") == 2).cast("int")).alias("exact_inter"),
     )
-    exact_ab = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    exact_a = exact_ab.filter(F.col("event_type") == "click").select(
-        F.col("n").alias("exact_a")
-    )
-    exact_b = exact_ab.filter(F.col("event_type") == "purchase").select(
-        F.col("n").alias("exact_b")
+    # one global aggregate: a set with no users counts 0, not no row
+    exact_ab = ev.agg(
+        F.count(F.when(F.col("event_type") == "click", 1)).alias("exact_a"),
+        F.count(F.when(F.col("event_type") == "purchase", 1)).alias("exact_b"),
     )
     k = KMV_SETOP_K
     est = F.lit(float(k - 1))
@@ -392,8 +392,7 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         flagged.crossJoin(a_stats)
         .crossJoin(b_stats)
         .crossJoin(exact)
-        .crossJoin(exact_a)
-        .crossJoin(exact_b)
+        .crossJoin(exact_ab)
         .select(
             F.lit(k).alias("k"),
             kmv_est("n_a", "kth_a").alias("est_a"),
@@ -1037,6 +1036,12 @@ ORDER BY o_orderstatus, metric
 QUANTILE_PCTS = (25, 50, 75, 95)
 
 
+def _nearest_rank(p: int) -> Column:
+    """The rank of a group's nearest-rank (type-1) p-th percentile among
+    its ``cnt`` rows: ceil(cnt·p/100), in integer arithmetic."""
+    return F.expr(f"(cnt * {p} + 99) div 100")
+
+
 def q_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact nearest-rank quantiles (p25/p50/p75/p95) of order value per
     priority class — one sort-window plus one conditional aggregate.
@@ -1048,23 +1053,18 @@ def q_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exactly. One shuffle on the group key; the window sort is
     reused by the aggregate. At 100 TB the same plan holds — rank
     selection is a filter, not a second sort."""
-    orders = load_table(spark, sf_dir, "orders")
-    wo = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    wc = Window.partitionBy("o_orderpriority")
-    ranked = orders.select(
-        "o_orderpriority",
-        "o_totalprice",
-        F.row_number().over(wo).alias("rn"),
-        F.count(F.lit(1)).over(wc).alias("cnt"),
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderpriority", "o_totalprice", "o_orderkey"
     )
     aggs = [
-        F.min(
-            F.when(F.col("rn") == F.expr(f"(cnt * {p} + 99) div 100"), F.col("o_totalprice"))
-        ).alias(f"p{p}")
+        F.min(F.when(F.col("rn") == _nearest_rank(p), F.col("o_totalprice"))).alias(
+            f"p{p}"
+        )
         for p in QUANTILE_PCTS
     ]
     return (
-        ranked.groupBy("o_orderpriority")
+        ranked(orders, "o_orderpriority", "o_totalprice", "o_orderkey")
+        .groupBy("o_orderpriority")
         .agg(*aggs, F.max("cnt").alias("n_orders"))
         .orderBy("o_orderpriority")
     )
@@ -1104,30 +1104,11 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The comparison arithmetic is two IEEE ops on identical doubles —
     deterministic across engines."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-
-    def med_of(df: DataFrame, col: str, out: str) -> DataFrame:
-        wo = Window.partitionBy("event_type").orderBy(col, "event_id")
-        wc = Window.partitionBy("event_type")
-        r = df.select(
-            "event_type",
-            col,
-            F.row_number().over(wo).alias("rn"),
-            F.count(F.lit(1)).over(wc).alias("cnt"),
-        )
-        return (
-            r.filter(
-                (F.col("rn") == F.expr("(cnt + 1) div 2"))
-                | (F.col("rn") == F.expr("(cnt + 2) div 2"))
-            )
-            .groupBy("event_type")
-            .agg(F.avg(col).alias(out))
-        )
-
-    med = med_of(ev, "value", "med")
+    med = exact_median(ev, "event_type", "value", "event_id", "med")
     dev = ev.join(F.broadcast(med), "event_type").withColumn(
         "adev", F.abs(F.col("value") - F.col("med"))
     )
-    mad = med_of(dev.select("event_type", "event_id", "adev"), "adev", "mad")
+    mad = exact_median(dev, "event_type", "adev", "event_id", "mad")
     return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type")
@@ -1426,25 +1407,19 @@ def q_key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One count aggregation + one rank window over the (small) key-count
     table; all integer arithmetic."""
-    cnts = (
+    freqs = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(F.count(F.lit(1)).alias("freq"))
     )
-    w = Window.orderBy(F.asc("cnt"), F.asc("o_custkey"))
-    ranked = cnts.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy())
-    )
-    picks = ranked.filter(
-        (F.col("rn") == F.expr("(n * 50 + 99) div 100"))
-        | (F.col("rn") == F.expr("(n * 99 + 99) div 100"))
-        | (F.col("rn") == F.col("n"))
-    )
+    at = {p: F.col("rn") == _nearest_rank(p) for p in (50, 99, 100)}
+    picks = ranked(freqs, None, "freq", "o_custkey").filter(at[50] | at[99] | at[100])
     return picks.agg(
-        F.max("n").alias("n_keys"),
-        F.max(F.when(F.col("rn") == F.expr("(n * 50 + 99) div 100"), F.col("cnt"))).alias("p50_cnt"),
-        F.max(F.when(F.col("rn") == F.expr("(n * 99 + 99) div 100"), F.col("cnt"))).alias("p99_cnt"),
-        F.max(F.when(F.col("rn") == F.col("n"), F.col("cnt"))).alias("max_cnt"),
+        F.max("cnt").alias("n_keys"),
+        *[
+            F.max(F.when(at[p], F.col("freq"))).alias(name)
+            for p, name in ((50, "p50_cnt"), (99, "p99_cnt"), (100, "max_cnt"))
+        ],
     ).select(
         "n_keys",
         "p50_cnt",
@@ -1642,9 +1617,7 @@ def q_hist_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan as a broadcast 1-row aggregate. All arithmetic is integer
     cents — engine-exact."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        F.expr("CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT)").alias(
-            "cents"
-        )
+        half_up_cents("l_extendedprice").alias("cents")
     )
     vc = li.groupBy("cents").agg(F.count(F.lit(1)).alias("n"))
     total = li.agg(F.count(F.lit(1)).alias("n_total"))
@@ -1674,7 +1647,7 @@ def q_hist_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_HIST_EQUIDEPTH_SQL = f"""
 WITH c AS (
-  SELECT CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS cents
+  SELECT {half_up_cents_sql("l_extendedprice")} AS cents
   FROM lineitem
 ),
 vc AS (SELECT cents, COUNT(*) AS n FROM c GROUP BY cents),

@@ -9,19 +9,82 @@ time). The reference's scope stops at per-batch aggregation
 pipeline would grow into, each expressed as one-or-two-shuffle
 DataFrame plans with engine-exact arithmetic (integer microseconds /
 day counts / decimal sums) so every query is DuckDB-hash-verifiable.
+
+Shared rules, each with one home: the per-user (ts, event_id) event
+order is ``sources.batch.user_timeline``, with ``gap_to_prev_us`` /
+``gap_to_next_us`` the gaps over it and ``timeline_frame_readout`` the
+readout of a trailing N-event frame; the rank, median and half-up-cents
+rules are in ``functions.numeric``. Private to this module: ``_funnel``
+the signup → click → purchase first-times, ``_daily_grid`` (oracle:
+``_grid_sql``) the dense per-user daily grid with ``_grid_days`` its
+framed order, ``_trailing_users`` (oracle: ``_contrib_sql``) the
+trailing-N-day distinct users, and ``_week_idx`` the week index since
+``COHORT_EPOCH``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from typing import Callable
 
-from ..functions.numeric import dsum, dsum_sql, half_up_cents
-from ..sources.batch import EV_US, load_table, scratch_dir
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window, WindowSpec
+
+from ..functions.numeric import (
+    dsum,
+    dsum_sql,
+    half_up_cents,
+    half_up_cents_sql,
+    lower_median,
+)
+from ..sources.batch import (
+    EV_US,
+    gap_to_next_us,
+    gap_to_prev_us,
+    load_table,
+    scratch_dir,
+    timeline_frame_readout,
+    user_timeline,
+)
 
 
 FUNNEL_STAGES = ("signup", "click", "purchase")
+
+
+def _funnel(
+    ev: DataFrame, pin: Callable[[DataFrame], DataFrame], within_us: int | None = None
+) -> list[DataFrame]:
+    """[s, c, p]: each user's first ``signup_ts``, then first ``click_ts``
+    and ``purchase_ts``, each stage STRICTLY AFTER the previous stage's
+    first event and, with ``within_us``, at most that many microseconds
+    after it.
+
+    ``pin`` pins ``s``: it feeds 3 consumers (the stage-2 join, the
+    stage-3 lineage and the final counts), so the event scan runs once,
+    not per branch. Each stage is a conditional-min aggregate (a
+    partial-agg shuffle on ``user_id``) joined to the previous stage's
+    one row per user, so the fact table is never re-shuffled wider than
+    its key."""
+    firsts = [
+        pin(
+            ev.filter(F.col("event_type") == FUNNEL_STAGES[0])
+            .groupBy("user_id")
+            .agg(F.min("ts").alias(f"{FUNNEL_STAGES[0]}_ts"))
+        )
+    ]
+    for prev, stage in zip(FUNNEL_STAGES, FUNNEL_STAGES[1:]):
+        after = F.col("ts") > F.col(f"{prev}_ts")
+        if within_us is not None:
+            lag_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.col(f"{prev}_ts"))
+            after = after & (lag_us <= within_us)
+        firsts.append(
+            ev.filter(F.col("event_type") == stage)
+            .join(firsts[-1], "user_id")
+            .filter(after)
+            .groupBy("user_id")
+            .agg(F.min("ts").alias(f"{stage}_ts"))
+        )
+    return firsts
 
 
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,34 +93,10 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     their previous stage's first event — the sequencing distinguishes a
     funnel from three independent counts.
 
-    Plan shape: one conditional-min aggregate per stage, each a
-    partial-agg shuffle on ``user_id``; the stage-to-stage joins are
-    user_id equi-joins over already-aggregated (one row per user)
-    sides, so the fact table is never re-shuffled wider than its key.
-    The conversion gap is integer microseconds — engine-exact."""
+    Plan shape: ``_funnel``'s three stages (``s`` pinned eagerly); the
+    conversion gap is integer microseconds — engine-exact."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    s = (
-        ev.filter(F.col("event_type") == FUNNEL_STAGES[0])
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("signup_ts"))
-        # feeds 3 consumers (stage-2 join, stage-3 lineage, the final
-        # counts) — pin so the event scan runs once, not per branch
-        .localCheckpoint()
-    )
-    c = (
-        ev.filter(F.col("event_type") == FUNNEL_STAGES[1])
-        .join(s, "user_id")
-        .filter(F.col("ts") > F.col("signup_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("click_ts"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == FUNNEL_STAGES[2])
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("click_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("purchase_ts"))
-    )
+    s, c, p = _funnel(ev, lambda s: s.localCheckpoint())
     gap = p.join(s, "user_id").select(
         (F.unix_micros("purchase_ts") - F.unix_micros("signup_ts")).alias("gap_us")
     )
@@ -104,40 +143,13 @@ def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 72 h of the previous stage's first event — how product
     funnels are actually defined (an unbounded funnel credits purchases
     months after the click). Same per-stage conditional-min aggregation
-    shape as ``q_funnel``; the window constraint is one extra integer
-    predicate on the already-joined rows, so the plan cost is identical.
+    shape as ``q_funnel`` (``s`` pinned lazily); the window constraint is
+    one extra integer predicate on the already-joined rows, so the plan
+    cost is identical.
     """
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    s = (
-        ev.filter(F.col("event_type") == FUNNEL_STAGES[0])
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("signup_ts"))
-        # feeds 3 consumers (stage-2 join, stage-3 lineage, the final
-        # counts) — pin so the event scan runs once, not per branch
-        .localCheckpoint(eager=False)
-    )
-    within = lambda lo: (  # noqa: E731
-        F.unix_micros(F.col("ts")) - F.unix_micros(F.col(lo))
-    )
-    c = (
-        ev.filter(F.col("event_type") == FUNNEL_STAGES[1])
-        .join(s, "user_id")
-        .filter(
-            (F.col("ts") > F.col("signup_ts"))
-            & (within("signup_ts") <= FUNNEL_WINDOW_US)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("click_ts"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == FUNNEL_STAGES[2])
-        .join(c, "user_id")
-        .filter(
-            (F.col("ts") > F.col("click_ts"))
-            & (within("click_ts") <= FUNNEL_WINDOW_US)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("purchase_ts"))
+    s, c, p = _funnel(
+        ev, lambda s: s.localCheckpoint(eager=False), FUNNEL_WINDOW_US
     )
     n_s = s.agg(F.count("*").alias("n_signup"))
     n_c = c.agg(F.count("*").alias("n_click"))
@@ -202,7 +214,7 @@ def q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    wo = user_timeline()
     trip = (
         ev.withColumn("e2", F.lead("event_type", 1).over(wo))
         .withColumn("e3", F.lead("event_type", 2).over(wo))
@@ -254,28 +266,18 @@ def q_bot_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user stats + the boolean verdict, so downstream can threshold
     differently without recomputing."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = (
-        ev.withColumn(
-            "gap_us",
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(wo)),
-        )
-        .filter(F.col("gap_us").isNotNull())
+    gaps = ev.withColumn("gap_us", gap_to_prev_us()).filter(
+        F.col("gap_us").isNotNull()
     )
-    wg = Window.partitionBy("user_id").orderBy("gap_us", "event_id")
-    ranked = gaps.withColumn("rk", F.row_number().over(wg)).withColumn(
-        "ng", F.count(F.lit(1)).over(Window.partitionBy("user_id"))
-    )
-    med = ranked.filter(F.col("rk") == F.expr("(ng + 1) div 2")).select(
-        "user_id", F.col("gap_us").alias("median_gap_us"), F.col("ng").alias("n_gaps")
-    )
+    n_events = F.col("cnt") + 1
     return (
-        med.select(
+        lower_median(gaps, "user_id", "gap_us", "event_id", "median_gap_us")
+        .select(
             "user_id",
-            (F.col("n_gaps") + 1).alias("n_events"),
+            n_events.alias("n_events"),
             "median_gap_us",
             (
-                (F.col("n_gaps") + 1 >= BOT_MIN_EVENTS)
+                (n_events >= BOT_MIN_EVENTS)
                 & (F.col("median_gap_us") < BOT_MEDIAN_GAP_US)
             ).alias("bot_flag"),
         )
@@ -310,6 +312,11 @@ ORDER BY user_id
 COHORT_EPOCH = "2024-01-01"  # week index origin (fixture start)
 
 
+def _week_idx(d: Column | str) -> Column:
+    """Whole weeks from ``COHORT_EPOCH`` to the date ``d``."""
+    return F.floor(F.datediff(d, F.lit(COHORT_EPOCH).cast("date")) / 7).cast("int")
+
+
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention: users grouped by first-activity week,
     tracked by distinct-active count in each subsequent week offset.
@@ -324,25 +331,18 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("d")
     )
-    epoch = F.lit(COHORT_EPOCH).cast("date")
     first = ev.groupBy("user_id").agg(F.min("d").alias("cohort_d"))
     act = ev.distinct()
     j = act.join(first, "user_id").select(
         "user_id",
-        F.floor(F.datediff("cohort_d", epoch) / 7)
-        .cast("int")
-        .alias("cohort_week"),
+        _week_idx("cohort_d").alias("cohort_week"),
         F.floor(F.datediff("d", F.col("cohort_d")) / 7).cast("int").alias("week_offset"),
     )
     active = j.groupBy("cohort_week", "week_offset").agg(
         F.countDistinct("user_id").alias("n_active")
     )
     sizes = (
-        first.select(
-            F.floor(F.datediff("cohort_d", epoch) / 7)
-            .cast("int")
-            .alias("cohort_week")
-        )
+        first.select(_week_idx("cohort_d").alias("cohort_week"))
         .groupBy("cohort_week")
         .agg(F.count("*").alias("cohort_size"))
     )
@@ -389,6 +389,43 @@ ORDER BY cohort_week, week_offset
 """
 
 
+def _daily_grid(ev: DataFrame, dayv: DataFrame, value: str) -> DataFrame:
+    """(user_id, grid_day, value): each user's dense daily calendar from
+    the first to the last day ``d`` of their rows in ``ev`` (``sequence``
+    + explode — the distributed gap-filling idiom; no driver-side date
+    loops), left-joined to ``dayv``'s (user_id, d, value) observations."""
+    bounds = ev.groupBy("user_id").agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
+    grid = bounds.select(
+        F.col("user_id").alias("g_user"),
+        F.explode(F.sequence("d0", "d1", F.expr("INTERVAL 1 DAY"))).alias("grid_day"),
+    )
+    return grid.join(
+        dayv,
+        (grid.g_user == dayv.user_id) & (grid.grid_day == dayv.d),
+        "left",
+    ).select(F.col("g_user").alias("user_id"), "grid_day", value)
+
+
+def _grid_sql(value: str) -> str:
+    """The oracle's ``grid`` and ``g`` CTEs: ``_daily_grid`` over a
+    ``bounds`` (user_id, d0, d1) and a ``dayv`` (user_id, d, value) CTE."""
+    return f"""grid AS (
+  SELECT user_id,
+         UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS grid_day
+  FROM bounds
+),
+g AS (
+  SELECT grid.user_id, grid.grid_day, dayv.{value}
+  FROM grid LEFT JOIN dayv
+    ON grid.user_id = dayv.user_id AND grid.grid_day = dayv.d
+)"""
+
+
+def _grid_days(lo: int, hi: int) -> WindowSpec:
+    """Each user's grid days in order, framed rows ``lo`` to ``hi``."""
+    return Window.partitionBy("user_id").orderBy("grid_day").rowsBetween(lo, hi)
+
+
 def q_resample_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily resample + LOCF gap fill: each user's event values are
     down-sampled to one observation per day (the LAST event of the day,
@@ -412,22 +449,8 @@ def q_resample_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("user_id", "d", "value")
     )
-    bounds = ev.groupBy("user_id").agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    grid = bounds.select(
-        F.col("user_id").alias("g_user"),
-        F.explode(F.sequence("d0", "d1", F.expr("INTERVAL 1 DAY"))).alias("grid_day"),
-    )
-    g = grid.join(
-        dayv,
-        (grid.g_user == dayv.user_id) & (grid.grid_day == dayv.d),
-        "left",
-    ).select(F.col("g_user").alias("user_id"), "grid_day", "value")
-    w_carry = (
-        Window.partitionBy("user_id")
-        .orderBy("grid_day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return g.select(
+    w_carry = _grid_days(Window.unboundedPreceding, Window.currentRow)
+    return _daily_grid(ev, dayv, "value").select(
         "user_id",
         F.date_format("grid_day", "yyyy-MM-dd").alias("grid_day"),
         F.last("value", ignorenulls=True).over(w_carry).alias("value_locf"),
@@ -448,16 +471,7 @@ bounds AS (
   SELECT user_id, MIN(CAST(ts AS DATE)) AS d0, MAX(CAST(ts AS DATE)) AS d1
   FROM ev GROUP BY user_id
 ),
-grid AS (
-  SELECT user_id,
-         UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS grid_day
-  FROM bounds
-),
-g AS (
-  SELECT grid.user_id, grid.grid_day, dayv.value
-  FROM grid LEFT JOIN dayv
-    ON grid.user_id = dayv.user_id AND grid.grid_day = dayv.d
-)
+{_grid_sql("value")}
 SELECT user_id, strftime(grid_day, '%Y-%m-%d') AS grid_day,
        LAST_VALUE(value IGNORE NULLS) OVER (
          PARTITION BY user_id ORDER BY grid_day
@@ -648,34 +662,19 @@ def q_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.expr(f"CAST(round(value * {_EWMA_FP}, 0) AS BIGINT)").alias("v_int"),
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-(EWMA_LAGS - 1), 0)
+    ewma = (
+        F.expr(
+            "aggregate(transform(vals, (x, j) -> x * shiftleft(CAST(1 AS"
+            f" BIGINT), {EWMA_LAGS} - size(vals) + j)), CAST(0 AS BIGINT),"
+            " (a, b) -> a + b)"
+        ).cast("double")
+        / F.expr(
+            f"shiftleft(CAST(1 AS BIGINT), {EWMA_LAGS})"
+            f" - shiftleft(CAST(1 AS BIGINT), {EWMA_LAGS} - size(vals))"
+        ).cast("double")
+        / F.lit(float(_EWMA_FP))
     )
-    rn_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("vals", F.collect_list("v_int").over(w))
-        .withColumn("rn", F.row_number().over(rn_w).cast("long"))
-        .select(
-            "user_id",
-            "rn",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-            (
-                F.expr(
-                    "aggregate(transform(vals, (x, j) -> x * shiftleft(CAST(1 AS"
-                    f" BIGINT), {EWMA_LAGS} - size(vals) + j)), CAST(0 AS BIGINT),"
-                    " (a, b) -> a + b)"
-                ).cast("double")
-                / F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), {EWMA_LAGS})"
-                    f" - shiftleft(CAST(1 AS BIGINT), {EWMA_LAGS} - size(vals))"
-                ).cast("double")
-                / F.lit(float(_EWMA_FP))
-            ).alias("ewma"),
-        )
-        .orderBy("user_id", "rn")
-    )
+    return timeline_frame_readout(ev, "v_int", EWMA_LAGS, ewma.alias("ewma"))
 
 
 Q_EWMA_SQL = f"""
@@ -725,28 +724,10 @@ def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         half_up_cents("value").alias("cents"),
     )
     dayv = ev.groupBy("user_id", "d").agg(F.sum("cents").alias("v_fp"))
-    bounds = ev.groupBy("user_id").agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    grid = bounds.select(
-        F.col("user_id").alias("g_user"),
-        F.explode(F.sequence("d0", "d1", F.expr("INTERVAL 1 DAY"))).alias("grid_day"),
-    )
-    g = grid.join(
-        dayv,
-        (grid.g_user == dayv.user_id) & (grid.grid_day == dayv.d),
-        "left",
-    ).select(F.col("g_user").alias("user_id"), "grid_day", "v_fp")
-    w_back = (
-        Window.partitionBy("user_id")
-        .orderBy("grid_day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy("user_id")
-        .orderBy("grid_day")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
+    w_back = _grid_days(Window.unboundedPreceding, Window.currentRow)
+    w_fwd = _grid_days(Window.currentRow, Window.unboundedFollowing)
     obs_day = F.when(F.col("v_fp").isNotNull(), F.col("grid_day"))
-    carried = g.select(
+    carried = _daily_grid(ev, dayv, "v_fp").select(
         "user_id",
         "grid_day",
         "v_fp",
@@ -774,7 +755,7 @@ Q_GAPFILL_SQL = f"""
 WITH {EV_US},
 cents AS (
   SELECT user_id, CAST(ts AS DATE) AS d,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents
+         {half_up_cents_sql("value")} AS cents
   FROM ev
 ),
 dayv AS (
@@ -783,16 +764,7 @@ dayv AS (
 bounds AS (
   SELECT user_id, MIN(d) AS d0, MAX(d) AS d1 FROM cents GROUP BY user_id
 ),
-grid AS (
-  SELECT user_id,
-         UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS grid_day
-  FROM bounds
-),
-g AS (
-  SELECT grid.user_id, grid.grid_day, dayv.v_fp
-  FROM grid LEFT JOIN dayv
-    ON grid.user_id = dayv.user_id AND grid.grid_day = dayv.d
-),
+{_grid_sql("v_fp")},
 carried AS (
   SELECT user_id, grid_day, v_fp,
          LAST_VALUE(v_fp IGNORE NULLS) OVER w_back AS prev_fp,
@@ -834,9 +806,8 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
-        ev.withColumn("next_type", F.lead("event_type").over(w))
+        ev.withColumn("next_type", F.lead("event_type").over(user_timeline()))
         .filter(F.col("next_type").isNotNull())
         .groupBy(
             F.col("event_type").alias("from_type"),
@@ -926,7 +897,7 @@ base AS (
          date_diff('day', MAX(CAST(ts AS DATE)), DATE '{RFM_ASOF}')
            AS recency_days,
          COUNT(*) AS frequency,
-         CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({half_up_cents_sql("value")}) AS BIGINT)
            AS monetary_cents
   FROM ev WHERE event_type = 'purchase' GROUP BY user_id
 )
@@ -951,9 +922,7 @@ def q_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     safe by splitting sign from magnitude (DIV vs // floor mismatch)."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(
-            F.datediff(F.to_date("ts"), F.lit(COHORT_EPOCH).cast("date")) / 7
-        ).cast("int").alias("week_idx"),
+        _week_idx(F.to_date("ts")).alias("week_idx"),
         half_up_cents("value").alias("cents"),
     )
     weekly = ev.groupBy("event_type", "week_idx").agg(
@@ -989,7 +958,7 @@ weekly AS (
          CAST(FLOOR(date_diff('day', DATE '{COHORT_EPOCH}', CAST(ts AS DATE))
                     / 7.0) AS INTEGER) AS week_idx,
          COUNT(*) AS n_events,
-         CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({half_up_cents_sql("value")}) AS BIGINT)
            AS sum_cents
   FROM ev GROUP BY 1, 2
 )
@@ -1114,13 +1083,42 @@ ORDER BY lc.user_id
 WAU_WINDOW_DAYS = 7
 
 
+def _trailing_users(ud: DataFrame, days: DataFrame, n: int, out: str) -> DataFrame:
+    """(window_day, out): the distinct users active in the ``n`` days
+    ending at each ``window_day`` of ``days`` — EXACT, without a sliding
+    COUNT(DISTINCT) (whose window state is unbounded): each (user_id,
+    active day d) pair of ``ud`` contributes to the n window-end days it
+    falls in, so explode ``sequence(d, d + n − 1)``, dedup (user,
+    window_day), join to ``days`` and count. Shuffle volume is a FIXED
+    n× the distinct (user, day) pairs — data-independent fanout."""
+    return (
+        ud.select(
+            "user_id",
+            F.explode(
+                F.sequence("d", F.date_add("d", n - 1), F.expr("INTERVAL 1 DAY"))
+            ).alias("window_day"),
+        )
+        .distinct()
+        .join(days, "window_day")
+        .groupBy("window_day")
+        .agg(F.count(F.lit(1)).alias(out))
+    )
+
+
+def _contrib_sql(n: int) -> str:
+    """The oracle's ``contrib`` CTE of ``_trailing_users`` over a ``ud``
+    (user_id, d) CTE."""
+    return f"""contrib AS (
+  SELECT DISTINCT user_id,
+         UNNEST(generate_series(d, d + INTERVAL {n - 1} DAY,
+                                INTERVAL 1 DAY))::DATE AS window_day
+  FROM ud
+)"""
+
+
 def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-day active users per day — EXACT, without a sliding
-    COUNT(DISTINCT) (whose window state is unbounded): each (user,
-    active-day) pair contributes to the 7 window-end days it falls in,
-    so explode the bounded 7-day fanout, dedup (user, window_day), and
-    count. Shuffle volume is 7× the distinct (user, day) pairs — fixed
-    fanout, not data-dependent state; the distinct + count pair is one
+    """Rolling 7-day active users per day — ``_trailing_users`` with n = 7
+    over the distinct (user, day) pairs; the distinct + count pair is one
     two-phase aggregation on small keys. Only window-ends with actual
     activity anchor the output (trailing-edge semantics both engines
     express identically)."""
@@ -1130,18 +1128,8 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("window_day")
     ).distinct()
-    contrib = ev.select(
-        "user_id",
-        F.explode(
-            F.sequence(
-                "d", F.date_add("d", WAU_WINDOW_DAYS - 1), F.expr("INTERVAL 1 DAY")
-            )
-        ).alias("window_day"),
-    ).distinct()
     return (
-        contrib.join(days, "window_day")
-        .groupBy("window_day")
-        .agg(F.count(F.lit(1)).alias("wau"))
+        _trailing_users(ev, days, WAU_WINDOW_DAYS, "wau")
         .select(
             F.date_format("window_day", "yyyy-MM-dd").alias("window_day"), "wau"
         )
@@ -1154,12 +1142,7 @@ WITH ud AS (
   SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
 ),
 days AS (SELECT DISTINCT CAST(ts AS DATE) AS window_day FROM events),
-contrib AS (
-  SELECT DISTINCT user_id,
-         UNNEST(generate_series(d, d + INTERVAL {WAU_WINDOW_DAYS - 1} DAY,
-                                INTERVAL 1 DAY))::DATE AS window_day
-  FROM ud
-)
+{_contrib_sql(WAU_WINDOW_DAYS)}
 SELECT strftime(c.window_day, '%Y-%m-%d') AS window_day,
        COUNT(*) AS wau
 FROM contrib c JOIN days USING (window_day)
@@ -1274,11 +1257,9 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         half_up_cents("value").alias("cents"),
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gapped = ev.withColumn(
-        "gap_us",
-        F.unix_micros(F.lead("ts").over(w)) - F.unix_micros("ts"),
-    ).filter(F.col("gap_us").isNotNull())
+    gapped = ev.withColumn("gap_us", gap_to_next_us()).filter(
+        F.col("gap_us").isNotNull()
+    )
     return (
         gapped.groupBy("user_id")
         .agg(
@@ -1296,7 +1277,7 @@ Q_TWAP_SQL = f"""
 WITH {EV_US},
 g AS (
   SELECT user_id,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents,
+         {half_up_cents_sql("value")} AS cents,
          epoch_us(LEAD(ts) OVER w) - epoch_us(ts) AS gap_us
   FROM ev
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1354,7 +1335,7 @@ WITH {EV_US},
 c AS (
   SELECT event_type, date_trunc('hour', ts) AS bar,
          epoch_us(ts) AS us, event_id,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents
+         {half_up_cents_sql("value")} AS cents
   FROM ev
 ),
 ranked AS (
@@ -1382,12 +1363,10 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU / MAU stickiness per day — the engagement ratio every product
     dashboard leads with. DAU is the per-day distinct user count (one
     exact two-phase aggregate); MAU is the trailing-30-day distinct,
-    computed WITHOUT sliding-distinct state via the same bounded-fanout
-    trick as `q_rolling_wau`: each (user, active-day) pair contributes
-    to the 30 window-end days it falls in, dedup, count. Shuffle volume
-    is a FIXED 30× of the distinct (user, day) pairs — data-independent
-    fanout, not unbounded window state. Stickiness is integer ppm —
-    engine-exact. Only days with actual activity anchor the output."""
+    ``_trailing_users`` with n = 30, the same bounded fanout as
+    `q_rolling_wau`, not unbounded window state. Stickiness is integer
+    ppm — engine-exact. Only days with actual activity anchor the
+    output."""
     ud = (
         load_table(spark, sf_dir, "events")
         .select("user_id", F.to_date("ts").alias("d"))
@@ -1398,24 +1377,8 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     dau = ud.groupBy(F.col("d").alias("window_day")).agg(
         F.count(F.lit(1)).alias("dau")
     )
-    mau = (
-        ud.select(
-            "user_id",
-            F.explode(
-                F.sequence(
-                    "d",
-                    F.date_add("d", MAU_WINDOW_DAYS - 1),
-                    F.expr("INTERVAL 1 DAY"),
-                )
-            ).alias("window_day"),
-        )
-        .distinct()
-        .join(days, "window_day")
-        .groupBy("window_day")
-        .agg(F.count(F.lit(1)).alias("mau"))
-    )
     return (
-        dau.join(mau, "window_day")
+        dau.join(_trailing_users(ud, days, MAU_WINDOW_DAYS, "mau"), "window_day")
         .select(
             F.date_format("window_day", "yyyy-MM-dd").alias("window_day"),
             "dau",
@@ -1432,12 +1395,7 @@ WITH ud AS (
 ),
 days AS (SELECT DISTINCT d AS window_day FROM ud),
 dau AS (SELECT d AS window_day, COUNT(*) AS dau FROM ud GROUP BY d),
-contrib AS (
-  SELECT DISTINCT user_id,
-         UNNEST(generate_series(d, d + INTERVAL {MAU_WINDOW_DAYS - 1} DAY,
-                                INTERVAL 1 DAY))::DATE AS window_day
-  FROM ud
-),
+{_contrib_sql(MAU_WINDOW_DAYS)},
 mau AS (
   SELECT c.window_day, COUNT(*) AS mau
   FROM contrib c JOIN days USING (window_day)

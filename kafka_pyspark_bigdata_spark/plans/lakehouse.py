@@ -57,8 +57,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
-from ..functions.numeric import cents, dsum, dsum_sql, half_up_cents, md5_int
-from ..sources.batch import EV_US, load_table, scratch_dir
+from ..functions.numeric import (
+    cents,
+    dsum,
+    dsum_sql,
+    half_up_cents,
+    half_up_cents_sql,
+    md5_int,
+)
+from ..sources.batch import EV_US, load_table, scratch_dir, user_timeline
 
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -82,7 +89,7 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = user_timeline()
     chg = F.when(
         F.lag("event_type").over(w).isNull()
         | (F.lag("event_type").over(w) != F.col("event_type")),
@@ -2100,7 +2107,7 @@ k0 AS (
 ),
 vers AS (
   SELECT user_id, epoch_us(ts) AS t_us, event_id AS eid,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents, 0 AS tag
+         {half_up_cents_sql("value")} AS cents, 0 AS tag
   FROM ev, k0
   WHERE event_type = 'purchase'
     AND epoch_us(ts) + ((event_id % {BTEMP_DELAY_MOD}) + 1) * 60000000

@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import cents, half_up_cents
-from ..sources.batch import load_table
+from ..functions.numeric import cents, half_up_cents, half_up_cents_sql, ranked
+from ..sources.batch import load_table, timeline_frame_readout
 
 # ---------------------------------------------------------------------------
 # Market-basket pair mining
@@ -214,7 +214,7 @@ tagged AS (
   FROM ev WHERE event_type IN {TOUCH_TYPES!r}
   UNION ALL
   SELECT user_id, ts, event_id, NULL,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT), 1
+         {half_up_cents_sql("value")}, 1
   FROM ev WHERE event_type = 'purchase'
 ),
 carried AS (
@@ -275,18 +275,11 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched = purchases.join(
         matched.select("pid").distinct(), "pid", "left_anti"
     )
-    w = Window.partitionBy("pid").orderBy("t_us", "tid")
-    credited = matched.select(
-        "pid",
-        "cents",
-        "camp",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("pid")).alias("n"),
-    ).select(
+    credited = ranked(matched, "pid", "t_us", "tid").select(
         F.col("camp").alias("campaign"),
         (
-            F.expr("cents DIV n")
-            + (F.col("rn") <= F.expr("cents % n")).cast("long")
+            F.expr("cents DIV cnt")
+            + (F.col("rn") <= F.expr("cents % cnt")).cast("long")
         ).alias("credit"),
     )
     full = credited.unionByName(
@@ -314,7 +307,7 @@ touches AS (
 ),
 purchases AS (
   SELECT user_id, epoch_us(ts) AS p_us, event_id AS pid,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents
+         {half_up_cents_sql("value")} AS cents
   FROM ev WHERE event_type = 'purchase'
 ),
 matched AS (
@@ -364,38 +357,25 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         half_up_cents("value").alias("cents"),
     )
-    w_frame = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-(MEDIAN_WINDOW - 1), 0)
+    median = F.expr(
+        "CASE WHEN size(vals) % 2 = 1"
+        " THEN CAST(element_at(vals, CAST((size(vals) + 1) DIV 2 AS INT))"
+        "      AS DOUBLE)"
+        " ELSE (CAST(element_at(vals, CAST(size(vals) DIV 2 AS INT))"
+        "       AS DOUBLE)"
+        "       + CAST(element_at(vals, CAST(size(vals) DIV 2 + 1 AS INT))"
+        "       AS DOUBLE))"
+        "      / 2.0 END"
     )
-    rn_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("vals", F.array_sort(F.collect_list("cents").over(w_frame)))
-        .withColumn("rn", F.row_number().over(rn_w).cast("long"))
-        .select(
-            "user_id",
-            "rn",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-            F.expr(
-                "CASE WHEN size(vals) % 2 = 1"
-                " THEN CAST(element_at(vals, CAST((size(vals) + 1) DIV 2 AS INT))"
-                "      AS DOUBLE)"
-                " ELSE (CAST(element_at(vals, CAST(size(vals) DIV 2 AS INT))"
-                "       AS DOUBLE)"
-                "       + CAST(element_at(vals, CAST(size(vals) DIV 2 + 1 AS INT))"
-                "       AS DOUBLE))"
-                "      / 2.0 END"
-            ).alias("rolling_median_cents"),
-        )
-        .orderBy("user_id", "rn")
+    return timeline_frame_readout(
+        ev, "cents", MEDIAN_WINDOW, median.alias("rolling_median_cents"), sort=True
     )
 
 
 Q_ROLLING_MEDIAN_SQL = f"""
 WITH ev AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents
+         {half_up_cents_sql("value")} AS cents
   FROM events
 )
 SELECT user_id,
@@ -1554,7 +1534,6 @@ def q_skyline_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders) pairs tie — neither dominates — and both rows surface. The
     customer-level frames move once (agg shuffle + one (nation, spend)
     join-back); every window runs on distinct-value frames."""
-    cents = "CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)"
     per_cust = (
         load_table(spark, sf_dir, "orders")
         .join(
@@ -1565,7 +1544,7 @@ def q_skyline_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("c_nationkey", "o_custkey")
         .agg(
-            F.expr(f"SUM({cents})").alias("spend_cents"),
+            F.sum(half_up_cents("o_totalprice")).alias("spend_cents"),
             F.count(F.lit(1)).alias("n_orders"),
         )
         # pinned: feeds both the frontier derivation and the final
@@ -1612,10 +1591,10 @@ def q_skyline_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_SKYLINE_GROUPED_SQL = """
+Q_SKYLINE_GROUPED_SQL = f"""
 WITH per_cust AS (
   SELECT c_nationkey, o_custkey,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({half_up_cents_sql("o_totalprice")})
               AS BIGINT) AS spend_cents,
          COUNT(*) AS n_orders
   FROM orders JOIN customer ON c_custkey = o_custkey

@@ -7,6 +7,14 @@ parquet for the driver fixtures (columnar, predicate-pushdown-able,
 splittable — the only sane format at 100 TB), CSV with an explicit schema
 for reference parity (never ``inferSchema`` — a schema inference pass is a
 full extra scan of the data).
+
+The events table's shared rules each have one home here: ``EV_US`` is the
+oracles' events CTE, ``read_events`` the Spark scan it mirrors,
+``user_timeline`` the per-user (ts, event_id) event order every per-user
+window runs over, and ``gap_to_prev_us`` / ``gap_to_next_us`` the
+integer-microsecond gaps to a user's previous and next event over it;
+``timeline_frame_readout`` is the one readout of a user's trailing
+N-event frame.
 """
 
 from __future__ import annotations
@@ -16,9 +24,10 @@ import shutil
 import tempfile
 from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
+from pyspark.sql.window import Window, WindowSpec
 
 T = TypeVar("T")
 
@@ -166,6 +175,47 @@ def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame
             # normalize via CAST(ts AS TIMESTAMP).
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def user_timeline() -> WindowSpec:
+    """Each user's events in (ts, event_id) order: a unique total order,
+    so every window over it is deterministic in any engine (the oracles
+    spell it ``PARTITION BY user_id ORDER BY ts, event_id``). A function,
+    not a constant: a WindowSpec needs a live JVM."""
+    return Window.partitionBy("user_id").orderBy("ts", "event_id")
+
+
+def gap_to_prev_us() -> Column:
+    """Microseconds since the user's previous event; NULL on their first."""
+    return F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(user_timeline()))
+
+
+def gap_to_next_us() -> Column:
+    """Microseconds to the user's next event; NULL on their last."""
+    return F.unix_micros(F.lead("ts").over(user_timeline())) - F.unix_micros("ts")
+
+
+def timeline_frame_readout(
+    ev: DataFrame, value: str, n: int, readout: Column, sort: bool = False
+) -> DataFrame:
+    """(user_id, rn, ts, readout) per event, ordered by (user_id, rn):
+    ``vals`` is the list of ``value`` over the user's trailing ``n``-event
+    frame (ascending with ``sort``), collected by one window pass over a
+    BOUNDED frame (state O(n), not O(user)); ``readout`` reads it; ``rn``
+    is the event's BIGINT position in the user's timeline and ``ts`` its
+    second-resolution text."""
+    vals = F.collect_list(value).over(user_timeline().rowsBetween(-(n - 1), 0))
+    return (
+        ev.withColumn("vals", F.array_sort(vals) if sort else vals)
+        .withColumn("rn", F.row_number().over(user_timeline()).cast("long"))
+        .select(
+            "user_id",
+            "rn",
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
+            readout,
+        )
+        .orderBy("user_id", "rn")
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
-from ..functions.numeric import dsum_sql
+from ..functions.numeric import dsum_sql, half_up_cents_sql
 from ..sources.batch import (
     EV_US, app_memo, load_table, read_events, scratch_dir, table_path,
 )
@@ -324,9 +324,9 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STREAMING_STATEFUL_SQL = """
+STREAMING_STATEFUL_SQL = f"""
 SELECT user_id, COUNT(*) AS n_events,
-       CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
+       CAST(SUM({half_up_cents_sql("value")}) AS BIGINT) AS sum_cents
 FROM events GROUP BY user_id ORDER BY user_id
 """
 

@@ -175,3 +175,58 @@ def test_seq_pattern_match_invariants(spark):
     assert {r.pattern for r in rows} == {n for n, _ in behavioral.SEQ_PATTERNS}
     assert all(0 <= r.n_matched <= r.n_users == n_users for r in rows)
     assert all(0 <= r.match_ppm <= 1_000_000 for r in rows)
+
+
+def test_event_family_agrees_with_itself(spark):
+    """The event queries that share a timeline, rank, funnel, daily-grid
+    or trailing-window rule agree with one another: per user the gap
+    count is one less than the event count, and the longest gap fits in
+    the span; bounding the funnel keeps its signups and shrinks its later
+    stages; daily, weekly and monthly actives nest on the same days; both
+    gap fills cover the same grid; every cohort is whole in its first
+    week; the lower median is at most the exact median, and equal to it
+    on an odd count."""
+    from kafka_pyspark_bigdata_spark.plans import advanced, analytic
+
+    def by(q, key, sf=SF_SMOKE):
+        return {key(r): r for r in q(spark, sf).collect()}
+
+    bot = by(behavioral.q_bot_flag, lambda r: r.user_id)
+    lead = by(analytic.q_lead_gap, lambda r: r.user_id)
+    twap = by(behavioral.q_time_weighted_avg, lambda r: r.user_id)
+    assert bot and bot.keys() == lead.keys() == twap.keys()
+    for u, b in bot.items():
+        assert b.n_events - 1 == lead[u].n_gaps == twap[u].n_obs
+        assert lead[u].max_gap_us <= twap[u].span_us
+
+    u = behavioral.q_funnel(spark, SF_SMOKE).first()
+    w = behavioral.q_funnel_windowed(spark, SF_SMOKE).first()
+    assert w.n_signup == u.n_signup
+    assert w.n_click <= u.n_click and w.n_purchase <= u.n_purchase
+
+    wau = by(behavioral.q_rolling_wau, lambda r: r.window_day)
+    dau_mau = by(behavioral.q_dau_mau_stickiness, lambda r: r.window_day)
+    assert wau and wau.keys() == dau_mau.keys()
+    for d, r in dau_mau.items():
+        assert r.dau <= wau[d].wau <= r.mau
+
+    def grid(q):
+        return {(r.user_id, r.grid_day) for r in q(spark, SF_SMOKE).collect()}
+
+    keys = grid(behavioral.q_resample_locf)
+    assert keys and keys == grid(behavioral.q_gapfill_interpolate)
+
+    week0 = [
+        r
+        for r in behavioral.q_cohort_retention(spark, SF_SMOKE).collect()
+        if r.week_offset == 0
+    ]
+    assert week0 and all(r.n_active == r.cohort_size for r in week0)
+
+    quant = by(analytic.q_quantiles_exact, lambda r: r.o_orderpriority)
+    med = by(advanced.q_exact_median, lambda r: r.o_orderpriority)
+    assert quant and quant.keys() == med.keys()
+    for k, m in med.items():
+        assert quant[k].p50 <= m.median_price
+        if m.n_orders % 2:
+            assert quant[k].p50 == m.median_price

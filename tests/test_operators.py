@@ -1132,6 +1132,9 @@ EVENTS_DDL = (
 # queries that replay events from written files run on one event and none
 # (each replay part is still one file, so one micro-batch), and the two
 # partitioned-write queries on none (a write with no rows has no files).
+# Every events query built on a shared timeline, rank, funnel, daily-grid
+# or trailing-window rule runs on one event and none, and sketch_kmv_setops
+# also on sf0.001 without its purchases (an empty set still counts 0).
 REPLAY_QUERIES = [
     "streaming_exactly_once_sink",
     "streaming_upsert_latest",
@@ -1156,6 +1159,32 @@ EVENTS_CASES = [
 ] + [
     ("q_dpp_prune", "empty"),
     ("q_partitioned_scan", "empty"),
+] + [
+    (name, corpus)
+    for name in [
+        "q_sessionize",
+        "q_moving_avg",
+        "q_lead_gap",
+        "q_mad_outliers",
+        "q_scd2_intervals",
+        "q_attribution_linear",
+        "q_rolling_median",
+        "q_funnel",
+        "q_top_paths",
+        "q_bot_flag",
+        "q_cohort_retention",
+        "q_resample_locf",
+        "q_ewma_decay",
+        "q_gapfill_interpolate",
+        "q_event_transition_matrix",
+        "q_wow_growth",
+        "q_rolling_wau",
+        "q_time_weighted_avg",
+        "q_dau_mau_stickiness",
+    ]
+    for corpus in ["one_row", "empty"]
+] + [
+    ("sketch_kmv_setops", corpus) for corpus in ["one_row", "empty", "no_purchase"]
 ]
 
 
@@ -1172,6 +1201,7 @@ def edge_events(spark, tmp_path_factory):
         "one_day": [r for r in rows if r.day == rows[0].day],
         "one_row": rows[:1],
         "empty": [],
+        "no_purchase": [r for r in rows if r.event_type != "purchase"],
     }
     corpora = {k: [tuple(r)[:-1] for r in v] for k, v in corpora.items()}
     return written_corpora(spark, tmp_path_factory, "events", corpora, EVENTS_DDL)
@@ -1185,7 +1215,9 @@ def test_degenerate_timeseries_match_oracle(spark, edge_events, name, corpus):
     an overlap with no variance is NULL, and nothing raises. So do the
     events queries whose divisor (an event count, or a variance) is zero
     there: the ratio is NULL, as DuckDB's ``x // 0`` is. So do the
-    streaming replays and partitioned writes of one event or none."""
+    streaming replays and partitioned writes of one event or none, the
+    events queries on the shared per-user rules on one event or none, and
+    the KMV set operations when a set is empty."""
     d, duck = edge_events(corpus)
     assert_oracle_match(spark, duck, QUERY_FN[name], ORACLE_SQL[name], sf_dir=d)
 
